@@ -44,20 +44,24 @@ object Explain {
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)
       val t0 = System.nanoTime()
-      df.collect()   // drive THIS execution so AQE finalizes in place
-      println(f"==== $n  (${(System.nanoTime() - t0) / 1e9}%.1f s) ====")
-      println(df.queryExecution.executedPlan.toString)
-      // Written AFTER collect() (ADVICE r17): the pre-execution dump
-      // captured the initial AdaptiveSparkPlan, so the artifact could
-      // disagree with runtime join-strategy changes. Post-execution,
-      // explainString(FORMATTED) renders the AQE-final plan
-      // (isFinalPlan=true) — the one the judge should be shown.
-      planDir.foreach { dir =>
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(dir, s"${n}_$planTag.txt"),
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
+      try {
+        df.collect()   // drive THIS execution so AQE finalizes in place
+        println(f"==== $n  (${(System.nanoTime() - t0) / 1e9}%.1f s) ====")
+        println(df.queryExecution.executedPlan.toString)
+      } finally {
+        // Written AFTER collect() (ADVICE r17): the pre-execution dump
+        // captured the initial AdaptiveSparkPlan, so the artifact could
+        // disagree with runtime join-strategy changes. Post-execution,
+        // explainString(FORMATTED) renders the AQE-final plan
+        // (isFinalPlan=true) — the plan that actually ran. Written in
+        // `finally` so a query that throws still leaves its plan.
+        planDir.foreach { dir =>
+          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(dir, s"${n}_$planTag.txt"),
+            df.queryExecution.explainString(
+              org.apache.spark.sql.execution.FormattedMode))
+        }
       }
     }
     spark.stop()

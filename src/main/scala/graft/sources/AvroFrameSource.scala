@@ -1019,24 +1019,11 @@ class AvroFrameMicroBatchStream(path: String, avroSchemaJson: String,
     throw new UnsupportedOperationException(
       "latestOffset(Offset, ReadLimit) should be called instead (SupportsAdmissionControl)")
 
-  // see FrameChangesMicroBatchStream: warn on every clamp engagement so
-  // a durably corrupt manifest is distinguishable from a torn read
-  private var consecutiveClamps = 0
+  private val clamp = new TornReadClamp(dir)
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[SegmentOffset].segments
-    // max(from, ·): totalVersions reads manifest + live listing without
-    // the commit lock and can transiently read LOW against a concurrent
-    // maintenance publish; versions are append-only, so clamp to the
-    // committed offset (see FrameChangesMicroBatchStream.latestOffset).
-    val raw = availableNowCap.getOrElse(FrameMaintenance.totalVersions(dir))
-    if (raw < from) {
-      consecutiveClamps += 1
-      System.err.println(s"[graft] WARNING: totalVersions($dir) read $raw below the " +
-        s"committed offset $from (consecutive clamp #$consecutiveClamps); treating as " +
-        "a torn read — persistent clamping indicates manifest corruption")
-    } else consecutiveClamps = 0
-    val total = math.max(from, raw)
+    val total = clamp(from, availableNowCap.getOrElse(FrameMaintenance.totalVersions(dir)))
     limit match {
       case f: ReadMaxFiles =>
         // admission bounds APPENDS (files), not versions: the end

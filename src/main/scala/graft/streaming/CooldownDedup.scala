@@ -2,8 +2,10 @@ package graft.streaming
 
 import java.time.Instant
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.streaming._
+
+import EventTimers.{expire, inEventOrder, rearm, stored, us}
 
 /** Sliding-cooldown event dedup — the LAST-KEPT-EVENT semantics that
   * the batch gap-session form (q121, `operators/Profiling.scala`)
@@ -16,28 +18,28 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (kept_i depends on which earlier events were kept), so no window
   * frame expresses it; it needs carried state:
   *
-  *  - streaming [[kept]]: `flatMapGroupsWithState` keyed by
-  *    (user_id, event_type), state = last-kept timestamp. Events
-  *    within a micro-batch are sorted by (ts, event_id) and replayed
-  *    through the recurrence; the state then persists the frontier
-  *    across batches and restarts (checkpointed, exactly-once — the
-  *    same state-store machinery as StreamDedup.firstPerKey).
+  *  - streaming [[kept]]: `transformWithState` keyed by
+  *    (user_id, event_type), state = a named typed `ValueState` holding
+  *    the last-kept timestamp (the frontier). Events within a
+  *    micro-batch are sorted by (ts, event_id) and replayed through the
+  *    recurrence; the state then persists the frontier across batches
+  *    and restarts (checkpointed, exactly-once, RocksDB provider).
   *    Cross-batch ORDER contract: an event arriving in a later batch
   *    with ts ≤ lastKept + cooldown is suppressed even if a perfect
   *    global ordering might have kept it (the state knows only the
   *    kept frontier, not every kept timestamp) — the conservative,
   *    alerting-safe direction (never double-alerts). With a
-  *    watermark, state expires via EventTimeTimeout once the
+  *    watermark, state expires via an event-time timer once the
   *    watermark passes lastKept + cooldown: any event that could
   *    still be affected by the state would be beyond-watermark late
   *    and already dropped, so retention is bounded by
   *    watermark-delay + cooldown per active key, not by history.
   *
   *  - batch [[keptBatch]]: the same recurrence via `flatMapGroups`
-  *    (one sorted pass per key — flatMapGroupsWithState never fires
-  *    timeouts in batch mode, same reason Sessionize has a batch
-  *    twin). Registered as judged query q136 with a hash-matched
-  *    DuckDB oracle since round 8: the recurrence is not a window
+  *    (one sorted pass per key — a batch query has no watermark to
+  *    fire timers, same reason Sessionize has a batch twin).
+  *    Registered as judged query q136 with a hash-matched DuckDB
+  *    oracle since round 8: the recurrence is not a window
   *    frame (that inexpressibility is this operator's reason to
   *    exist) but a recursive CTE replays it one row per key per
   *    iteration; StreamingDepthSpec's sequential reference + the
@@ -51,15 +53,11 @@ object CooldownDedup {
 
   case class KeyedEvent(user_id: Long, event_type: String, event_id: Long, ts: Instant)
   case class Kept(user_id: Long, event_type: String, event_id: Long, ts: Instant)
-  /** `timerMs` (used by the transformWithState form only; 0 in the
-    * fMGWS form) is the expiry timestamp ACTUALLY registered — kept in
-    * state because the max-with-watermark branch at registration can
-    * diverge from `lastKeptUs / 1000 + cooldownMs`, and deleting the
-    * superseded timer needs the real registered value.
+  /** `timerMs` is the expiry timer ACTUALLY registered (EventTimers
+    * contract): the max-with-watermark branch at registration can
+    * diverge from `lastKeptUs / 1000 + cooldownMs`.
     */
-  case class Frontier(lastKeptUs: Long, timerMs: Long = 0L)
-
-  private def us(t: Instant): Long = t.getEpochSecond * 1000000L + t.getNano / 1000L
+  case class Frontier(lastKeptUs: Long, timerMs: Long)
 
   /** Replay the recurrence over in-order events given a prior
     * frontier; returns (kept events, new frontier).
@@ -71,38 +69,6 @@ object CooldownDedup {
       if (keep) (acc :+ e, Some(us(e.ts))) else (acc, last)
     }
 
-  /** Streaming sliding-cooldown dedup. Call on a dataset that already
-    * has `withWatermark("ts", ...)` for bounded state; without one,
-    * state lives forever (documented StreamDedup trade-off).
-    */
-  def kept(events: Dataset[KeyedEvent], cooldownMs: Long): Dataset[Kept] = {
-    import events.sparkSession.implicits._
-    val cooldownUs = cooldownMs * 1000L
-    events
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState[Frontier, Kept](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (Long, String), it: Iterator[KeyedEvent], state: GroupState[Frontier]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val batch = it.toVector.sortBy(e => (us(e.ts), e.event_id))
-            val (keptEvents, frontier) =
-              replay(batch, state.getOption.map(_.lastKeptUs), cooldownUs)
-            frontier.foreach { f =>
-              state.update(Frontier(f))
-              // state is inert once wm > lastKept + cooldown: any event
-              // it could suppress would already be watermark-late. The
-              // max() guards the API contract (timeout must exceed the
-              // current watermark) when a batch's survivors were all
-              // suppressed right at the frontier+cooldown boundary.
-              state.setTimeoutTimestamp(
-                math.max(f / 1000L + cooldownMs, state.getCurrentWatermarkMs() + 1))
-            }
-            keptEvents.iterator.map(e => Kept(e.user_id, e.event_type, e.event_id, e.ts))
-          }
-      }
-  }
-
   /** Batch twin: the same recurrence, one sorted pass per key. */
   def keptBatch(events: Dataset[KeyedEvent], cooldownMs: Long): Dataset[Kept] = {
     import events.sparkSession.implicits._
@@ -110,25 +76,13 @@ object CooldownDedup {
     events
       .groupByKey(e => (e.user_id, e.event_type))
       .flatMapGroups { (_, it: Iterator[KeyedEvent]) =>
-        val sorted = it.toVector.sortBy(e => (us(e.ts), e.event_id))
-        replay(sorted, None, cooldownUs)._1.iterator
+        replay(inEventOrder(it)(_.ts, _.event_id), None, cooldownUs)._1.iterator
           .map(e => Kept(e.user_id, e.event_type, e.event_id, e.ts))
       }
   }
 
-  /** Spark-4 `transformWithState` form of [[kept]] — same semantics,
-    * new-API vocabulary (the Sessionize/Sessionize4 pairing, applied
-    * to the dedup family): the kept-frontier is a named typed
-    * `ValueState`, expiry is an explicit event-time TIMER (fires once
-    * the watermark passes frontier + cooldown — past that point every
-    * event the state could suppress is watermark-late, so clearing is
-    * free), and the runtime is the RocksDB provider you'd run at
-    * scale. StreamingDepthSpec holds both forms to the same output.
-    */
   class CooldownProcessor(cooldownMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[(Long, String), KeyedEvent, Kept] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, ExpiredTimerInfo, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
+      extends StatefulProcessor[(Long, String), KeyedEvent, Kept] {
     private val cooldownUs = cooldownMs * 1000L
     @transient private var frontier: ValueState[Frontier] = _
 
@@ -137,37 +91,29 @@ object CooldownDedup {
 
     override def handleInputRows(key: (Long, String), rows: Iterator[KeyedEvent],
                                  tv: TimerValues): Iterator[Kept] = {
-      val batch = rows.toVector.sortBy(e => (us(e.ts), e.event_id))
-      val prior = if (frontier.exists()) Some(frontier.get()) else None
-      val (keptEvents, next) = replay(batch, prior.map(_.lastKeptUs), cooldownUs)
+      val prior = stored(frontier)
+      val (keptEvents, next) =
+        replay(inEventOrder(rows)(_.ts, _.event_id), prior.map(_.lastKeptUs), cooldownUs)
+      // state is inert once wm > lastKept + cooldown: any event it
+      // could suppress would already be watermark-late
       next.foreach { f =>
-        val newTimer = math.max(f / 1000L + cooldownMs, tv.getCurrentWatermarkInMs() + 1)
-        // delete the ACTUAL registered timestamp from state — recomputing
-        // lastKeptUs/1000 + cooldownMs would miss timers registered via
-        // the max-with-watermark branch and leak them
-        prior.filter(p => p.timerMs != 0L && p.timerMs != newTimer)
-          .foreach(p => getHandle.deleteTimer(p.timerMs))
-        if (!prior.exists(_.timerMs == newTimer)) getHandle.registerTimer(newTimer)
-        frontier.update(Frontier(f, newTimer))
+        val timerMs = rearm(getHandle, tv, prior.map(_.timerMs), f / 1000L + cooldownMs)
+        frontier.update(Frontier(f, timerMs))
       }
       keptEvents.iterator.map(e => Kept(e.user_id, e.event_type, e.event_id, e.ts))
     }
 
     override def handleExpiredTimer(key: (Long, String), tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[Kept] = {
-      // only clear if the frontier this timer was set for is still
-      // current (a later kept event re-registers a later timer and
-      // deletes this one — the guard covers the delete/fire race)
-      if (frontier.exists() && frontier.get().timerMs <= info.getExpiryTimeInMs)
-        frontier.clear()
-      Iterator.empty
-    }
+                                    info: ExpiredTimerInfo): Iterator[Kept] =
+      expire(stored(frontier).map(_.timerMs), info) { frontier.clear(); Iterator.empty }
   }
 
-  /** [[kept]] on the transformWithState runtime (RocksDB provider). */
-  def keptTws(events: Dataset[KeyedEvent], cooldownMs: Long): Dataset[Kept] = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+  /** Streaming sliding-cooldown dedup. Call on a dataset that already
+    * has `withWatermark("ts", ...)`: the watermark fires the timers that
+    * bound state. Requires the RocksDB state store provider (state-v2
+    * runtime).
+    */
+  def kept(events: Dataset[KeyedEvent], cooldownMs: Long): Dataset[Kept] = {
     implicit val keptEnc: org.apache.spark.sql.Encoder[Kept] = Encoders.product[Kept]
     events
       .groupByKey(e => (e.user_id, e.event_type))(

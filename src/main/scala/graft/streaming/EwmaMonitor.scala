@@ -5,6 +5,8 @@ import java.time.Instant
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming._
 
+import EventTimers.{expire, inEventOrder, rearm, stored, us}
+
 /** Streaming EWMA control chart — the online twin of the batch q292
   * (`operators/Evaluation.scala`): per metric key, maintain the
   * exponentially-weighted mean AND the exponentially-weighted variance
@@ -26,7 +28,7 @@ import org.apache.spark.sql.streaming._
   * micro-batch splits (StreamingDepthSpec replays it sequentially and
   * requires parity; `scoredBatch` is the identical fold in batch form).
   * Cleanup: a timer `idleMs` past the newest event clears the key
-  * (TimerBook contract shared with WindowTopK/SlidingDistinct).
+  * (`TimerBook`, the EventTimers contract).
   */
 object EwmaMonitor {
 
@@ -39,9 +41,6 @@ object EwmaMonitor {
   // NOT private: Encoders.product codegen (Janino) can't call accessors on a
   // private case class and silently falls back to interpreted serialization.
   case class Gauge(s: Double, v: Double, n: Long)
-  case class TimerBook(timerMs: Long)
-
-  private def us(t: Instant): Long = t.getEpochSecond * 1000000L + t.getNano / 1000L
 
   /** The shared fold step: returns the stamped row and the next gauge.
     * First event of a key sets the level (s₀ = x₀, resid 0, no alarm);
@@ -78,33 +77,24 @@ object EwmaMonitor {
                                  tv: TimerValues): Iterator[Scored] = {
       val out = Vector.newBuilder[Scored]
       var maxUs = 0L
-      var g = if (gauge.exists()) Some(gauge.get()) else None
-      rows.toVector.sortBy(e => (us(e.ts), e.event_id)).foreach { e =>
+      var g = stored(gauge)
+      inEventOrder(rows)(_.ts, _.event_id).foreach { e =>
         maxUs = math.max(maxUs, us(e.ts))
         val (scored, g2) = step(g, e, alpha, beta, l2, warmup)
         out += scored
         g = Some(g2)
       }
       g.foreach(gauge.update)
-      val prior = if (book.exists()) Some(book.get()) else None
       if (maxUs > 0L) {
-        val newTimer = math.max(maxUs / 1000L + idleMs,
-                                tv.getCurrentWatermarkInMs() + 1)
-        prior.filter(p => p.timerMs != 0L && p.timerMs != newTimer)
-          .foreach(p => getHandle.deleteTimer(p.timerMs))
-        if (!prior.exists(_.timerMs == newTimer)) getHandle.registerTimer(newTimer)
-        book.update(TimerBook(newTimer))
+        val due = maxUs / 1000L + idleMs
+        book.update(TimerBook(rearm(getHandle, tv, stored(book).map(_.timerMs), due)))
       }
       out.result().iterator
     }
 
     override def handleExpiredTimer(key: String, tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[Scored] = {
-      if (book.exists() && book.get().timerMs <= info.getExpiryTimeInMs) {
-        gauge.clear(); book.clear()
-      }
-      Iterator.empty
-    }
+                                    info: ExpiredTimerInfo): Iterator[Scored] =
+      expire(stored(book).map(_.timerMs), info) { gauge.clear(); book.clear(); Iterator.empty }
   }
 
   /** Stamp each metric event with its key's EWMA level, residual, and
@@ -134,7 +124,7 @@ object EwmaMonitor {
       .groupByKey(_.event_type)(Encoders.STRING)
       .flatMapGroups { (_, rows) =>
         var g: Option[Gauge] = None
-        rows.toVector.sortBy(e => (us(e.ts), e.event_id)).map { e =>
+        inEventOrder(rows)(_.ts, _.event_id).map { e =>
           val (scored, g2) = step(g, e, alpha, beta, l2, warmup)
           g = Some(g2)
           scored

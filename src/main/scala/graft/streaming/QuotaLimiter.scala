@@ -5,6 +5,8 @@ import java.time.Instant
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming._
 
+import EventTimers.{expire, inEventOrder, rearm, stored, us}
+
 /** Per-key event-time quota limiting — admit at most `maxPerWindow`
   * events per (user, event_type) per tumbling event-time hour, drop
   * the rest. The ingest-side rate control every collection pipeline
@@ -26,23 +28,16 @@ import org.apache.spark.sql.streaming._
   * remains admissible.
   *
   * Spark-4 `transformWithState` (RocksDB provider): named typed
-  * ValueState + explicit timers — the third processor in the
-  * Sessionize4 / CooldownDedup family.
+  * ValueState + explicit timers, like Sessionize and CooldownDedup.
   */
 object QuotaLimiter {
 
   case class Admitted(user_id: Long, event_type: String, event_id: Long,
                       ts: Instant, n_in_window: Long)
-  /** `timerMs` is the expiry timestamp ACTUALLY registered for this
-    * key — carried in state because it cannot be recomputed from
-    * `windowStartUs` alone (registration takes the max with the
-    * then-current watermark + 1, which later batches don't know).
-    * Tracking it lets each batch delete the superseded timer instead
-    * of accumulating one stale no-op timer per (key, batch).
+  /** `timerMs` is the expiry timer ACTUALLY registered for this key
+    * (EventTimers contract).
     */
   case class WindowBudget(windowStartUs: Long, count: Long, timerMs: Long)
-
-  private def us(t: Instant): Long = t.getEpochSecond * 1000000L + t.getNano / 1000L
 
   class QuotaProcessor(maxPerWindow: Int, windowMs: Long)
       extends StatefulProcessor[(Long, String), CooldownDedup.KeyedEvent, Admitted] {
@@ -57,11 +52,10 @@ object QuotaLimiter {
     override def handleInputRows(key: (Long, String),
                                  rows: Iterator[CooldownDedup.KeyedEvent],
                                  tv: TimerValues): Iterator[Admitted] = {
-      val batch = rows.toVector.sortBy(e => (us(e.ts), e.event_id))
-      val prior = if (budget.exists()) Some(budget.get()) else None
+      val prior = stored(budget)
       var state = prior
       val out = Vector.newBuilder[Admitted]
-      batch.foreach { e =>
+      inEventOrder(rows)(_.ts, _.event_id).foreach { e =>
         val w = windowStart(us(e.ts))
         state match {
           case Some(b) if w < b.windowStartUs => // late, window already advanced: drop
@@ -78,28 +72,16 @@ object QuotaLimiter {
       }
       state.foreach { b =>
         // inert once wm passes window end + one window of lateness slack
-        val newTimer = math.max(
-          (b.windowStartUs + 2 * windowUs) / 1000L, tv.getCurrentWatermarkInMs() + 1)
-        // delete the timer the PREVIOUS batch registered (its actual
-        // registered timestamp, from state) so per-key timer state
-        // stays O(1) instead of growing one stale entry per batch
-        prior.filter(p => p.timerMs != 0L && p.timerMs != newTimer)
-          .foreach(p => getHandle.deleteTimer(p.timerMs))
-        if (!prior.exists(_.timerMs == newTimer)) getHandle.registerTimer(newTimer)
-        budget.update(b.copy(timerMs = newTimer))
+        val timerMs = rearm(getHandle, tv, prior.map(_.timerMs),
+          (b.windowStartUs + 2 * windowUs) / 1000L)
+        budget.update(b.copy(timerMs = timerMs))
       }
       out.result().iterator
     }
 
     override def handleExpiredTimer(key: (Long, String), tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[Admitted] = {
-      // only clear if this firing is the timer current state registered
-      // (superseded timers are deleted eagerly; the guard keeps a
-      // just-in-case race from wiping a live window's budget)
-      if (budget.exists() && budget.get().timerMs <= info.getExpiryTimeInMs)
-        budget.clear()
-      Iterator.empty
-    }
+                                    info: ExpiredTimerInfo): Iterator[Admitted] =
+      expire(stored(budget).map(_.timerMs), info) { budget.clear(); Iterator.empty }
   }
 
   /** Admit ≤ `maxPerWindow` events per key per tumbling `windowMs`

@@ -5,6 +5,8 @@ import java.time.Instant
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming._
 
+import EventTimers.{expire, inEventOrder, rearm, stored, us}
+
 /** Per-key sliding-window DISTINCT tracking on `MapState` — the keyed-
   * collection sibling of WindowTopK's ListState (round 10, VERDICT
   * item 5): per user, stamp every event with how many DISTINCT event
@@ -25,18 +27,13 @@ import org.apache.spark.sql.streaming._
   * eviction contract as WindowTopK — a pure fold over the event
   * sequence, invariant to micro-batch splits; StreamingDepthSpec
   * replays it sequentially and requires parity. Cleanup: a timer one
-  * window past the newest map timestamp clears the key (ValueState
-  * bookkeeping, QuotaLimiter contract).
+  * window past the newest map timestamp clears the key (`TimerBook`,
+  * the EventTimers contract).
   */
 object SlidingDistinct {
 
   case class Stamped(user_id: Long, event_id: Long, ts: Instant,
                      event_type: String, is_new_type: Boolean, n_distinct: Int)
-  // NOT private: Encoders.product codegen (Janino) can't call accessors on a
-  // private case class and silently falls back to interpreted serialization.
-  case class TimerBook(timerMs: Long)
-
-  private def us(t: Instant): Long = t.getEpochSecond * 1000000L + t.getNano / 1000L
 
   class DistinctProcessor(windowMs: Long)
       extends StatefulProcessor[Long, CooldownDedup.KeyedEvent, Stamped] {
@@ -53,7 +50,7 @@ object SlidingDistinct {
                                  tv: TimerValues): Iterator[Stamped] = {
       val out = Vector.newBuilder[Stamped]
       var maxUs = 0L
-      rows.toVector.sortBy(e => (us(e.ts), e.event_id)).foreach { e =>
+      inEventOrder(rows)(_.ts, _.event_id).foreach { e =>
         val now = us(e.ts)
         maxUs = math.max(maxUs, now)
         // evict types whose last sighting fell out of the window
@@ -67,25 +64,16 @@ object SlidingDistinct {
         out += Stamped(e.user_id, e.event_id, e.ts, e.event_type,
                        isNew, seen.keys().size)
       }
-      val prior = if (book.exists()) Some(book.get()) else None
       if (maxUs > 0L) {
-        val newTimer = math.max((maxUs + windowUs) / 1000L + 1,
-                                tv.getCurrentWatermarkInMs() + 1)
-        prior.filter(p => p.timerMs != 0L && p.timerMs != newTimer)
-          .foreach(p => getHandle.deleteTimer(p.timerMs))
-        if (!prior.exists(_.timerMs == newTimer)) getHandle.registerTimer(newTimer)
-        book.update(TimerBook(newTimer))
+        val due = (maxUs + windowUs) / 1000L + 1
+        book.update(TimerBook(rearm(getHandle, tv, stored(book).map(_.timerMs), due)))
       }
       out.result().iterator
     }
 
     override def handleExpiredTimer(key: Long, tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[Stamped] = {
-      if (book.exists() && book.get().timerMs <= info.getExpiryTimeInMs) {
-        seen.clear(); book.clear()
-      }
-      Iterator.empty
-    }
+                                    info: ExpiredTimerInfo): Iterator[Stamped] =
+      expire(stored(book).map(_.timerMs), info) { seen.clear(); book.clear(); Iterator.empty }
   }
 
   /** Stamp each event with its user's live distinct-type breadth over

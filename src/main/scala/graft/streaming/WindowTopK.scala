@@ -5,9 +5,12 @@ import java.time.Instant
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming._
 
+import EventTimers.{expire, inEventOrder, rearm, stored, us}
+
 /** Per-key sliding-window streaming TOP-K — the collection-state
-  * (`ListState`) sibling of the Sessionize4 / CooldownDedup /
-  * QuotaLimiter `transformWithState` family (round 10, VERDICT item 5).
+  * (`ListState`) sibling of the Sessionize / CooldownDedup /
+  * QuotaLimiter `transformWithState` processors (round 10, VERDICT
+  * item 5).
   *
   * Two admission semantics over one processor (round 11, ADVICE r10 —
   * the r10 doc claimed exact live-window semantics for the O(k)
@@ -37,8 +40,8 @@ import org.apache.spark.sql.streaming._
   * number of live top-k slots occupied after admission (min(k, live
   * count)); non-admissions emit nothing (append mode).
   *
-  * A ValueState tracks the registered cleanup timer (the QuotaLimiter
-  * bookkeeping contract): once the watermark passes newest-entry +
+  * A `TimerBook` ValueState tracks the registered cleanup timer (the
+  * EventTimers contract): once the watermark passes newest-entry +
   * window, nothing the retained entries could influence remains
   * admissible and the key's state clears.
   *
@@ -58,12 +61,6 @@ object WindowTopK {
   case class TopEntry(event_id: Long, tsUs: Long, value: Double)
   case class Admitted(user_id: Long, event_id: Long, ts: Instant,
                       value: Double, rank_at_admission: Int, topk_size: Int)
-  // NOT private: Encoders.product codegen (Janino) can't call accessors on a
-  // private case class and silently falls back to interpreted serialization
-  // (one compilerError stack per micro-batch).
-  case class TimerBook(timerMs: Long)
-
-  private def us(t: Instant): Long = t.getEpochSecond * 1000000L + t.getNano / 1000L
 
   class TopKProcessor(k: Int, windowMs: Long, exact: Boolean)
       extends StatefulProcessor[Long, ValuedEvent, Admitted] {
@@ -80,7 +77,7 @@ object WindowTopK {
                                  tv: TimerValues): Iterator[Admitted] = {
       var buf = top.get().toVector
       val out = Vector.newBuilder[Admitted]
-      rows.toVector.sortBy(e => (us(e.ts), e.event_id)).foreach { e =>
+      inEventOrder(rows)(_.ts, _.event_id).foreach { e =>
         val now = us(e.ts)
         buf = buf.filter(_.tsUs > now - windowUs)
         if (exact) {
@@ -107,27 +104,19 @@ object WindowTopK {
           }
         }
       }
-      if (buf.isEmpty) { top.clear() } else { top.put(buf.toArray) }
-      // cleanup timer: inert once the watermark passes newest + window
-      val prior = if (book.exists()) Some(book.get()) else None
-      if (buf.nonEmpty) {
-        val newTimer = math.max(
-          (buf.map(_.tsUs).max + windowUs) / 1000L + 1, tv.getCurrentWatermarkInMs() + 1)
-        prior.filter(p => p.timerMs != 0L && p.timerMs != newTimer)
-          .foreach(p => getHandle.deleteTimer(p.timerMs))
-        if (!prior.exists(_.timerMs == newTimer)) getHandle.registerTimer(newTimer)
-        book.update(TimerBook(newTimer))
+      if (buf.isEmpty) top.clear()
+      else {
+        top.put(buf.toArray)
+        // cleanup timer: inert once the watermark passes newest + window
+        val due = (buf.map(_.tsUs).max + windowUs) / 1000L + 1
+        book.update(TimerBook(rearm(getHandle, tv, stored(book).map(_.timerMs), due)))
       }
       out.result().iterator
     }
 
     override def handleExpiredTimer(key: Long, tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[Admitted] = {
-      if (book.exists() && book.get().timerMs <= info.getExpiryTimeInMs) {
-        top.clear(); book.clear()
-      }
-      Iterator.empty
-    }
+                                    info: ExpiredTimerInfo): Iterator[Admitted] =
+      expire(stored(book).map(_.timerMs), info) { top.clear(); book.clear(); Iterator.empty }
   }
 
   /** Admit events ranking in the live sliding top-`k` per user —

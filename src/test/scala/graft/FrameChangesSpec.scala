@@ -348,6 +348,26 @@ class FrameChangesSpec extends AnyFunSuite with SparkFixture {
       s"latest avro offset $end regressed below committed $committed")
   }
 
+  test("torn-read clamp holds the committed offset, resets, warns at powers of two") {
+    val dir = Files.createTempDirectory("torn-clamp").toFile
+    val clamp = new graft.sources.TornReadClamp(dir)
+    val captured = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(captured, true))
+    val (stuck, settled) = try {
+      val stuck = (1 to 9).map(_ => clamp(10, 7))           // a reading stuck 3 below
+      val settled = Seq(clamp(10, 12), clamp(12, 12), clamp(12, 11))  // reset, then clamp again
+      (stuck, settled)
+    } finally System.setErr(stderr)
+    assert(stuck.forall(_ == 10), s"clamp must return the committed offset: $stuck")
+    assert(settled == Seq(12, 12, 12), s"in-range readings pass through: $settled")
+    val warned = captured.toString.linesIterator.filter(_.contains(s"totalVersions($dir)"))
+      .map(_.replaceAll(".*consecutive clamp #(\\d+).*", "$1").toInt).toSeq
+    // clamps #1, #2, #4, #8 of the stuck run; the in-range reading resets
+    // the count, so the next clamp is #1 again
+    assert(warned == Seq(1, 2, 4, 8, 1), s"warning schedule: $warned")
+  }
+
   test("column pruning reaches the change scan") {
     val (cat, base) = freshCatalog("prune")
     spark.sql(s"CREATE NAMESPACE $cat.corpus")

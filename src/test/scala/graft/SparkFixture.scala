@@ -10,6 +10,21 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkFixture { self: AnyFunSuite =>
   lazy val spark: SparkSession = SparkFixture.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Run `body` with the RocksDB state store provider — the state-v2
+    * backend `transformWithState` requires — then restore the session's
+    * previous provider.
+    */
+  def withRocksDb[T](body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
+  }
 }
 
 object SparkFixture {

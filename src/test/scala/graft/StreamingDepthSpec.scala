@@ -5,7 +5,7 @@ import java.time.Instant
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.{RecordStream, Sessionize, Sessionize4}
+import graft.streaming.{RecordStream, Sessionize}
 
 /** Streaming operators beyond the reference surface: stream-stream
   * joins with watermark-bounded state, foreachBatch sinks, and state
@@ -79,43 +79,40 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("sessionize keeps order-correct sessions when a late event arrives within the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    def at(min: Int) = Instant.parse("2024-01-01T10:00:00Z").plusSeconds(min * 60L)
-    val in = MemoryStream[Sessionize.Event]
-    // 2h watermark: an event 90 min late is still admissible and must
-    // NOT be merged backwards into the later open session.
-    val sessions = Sessionize.sessions(
-      in.toDS().withWatermark("ts", "2 hours"), gapMs = 10 * 60 * 1000L)
-    val q = RecordStream.startSink(sessions.toDF(), "memory", "late_sess_sink", tmp("ck-lsess"), 100L)
-    in.addData(Sessionize.Event(3L, at(0), 1.0))    // 10:00 — open session
-    q.processAllAvailable()
-    in.addData(Sessionize.Event(3L, at(-90), 5.0))  // 08:30, late but in-watermark
-    q.processAllAvailable()
-    in.addData(Sessionize.Event(3L, at(300), 1.0))  // 15:00 — flush everything
-    q.processAllAvailable()
-    val rows = spark.table("late_sess_sink").collect()
-      .map(r => (r.getAs[java.sql.Timestamp]("session_start").toInstant,
-                 r.getAs[java.sql.Timestamp]("session_end").toInstant,
-                 r.getAs[Long]("n_events"))).sortBy(_._1)
-    q.stop()
-    rows.foreach { case (s, e, _) => assert(!e.isBefore(s), s"session ends before it starts: $rows") }
-    assert(rows.take(2).toSeq == Seq((at(-90), at(-80), 1L), (at(0), at(10), 1L)),
-      s"late event corrupted sessions: ${rows.toSeq}")
+    withRocksDb {
+      implicit val sqlCtx = spark.sqlContext
+      import spark.implicits._
+      def at(min: Int) = Instant.parse("2024-01-01T10:00:00Z").plusSeconds(min * 60L)
+      val in = MemoryStream[Sessionize.Event]
+      // 2h watermark: an event 90 min late is still admissible and must
+      // NOT be merged backwards into the later open session.
+      val sessions = Sessionize.sessions(
+        in.toDS().withWatermark("ts", "2 hours"), gapMs = 10 * 60 * 1000L)
+      val q = RecordStream.startSink(sessions.toDF(), "memory", "late_sess_sink", tmp("ck-lsess"), 100L)
+      in.addData(Sessionize.Event(3L, at(0), 1.0))    // 10:00 — open session
+      q.processAllAvailable()
+      in.addData(Sessionize.Event(3L, at(-90), 5.0))  // 08:30, late but in-watermark
+      q.processAllAvailable()
+      in.addData(Sessionize.Event(3L, at(300), 1.0))  // 15:00 — flush everything
+      q.processAllAvailable()
+      val rows = spark.table("late_sess_sink").collect()
+        .map(r => (r.getAs[java.sql.Timestamp]("session_start").toInstant,
+                   r.getAs[java.sql.Timestamp]("session_end").toInstant,
+                   r.getAs[Long]("n_events"))).sortBy(_._1)
+      q.stop()
+      rows.foreach { case (s, e, _) => assert(!e.isBefore(s), s"session ends before it starts: $rows") }
+      assert(rows.take(2).toSeq == Seq((at(-90), at(-80), 1L), (at(0), at(10), 1L)),
+        s"late event corrupted sessions: ${rows.toSeq}")
+    }
   }
 
-  test("transformWithState sessionize matches flatMapGroupsWithState semantics (timers close sessions)") {
+  test("sessionize closes each session once the gap passes (timer or later event)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    // transformWithState's state-v2 runtime requires the RocksDB
-    // provider — also the provider you'd run at scale.
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       def at(min: Int) = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(min * 60L)
       val in = MemoryStream[Sessionize.Event]
-      val sessions = Sessionize4.sessions(
+      val sessions = Sessionize.sessions(
         in.toDS().withWatermark("ts", "0 seconds"), gapMs = 10 * 60 * 1000L)
       val q = RecordStream.startSink(sessions.toDF(), "memory", "tws_sess_sink", tmp("ck-tws"), 100L)
       in.addData(Sessionize.Event(1L, at(0), 1.0), Sessionize.Event(1L, at(5), 2.0))
@@ -131,73 +128,67 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
       assert(rows.length >= 2, s"expected two closed sessions: ${rows.toSeq}")
       assert(rows(0) == ((1L, at(0), 2L, 3.0)), s"first session wrong: ${rows.toSeq}")
       assert(rows(1) == ((1L, at(30), 1L, 5.0)), s"second session wrong: ${rows.toSeq}")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("stateful sessionize recovers open-session state across checkpoint restart") {
-    import spark.implicits._
-    // File source, not MemoryStream: a fresh MemoryStream instance
-    // cannot serve the offsets recorded in a recovered checkpoint.
-    val src = tmp("sess-src"); val ck = tmp("ck-sess-restart"); val out = tmp("out-sess-restart")
-    val gapMs = 10 * 60 * 1000L
-    def at(min: Int) = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(min * 60L)
-    def writeEvents(file: String, rows: Seq[(Long, Int, Double)]): Unit =
-      Files.write(java.nio.file.Paths.get(src, file),
-        rows.map { case (u, m, v) => s"""{"user_id":$u,"ts":"${at(m)}","value":$v}""" }
-          .mkString("\n").getBytes)
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("user_id", "long").add("ts", "timestamp").add("value", "double")
-    def sessionQuery(name: String) = {
-      val events = spark.readStream.schema(schema).json(src)
-        .withWatermark("ts", "0 seconds").as[Sessionize.Event]
-      RecordStream.startSink(Sessionize.sessions(events, gapMs).toDF(),
-        "parquet", name, ck, 100L, outputPath = Some(out))
+    withRocksDb {
+      import spark.implicits._
+      // File source, not MemoryStream: a fresh MemoryStream instance
+      // cannot serve the offsets recorded in a recovered checkpoint.
+      val src = tmp("sess-src"); val ck = tmp("ck-sess-restart"); val out = tmp("out-sess-restart")
+      val gapMs = 10 * 60 * 1000L
+      def at(min: Int) = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(min * 60L)
+      def writeEvents(file: String, rows: Seq[(Long, Int, Double)]): Unit =
+        Files.write(java.nio.file.Paths.get(src, file),
+          rows.map { case (u, m, v) => s"""{"user_id":$u,"ts":"${at(m)}","value":$v}""" }
+            .mkString("\n").getBytes)
+      val schema = new org.apache.spark.sql.types.StructType()
+        .add("user_id", "long").add("ts", "timestamp").add("value", "double")
+      def sessionQuery(name: String) = {
+        val events = spark.readStream.schema(schema).json(src)
+          .withWatermark("ts", "0 seconds").as[Sessionize.Event]
+        RecordStream.startSink(Sessionize.sessions(events, gapMs).toDF(),
+          "parquet", name, ck, 100L, outputPath = Some(out))
+      }
+
+      writeEvents("b1.json", Seq((7L, 0, 1.0), (7L, 5, 2.0)))
+      val q1 = sessionQuery("sess_r1")
+      q1.processAllAvailable()
+      q1.stop() // session (t0, n=2) still OPEN in the state store
+
+      // restart: same checkpoint, re-declared query. An event within the
+      // gap must merge into the RECOVERED session; later events close it.
+      writeEvents("b2.json", Seq((7L, 8, 4.0)))
+      val q2 = sessionQuery("sess_r2")
+      q2.processAllAvailable()
+      writeEvents("b3.json", Seq((7L, 60, 9.0)))
+      q2.processAllAvailable()
+      writeEvents("b4.json", Seq((7L, 120, 1.0)))
+      q2.processAllAvailable()
+      q2.stop()
+
+      val sessions = spark.read.parquet(out)
+        .orderBy("session_start").collect()
+        .map(r => (r.getAs[java.sql.Timestamp]("session_start").toInstant,
+                   r.getAs[Long]("n_events"), r.getAs[Double]("sum_value")))
+      assert(sessions.nonEmpty, "no sessions emitted after restart")
+      assert(sessions.head == ((at(0), 3L, 7.0)),
+        s"state not recovered across restart: ${sessions.toSeq}")
     }
-
-    writeEvents("b1.json", Seq((7L, 0, 1.0), (7L, 5, 2.0)))
-    val q1 = sessionQuery("sess_r1")
-    q1.processAllAvailable()
-    q1.stop() // session (t0, n=2) still OPEN in the state store
-
-    // restart: same checkpoint, re-declared query. An event within the
-    // gap must merge into the RECOVERED session; later events close it.
-    writeEvents("b2.json", Seq((7L, 8, 4.0)))
-    val q2 = sessionQuery("sess_r2")
-    q2.processAllAvailable()
-    writeEvents("b3.json", Seq((7L, 60, 9.0)))
-    q2.processAllAvailable()
-    writeEvents("b4.json", Seq((7L, 120, 1.0)))
-    q2.processAllAvailable()
-    q2.stop()
-
-    val sessions = spark.read.parquet(out)
-      .orderBy("session_start").collect()
-      .map(r => (r.getAs[java.sql.Timestamp]("session_start").toInstant,
-                 r.getAs[Long]("n_events"), r.getAs[Double]("sum_value")))
-    assert(sessions.nonEmpty, "no sessions emitted after restart")
-    assert(sessions.head == ((at(0), 3L, 7.0)),
-      s"state not recovered across restart: ${sessions.toSeq}")
   }
 
-  test("transformWithState cooldown dedup matches the flatMapGroupsWithState form") {
+  test("cooldown dedup keeps 0h, 18h and 31h of a 6h drip over four micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.streaming.CooldownDedup
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       def at(h: Int) = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(h * 3600L)
       val cooldownMs = 12L * 3600L * 1000L
       // drip every 6h: sliding-cooldown must keep 0h and 18h (q136's
       // drip contract), across batches and through timer-based expiry
       val in = MemoryStream[CooldownDedup.KeyedEvent]
-      val kept = CooldownDedup.keptTws(
+      val kept = CooldownDedup.kept(
         in.toDS().withWatermark("ts", "0 seconds"), cooldownMs)
       val q = RecordStream.startSink(kept.toDF(), "memory", "tws_cd_sink", tmp("ck-tws-cd"), 100L)
       in.addData(CooldownDedup.KeyedEvent(1L, "drip", 0L, at(0)),
@@ -215,11 +206,6 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
       val ids = spark.table("tws_cd_sink").collect().map(_.getAs[Long]("event_id")).sorted.toSeq
       q.stop()
       assert(ids == Seq(0L, 3L, 6L), s"transformWithState cooldown kept: $ids")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -227,10 +213,7 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.streaming.{CooldownDedup, QuotaLimiter}
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       def at(min: Int) = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(min * 60L)
       val in = MemoryStream[CooldownDedup.KeyedEvent]
       val adm = QuotaLimiter.admitted(
@@ -252,53 +235,50 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
       assert(rows.filter(_._1 == 2L).map(_._2).toSeq == Seq(100L), "user 2 metered independently")
       // the admission counter is exact within each window
       assert(rows.filter(r => r._1 == 1L && r._2 >= 5).map(_._3).sorted.toSeq == Seq(1L, 2L, 3L))
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("sliding-cooldown dedup recovers the kept-frontier across checkpoint restart") {
-    import spark.implicits._
-    import graft.streaming.CooldownDedup
-    val src = tmp("cd-src"); val ck = tmp("ck-cd-restart"); val out = tmp("out-cd-restart")
-    val cooldownMs = 12L * 3600L * 1000L
-    def at(h: Int) = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(h * 3600L)
-    def writeEvents(file: String, rows: Seq[(Long, Int)]): Unit =
-      Files.write(java.nio.file.Paths.get(src, file),
-        rows.map { case (id, h) =>
-          s"""{"user_id":7,"event_type":"alert","event_id":$id,"ts":"${at(h)}"}"""
-        }.mkString("\n").getBytes)
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("user_id", "long").add("event_type", "string")
-      .add("event_id", "long").add("ts", "timestamp")
-    def query(name: String) = {
-      val events = spark.readStream.schema(schema).json(src)
-        .withWatermark("ts", "0 seconds").as[CooldownDedup.KeyedEvent]
-      RecordStream.startSink(CooldownDedup.kept(events, cooldownMs).toDF(),
-        "parquet", name, ck, 100L, outputPath = Some(out))
+    withRocksDb {
+      import spark.implicits._
+      import graft.streaming.CooldownDedup
+      val src = tmp("cd-src"); val ck = tmp("ck-cd-restart"); val out = tmp("out-cd-restart")
+      val cooldownMs = 12L * 3600L * 1000L
+      def at(h: Int) = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(h * 3600L)
+      def writeEvents(file: String, rows: Seq[(Long, Int)]): Unit =
+        Files.write(java.nio.file.Paths.get(src, file),
+          rows.map { case (id, h) =>
+            s"""{"user_id":7,"event_type":"alert","event_id":$id,"ts":"${at(h)}"}"""
+          }.mkString("\n").getBytes)
+      val schema = new org.apache.spark.sql.types.StructType()
+        .add("user_id", "long").add("event_type", "string")
+        .add("event_id", "long").add("ts", "timestamp")
+      def query(name: String) = {
+        val events = spark.readStream.schema(schema).json(src)
+          .withWatermark("ts", "0 seconds").as[CooldownDedup.KeyedEvent]
+        RecordStream.startSink(CooldownDedup.kept(events, cooldownMs).toDF(),
+          "parquet", name, ck, 100L, outputPath = Some(out))
+      }
+
+      writeEvents("b1.json", Seq((0L, 0), (1L, 6))) // kept(0h) sets frontier; 6h suppressed
+      val q1 = query("cd_r1")
+      q1.processAllAvailable()
+      q1.stop()
+
+      // restart: same checkpoint. 10h is inside the RECOVERED frontier's
+      // cooldown (would wrongly be kept by a fresh query); 13h clears it.
+      writeEvents("b2.json", Seq((2L, 10), (3L, 13)))
+      val q2 = query("cd_r2")
+      q2.processAllAvailable()
+      // frontier advanced to 13h by the same lineage: 20h suppressed, 26h kept
+      writeEvents("b3.json", Seq((4L, 20), (5L, 26)))
+      q2.processAllAvailable()
+      q2.stop()
+
+      val kept = spark.read.parquet(out).collect().map(_.getAs[Long]("event_id")).sorted.toSeq
+      assert(kept == Seq(0L, 3L, 5L),
+        s"kept-frontier not recovered/advanced across restart: $kept")
     }
-
-    writeEvents("b1.json", Seq((0L, 0), (1L, 6))) // kept(0h) sets frontier; 6h suppressed
-    val q1 = query("cd_r1")
-    q1.processAllAvailable()
-    q1.stop()
-
-    // restart: same checkpoint. 10h is inside the RECOVERED frontier's
-    // cooldown (would wrongly be kept by a fresh query); 13h clears it.
-    writeEvents("b2.json", Seq((2L, 10), (3L, 13)))
-    val q2 = query("cd_r2")
-    q2.processAllAvailable()
-    // frontier advanced to 13h by the same lineage: 20h suppressed, 26h kept
-    writeEvents("b3.json", Seq((4L, 20), (5L, 26)))
-    q2.processAllAvailable()
-    q2.stop()
-
-    val kept = spark.read.parquet(out).collect().map(_.getAs[Long]("event_id")).sorted.toSeq
-    assert(kept == Seq(0L, 3L, 5L),
-      s"kept-frontier not recovered/advanced across restart: $kept")
   }
 
   // ------------------------------------------------------------ streaming near-dup (round 8)
@@ -331,10 +311,7 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.streaming.StreamNearDup
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val base = "the quick brown fox jumps over the lazy dog near the river bank today"
       val docs = Seq(
         StreamNearDup.Doc(1L, 1L, base),
@@ -360,21 +337,13 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
       assert(!kept.contains(4L) && !kept.contains(5L), s"exact copies kept: $kept")
       assert(!kept.contains(3L), s"near-dup of doc 1 escaped the band gate: $kept")
       assert(kept.contains(1L) && kept.contains(2L) && kept.contains(6L))
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("streaming near-dup gate recovers band state across checkpoint restart") {
     import spark.implicits._
     import graft.streaming.StreamNearDup
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val src = tmp("neardup-src"); val ck = tmp("ck-neardup-restart")
       val out = tmp("out-neardup-restart")
       val base = "sliding minhash bands survive a checkpointed restart of the gate"
@@ -405,11 +374,6 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
         .map(_.getAs[Long]("doc_id")).sorted.toSeq
       assert(kept == Seq(1L, 2L, 4L),
         s"band state not recovered across restart (expected 3 suppressed): $kept")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -454,10 +418,7 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.streaming.WindowTopK
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       def at(min: Int) = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(min * 60L)
       val b1 = Seq(
         WindowTopK.ValuedEvent(1L, 0L, at(0), 10.0),
@@ -482,11 +443,6 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
         .sortBy(_._1)
       assert(u1 == want, s"top-k admissions: got $u1 want $want")
       assert(rows.filter(_._1 == 2L).map(_._2).toSeq == Seq(100L), "second key not independent")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -500,10 +456,7 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.streaming.WindowTopK
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       def at(min: Int) = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(min * 60L)
       val events = Seq(
         WindowTopK.ValuedEvent(1L, 0L, at(0), 10.0),  // A
@@ -527,11 +480,6 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
       assert(approxIds == Seq(0L, 1L, 3L), s"approx admissions: $approxIds")
       assert(exactIds == topKReference(events, 2, window, exact = true).map(_._1).sorted)
       assert(approxIds == topKReference(events, 2, window, exact = false).map(_._1).sorted)
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -539,10 +487,7 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.streaming.{CooldownDedup, SlidingDistinct}
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       def at(min: Int) = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(min * 60L)
       val in = MemoryStream[CooldownDedup.KeyedEvent]
       val st = SlidingDistinct.stamped(
@@ -564,11 +509,6 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
       assert(rows == Seq((0L, true, 1), (1L, true, 2), (2L, false, 2),
                          (3L, true, 2), (4L, true, 1)),
         s"distinct stamps: $rows")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -577,10 +517,7 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     import graft.streaming.EwmaMonitor
     import graft.streaming.EwmaMonitor.MetricEvent
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       def at(min: Int) = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(min * 60L)
       // stable level, then a spike at id 7 (post-warmup ⇒ must alarm)
       // and an equal-size spike at id 2 (pre-warmup ⇒ must NOT alarm)
@@ -617,20 +554,12 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
         .map(s0 => (s0.event_id, s0.ewma, s0.resid, s0.is_alarm, s0.n_seen))
         .sortBy(_._1).toSeq
       assert(batch == want, s"batch twin diverged:\n got $batch\nwant $want")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("EWMA monitor recovers level/variance/count across checkpoint restart") {
     import graft.streaming.EwmaMonitor
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val src = tmp("ew-src"); val ck = tmp("ck-ew-restart"); val out = tmp("out-ew-restart")
       def at(min: Int) = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(min * 60L)
       def writeEvents(file: String, rows: Seq[(Long, Int, Double)]): Unit =
@@ -664,21 +593,13 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
         "post-restart spike must alarm against the recovered variance")
       assert(math.abs(row.getAs[Double]("resid") - 100.0) < 1e-9,
         s"resid must be against the recovered level: ${row.getAs[Double]("resid")}")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("ListState top-k recovers the buffer across checkpoint restart") {
     import spark.implicits._
     import graft.streaming.WindowTopK
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val src = tmp("tk-src"); val ck = tmp("ck-tk-restart"); val out = tmp("out-tk-restart")
       def at(h: Int) = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(h * 3600L)
       def writeEvents(file: String, rows: Seq[(Long, Int, Double)]): Unit =
@@ -706,11 +627,56 @@ class StreamingDepthSpec extends AnyFunSuite with SparkFixture {
       val kept = spark.read.parquet(out).collect().map(_.getAs[Long]("event_id")).sorted.toSeq
       assert(kept == Seq(0L, 2L),
         s"top-k buffer not recovered across restart (1 should lose to recovered 50.0): $kept")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
+  }
+
+  test("re-armed processors hold exactly one registered timer per live key") {
+    // Each micro-batch moves every key's cleanup timer forward, so each
+    // batch must delete the timer the batch before registered. The 24 h
+    // watermark delay keeps every superseded timer from firing, so a
+    // missed delete would show as extra registered timers.
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.{CooldownDedup, QuotaLimiter, WindowTopK}
+    withRocksDb {
+      def at(h: Int) = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(h * 3600L)
+      val hourMs = 3600L * 1000L
+      // user_id → its registered timers (every key here leads with user_id)
+      def timersByUser(ck: String): Map[Long, Seq[Long]] =
+        spark.read.format("statestore").option("readRegisteredTimers", "true").load(ck)
+          .collect().toSeq
+          .groupMap(_.getStruct(0).getLong(0))(_.getAs[Long]("expiration_timestamp_ms"))
+      def run[E](name: String, in: MemoryStream[E], out: org.apache.spark.sql.DataFrame,
+                 batches: Seq[Seq[E]]): Map[Long, Seq[Long]] = {
+        val ck = tmp(s"ck-$name")
+        val q = RecordStream.startSink(out, "memory", name, ck, 100L)
+        batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+        q.stop()
+        timersByUser(ck)
       }
+      // three batches per key, at 0h, 2h and 4h; only the timer the 4h
+      // batch registered may remain
+      def one(dueMs: Long) = Map(1L -> Seq(dueMs), 2L -> Seq(dueMs))
+      val keyed = MemoryStream[CooldownDedup.KeyedEvent]
+      val keyedBatches = Seq(0, 2, 4).map(h => Seq(1L, 2L).map(u =>
+        CooldownDedup.KeyedEvent(u, "alert", h * 10L + u, at(h))))
+      val cooldown = run("timers_cooldown", keyed,
+        CooldownDedup.kept(keyed.toDS().withWatermark("ts", "24 hours"), hourMs).toDF(),
+        keyedBatches)
+      assert(cooldown == one(at(4).toEpochMilli + hourMs), s"CooldownDedup.kept timers: $cooldown")
+
+      val metered = MemoryStream[CooldownDedup.KeyedEvent]
+      val quota = run("timers_quota", metered,
+        QuotaLimiter.admitted(metered.toDS().withWatermark("ts", "24 hours"), 3, hourMs).toDF(),
+        keyedBatches)
+      assert(quota == one(at(6).toEpochMilli), s"QuotaLimiter.admitted timers: $quota")
+
+      val valued = MemoryStream[WindowTopK.ValuedEvent]
+      val topk = run("timers_topk", valued,
+        WindowTopK.admitted(valued.toDS().withWatermark("ts", "24 hours"), 2, hourMs).toDF(),
+        Seq(0, 2, 4).map(h => Seq(1L, 2L).map(u =>
+          WindowTopK.ValuedEvent(u, h * 10L + u, at(h), h.toDouble))))
+      assert(topk == one(at(5).toEpochMilli + 1), s"WindowTopK.admitted timers: $topk")
     }
   }
 

@@ -148,8 +148,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     def write(n: String, id: Long, hour: Int, v: Double): Unit =
       Files.write(java.nio.file.Paths.get(src, n),
         s"""{"key":"7","value":"{\\"user_id\\":7,\\"event_id\\":$id,\\"ts\\":\\"2024-01-01T0$hour:00:00Z\\",\\"value\\":$v}","topic":"t","partition":0,"offset":$id,"timestamp":"2024-01-01T00:00:00Z"}""".getBytes)
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try {
+    withRocksDb {
       write("a.json", 0L, 0, 50.0)
       val q1 = Pipeline.start(spark, c)
       q1.processAllAvailable(); q1.stop()
@@ -160,11 +159,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       q2.processAllAvailable(); q2.stop()
       val kept = spark.read.parquet(out).collect().map(_.getAs[Long]("event_id")).sorted.toSeq
       assert(kept == Seq(0L, 2L), s"CLI topk restart admissions: $kept")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -176,8 +170,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     Files.write(java.nio.file.Paths.get(src, "a.json"),
       Seq(line(0L, "view", 0), line(1L, "click", 10), line(2L, "view", 20))
         .mkString("\n").getBytes)
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try {
+    withRocksDb {
       val q = Pipeline.start(spark, Pipeline.parse(Seq(
         "--name", "dist_cli", "--source-dir", src, "--checkpoint-folder", ck,
         "--batch-period", "100", "--earliest", "--sink", "memory",
@@ -189,11 +182,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       q.stop()
       assert(rows == Seq((0L, true, 1), (1L, true, 2), (2L, false, 2)),
         s"CLI distinct stamps: $rows")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -206,8 +194,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     Files.write(java.nio.file.Paths.get(src, "a.json"),
       values.zipWithIndex.map { case (v, i) => line(i.toLong, i, v) }
         .mkString("\n").getBytes)
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try {
+    withRocksDb {
       val q = Pipeline.start(spark, Pipeline.parse(Seq(
         "--name", "ewma_cli", "--source-dir", src, "--checkpoint-folder", ck,
         "--batch-period", "100", "--earliest", "--sink", "memory",
@@ -228,11 +215,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       }
       assert(rows == want, s"CLI ewma stamps:\n got $rows\nwant $want")
       assert(rows.last._3, "the post-warmup spike must alarm through the CLI path")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -325,28 +307,30 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("stateful sessionize emits closed sessions across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[Sessionize.Event]
-    val sessions = Sessionize.sessions(
-      in.toDS().withWatermark("ts", "0 seconds").as[Sessionize.Event],
-      gapMs = 10 * 60 * 1000L)
-    val q = RecordStream.startSink(sessions.toDF(), "memory", "sess_sink", tmp("ck-sess"), 100L)
-    def at(min: Int) = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(min * 60L)
-    in.addData(Sessionize.Event(1L, at(0), 1.0), Sessionize.Event(1L, at(5), 2.0))
-    q.processAllAvailable()
-    // 30 min later: previous session (gap 10m) is closed by the new batch.
-    in.addData(Sessionize.Event(1L, at(30), 5.0))
-    q.processAllAvailable()
-    in.addData(Sessionize.Event(1L, at(60), 7.0)) // closes the 00:30 session
-    q.processAllAvailable()
-    val rows = spark.table("sess_sink").collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[java.sql.Timestamp]("session_start").toInstant,
-                 r.getAs[Long]("n_events"), r.getAs[Double]("sum_value"))).sortBy(_._2)
-    q.stop()
-    assert(rows.length >= 2)
-    assert(rows(0) == ((1L, at(0), 2L, 3.0)), s"first session wrong: ${rows.toSeq}")
-    assert(rows(1) == ((1L, at(30), 1L, 5.0)), s"second session wrong: ${rows.toSeq}")
+    withRocksDb {
+      implicit val sqlCtx = spark.sqlContext
+      import spark.implicits._
+      val in = MemoryStream[Sessionize.Event]
+      val sessions = Sessionize.sessions(
+        in.toDS().withWatermark("ts", "0 seconds").as[Sessionize.Event],
+        gapMs = 10 * 60 * 1000L)
+      val q = RecordStream.startSink(sessions.toDF(), "memory", "sess_sink", tmp("ck-sess"), 100L)
+      def at(min: Int) = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(min * 60L)
+      in.addData(Sessionize.Event(1L, at(0), 1.0), Sessionize.Event(1L, at(5), 2.0))
+      q.processAllAvailable()
+      // 30 min later: previous session (gap 10m) is closed by the new batch.
+      in.addData(Sessionize.Event(1L, at(30), 5.0))
+      q.processAllAvailable()
+      in.addData(Sessionize.Event(1L, at(60), 7.0)) // closes the 00:30 session
+      q.processAllAvailable()
+      val rows = spark.table("sess_sink").collect()
+        .map(r => (r.getAs[Long]("user_id"), r.getAs[java.sql.Timestamp]("session_start").toInstant,
+                   r.getAs[Long]("n_events"), r.getAs[Double]("sum_value"))).sortBy(_._2)
+      q.stop()
+      assert(rows.length >= 2)
+      assert(rows(0) == ((1L, at(0), 2L, 3.0)), s"first session wrong: ${rows.toSeq}")
+      assert(rows(1) == ((1L, at(30), 1L, 5.0)), s"second session wrong: ${rows.toSeq}")
+    }
   }
 
   test("batch sessionize matches built-in session_window on real events data") {
