@@ -6,6 +6,61 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
+/** The domain every kernel in this file shares with the HOF it
+  * replaced: `aggregate(zip_with(a, b, f), zero, +)` is NULL when the
+  * arrays differ in length (zip_with null-pads the shorter side) or
+  * when any element is null — a null term nulls the whole fold. The
+  * kernels answer null there too; only inside the domain do they run
+  * their loop. Eval and codegen both ask [[ZipDomain.length]].
+  */
+trait ZipKernel extends BinaryExpression {
+  override def nullable: Boolean = true
+
+  private def elementNulls(e: Expression): Boolean = e.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _                          => true
+  }
+
+  /** Elements to fold, or -1 where the HOF's result is null. */
+  protected def foldLength(x: ArrayData, y: ArrayData): Int =
+    ZipDomain.length(x, y, elementNulls(left), elementNulls(right))
+
+  /** Codegen twin of [[foldLength]]: binds the length to a fresh `n`,
+    * nulls the result outside the domain, else runs `loop(n)`.
+    */
+  protected def foldCode(ctx: CodegenContext, ev: ExprCode, a: String, b: String)
+                        (loop: String => String): String = {
+    val n = ctx.freshName("n")
+    s"""
+       |int $n = graft.expressions.ZipDomain.length($a, $b, ${elementNulls(left)}, ${elementNulls(right)});
+       |if ($n < 0) {
+       |  ${ev.isNull} = true;
+       |} else {
+       |  ${loop(n)}
+       |}
+     """.stripMargin
+  }
+}
+
+/** Standalone (not a trait companion) so generated Java can call
+  * `ZipDomain.length` statically.
+  */
+object ZipDomain {
+  /** `x.numElements()` when both arrays have that length and (where the
+    * element type admits nulls) no null element; -1 otherwise.
+    */
+  def length(x: ArrayData, y: ArrayData, xNulls: Boolean, yNulls: Boolean): Int = {
+    val n = x.numElements()
+    if (n != y.numElements()) return -1
+    var i = 0
+    while ((xNulls || yNulls) && i < n) {
+      if ((xNulls && x.isNullAt(i)) || (yNulls && y.isNullAt(i))) return -1
+      i += 1
+    }
+    n
+  }
+}
+
 /** Codegen'd dot product over two `array<float>` columns.
   *
   * The higher-order-function formulation
@@ -24,18 +79,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * registered on the SQL surface (GraftFunctions), where reading
   * array<double> data through `getFloat` would otherwise return
   * silent garbage.
-  *
-  * Precondition (applies to every kernel in this file, ADVICE r17):
-  * the "bit-identical to the HOF" claim holds for EQUAL-LENGTH arrays
-  * with NON-NULL elements — the shape every call site constructs
-  * (fixed-dimension embedding/centroid/codebook vectors). On
-  * length-mismatched inputs these loops min-truncate where the
-  * `zip_with` HOF null-pads to a null result, and a null ELEMENT reads
-  * as garbage/0 where the HOF yields null. Do not point them at ragged
-  * or element-nullable data.
   */
 case class FloatDotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends ZipKernel {
 
   override def dataType: DataType = DoubleType
 
@@ -52,7 +98,8 @@ case class FloatDotProduct(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = foldLength(x, y)
+    if (n < 0) return null
     var s = 0.0
     var i = 0
     while (i < n) {
@@ -63,12 +110,10 @@ case class FloatDotProduct(left: Expression, right: Expression)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
+    nullSafeCodeGen(ctx, ev, (a, b) => foldCode(ctx, ev, a, b) { n =>
       val s = ctx.freshName("s")
       val i = ctx.freshName("i")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $s = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  $s += ((double) $a.getFloat($i)) * ((double) $b.getFloat($i));
@@ -94,7 +139,7 @@ case class FloatDotProduct(left: Expression, right: Expression)
   * primitive loop inside whole-stage codegen).
   */
 case class FloatDoubleDotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends ZipKernel {
 
   override def dataType: DataType = DoubleType
 
@@ -111,7 +156,8 @@ case class FloatDoubleDotProduct(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = foldLength(x, y)
+    if (n < 0) return null
     var s = 0.0
     var i = 0
     while (i < n) {
@@ -122,12 +168,10 @@ case class FloatDoubleDotProduct(left: Expression, right: Expression)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
+    nullSafeCodeGen(ctx, ev, (a, b) => foldCode(ctx, ev, a, b) { n =>
       val s = ctx.freshName("s")
       val i = ctx.freshName("i")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $s = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  $s += ((double) $a.getFloat($i)) * $b.getDouble($i);
@@ -154,7 +198,7 @@ case class FloatDoubleDotProduct(left: Expression, right: Expression)
   * bound this loop wraps silently where the ANSI-mode HOF would throw.
   */
 case class LongDotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends ZipKernel {
 
   override def dataType: DataType = LongType
 
@@ -171,7 +215,8 @@ case class LongDotProduct(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = foldLength(x, y)
+    if (n < 0) return null
     var s = 0L
     var i = 0
     while (i < n) {
@@ -182,12 +227,10 @@ case class LongDotProduct(left: Expression, right: Expression)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
+    nullSafeCodeGen(ctx, ev, (a, b) => foldCode(ctx, ev, a, b) { n =>
       val s = ctx.freshName("s")
       val i = ctx.freshName("i")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |long $s = 0L;
          |for (int $i = 0; $i < $n; $i++) {
          |  $s += $a.getLong($i) * $b.getLong($i);
@@ -212,7 +255,7 @@ case class LongDotProduct(left: Expression, right: Expression)
   * overhead goes.
   */
 case class DoubleSqDist(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends ZipKernel {
 
   override def dataType: DataType = DoubleType
 
@@ -229,7 +272,8 @@ case class DoubleSqDist(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = foldLength(x, y)
+    if (n < 0) return null
     var s = 0.0
     var i = 0
     while (i < n) {
@@ -241,13 +285,11 @@ case class DoubleSqDist(left: Expression, right: Expression)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
+    nullSafeCodeGen(ctx, ev, (a, b) => foldCode(ctx, ev, a, b) { n =>
       val s = ctx.freshName("s")
       val i = ctx.freshName("i")
       val dv = ctx.freshName("d")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $s = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  double $dv = $a.getDouble($i) - $b.getDouble($i);
@@ -272,7 +314,7 @@ case class DoubleSqDist(left: Expression, right: Expression)
   * unchanged; only the per-element boxed lambda overhead goes.
   */
 case class FloatSqDist(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends ZipKernel {
 
   override def dataType: DataType = DoubleType
 
@@ -289,7 +331,8 @@ case class FloatSqDist(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = foldLength(x, y)
+    if (n < 0) return null
     var s = 0.0
     var i = 0
     while (i < n) {
@@ -301,13 +344,11 @@ case class FloatSqDist(left: Expression, right: Expression)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
+    nullSafeCodeGen(ctx, ev, (a, b) => foldCode(ctx, ev, a, b) { n =>
       val s = ctx.freshName("s")
       val i = ctx.freshName("i")
       val dv = ctx.freshName("d")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $s = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  double $dv = ((double) $a.getFloat($i)) - ((double) $b.getFloat($i));
@@ -327,7 +368,7 @@ case class FloatSqDist(left: Expression, right: Expression)
   * strictly-sequential accumulation contract.
   */
 case class DoubleDotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends ZipKernel {
 
   override def dataType: DataType = DoubleType
 
@@ -344,7 +385,8 @@ case class DoubleDotProduct(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = foldLength(x, y)
+    if (n < 0) return null
     var s = 0.0
     var i = 0
     while (i < n) {
@@ -355,12 +397,10 @@ case class DoubleDotProduct(left: Expression, right: Expression)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
+    nullSafeCodeGen(ctx, ev, (a, b) => foldCode(ctx, ev, a, b) { n =>
       val s = ctx.freshName("s")
       val i = ctx.freshName("i")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $s = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  $s += $a.getDouble($i) * $b.getDouble($i);

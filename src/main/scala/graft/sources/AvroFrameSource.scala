@@ -57,7 +57,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *    fails every comparison);
   *  - malformed frames (bad magic, unexpected id, truncated body) are
   *    counted and skipped, the same null-on-malformed convention as
-  *    the streaming decode path, surfaced via the scan description;
+  *    the streaming decode path, surfaced as a task metric;
+  *  - ONE read path: every row-shaped split is a segment chain (a
+  *    single segment is a chain of one), and every reader — row
+  *    ([[AvroFrameReader]]), columnar ([[AvroFrameColumnarReader]],
+  *    which every batch row scan uses) and pushed-aggregate — decodes
+  *    through the same [[FrameSegmentWalk]] under the same
+  *    [[FrameProjection]], so the bloom gate, deletion vectors, pushed
+  *    filters and task metrics cannot drift between them;
   *  - MICRO_BATCH_READ: the same directory reads as a STREAMING source
   *    (`spark.readStream.format(...)`) with real offset management —
   *    see [[AvroFrameMicroBatchStream]]. Batch and stream share the
@@ -87,6 +94,8 @@ class AvroFrameTable(schema: StructType, options: CaseInsensitiveStringMap)
   override def name(): String = s"avro_frames(${options.get("path")})"
   override def schema(): StructType = schema
 
+  private val opts = new FrameTableOptions(options)
+
   /** Group-based row-level operations — SQL `UPDATE` / `MERGE INTO`,
     * and `DELETE` conditions the sidecar filters cannot express
     * (translatable DELETEs still take the metadata-only
@@ -110,9 +119,8 @@ class AvroFrameTable(schema: StructType, options: CaseInsensitiveStringMap)
     // tables keep the group rewrite: their physical invariants
     // (one-bucket-per-segment routing, per-segment sort) are preserved
     // by republishing whole groups through the clustered/sorted write.
-    val delta = "merge-on-read".equalsIgnoreCase(options.get("deleteMode")) &&
-      options.get("bucketKey") == null && options.get("sortedBy") == null &&
-      options.get("partitionCol") == null
+    val delta = opts.mergeOnRead && opts.bucket.isEmpty && opts.sortedBy.isEmpty &&
+      opts.timePart.isEmpty
     () =>
       if (delta) new FrameDeltaOperation(info.command(), schema, options)
       else new FrameRowLevelOperation(info.command(), schema, options)
@@ -140,26 +148,9 @@ class AvroFrameTable(schema: StructType, options: CaseInsensitiveStringMap)
     }
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
-    val dir = new java.io.File(options.get("path"))
     val real = filters.filterNot(_.isInstanceOf[org.apache.spark.sql.sources.AlwaysTrue])
-    val schemaId = Option(options.get("schemaId")).map(_.toInt)
-      .getOrElse(AvroFrames.DefaultSchemaId)
-    if (real.isEmpty) FrameMaintenance.deleteAll(dir)
-    else if ("merge-on-read".equalsIgnoreCase(options.get("deleteMode")))
-      // deletion vectors (round 15): straddling segments get a position
-      // sidecar instead of a rewrite — O(deleted rows), folded by
-      // compaction. Non-translatable conditions still go through the
-      // group rewrite (newRowLevelOperationBuilder), which is
-      // copy-on-write by nature.
-      FrameMaintenance.deleteWhereMoR(
-        org.apache.spark.sql.SparkSession.active, dir,
-        options.get("avroSchema"), schemaId, real, options.get("avroSchemaHistory"),
-        Option(options.get("dvFoldThreshold")).map(_.toDouble)
-          .getOrElse(FrameMaintenance.DefaultDvFoldThreshold))
-    else FrameMaintenance.deleteWhere(
-      org.apache.spark.sql.SparkSession.active, dir,
-      options.get("avroSchema"), schemaId,
-      real, options.get("avroSchemaHistory"))
+    if (real.isEmpty) FrameMaintenance.deleteAll(new java.io.File(opts.path))
+    else opts.deleteWhere(real)
   }
 
   override def truncateTable(): Boolean = { FrameMaintenance.deleteAll(
@@ -180,7 +171,7 @@ class AvroFrameTable(schema: StructType, options: CaseInsensitiveStringMap)
     * DESCRIBE; the scan reports the matching KeyGroupedPartitioning).
     */
   override def partitioning(): Array[Transform] = {
-    val time: Option[Transform] = FrameTimePart.fromOptions(options).map { tp =>
+    val time: Option[Transform] = opts.timePart.map { tp =>
       tp.unit match {
         case "hours"  => Expressions.hours(tp.col)
         case "days"   => Expressions.days(tp.col)
@@ -188,9 +179,7 @@ class AvroFrameTable(schema: StructType, options: CaseInsensitiveStringMap)
         case "years"  => Expressions.years(tp.col)
       }
     }
-    val bucket: Option[Transform] =
-      for { k <- Option(options.get("bucketKey")); n <- Option(options.get("buckets")) }
-        yield Expressions.bucket(n.toInt, k)
+    val bucket: Option[Transform] = opts.bucket.map { case (k, n) => Expressions.bucket(n, k) }
     (time.toSeq ++ bucket.toSeq).toArray
   }
 
@@ -232,6 +221,64 @@ class AvroFrameTable(schema: StructType, options: CaseInsensitiveStringMap)
       override def isNullable: Boolean = false
       override def comment(): String = "0-based frame ordinal within the segment"
     })
+}
+
+/** A frame table's options, parsed in one place for the table, its
+  * scans and every write path (batch, streaming, group rewrite,
+  * delta). Write builders layer their per-write options over the
+  * table's ([[FrameTableOptions.merged]]): catalog writes (INSERT
+  * INTO) carry none, so the table supplies path/avroSchema/schemaId.
+  * Everything parses on first use, so a read never fails on a
+  * write-only setting.
+  */
+final class FrameTableOptions(raw: CaseInsensitiveStringMap) {
+  def path: String = raw.get("path")
+  def avroSchema: String = raw.get("avroSchema")
+  def historyJson: String = raw.get("avroSchemaHistory")
+  lazy val schemaId: Int =
+    Option(raw.get("schemaId")).map(_.toInt).getOrElse(AvroFrames.DefaultSchemaId)
+  lazy val bucket: Option[(String, Int)] =
+    for { k <- Option(raw.get("bucketKey")); n <- Option(raw.get("buckets")) } yield (k, n.toInt)
+  lazy val sortedBy: Option[String] = Option(raw.get("sortedBy"))
+  lazy val timePart: Option[FrameTimePart] = FrameTimePart.fromOptions(raw)
+  def mergeOnRead: Boolean = "merge-on-read".equalsIgnoreCase(raw.get("deleteMode"))
+  lazy val dvFoldThreshold: Double = Option(raw.get("dvFoldThreshold")).map(_.toDouble)
+    .getOrElse(FrameMaintenance.DefaultDvFoldThreshold)
+
+  /** Write-time Bloom filter config, validated against the writer
+    * schema: bloom columns must exist and be INT/BIGINT/STRING.
+    */
+  lazy val bloom: Option[BloomSpec] = Option(raw.get("bloomColumns")).map { csv =>
+    val cols = csv.split(',').map(_.trim).filter(_.nonEmpty)
+    val schema = AvroFrames.sparkSchema(new Schema.Parser().parse(avroSchema))
+    cols.foreach { c =>
+      require(schema.fieldNames.contains(c), s"unknown bloom column $c")
+      require(Set[DataType](IntegerType, LongType, StringType).contains(schema(c).dataType),
+        s"bloom column $c must be INT/BIGINT/STRING, got ${schema(c).dataType}")
+    }
+    BloomSpec(cols, Option(raw.get("bloomExpectedItems")).map(_.toLong)
+      .getOrElse(AvroFrameWrite.DefaultBloomExpectedItems.toLong))
+  }
+
+  /** Filtered DELETE (and the delete half of REPLACE WHERE): deletion
+    * vectors on merge-on-read tables (round 15: straddling segments get
+    * a position sidecar instead of a rewrite — O(deleted rows), folded
+    * by compaction), the copy-on-write rewrite otherwise.
+    */
+  def deleteWhere(filters: Array[Filter]): Unit = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    val dir = new java.io.File(path)
+    if (mergeOnRead)
+      FrameMaintenance.deleteWhereMoR(spark, dir, avroSchema, schemaId, filters,
+        historyJson, dvFoldThreshold)
+    else FrameMaintenance.deleteWhere(spark, dir, avroSchema, schemaId, filters, historyJson)
+  }
+}
+
+object FrameTableOptions {
+  /** Per-write options over the table's own. */
+  def merged(table: CaseInsensitiveStringMap, write: CaseInsensitiveStringMap): FrameTableOptions =
+    new FrameTableOptions(new CaseInsensitiveStringMap((table.asScala ++ write.asScala).asJava))
 }
 
 class AvroFrameScanBuilder(fullSchema: StructType, options: CaseInsensitiveStringMap,
@@ -359,24 +406,17 @@ class AvroFrameScanBuilder(fullSchema: StructType, options: CaseInsensitiveStrin
 
   private lazy val allSidecars: Boolean = universe.forall(builderStats.has)
 
-  override def build(): Scan =
-    new AvroFrameScan(options.get("path"),
-      options.get("avroSchema"),
-      Option(options.get("schemaId")).map(_.toInt)
-        .getOrElse(AvroFrames.DefaultSchemaId),
+  override def build(): Scan = {
+    val opts = new FrameTableOptions(options)
+    new AvroFrameScan(opts.path, opts.avroSchema, opts.schemaId,
       required, pushed,
       Option(options.get("maxSegmentsPerTrigger")).map(_.toInt).getOrElse(0),
       aggs, aggs.isDefined && pushed.isEmpty && allSidecars, limit, topN,
       FrameAsOf(Option(options.get("asOfSegments")).map(_.toInt),
         Option(options.get("asOfTimestampMs")).map(_.toLong)),
       AvroFrames.explicitFiles(options).map(_.map(_.getAbsolutePath)),
-      for { k <- Option(options.get("bucketKey")); n <- Option(options.get("buckets")) }
-        yield (k, n.toInt),
-      onPlanned, pruneOnly,
-      options.get("avroSchemaHistory"),
-      options.getBoolean("columnar", true),
-      Option(options.get("sortedBy")),
-      FrameTimePart.fromOptions(options))
+      opts.bucket, onPlanned, pruneOnly, opts.historyJson, opts.sortedBy, opts.timePart)
+  }
 }
 
 /** Time-travel cut over the segment list (batch reads only): first-n
@@ -407,7 +447,6 @@ class AvroFrameScan(path: String, avroSchemaJson: String, schemaId: Int,
                     onPlanned: Array[java.io.File] => Unit = _ => (),
                     pruneOnly: Array[Filter] = Array.empty,
                     historyJson: String = null,
-                    columnar: Boolean = true,
                     sortedBy: Option[String] = None,
                     timePart: Option[FrameTimePart] = None)
     extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeV2Filtering
@@ -857,7 +896,7 @@ class AvroFrameScan(path: String, avroSchemaJson: String, schemaId: Int,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new AvroFrameReaderFactory(avroSchemaJson, schemaId,
-      required.fieldNames, pushed, aggs, limit, historyJson, topN, columnar)
+      required.fieldNames, pushed, aggs, limit, historyJson, topN, columnar = true)
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new AvroFrameMicroBatchStream(path, avroSchemaJson, schemaId,
@@ -873,7 +912,21 @@ class AvroFrameScan(path: String, avroSchemaJson: String, schemaId: Int,
   * verified it), so the task skips the sidecar probe before decode.
   */
 case class AvroFramePartition(file: String, dv: Option[String] = None,
-                              probeBloom: Boolean = true) extends InputPartition
+                              probeBloom: Boolean = true) extends FrameChainSplit {
+  override def files: Seq[String] = Seq(file)
+  override def dvs: Seq[Option[String]] = Seq(dv)
+  override def probes: Seq[Boolean] = Seq(probeBloom)
+}
+
+/** A split read as one segment chain, in log order: deletion vectors
+  * and bloom-probe hints run parallel to `files` (missing = no vector /
+  * probe). A single-segment split is a chain of one.
+  */
+sealed trait FrameChainSplit extends InputPartition {
+  def files: Seq[String]
+  def dvs: Seq[Option[String]]
+  def probes: Seq[Boolean]
+}
 
 /** Split for a bucketed read: all surviving segments of one bucket
   * (with their deletion vectors, parallel to `files`; empty = none),
@@ -883,7 +936,7 @@ case class AvroFramePartition(file: String, dv: Option[String] = None,
 case class AvroFrameBucketPartition(files: Seq[String], bucket: Int,
                                     dvs: Seq[Option[String]] = Seq.empty,
                                     probes: Seq[Boolean] = Seq.empty)
-    extends InputPartition with org.apache.spark.sql.connector.read.HasPartitionKey {
+    extends FrameChainSplit with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](bucket))
 }
@@ -1081,25 +1134,21 @@ class AvroFrameReaderFactory(avroSchemaJson: String, schemaId: Int,
                              columnar: Boolean = false)
     extends PartitionReaderFactory {
 
-  /** Columnar output (round 15) for plain row-scan splits — pushed
-    * aggregates emit one summary row and pushed TopN keeps a row heap,
-    * both stay on the row readers. Spark requires ALL splits of a scan
-    * to agree, which holds: a scan plans either all-row-shaped or
-    * all-agg splits.
+  /** Columnar output (round 15) for plain row-scan splits — set by
+    * the batch scan; the micro-batch stream builds its factory
+    * row-shaped. Pushed aggregates emit one summary row and pushed TopN
+    * keeps a row heap, both stay on the row reader. Spark requires ALL
+    * splits of a scan to agree, which holds: a scan plans either
+    * all-chain or all-agg splits.
     */
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnar && aggs.isEmpty && topN.isEmpty &&
-      (partition.isInstanceOf[AvroFramePartition] ||
-        partition.isInstanceOf[AvroFrameBucketPartition])
+    columnar && aggs.isEmpty && topN.isEmpty && partition.isInstanceOf[FrameChainSplit]
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     partition match {
-      case AvroFramePartition(file, dv, probeBloom) =>
-        new AvroFrameColumnarReader(Seq(file), Seq(dv), avroSchemaJson, schemaId,
-          requiredCols, pushed, limit, historyJson, Seq(probeBloom))
-      case AvroFrameBucketPartition(files, _, dvs, probes) =>
-        new AvroFrameColumnarReader(files, dvs, avroSchemaJson, schemaId,
-          requiredCols, pushed, limit, historyJson, probes)
+      case s: FrameChainSplit =>
+        new AvroFrameColumnarReader(s.files, s.dvs, avroSchemaJson, schemaId,
+          requiredCols, pushed, limit, historyJson, s.probes)
       case other => throw new IllegalStateException(s"not a columnar split: $other")
     }
 
@@ -1108,12 +1157,9 @@ class AvroFrameReaderFactory(avroSchemaJson: String, schemaId: Int,
       case AvroFrameAggPartition(files, dvs, probes) =>
         new AvroFrameAggReader(files, avroSchemaJson, schemaId, aggs.get, pushed,
           historyJson, dvs, probes)
-      case AvroFramePartition(file, dv, probeBloom) =>
-        wrapTopN(new AvroFrameReader(file, avroSchemaJson, schemaId, requiredCols, pushed,
-          limit, historyJson, dv, probeBloom))
-      case AvroFrameBucketPartition(files, _, dvs, probes) =>
-        wrapTopN(new AvroFrameMultiReader(files, avroSchemaJson, schemaId, requiredCols,
-          pushed, limit, historyJson, dvs, probes))
+      case s: FrameChainSplit =>
+        wrapTopN(new AvroFrameReader(s.files, s.dvs, avroSchemaJson, schemaId,
+          requiredCols, pushed, limit, historyJson, s.probes))
     }
 
   /** Bounded-heap decoration of a row reader for a pushed TopN. */
@@ -1240,62 +1286,11 @@ class FrameTopNReader(inner: PartitionReader[InternalRow], topN: FrameTopN,
     inner.currentMetricsValues()
 }
 
-/** Chained reader over one bucket's segment files (in log order) — the
-  * per-split body of a bucketed read. The pushed LIMIT bounds TOTAL
-  * rows across the chain (sound: Spark re-applies the global limit).
-  */
-class AvroFrameMultiReader(files: Seq[String], avroSchemaJson: String,
-                           schemaId: Int, requiredCols: Array[String],
-                           pushed: Array[Filter], limit: Int = 0,
-                           historyJson: String = null,
-                           dvs: Seq[Option[String]] = Seq.empty,
-                           probes: Seq[Boolean] = Seq.empty)
-    extends PartitionReader[InternalRow] {
-  private var idx = 0
-  private var cur: AvroFrameReader = null
-  private var emitted = 0L
-  private var closedMalformed = 0L
-
-  override def next(): Boolean = {
-    if (limit > 0 && emitted >= limit) return false
-    while (true) {
-      if (cur == null) {
-        if (idx >= files.length) return false
-        cur = new AvroFrameReader(files(idx), avroSchemaJson, schemaId,
-          requiredCols, pushed, 0, historyJson,
-          if (idx < dvs.length) dvs(idx) else None,
-          if (idx < probes.length) probes(idx) else true)
-        idx += 1
-      }
-      if (cur.next()) { emitted += 1; return true }
-      closedMalformed += cur.malformed
-      if (cur.bloomSkipped) skippedTally += 1
-      cur.close(); cur = null
-    }
-    false
-  }
-
-  override def get(): InternalRow = cur.get()
-  override def close(): Unit = if (cur != null) cur.close()
-
-  private def bloomSkips: Long = {
-    // chain readers record their own gate; count the closed ones via a
-    // running tally maintained in next()
-    skippedTally + (if (cur != null && cur.bloomSkipped) 1L else 0L)
-  }
-  private var skippedTally = 0L
-
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(FrameScanMetrics.Value("frames_emitted", emitted),
-      FrameScanMetrics.Value("frames_malformed",
-        closedMalformed + (if (cur != null) cur.malformed else 0L)),
-      FrameScanMetrics.Value("segments_bloom_skipped", bloomSkips))
-}
-
 /** Sequential decoder over one segment file: streams length-prefixed
   * frames, decodes each body with a reused per-schema-id
   * GenericDatumReader / decoder, counts-and-skips malformed frames.
-  * Shared by the row reader and the pushed-aggregation reader.
+  * Scans open it through [[FrameSegmentWalk]]; the change feed and
+  * maintenance rewrites drive it directly.
   *
   * Multi-schema (round 14, schema evolution): `schemas` is the
   * registry — embedded id → writer schema — and every frame resolves
@@ -1390,93 +1385,170 @@ class FrameDecoder(file: String, readerSchema: Schema, schemas: Map[Int, Schema]
   def close(): Unit = in.close()
 }
 
-/** Per-split reader: applies the pushed filters on each decoded record
-  * and materializes ONLY the required columns; with a pushed LIMIT it
-  * stops decoding after `limit` emitted rows (sound: Spark re-applies
-  * the global limit, and any n rows satisfy an unordered LIMIT n).
-  * Exposed as a plain class so SourcesSpec can drive it directly and
-  * count what crosses the scan boundary.
+/** The read projection of a split, built once per reader: the
+  * table's CURRENT schema as the Avro reader schema (frames written
+  * under earlier schema versions resolve against it — missing fields
+  * take their declared null defaults, the ADD COLUMN contract), the
+  * schema registry, each required column's record position and Spark
+  * type, and the compiled pushed filters. Metadata columns materialize
+  * from the reader's own state, not the decoded record: the k-th entry
+  * of `metaCols` is encoded as position -(k+1).
   */
-class AvroFrameReader(file: String, avroSchemaJson: String, schemaId: Int,
-                      requiredCols: Array[String], pushed: Array[Filter],
-                      limit: Int = 0, historyJson: String = null,
-                      dv: Option[String] = None, probeBloom: Boolean = true)
-    extends PartitionReader[InternalRow] {
-
-  // the table's CURRENT schema is the reader schema; frames written
-  // under earlier schema versions resolve against it (missing fields
-  // take their declared null defaults — the ADD COLUMN contract)
-  private val readerSchema = new Schema.Parser().parse(avroSchemaJson)
-  // executor-side bloom gate (round 16): the segment's own sidecar can
-  // prove no row matches the pushed equality filters — then the data
-  // file is never even opened. The split's ledger-derived hint (round
-  // 17) skips the probe when no relevant bloom payload can exist.
-  private val bloomBlocked: Boolean = probeBloom && AvroFrameStats.bloomBlocked(file, pushed)
-  private val dec: FrameDecoder =
-    if (bloomBlocked) null
-    else new FrameDecoder(file, readerSchema,
-      AvroFrames.schemaHistory(avroSchemaJson, schemaId, historyJson))
-  if (dec != null) dv.foreach(d => dec.deleted = FrameDv.cursor(d))
-  private val fieldPos: Map[String, Int] =
+private[sources] final class FrameProjection(
+    avroSchemaJson: String, schemaId: Int, historyJson: String,
+    requiredCols: Array[String], val pushed: Array[Filter],
+    metaCols: Seq[(String, DataType)] = FrameProjection.ScanMeta) {
+  val readerSchema: Schema = new Schema.Parser().parse(avroSchemaJson)
+  val schemas: Map[Int, Schema] = AvroFrames.schemaHistory(avroSchemaJson, schemaId, historyJson)
+  val fieldPos: Map[String, Int] =
     readerSchema.getFields.asScala.map(f => f.name() -> f.pos()).toMap
-  // metadata columns materialize from the reader's own state, not the
-  // decoded record — encoded as negative positions
-  private val MetaSeg = -1
-  private val MetaOff = -2
-  private val requiredPos: Array[Int] = requiredCols.map {
-    case AvroFrames.SegmentMetaCol => MetaSeg
-    case AvroFrames.OffsetMetaCol  => MetaOff
-    case c                         => fieldPos(c)
+  val requiredPos: Array[Int] = requiredCols.map { c =>
+    val k = metaCols.indexWhere(_._1 == c)
+    if (k >= 0) -(k + 1) else fieldPos(c)
   }
-  private val requiredTypes: Array[DataType] = {
+  val requiredTypes: Array[DataType] = {
     val spark = AvroFrames.sparkSchema(readerSchema)
-    requiredCols.map {
-      case AvroFrames.SegmentMetaCol => StringType
-      case AvroFrames.OffsetMetaCol  => LongType
-      case c                         => spark(c).dataType
-    }
+    requiredCols.map(c => metaCols.collectFirst { case (`c`, t) => t }
+      .getOrElse(spark(c).dataType))
   }
-  private val segmentName = UTF8String.fromString(new java.io.File(file).getName)
   private val preds: Array[GenericRecord => Boolean] =
     pushed.map(AvroFrames.compile(fieldPos, _))
 
+  def matches(rec: GenericRecord): Boolean = preds.forall(_(rec))
+}
+
+private[sources] object FrameProjection {
+  /** The scan's metadata columns, at positions [[MetaSeg]] and [[MetaOff]]. */
+  val ScanMeta: Seq[(String, DataType)] =
+    Seq(AvroFrames.SegmentMetaCol -> StringType, AvroFrames.OffsetMetaCol -> LongType)
+  val MetaSeg = -1
+  val MetaOff = -2
+}
+
+/** The one walk over a split's segment chain (log order), shared by
+  * the row, columnar and pushed-aggregate readers. It owns every
+  * per-segment step:
+  *
+  *  - the executor-side bloom gate (round 16): a segment whose own
+  *    sidecar proves no row matches the pushed equality filters is
+  *    never opened; the split's ledger-derived probe hint (round 17)
+  *    spares bloom-less members the sidecar read;
+  *  - opening the [[FrameDecoder]] with the schema registry and the
+  *    segment's deletion vector;
+  *  - the pushed-filter test on each decoded record;
+  *  - the malformed and bloom-skip tallies, and the three task metrics.
+  *
+  * `dvs` and `probes` run parallel to `files` (missing = no vector /
+  * probe). The first segment opens at construction.
+  */
+private[sources] final class FrameSegmentWalk(
+    files: Seq[String], dvs: Seq[Option[String]], probes: Seq[Boolean],
+    proj: FrameProjection) {
+  private var idx = 0
+  private var dec: FrameDecoder = null
+  private var malformedClosed = 0L
+  /** Members skipped by the bloom gate. */
+  var bloomSkipped = 0L
+  /** Members opened for decode. */
+  var opened = 0L
+  /** Rows the owning reader emitted — its `frames_emitted`. */
+  var emitted = 0L
+  /** File name of the segment the last record came from. */
+  var segment: UTF8String = null
+
+  open()
+
+  private def open(): Unit = {
+    while (idx < files.length && (idx >= probes.length || probes(idx)) &&
+        AvroFrameStats.bloomBlocked(files(idx), proj.pushed)) {
+      bloomSkipped += 1
+      idx += 1
+    }
+    if (idx < files.length) {
+      val f = files(idx)
+      dec = new FrameDecoder(f, proj.readerSchema, proj.schemas)
+      if (idx < dvs.length) dvs(idx).foreach(d => dec.deleted = FrameDv.cursor(d))
+      segment = UTF8String.fromString(new java.io.File(f).getName)
+      opened += 1
+      idx += 1
+    }
+  }
+
+  private def closeSegment(): Unit =
+    if (dec != null) { malformedClosed += dec.malformed; dec.close(); dec = null }
+
+  /** Next record passing the pushed filters, or null once the chain is
+    * exhausted. The record is REUSED by the next call.
+    */
+  def next(): GenericRecord = {
+    while (dec != null) {
+      val rec = dec.nextRecord()
+      if (rec == null) { closeSegment(); open() }
+      else if (proj.matches(rec)) return rec
+    }
+    null
+  }
+
+  /** Frame ordinal of the last returned record within its segment. */
+  def position: Long = dec.position
+
+  def malformed: Long = malformedClosed + (if (dec != null) dec.malformed else 0L)
+
+  def close(): Unit = closeSegment()
+
+  def metrics: Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(FrameScanMetrics.Value("frames_emitted", emitted),
+      FrameScanMetrics.Value("frames_malformed", malformed),
+      FrameScanMetrics.Value("segments_bloom_skipped", bloomSkipped))
+}
+
+/** Row reader over a split's segment chain (a single-segment split is
+  * a chain of one): applies the pushed filters on each decoded record
+  * and materializes ONLY the required columns; a pushed LIMIT stops
+  * decoding after `limit` emitted rows across the chain (sound: Spark
+  * re-applies the global limit, and any n rows satisfy an unordered
+  * LIMIT n). Exposed as a plain class so SourcesSpec can drive it
+  * directly and count what crosses the scan boundary.
+  */
+class AvroFrameReader(files: Seq[String], dvs: Seq[Option[String]],
+                      avroSchemaJson: String, schemaId: Int,
+                      requiredCols: Array[String], pushed: Array[Filter],
+                      limit: Int = 0, historyJson: String = null,
+                      probes: Seq[Boolean] = Seq.empty)
+    extends PartitionReader[InternalRow] {
+
+  private val proj = new FrameProjection(avroSchemaJson, schemaId, historyJson,
+    requiredCols, pushed)
+  private val walk = new FrameSegmentWalk(files, dvs, probes, proj)
   private var current: InternalRow = null
-  private var emitted: Long = 0L
-  def malformed: Long = if (dec == null) 0L else dec.malformed // visible to SourcesSpec
-  def bloomSkipped: Boolean = bloomBlocked // visible to FrameBloomSpec
+  def malformed: Long = walk.malformed // visible to SourcesSpec
+  def bloomSkipped: Long = walk.bloomSkipped // visible to FrameBloomSpec
 
   override def next(): Boolean = {
-    if (dec == null) return false // bloom-blocked: zero rows by proof
-    if (limit > 0 && emitted >= limit) return false
-    while (true) {
-      val rec = dec.nextRecord()
-      if (rec == null) return false
-      if (preds.forall(_(rec))) {
-        val row = new GenericInternalRow(requiredPos.length)
-        var i = 0
-        while (i < requiredPos.length) {
-          val p = requiredPos(i)
-          row.update(i,
-            if (p == MetaSeg) segmentName
-            else if (p == MetaOff) dec.position
-            else AvroFrames.convert(rec.get(p), requiredTypes(i)))
-          i += 1
-        }
-        current = row
-        emitted += 1
-        return true
-      }
+    if (limit > 0 && walk.emitted >= limit) return false
+    val rec = walk.next()
+    if (rec == null) return false
+    val pos = proj.requiredPos
+    val row = new GenericInternalRow(pos.length)
+    var i = 0
+    while (i < pos.length) {
+      val p = pos(i)
+      row.update(i,
+        if (p == FrameProjection.MetaSeg) walk.segment
+        else if (p == FrameProjection.MetaOff) walk.position
+        else AvroFrames.convert(rec.get(p), proj.requiredTypes(i)))
+      i += 1
     }
-    false
+    current = row
+    walk.emitted += 1
+    true
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = if (dec != null) dec.close()
+  override def close(): Unit = walk.close()
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(FrameScanMetrics.Value("frames_emitted", emitted),
-      FrameScanMetrics.Value("frames_malformed", malformed),
-      FrameScanMetrics.Value("segments_bloom_skipped", if (bloomBlocked) 1L else 0L))
+    walk.metrics
 }
 
 /** Reader for a pushed-aggregation split: emits EXACTLY ONE row — the
@@ -1494,11 +1566,12 @@ class AvroFrameAggReader(files: Seq[String], avroSchemaJson: String,
                          probes: Seq[Boolean] = Seq.empty)
     extends PartitionReader[InternalRow] {
 
-  private val readerSchema = new Schema.Parser().parse(avroSchemaJson)
-  private val fieldPos: Map[String, Int] =
-    readerSchema.getFields.asScala.map(f => f.name() -> f.pos()).toMap
+  private val proj = new FrameProjection(avroSchemaJson, schemaId, historyJson,
+    Array.empty, pushed)
   private var done = false
-  var decodedSegments: Long = 0L // visible to SourcesSpec
+  // the walk over the segments metadata cannot answer; null until next()
+  private var walk: FrameSegmentWalk = null
+  def decodedSegments: Long = if (walk == null) 0L else walk.opened // visible to SourcesSpec
 
   // running state per agg: counts as Long, min/max in the stats value
   // domain (Long / Double / String / Boolean, ints and floats widened —
@@ -1543,70 +1616,60 @@ class AvroFrameAggReader(files: Seq[String], avroSchemaJson: String,
     case other                => other
   }
 
-  private def decodeSegment(file: String, dv: Option[String]): Unit = {
-    decodedSegments += 1
-    val preds = pushed.map(AvroFrames.compile(fieldPos, _))
-    val aggPos: Array[Int] = aggs.map {
-      case FrameCountCol(c) => fieldPos(c)
-      case FrameMin(c, _)   => fieldPos(c)
-      case FrameMax(c, _)   => fieldPos(c)
-      case FrameCountStar   => -1
-    }.toArray
-    val dec = new FrameDecoder(file, readerSchema,
-      AvroFrames.schemaHistory(avroSchemaJson, schemaId, historyJson))
-    dv.foreach(d => dec.deleted = FrameDv.cursor(d))
-    try {
-      var rec = dec.nextRecord()
-      while (rec != null) {
-        if (preds.forall(_(rec))) {
-          var i = 0
-          while (i < aggs.length) {
-            aggs(i) match {
-              case FrameCountStar   => counts(i) += 1
-              case FrameCountCol(_) => if (rec.get(aggPos(i)) != null) counts(i) += 1
-              case FrameMin(_, _) =>
-                val v = rec.get(aggPos(i)); if (v != null) merge(i, normalize(v), -1)
-              case FrameMax(_, _) =>
-                val v = rec.get(aggPos(i)); if (v != null) merge(i, normalize(v), 1)
-            }
-            i += 1
-          }
-        }
-        rec = dec.nextRecord()
+  private val aggPos: Array[Int] = aggs.map {
+    case FrameCountCol(c) => proj.fieldPos(c)
+    case FrameMin(c, _)   => proj.fieldPos(c)
+    case FrameMax(c, _)   => proj.fieldPos(c)
+    case FrameCountStar   => -1
+  }.toArray
+
+  private def observeRecord(rec: GenericRecord): Unit = {
+    var i = 0
+    while (i < aggs.length) {
+      aggs(i) match {
+        case FrameCountStar   => counts(i) += 1
+        case FrameCountCol(_) => if (rec.get(aggPos(i)) != null) counts(i) += 1
+        case FrameMin(_, _) =>
+          val v = rec.get(aggPos(i)); if (v != null) merge(i, normalize(v), -1)
+        case FrameMax(_, _) =>
+          val v = rec.get(aggPos(i)); if (v != null) merge(i, normalize(v), 1)
       }
-    } finally dec.close()
+      i += 1
+    }
   }
 
-  override def next(): Boolean = {
-    if (done) return false
-    files.zipWithIndex.foreach { case (f, i) =>
-      val dv = if (i < dvs.length) dvs(i) else None
-      // a vectored segment's sidecar describes the PRE-delete superset
-      // (stale min/max, stale null counts) — the decode path is the
-      // exact one, EXCEPT for pure COUNT(*): vectors hold decodable
-      // positions only, so `frames − |dv|` is the exact live count and
-      // the segment still never opens
-      val sidecarOk = pushed.isEmpty && dv.isEmpty &&
+  /** Fold a segment's contribution from metadata alone, if exact. A
+    * vectored segment's sidecar describes the PRE-delete superset
+    * (stale min/max, stale null counts) — the decode path is the exact
+    * one, EXCEPT for pure COUNT(*): vectors hold decodable positions
+    * only, so `frames − |dv|` is the exact live count and the segment
+    * still never opens.
+    */
+  private def answeredByMetadata(f: String, dv: Option[String]): Boolean =
+    pushed.isEmpty && (
+      if (dv.isEmpty)
         AvroFrameStats.read(new java.io.File(f)).exists { case (frames, fields) =>
           sidecarAnswers(frames, fields) && { observeSidecar(frames, fields); true }
         }
-      val countStarOk = !sidecarOk && pushed.isEmpty && dv.isDefined &&
-        aggs.forall(_ == FrameCountStar) &&
+      else aggs.forall(_ == FrameCountStar) &&
         AvroFrameStats.read(new java.io.File(f)).exists { case (frames, _) =>
           val live = frames - FrameDv.count(new java.io.File(dv.get))
           counts.indices.foreach(counts(_) += live)
           true
-        }
-      // bloom gate (round 16): a filtered partial aggregate skips
-      // segments whose own blooms prove zero matching rows — they
-      // contribute nothing to any of the pushed aggregates. The
-      // split's probe hint (round 17) spares bloom-less segments
-      // the sidecar read.
-      val probe = i >= probes.length || probes(i)
-      if (!sidecarOk && !countStarOk &&
-          !(probe && AvroFrameStats.bloomBlocked(f, pushed)))
-        decodeSegment(f, dv)
-    }
+        })
+
+  override def next(): Boolean = {
+    if (done) return false
+    // every segment metadata cannot answer decodes through one walk —
+    // whose bloom gate skips segments proving zero matching rows (they
+    // contribute nothing to any pushed aggregate)
+    val rest = files.indices.filterNot(i => answeredByMetadata(files(i), dvs.lift(i).flatten))
+    walk = new FrameSegmentWalk(rest.map(files), rest.map(dvs.lift(_).flatten),
+      rest.map(probes.lift(_).getOrElse(true)), proj)
+    try {
+      var rec = walk.next()
+      while (rec != null) { observeRecord(rec); rec = walk.next() }
+    } finally walk.close()
     done = true
     true
   }
@@ -1628,6 +1691,9 @@ class AvroFrameAggReader(files: Seq[String], avroSchemaJson: String,
   private def toCatalyst(v: Any, t: DataType): Any = AvroFrameStats.toCatalyst(v, t)
 
   override def close(): Unit = ()
+
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    if (walk == null) Array.empty else walk.metrics
 }
 
 /** Shared helpers: Avro→Spark schema mapping, value conversion, the
@@ -1747,6 +1813,12 @@ object AvroFrames {
       .foldLeft(0L)(math.max)
     math.max(System.currentTimeMillis(), maxExisting + 1)
   }
+
+  /** One batch job's name stamp: the zero-padded [[nextBatchStampMs]]
+    * plus the query id's head.
+    */
+  def batchStamp(path: String, queryId: String): String =
+    f"${nextBatchStampMs(path)}%013d-${queryId.take(8)}"
 
   def writerSchema(options: CaseInsensitiveStringMap): Schema = {
     val json = options.get("avroSchema")

@@ -19,11 +19,13 @@ import org.apache.spark.sql.types._
   *  - the task's `commit()` returns the temp name + gathered segment
   *    STATISTICS (row count, per-field min/max/null-count) as the
   *    [[WriterCommitMessage]];
-  *  - the driver's job-level `commit(messages)` renames every temp to
-  *    its visible `segment-…` name and writes the `….stats` sidecar —
-  *    nothing becomes readable unless the WHOLE job succeeded;
-  *    `abort()` deletes the temps. `mode("overwrite")` truncates
-  *    (deletes existing segments) inside the same driver commit.
+  *  - the driver's job-level `commit(messages)` writes each `….stats`
+  *    sidecar and renames every temp to its visible `segment-…` name
+  *    through the one publish step every commit path shares
+  *    ([[FrameMaintenance.publishAppends]]) — nothing becomes readable
+  *    unless the WHOLE job succeeded; `abort()` deletes the temps.
+  *    `mode("overwrite")` truncates (deletes existing segments) inside
+  *    the same driver commit, before the publish.
   *
   * The sidecars are the manifest-statistics pattern (parquet row-group
   * stats / Iceberg manifests): the read side uses them to PRUNE whole
@@ -99,32 +101,67 @@ object AvroFrameWrite {
     */
   val DefaultBloomExpectedItems = 100000
   val BloomFpp = 0.01
+
+  /** Every (tmpName, finalName, statsJson) the job's tasks produced.
+    * Empty partitions commit a no-op message: nothing to publish —
+    * filtering them here, not just at the writer, keeps a sparse
+    * dataframe write from minting phantom files.
+    */
+  def parts(messages: Array[WriterCommitMessage]): Seq[(String, String, String)] =
+    messages.toSeq.collect { case m: AvroFrameCommitMessage => m }.flatMap(_.parts)
+
+  /** Job abort for every DSv2 write: the hidden temps go, nothing was visible. */
+  def dropTemps(path: String, messages: Array[WriterCommitMessage]): Unit =
+    parts(messages).foreach { case (tmpName, _, _) => new File(path, tmpName).delete() }
+
+  /** Physical truncate (`mode("overwrite")` / `INSERT OVERWRITE`):
+    * deletes every segment and sidecar, and starts a NEW table lineage —
+    * the maintenance manifest, retained history, the stats ledger and
+    * version TAGS go too: stale entries/tags referencing the wiped
+    * lineage would corrupt snapshot replay / pruning / tag reads (a
+    * surviving tag would silently address the NEW lineage's version
+    * numbers).
+    */
+  def truncate(dir: File): Unit = {
+    Option(dir.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.getName.startsWith("segment-") || f.getName.endsWith(".stats"))
+      .foreach(_.delete())
+    new File(dir, FrameMaintenance.ManifestFile).delete()
+    FrameStatsLedger.drop(dir)
+    new File(dir, FrameTags.TagsFile).delete()
+    val hist = new File(dir, FrameMaintenance.HistoryDirName)
+    Option(hist.listFiles()).getOrElse(Array.empty).foreach(_.delete())
+    hist.delete()
+  }
 }
 
 class AvroFrameWriteBuilder(info: LogicalWriteInfo,
                             tableOpts: org.apache.spark.sql.util.CaseInsensitiveStringMap =
                               org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
     extends WriteBuilder with org.apache.spark.sql.connector.write.SupportsOverwrite {
+  // per-write options win; catalog writes (INSERT INTO) carry none, so
+  // the owning table's options supply path/avroSchema/schemaId
+  private val o = FrameTableOptions.merged(tableOpts, info.options())
   private var doTruncate = false
   private var overwriteFilters: Array[Filter] = Array.empty
   override def truncate(): WriteBuilder = { doTruncate = true; this }
 
   /** Filter-based overwrite (`INSERT INTO t REPLACE WHERE cond …` /
     * `df.writeTo(t).overwrite(cond)`): matching rows are deleted
-    * through [[FrameMaintenance.deleteWhere]] — metadata-only where
-    * sidecars prove whole segments match, executor rewrite for
-    * straddlers — inside the SAME job commit that publishes the new
-    * segments, so the replace slice swaps in one command. The delete
-    * mints one version and each appended segment mints one, so
-    * `TIMESTAMP AS OF` still reaches the pre-replace state until
-    * expiry. An always-true condition degrades to the physical
-    * TRUNCATE (new lineage), exactly like `INSERT OVERWRITE`.
+    * through [[FrameTableOptions.deleteWhere]] — metadata-only where
+    * sidecars prove whole segments match, executor rewrite (or a
+    * deletion vector) for straddlers — inside the SAME job commit that
+    * publishes the new segments, so the replace slice swaps in one
+    * command. The delete mints one version and each appended segment
+    * mints one, so `TIMESTAMP AS OF` still reaches the pre-replace
+    * state until expiry. An always-true condition degrades to the
+    * physical TRUNCATE (new lineage), exactly like `INSERT OVERWRITE`.
     */
   override def overwrite(filters: Array[Filter]): WriteBuilder = {
     val real = filters.filterNot(_.isInstanceOf[org.apache.spark.sql.sources.AlwaysTrue])
     if (real.isEmpty) { doTruncate = true; return this }
     val schema = AvroFrames.sparkSchema(
-      new Schema.Parser().parse(Option(opt("avroSchema")).getOrElse(
+      new Schema.Parser().parse(Option(o.avroSchema).getOrElse(
         throw new IllegalArgumentException("option `avroSchema` is required to write"))))
     val unsupported = real.filterNot(AvroFrames.supported(schema, _))
     require(unsupported.isEmpty,
@@ -135,13 +172,8 @@ class AvroFrameWriteBuilder(info: LogicalWriteInfo,
     this
   }
 
-  // per-write options win; catalog writes (INSERT INTO) carry none, so
-  // the owning table's options supply path/avroSchema/schemaId
-  private def opt(k: String): String =
-    Option(info.options().get(k)).getOrElse(tableOpts.get(k))
-
   private def checkedSchema(): String = {
-    val schemaJson = opt("avroSchema")
+    val schemaJson = o.avroSchema
     require(schemaJson != null, "option `avroSchema` is required to write")
     val expected = AvroFrames.sparkSchema(new Schema.Parser().parse(schemaJson))
     val got = info.schema()
@@ -152,103 +184,23 @@ class AvroFrameWriteBuilder(info: LogicalWriteInfo,
     schemaJson
   }
 
-  private def schemaId: Int =
-    Option(opt("schemaId")).map(_.toInt).getOrElse(AvroFrames.DefaultSchemaId)
-
-  private def bucketSpec: Option[(String, Int)] =
-    for { k <- Option(opt("bucketKey")); n <- Option(opt("buckets")) } yield (k, n.toInt)
-
-  private def sortedBy: Option[String] = Option(opt("sortedBy"))
-
-  private def timePart: Option[FrameTimePart] =
-    for { c <- Option(opt("partitionCol")); u <- Option(opt("partitionUnit")) }
-      yield FrameTimePart(c, u)
-
-  private def bloomSpec: Option[BloomSpec] =
-    Option(opt("bloomColumns")).map { csv =>
-      val cols = csv.split(',').map(_.trim).filter(_.nonEmpty)
-      val schema = AvroFrames.sparkSchema(new Schema.Parser().parse(opt("avroSchema")))
-      cols.foreach { c =>
-        require(schema.fieldNames.contains(c), s"unknown bloom column $c")
-        require(Set[DataType](IntegerType, LongType, StringType)
-            .contains(schema(c).dataType),
-          s"bloom column $c must be INT/BIGINT/STRING, got ${schema(c).dataType}")
-      }
-      BloomSpec(cols,
-        Option(opt("bloomExpectedItems")).map(_.toLong)
-          .getOrElse(AvroFrameWrite.DefaultBloomExpectedItems.toLong))
-    }
-
-  override def build(): Write = bucketSpec match {
-    case Some((key, n)) =>
-      // bucketed table: ask Spark to CLUSTER the incoming rows by the
-      // bucket key into exactly n partitions (HashPartitioning →
-      // partition id = pmod(murmur3(key), n), the same function the
-      // scan's reported bucket(n, key) transform computes), so task
-      // partitionId IS the bucket and each segment holds one bucket —
-      // the storage-partitioned-join write discipline. A `sortedBy`
-      // table additionally sorts within each bucket task, so every
-      // segment is individually ordered (the scan's reported ordering
-      // contract, [[AvroFrameScan.outputOrdering]]).
-      new Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-        override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
-          org.apache.spark.sql.connector.distributions.Distributions.clustered(
-            Array(org.apache.spark.sql.connector.expressions.Expressions.column(key)))
-        override def requiredNumPartitions(): Int = n
-        override def distributionStrictlyRequired(): Boolean = true
-        override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-          AvroFrameWriteBuilder.sortOrderFor(sortedBy)
-        override def toBatch: BatchWrite =
-          new AvroFrameBatchWrite(opt("path"), checkedSchema(), schemaId,
-            info.queryId(), doTruncate, overwriteFilters, bloomSpec,
-            opt("avroSchemaHistory"), opt("deleteMode"),
-            Option(opt("dvFoldThreshold")).map(_.toDouble)
-              .getOrElse(FrameMaintenance.DefaultDvFoldThreshold), timePart)
-        override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-          throw new UnsupportedOperationException(
-            "streaming writes to a BUCKETED frame table are unsupported: the epoch " +
-              "write path does not bucket-route rows, which would break the " +
-              "reported KeyGroupedPartitioning")
-      }
-    case None if sortedBy.isDefined =>
-      // unbucketed sorted table: no distribution requirement, but each
-      // task's rows sort on the column before writing
-      new Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-        override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
-          org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-        override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-          AvroFrameWriteBuilder.sortOrderFor(sortedBy)
-        override def toBatch: BatchWrite =
-          new AvroFrameBatchWrite(opt("path"), checkedSchema(), schemaId,
-            info.queryId(), doTruncate, overwriteFilters, bloomSpec,
-            opt("avroSchemaHistory"), opt("deleteMode"),
-            Option(opt("dvFoldThreshold")).map(_.toDouble)
-              .getOrElse(FrameMaintenance.DefaultDvFoldThreshold), timePart)
-        override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-          throw new UnsupportedOperationException(
-            "streaming writes to a SORTED frame table are unsupported: the epoch " +
-              "write path does not sort rows, which would break the scan's " +
-              "reported per-segment ordering")
-      }
-    case None => new Write {
-      override def toBatch: BatchWrite =
-        new AvroFrameBatchWrite(opt("path"), checkedSchema(), schemaId,
-          info.queryId(), doTruncate, overwriteFilters, bloomSpec,
-          opt("avroSchemaHistory"), opt("deleteMode"),
-          Option(opt("dvFoldThreshold")).map(_.toDouble)
-            .getOrElse(FrameMaintenance.DefaultDvFoldThreshold), timePart)
-
-      override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-        // the log is append-only: complete/update output modes would need
-        // per-epoch truncation, which breaks the tailing reader's offsets
-        require(!doTruncate && overwriteFilters.isEmpty,
-          "frame-log streaming writes are append-only " +
-          "(use outputMode(\"append\"))")
-        new AvroFrameStreamingWrite(opt("path"), checkedSchema(), schemaId,
-          info.queryId(), bloomSpec, timePart)
-      }
-    }
-  }
+  override def build(): Write = AvroFrameWriteBuilder.shaped(o,
+    new AvroFrameBatchWrite(o.path, checkedSchema(), o.schemaId, info.queryId(),
+      o.bloom, o.timePart, dir => {
+        if (doTruncate) AvroFrameWrite.truncate(dir)
+        // REPLACE WHERE: retire the matching slice first, then publish
+        // the replacement segments — one command, both halves in this
+        // driver commit
+        if (overwriteFilters.nonEmpty) o.deleteWhere(overwriteFilters)
+      }), {
+      // the log is append-only: complete/update output modes would need
+      // per-epoch truncation, which breaks the tailing reader's offsets
+      require(!doTruncate && overwriteFilters.isEmpty,
+        "frame-log streaming writes are append-only " +
+        "(use outputMode(\"append\"))")
+      new AvroFrameStreamingWrite(o.path, checkedSchema(), o.schemaId,
+        info.queryId(), o.bloom, o.timePart)
+    })
 }
 
 object AvroFrameWriteBuilder {
@@ -261,6 +213,50 @@ object AvroFrameWriteBuilder {
         org.apache.spark.sql.connector.expressions.Expressions.column(c),
         org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)))
       .getOrElse(Array.empty)
+
+  /** The one physical write shape of a frame table, for inserts and
+    * group rewrites alike:
+    *
+    *  - bucketed: Spark CLUSTERS the incoming rows by the bucket key
+    *    into exactly n partitions (HashPartitioning → partition id =
+    *    pmod(murmur3(key), n), the same function the scan's reported
+    *    bucket(n, key) transform computes), so task partitionId IS the
+    *    bucket and each segment holds one bucket — the
+    *    storage-partitioned-join write discipline;
+    *  - `sortedBy`: each task's rows sort on the column before writing,
+    *    so every segment is individually ordered (the scan's reported
+    *    ordering contract, [[AvroFrameScan.outputOrdering]]);
+    *  - plain: no requirement at all.
+    *
+    * Streaming writes exist for the plain shape only: the epoch write
+    * path neither bucket-routes nor sorts rows, which would break the
+    * reported KeyGroupedPartitioning / per-segment ordering.
+    */
+  def shaped(o: FrameTableOptions, batch: => BatchWrite,
+             streaming: => org.apache.spark.sql.connector.write.streaming.StreamingWrite): Write =
+    new Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+      override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
+        o.bucket match {
+          case Some((key, _)) =>
+            org.apache.spark.sql.connector.distributions.Distributions.clustered(
+              Array(org.apache.spark.sql.connector.expressions.Expressions.column(key)))
+          case None => org.apache.spark.sql.connector.distributions.Distributions.unspecified()
+        }
+      override def requiredNumPartitions(): Int = o.bucket.fold(0)(_._2)
+      override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
+        sortOrderFor(o.sortedBy)
+      override def toBatch: BatchWrite = batch
+      override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
+        def refuse(kind: String, why: String): Nothing =
+          throw new UnsupportedOperationException(s"streaming writes to a $kind frame table " +
+            s"are unsupported: the epoch write path does not $why")
+        if (o.bucket.isDefined) refuse("BUCKETED",
+          "bucket-route rows, which would break the reported KeyGroupedPartitioning")
+        if (o.sortedBy.isDefined) refuse("SORTED",
+          "sort rows, which would break the scan's reported per-segment ordering")
+        streaming
+      }
+    }
 }
 
 /** One task's publishable files. Unpartitioned tasks fill the three
@@ -282,15 +278,15 @@ case class AvroFrameCommitMessage(tmpName: String, finalName: String,
   */
 case class BloomSpec(cols: Array[String], expectedItems: Long) extends Serializable
 
+/** Batch job commit, shared by inserts and group rewrites: tasks write
+  * hidden temps under one monotonic stamp; the driver commit first runs
+  * `beforePublish` (truncate / REPLACE WHERE delete / group retire),
+  * then publishes every temp through [[FrameMaintenance.publishAppends]].
+  */
 class AvroFrameBatchWrite(path: String, avroSchemaJson: String, schemaId: Int,
-                          queryId: String, truncate: Boolean,
-                          overwriteFilters: Array[Filter] = Array.empty,
-                          bloom: Option[BloomSpec] = None,
-                          historyJson: String = null,
-                          deleteMode: String = null,
-                          dvFoldThreshold: Double =
-                            FrameMaintenance.DefaultDvFoldThreshold,
-                          part: Option[FrameTimePart] = None) extends BatchWrite {
+                          queryId: String, bloom: Option[BloomSpec] = None,
+                          part: Option[FrameTimePart] = None,
+                          beforePublish: File => Unit = _ => ()) extends BatchWrite {
   require(path != null, "option `path` is required")
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
@@ -305,78 +301,18 @@ class AvroFrameBatchWrite(path: String, avroSchemaJson: String, schemaId: Int,
     // later insert sort before an earlier one. Streaming keeps
     // deterministic epoch names instead — replay dedup needs them
     // stable across re-runs.
-    val stamp = f"${AvroFrames.nextBatchStampMs(path)}%013d-${queryId.take(8)}"
+    val stamp = AvroFrames.batchStamp(path, queryId)
     new AvroFrameWriterFactory(path, avroSchemaJson, schemaId, stamp, bloom, part)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val dir = new File(path)
-    if (truncate) {
-      Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("segment-") || f.getName.endsWith(".stats"))
-        .foreach(_.delete())
-      // physical truncate starts a NEW table lineage: drop the
-      // maintenance manifest, retained history, the stats ledger, and
-      // version TAGS too — stale entries/tags referencing the wiped
-      // lineage would corrupt snapshot replay / pruning / tag reads
-      // (a surviving tag would silently address the NEW lineage's
-      // version numbers)
-      new File(dir, FrameMaintenance.ManifestFile).delete()
-      FrameStatsLedger.drop(dir)
-      new File(dir, FrameTags.TagsFile).delete()
-      val hist = new File(dir, FrameMaintenance.HistoryDirName)
-      Option(hist.listFiles()).getOrElse(Array.empty).foreach(_.delete())
-      hist.delete()
-    }
-    // REPLACE WHERE: retire the matching slice first (metadata-only /
-    // rewrite per segment on copy-on-write tables; metadata-only /
-    // deletion-vector on merge-on-read), then publish the replacement
-    // segments below — one command, both halves in this driver commit
-    if (overwriteFilters.nonEmpty) {
-      if ("merge-on-read".equalsIgnoreCase(deleteMode))
-        FrameMaintenance.deleteWhereMoR(org.apache.spark.sql.SparkSession.active,
-          dir, avroSchemaJson, schemaId, overwriteFilters, historyJson,
-          dvFoldThreshold)
-      else
-        FrameMaintenance.deleteWhere(org.apache.spark.sql.SparkSession.active,
-          dir, avroSchemaJson, schemaId, overwriteFilters, historyJson)
-    }
-    // one publish instant for the whole job: TIMESTAMP AS OF cuts on
-    // segment mtime, and POSIX rename PRESERVES the temp file's mtime
-    // (task write time) — without restamping, a timestamp falling
-    // between two tasks' write times would tear one committed job in
-    // half. Set explicitly after the rename so mtime IS the commit.
-    val publish = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis())
-    // empty partitions commit a no-op message (tmpName empty): nothing
-    // to publish — filtering them here, not just at the writer, keeps
-    // a sparse dataframe write from minting phantom files
-    val published = messages.collect {
-      case m: AvroFrameCommitMessage => m }.flatMap(_.parts)
-    published.foreach { case (tmpName, finalName, statsJson) =>
-      // sidecar lands first; readers tolerate a missing sidecar but a
-      // visible segment must never precede job commit
-      java.nio.file.Files.writeString(
-        new File(dir, finalName + ".stats").toPath, statsJson)
-      val target = new File(dir, finalName)
-      val ok = FrameCommitIo.impl.publish(new File(dir, tmpName), target)
-      require(ok, s"commit rename failed for $tmpName -> $finalName")
-      java.nio.file.Files.setLastModifiedTime(target.toPath, publish)
-    }
-    // fold the new segments' stats into the table ledger (round 16):
-    // entries come from the very statsJson the tasks returned, so O(1)
-    // planning metadata costs zero extra I/O here — segments land
-    // FIRST, so a crash before the fold leaves them merely unledgered
-    // (reads fall back to their sidecars, never miss them)
-    if (published.nonEmpty) FrameMaintenance.withDirLock(dir) {
-      FrameStatsLedger.fold(dir, add = published.map { case (_, fin, json) =>
-        fin -> FrameStatsLedger.entryFromJsonOrBare(json)
-          .copy(publishMs = publish.toMillis) }.toMap)
-    }
+    beforePublish(dir)
+    FrameMaintenance.publishAppends(dir, AvroFrameWrite.parts(messages))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case m: AvroFrameCommitMessage => m }.flatMap(_.parts)
-      .foreach { case (tmpName, _, _) => new File(new File(path), tmpName).delete() }
+    AvroFrameWrite.dropTemps(path, messages)
 }
 
 /** Streaming write into the segment log — the sink half of the Kafka
@@ -405,40 +341,17 @@ class AvroFrameStreamingWrite(path: String, avroSchemaJson: String, schemaId: In
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val dir = new File(path)
-    // publish instant for the epoch (TIMESTAMP AS OF contract — rename
-    // preserves the temp's task-write mtime, so restamp explicitly)
-    val publish = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis())
-    val fresh = Array.newBuilder[(String, String, String)]
-    messages.collect { case m: AvroFrameCommitMessage => m }.flatMap(_.parts)
-      .foreach { case (tmpName, finalName, statsJson) =>
-        val target = new File(dir, finalName)
-        if (target.isFile) {
-          // replayed epoch: the first commit's segment stands — dropping
-          // the re-run's temp is what makes the sink exactly-once (and
-          // the first commit's publish mtime stands with it)
-          new File(dir, tmpName).delete()
-        } else {
-          java.nio.file.Files.writeString(
-            new File(dir, finalName + ".stats").toPath, statsJson)
-          val ok = FrameCommitIo.impl.publish(new File(dir, tmpName), target)
-          require(ok, s"epoch $epochId commit rename failed for $tmpName -> $finalName")
-          java.nio.file.Files.setLastModifiedTime(target.toPath, publish)
-          fresh += ((tmpName, finalName, statsJson))
-        }
-      }
-    // ledger fold for the FIRST publish of each name only (a replayed
-    // epoch's entry is already present and identical)
-    val adds = fresh.result()
-    if (adds.nonEmpty) FrameMaintenance.withDirLock(dir) {
-      FrameStatsLedger.fold(dir, add = adds.map { case (_, fin, json) =>
-        fin -> FrameStatsLedger.entryFromJsonOrBare(json)
-          .copy(publishMs = publish.toMillis) }.toMap)
-    }
+    // replayed epoch: the first commit's segment stands — dropping the
+    // re-run's temp is what makes the sink exactly-once (and the first
+    // commit's publish mtime and ledger entry stand with it)
+    val (replayed, fresh) = AvroFrameWrite.parts(messages)
+      .partition { case (_, finalName, _) => new File(dir, finalName).isFile }
+    replayed.foreach { case (tmpName, _, _) => new File(dir, tmpName).delete() }
+    FrameMaintenance.publishAppends(dir, fresh)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case m: AvroFrameCommitMessage => m }.flatMap(_.parts)
-      .foreach { case (tmpName, _, _) => new File(new File(path), tmpName).delete() }
+    AvroFrameWrite.dropTemps(path, messages)
 }
 
 class AvroFrameStreamingWriterFactory(path: String, avroSchemaJson: String,
@@ -873,8 +786,8 @@ object AvroFrameStats {
   *     containing matches; the scan reports the FINAL planned set back
   *     here ([[plannedGroups]]).
   *  2. Spark computes the new contents of those groups and writes them
-  *     through [[newWriteBuilder]]'s [[AvroFrameReplaceGroupsWrite]]:
-  *     the job commit retires exactly the scanned segments (ONE delete
+  *     through [[newWriteBuilder]]'s [[AvroFrameBatchWrite]], whose
+  *     job commit first retires exactly the scanned segments (ONE delete
   *     version, originals to `_history/` — pre-op snapshots stay
   *     addressable) and publishes the rewritten rows as ordinary
   *     appends. Bucketed tables keep their invariant: the write
@@ -912,100 +825,18 @@ class FrameRowLevelOperation(
       filtersPruneOnly = true)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = new WriteBuilder {
-    private def opt(k: String): String = tableOpts.get(k)
     override def build(): Write = {
-      val schemaJson = opt("avroSchema")
-      require(schemaJson != null, "option `avroSchema` is required to write")
-      val schemaId = Option(opt("schemaId")).map(_.toInt)
-        .getOrElse(AvroFrames.DefaultSchemaId)
-      val bucket = for { k <- Option(opt("bucketKey")); n <- Option(opt("buckets")) }
-        yield (k, n.toInt)
-      val bloomSpec = Option(opt("bloomColumns")).map(csv => BloomSpec(
-        csv.split(',').map(_.trim).filter(_.nonEmpty),
-        Option(opt("bloomExpectedItems")).map(_.toLong)
-          .getOrElse(AvroFrameWrite.DefaultBloomExpectedItems.toLong)))
-      val sortedBy = Option(opt("sortedBy"))
-      val timePart = for { c <- Option(opt("partitionCol")); u <- Option(opt("partitionUnit")) }
-        yield FrameTimePart(c, u)
-      bucket match {
-        case Some((key, n)) =>
-          new Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-            override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
-              org.apache.spark.sql.connector.distributions.Distributions.clustered(
-                Array(org.apache.spark.sql.connector.expressions.Expressions.column(key)))
-            override def requiredNumPartitions(): Int = n
-            override def distributionStrictlyRequired(): Boolean = true
-            override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-              AvroFrameWriteBuilder.sortOrderFor(sortedBy)
-            override def toBatch: BatchWrite = new AvroFrameReplaceGroupsWrite(
-              opt("path"), schemaJson, schemaId, info.queryId(),
-              FrameRowLevelOperation.this, bloomSpec, timePart)
-          }
-        case None if sortedBy.isDefined =>
-          new Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-            override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
-              org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-            override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-              AvroFrameWriteBuilder.sortOrderFor(sortedBy)
-            override def toBatch: BatchWrite = new AvroFrameReplaceGroupsWrite(
-              opt("path"), schemaJson, schemaId, info.queryId(),
-              FrameRowLevelOperation.this, bloomSpec, timePart)
-          }
-        case None => new Write {
-          override def toBatch: BatchWrite = new AvroFrameReplaceGroupsWrite(
-            opt("path"), schemaJson, schemaId, info.queryId(),
-            FrameRowLevelOperation.this, bloomSpec, timePart)
-        }
-      }
+      val o = new FrameTableOptions(tableOpts)
+      require(o.avroSchema != null, "option `avroSchema` is required to write")
+      AvroFrameWriteBuilder.shaped(o,
+        new AvroFrameBatchWrite(o.path, o.avroSchema, o.schemaId, info.queryId(),
+          o.bloom, o.timePart, dir => {
+            val groups = Option(plannedGroups).getOrElse(
+              throw new IllegalStateException(
+                "replace-groups write committed before the operation's scan planned its groups"))
+            FrameMaintenance.retireSegments(dir, groups.toSeq.map(p => new File(p).getName))
+          }),
+        throw new UnsupportedOperationException("row-level operations are batch-only"))
     }
   }
-}
-
-/** The write half of a group rewrite: tasks write replacement segments
-  * exactly like a batch insert (hidden temps, stats, monotonic stamp);
-  * the driver commit retires the operation's scanned groups and then
-  * publishes — replace-by-retire-and-append, so every maintenance
-  * invariant (versions, history, stream offsets) holds by construction.
-  */
-class AvroFrameReplaceGroupsWrite(path: String, avroSchemaJson: String, schemaId: Int,
-                                  queryId: String, op: FrameRowLevelOperation,
-                                  bloom: Option[BloomSpec] = None,
-                                  part: Option[FrameTimePart] = None)
-    extends BatchWrite {
-  require(path != null, "option `path` is required")
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val stamp = f"${AvroFrames.nextBatchStampMs(path)}%013d-${queryId.take(8)}"
-    new AvroFrameWriterFactory(path, avroSchemaJson, schemaId, stamp, bloom, part)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = new File(path)
-    val groups = Option(op.plannedGroups).getOrElse(
-      throw new IllegalStateException(
-        "replace-groups write committed before the operation's scan planned its groups"))
-    FrameMaintenance.retireSegments(dir, groups.toSeq.map(p => new File(p).getName))
-    val publish = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis())
-    val published = messages.collect {
-      case m: AvroFrameCommitMessage => m }.flatMap(_.parts)
-    published.foreach { case (tmpName, finalName, statsJson) =>
-      java.nio.file.Files.writeString(
-        new File(dir, finalName + ".stats").toPath, statsJson)
-      val target = new File(dir, finalName)
-      val ok = FrameCommitIo.impl.publish(new File(dir, tmpName), target)
-      require(ok, s"group-rewrite rename failed for $tmpName -> $finalName")
-      java.nio.file.Files.setLastModifiedTime(target.toPath, publish)
-    }
-    // retires already left the ledger (inside retireSegments); fold the
-    // rewritten groups' replacement appends in
-    if (published.nonEmpty) FrameMaintenance.withDirLock(dir) {
-      FrameStatsLedger.fold(dir, add = published.map { case (_, fin, json) =>
-        fin -> FrameStatsLedger.entryFromJsonOrBare(json)
-          .copy(publishMs = publish.toMillis) }.toMap)
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case m: AvroFrameCommitMessage => m }.flatMap(_.parts)
-      .foreach { case (tmpName, _, _) => new File(new File(path), tmpName).delete() }
 }

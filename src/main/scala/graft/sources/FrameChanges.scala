@@ -1,8 +1,5 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.avro.Schema
 import org.apache.avro.generic.GenericRecord
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -167,9 +164,9 @@ class AvroFrameChangesScanBuilder(fullSchema: StructType, options: CaseInsensiti
     // a pushed bound contradicting the explicit range is an EMPTY feed,
     // not an error (the predicate simply matches nothing)
     val to = if (to0 < from && (pushedLo > 0 || pushedHi != Int.MaxValue)) from else to0
-    new AvroFrameChangesScan(path, options.get("avroSchema"),
-      Option(options.get("schemaId")).map(_.toInt).getOrElse(AvroFrames.DefaultSchemaId),
-      required, from, to, options.get("avroSchemaHistory"),
+    val opts = new FrameTableOptions(options)
+    new AvroFrameChangesScan(path, opts.avroSchema, opts.schemaId,
+      required, from, to, opts.historyJson,
       Option(options.get("maxVersionsPerTrigger")).map(_.toInt).getOrElse(0))
   }
 }
@@ -335,32 +332,17 @@ class FrameChangeReader(part: FrameChangePartition, avroSchemaJson: String,
                         historyJson: String = null)
     extends PartitionReader[InternalRow] {
 
-  private val readerSchema = new Schema.Parser().parse(avroSchemaJson)
-  private val registry = AvroFrames.schemaHistory(avroSchemaJson, schemaId, historyJson)
-  private val dec = new FrameDecoder(part.file, readerSchema, registry)
+  // change metadata columns at positions -1 (type) and -2 (version)
+  private val proj = new FrameProjection(avroSchemaJson, schemaId, historyJson,
+    requiredCols, Array.empty,
+    Seq(FrameChanges.ChangeTypeCol -> StringType, FrameChanges.CommitVersionCol -> LongType))
+  private val dec = new FrameDecoder(part.file, proj.readerSchema, proj.schemas)
   private val rep: FrameDecoder =
-    part.replacement.map(new FrameDecoder(_, readerSchema, registry)).orNull
+    part.replacement.map(new FrameDecoder(_, proj.readerSchema, proj.schemas)).orNull
   private var repFrame: Array[Byte] = if (rep != null) rep.nextFrameBytes() else null
   private val priorDvCur: FrameDv.Cursor = part.priorDv.map(FrameDv.cursor).orNull
   private val dvCur: FrameDv.Cursor = part.dvFile.map(FrameDv.cursor).orNull
 
-  private val fieldPos: Map[String, Int] =
-    readerSchema.getFields.asScala.map(f => f.name() -> f.pos()).toMap
-  private val MetaType = -1
-  private val MetaVersion = -2
-  private val requiredPos: Array[Int] = requiredCols.map {
-    case FrameChanges.ChangeTypeCol    => MetaType
-    case FrameChanges.CommitVersionCol => MetaVersion
-    case c                             => fieldPos(c)
-  }
-  private val requiredTypes: Array[DataType] = {
-    val spark = AvroFrames.sparkSchema(readerSchema)
-    requiredCols.map {
-      case FrameChanges.ChangeTypeCol    => StringType
-      case FrameChanges.CommitVersionCol => LongType
-      case c                             => spark(c).dataType
-    }
-  }
   private val changeType =
     UTF8String.fromString(if (part.isDelete) "delete" else "insert")
 
@@ -388,14 +370,15 @@ class FrameChangeReader(part: FrameChangePartition, avroSchemaJson: String,
   private def emit(frame: Array[Byte]): Boolean = {
     val rec: GenericRecord = dec.decodeFrame(frame)
     if (rec == null) return false
-    val row = new GenericInternalRow(requiredPos.length)
+    val pos = proj.requiredPos
+    val row = new GenericInternalRow(pos.length)
     var i = 0
-    while (i < requiredPos.length) {
-      val p = requiredPos(i)
+    while (i < pos.length) {
+      val p = pos(i)
       row.update(i,
-        if (p == MetaType) changeType
-        else if (p == MetaVersion) part.version.toLong
-        else AvroFrames.convert(rec.get(p), requiredTypes(i)))
+        if (p == -1) changeType
+        else if (p == -2) part.version.toLong
+        else AvroFrames.convert(rec.get(p), proj.requiredTypes(i)))
       i += 1
     }
     current = row

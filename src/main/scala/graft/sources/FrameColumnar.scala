@@ -1,8 +1,5 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.avro.Schema
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.sources.Filter
@@ -10,7 +7,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
 /** Columnar read path for the frame source (round 15, VERDICT r14
-  * item 4): the row readers materialize one boxed
+  * item 4): the row reader materializes one boxed
   * `GenericInternalRow` per frame, which every operator above unwraps
   * through virtual `InternalRow` calls; this reader decodes the same
   * frames but writes the projected fields straight into reused
@@ -23,13 +20,15 @@ import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
   * no per-row allocation, no per-field boxing, monomorphic vector
   * writes.
   *
-  * Engaged for plain row scans only (single-segment and bucket-chain
-  * splits): pushed aggregates emit one summary row, pushed TopN keeps
-  * a row heap, and the streaming path feeds micro-batch machinery —
-  * all row-shaped, all left on the row readers. Pushed filters,
-  * deletion vectors, LIMIT, multi-schema decode, and the
-  * `_segment`/`_frame_offset` metadata columns behave identically to
-  * the row path (same [[FrameDecoder]], same compiled predicates).
+  * Every batch row scan reads through it (single-segment and bucket
+  * splits alike are segment chains). Pushed aggregates emit one
+  * summary row, pushed TopN keeps a row heap, and the streaming path
+  * feeds micro-batch machinery — the reader factory builds those
+  * splits row-shaped. Projection, pushed filters, deletion vectors,
+  * multi-schema decode, the bloom gate and the task metrics come from
+  * the same [[FrameProjection]] and [[FrameSegmentWalk]] as the row
+  * reader, so the two paths cannot drift; LIMIT bounds the chain total
+  * in both.
   */
 class AvroFrameColumnarReader(files: Seq[String], dvs: Seq[Option[String]],
                               avroSchemaJson: String, schemaId: Int,
@@ -40,83 +39,30 @@ class AvroFrameColumnarReader(files: Seq[String], dvs: Seq[Option[String]],
 
   private val BatchRows = 4096
 
-  private val readerSchema = new Schema.Parser().parse(avroSchemaJson)
-  private val fieldPos: Map[String, Int] =
-    readerSchema.getFields.asScala.map(f => f.name() -> f.pos()).toMap
-  private val MetaSeg = -1
-  private val MetaOff = -2
-  private val requiredPos: Array[Int] = requiredCols.map {
-    case AvroFrames.SegmentMetaCol => MetaSeg
-    case AvroFrames.OffsetMetaCol  => MetaOff
-    case c                         => fieldPos(c)
-  }
-  private val requiredTypes: Array[DataType] = {
-    val spark = AvroFrames.sparkSchema(readerSchema)
-    requiredCols.map {
-      case AvroFrames.SegmentMetaCol => StringType
-      case AvroFrames.OffsetMetaCol  => LongType
-      case c                         => spark(c).dataType
-    }
-  }
-  private val preds = pushed.map(AvroFrames.compile(fieldPos, _))
+  private val proj = new FrameProjection(avroSchemaJson, schemaId, historyJson,
+    requiredCols, pushed)
+  private val requiredPos = proj.requiredPos
+  private val requiredTypes = proj.requiredTypes
+  private val walk = new FrameSegmentWalk(files, dvs, probes, proj)
 
   private val vectors: Array[OnHeapColumnVector] =
     requiredTypes.map(t => new OnHeapColumnVector(BatchRows, t))
   private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector).toArray)
 
-  private var fileIdx = 0
-  private var dec: FrameDecoder = null
-  private var segNameUtf8: Array[Byte] = null
-  private var emitted = 0L
-  private var emittedThisSegment = 0L
-  private var malformedClosed = 0L
-
-  private var bloomSkipped = 0L
-
-  private def openNext(): Boolean = {
-    if (dec != null) { malformedClosed += dec.malformed; dec.close(); dec = null }
-    // executor-side bloom gate (round 16): segments whose own sidecar
-    // proves no equality match are never opened; the split's probe
-    // hint (round 17) spares bloom-less members the sidecar read
-    while (fileIdx < files.length &&
-        (fileIdx >= probes.length || probes(fileIdx)) &&
-        AvroFrameStats.bloomBlocked(files(fileIdx), pushed)) {
-      bloomSkipped += 1
-      fileIdx += 1
-    }
-    if (fileIdx >= files.length) return false
-    val f = files(fileIdx)
-    dec = new FrameDecoder(f, readerSchema,
-      AvroFrames.schemaHistory(avroSchemaJson, schemaId, historyJson))
-    if (fileIdx < dvs.length) dvs(fileIdx).foreach(d => dec.deleted = FrameDv.cursor(d))
-    segNameUtf8 = new java.io.File(f).getName.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    fileIdx += 1
-    true
-  }
-
-  openNext()
-
   override def next(): Boolean = {
-    if (dec == null) return false
-    if (limit > 0 && emitted >= limit) return false
     var n = 0
-    while (n < BatchRows && (limit <= 0 || emitted < limit)) {
-      val rec = dec.nextRecord()
-      if (rec == null) {
-        if (!openNext()) {
-          if (n == 0) return false
-          // flush the partial last batch
-          batch.setNumRows(n)
-          return true
-        }
-      } else if (preds.forall(_(rec))) {
+    var more = true
+    while (more && n < BatchRows && (limit <= 0 || walk.emitted < limit)) {
+      val rec = walk.next()
+      if (rec == null) more = false
+      else {
         if (n == 0) vectors.foreach(_.reset())
         var i = 0
         while (i < requiredPos.length) {
           val p = requiredPos(i)
           val v = vectors(i)
-          if (p == MetaSeg) v.putByteArray(n, segNameUtf8)
-          else if (p == MetaOff) v.putLong(n, dec.position)
+          if (p == FrameProjection.MetaSeg) v.putByteArray(n, walk.segment.getBytes)
+          else if (p == FrameProjection.MetaOff) v.putLong(n, walk.position)
           else {
             val value = rec.get(p)
             if (value == null) v.putNull(n)
@@ -144,7 +90,7 @@ class AvroFrameColumnarReader(files: Seq[String], dvs: Seq[Option[String]],
           i += 1
         }
         n += 1
-        emitted += 1
+        walk.emitted += 1
       }
     }
     if (n == 0) return false
@@ -155,13 +101,10 @@ class AvroFrameColumnarReader(files: Seq[String], dvs: Seq[Option[String]],
   override def get(): ColumnarBatch = batch
 
   override def close(): Unit = {
-    if (dec != null) { malformedClosed += dec.malformed; dec.close(); dec = null }
+    walk.close()
     batch.close()
   }
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(FrameScanMetrics.Value("frames_emitted", emitted),
-      FrameScanMetrics.Value("frames_malformed",
-        malformedClosed + (if (dec != null) dec.malformed else 0L)),
-      FrameScanMetrics.Value("segments_bloom_skipped", bloomSkipped))
+    walk.metrics
 }

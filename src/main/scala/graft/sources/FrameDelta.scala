@@ -71,17 +71,11 @@ class FrameDeltaOperation(
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
       override def build(): DeltaWrite = new DeltaWrite {
-        override def toBatch: DeltaBatchWrite = new FrameDeltaBatchWrite(
-          tableOpts.get("path"),
-          tableOpts.get("avroSchema"),
-          Option(tableOpts.get("schemaId")).map(_.toInt).getOrElse(AvroFrames.DefaultSchemaId),
-          info.queryId(),
-          Option(tableOpts.get("bloomColumns")).map(csv => BloomSpec(
-            csv.split(',').map(_.trim).filter(_.nonEmpty),
-            Option(tableOpts.get("bloomExpectedItems")).map(_.toLong)
-              .getOrElse(AvroFrameWrite.DefaultBloomExpectedItems.toLong))),
-          Option(tableOpts.get("dvFoldThreshold")).map(_.toDouble)
-            .getOrElse(FrameMaintenance.DefaultDvFoldThreshold))
+        override def toBatch: DeltaBatchWrite = {
+          val o = new FrameTableOptions(tableOpts)
+          new FrameDeltaBatchWrite(o.path, o.avroSchema, o.schemaId, info.queryId(),
+            o.bloom, o.dvFoldThreshold)
+        }
       }
     }
 }
@@ -106,7 +100,7 @@ class FrameDeltaBatchWrite(path: String, avroSchemaJson: String, schemaId: Int,
   private val manifestLenAtStart = FrameMaintenance.readManifest(dir).length
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val stamp = f"${AvroFrames.nextBatchStampMs(path)}%013d-${queryId.take(8)}"
+    val stamp = AvroFrames.batchStamp(path, queryId)
     new FrameDeltaWriterFactory(path, avroSchemaJson, schemaId, stamp, bloom)
   }
 

@@ -556,9 +556,12 @@ object FrameMaintenance {
     publishMs
   }
 
-  /** Publish an executor-written temp as a visible segment: optional
-    * sidecar first, rename, restamp mtime to the publish instant (the
-    * same discipline as the DSv2 job commit).
+  /** Publish an executor-written temp as a visible segment — the one
+    * publish step of every commit path: optional sidecar first (readers
+    * tolerate a missing sidecar, but a visible segment must never
+    * precede its commit), rename, then restamp mtime to the publish
+    * instant (POSIX rename PRESERVES the temp's task-write mtime, and
+    * TIMESTAMP AS OF cuts on it).
     */
   private def publishSegment(dir: File, tmpName: String, finalName: String,
                              statsJson: Option[String], publishMs: Long): Unit = {
@@ -566,10 +569,37 @@ object FrameMaintenance {
       new File(dir, finalName + ".stats").toPath, j))
     val target = new File(dir, finalName)
     val ok = FrameCommitIo.impl.publish(new File(dir, tmpName), target)
-    require(ok, s"maintenance publish rename failed: $tmpName -> $finalName")
+    require(ok, s"publish rename failed: $tmpName -> $finalName")
     java.nio.file.Files.setLastModifiedTime(target.toPath,
       java.nio.file.attribute.FileTime.fromMillis(publishMs))
   }
+
+  /** Ledger entries for freshly published appends, from the very
+    * statsJson the tasks returned — O(1) planning metadata at zero
+    * extra I/O.
+    */
+  private def appendEntries(parts: Seq[(String, String, String)],
+                            publishMs: Long): Map[String, FrameStatsLedger.Entry] =
+    parts.map { case (_, finalName, statsJson) =>
+      finalName -> FrameStatsLedger.entryFromJsonOrBare(statsJson).copy(publishMs = publishMs)
+    }.toMap
+
+  /** The DSv2 job-commit publish (batch insert, streaming epoch, group
+    * rewrite): every (tmpName, finalName, statsJson) part publishes at
+    * ONE instant — without a shared restamp, a timestamp falling
+    * between two tasks' write times would tear one committed job in
+    * half — then ONE ledger fold under the dir lock. Segments land
+    * FIRST, so a crash before the fold leaves them merely unledgered
+    * (reads fall back to their sidecars, never miss them).
+    */
+  private[sources] def publishAppends(dir: File, parts: Seq[(String, String, String)]): Unit =
+    if (parts.nonEmpty) {
+      val publishMs = System.currentTimeMillis()
+      parts.foreach { case (tmpName, finalName, statsJson) =>
+        publishSegment(dir, tmpName, finalName, Some(statsJson), publishMs)
+      }
+      withDirLock(dir) { FrameStatsLedger.fold(dir, add = appendEntries(parts, publishMs)) }
+    }
 
   /** Publish instant for a maintenance operation: never before the
     * wall clock, any live segment's publish time, or any earlier
@@ -1129,11 +1159,7 @@ object FrameMaintenance {
         MaintEntry("delete", publishMs, replacedV, replacedMs.result(),
           replacements.result(), expired = false))
       FrameStatsLedger.fold(dir,
-        add = rewritten.flatMap { case (_, _, result) =>
-          result.map { case (_, finalName, statsJson) =>
-            finalName -> FrameStatsLedger.entryFromJsonOrBare(statsJson)
-              .copy(publishMs = publishMs) }
-        }.toMap,
+        add = appendEntries(rewritten.flatMap(_._3).toSeq, publishMs),
         remove = replacedV)
     } catch { case c: CommitConflict =>
       rewritten.foreach { case (_, _, r) =>
@@ -1659,9 +1685,7 @@ object FrameMaintenance {
       }
       writeManifest(dir, manifest ++ entries.result())
       FrameStatsLedger.fold(dir,
-        add = inserts.map { case (_, fin, stats) =>
-          fin -> FrameStatsLedger.entryFromJsonOrBare(stats)
-            .copy(publishMs = publishMs) }.toMap,
+        add = appendEntries(inserts, publishMs),
         dvSet = realDeletes.keys.map(seg =>
           seg -> ((FrameDv.nameFor(seg, gen), publishMs))).toMap)
     } catch {

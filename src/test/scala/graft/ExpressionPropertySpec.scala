@@ -104,6 +104,47 @@ class ExpressionPropertySpec extends AnyFunSuite with SparkFixture {
     assert(diff == 0, s"$diff random long vectors diverged from the HOF integer fold")
   }
 
+  test("vector kernels are null exactly where their HOF folds are: ragged lengths, null elements") {
+    // outside the equal-length, null-free domain aggregate(zip_with(…))
+    // is NULL (zip_with null-pads, a null term nulls the fold); every
+    // kernel must agree row for row, eval and codegen alike
+    import spark.implicits._
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    def vec[T](draw: => T): Seq[Option[T]] =
+      Seq.fill(Seq(0, 3, 3, 3, 4)(rnd.nextInt(5)))(if (rnd.nextInt(8) == 0) None else Some(draw))
+    val rows = Seq.fill(400)((vec(rnd.nextGaussian().toFloat), vec(rnd.nextGaussian().toFloat),
+      vec(rnd.nextGaussian()), vec(rnd.nextGaussian()),
+      vec((rnd.nextInt(255) - 127).toLong), vec((rnd.nextInt(255) - 127).toLong)))
+    val df = rows.toDF("fa", "fb", "da", "db", "la", "lb")
+    def kernel(k: (Expression, Expression) => Expression, a: String, b: String): Column =
+      column(k(expression(col(a)), expression(col(b))))
+    def hof(a: String, b: String, zero: Column)(f: (Column, Column) => Column): Column =
+      aggregate(zip_with(col(a), col(b), f), zero, (acc, t) => acc + t)
+    def d(c: Column): Column = c.cast("double")
+    val cases: Seq[(String, Column, Column)] = Seq(
+      ("float_dot", kernel(graft.expressions.FloatDotProduct, "fa", "fb"),
+        hof("fa", "fb", lit(0.0))((x, y) => d(x) * d(y))),
+      ("float_double_dot", kernel(graft.expressions.FloatDoubleDotProduct, "fa", "db"),
+        hof("fa", "db", lit(0.0))((x, y) => d(x) * y)),
+      ("long_dot", kernel(graft.expressions.LongDotProduct, "la", "lb"),
+        hof("la", "lb", lit(0L))(_ * _)),
+      ("double_sqdist", kernel(graft.expressions.DoubleSqDist, "da", "db"),
+        hof("da", "db", lit(0.0))((x, y) => (x - y) * (x - y))),
+      ("float_sqdist", kernel(graft.expressions.FloatSqDist, "fa", "fb"),
+        hof("fa", "fb", lit(0.0))((x, y) => (d(x) - d(y)) * (d(x) - d(y)))),
+      ("double_dot", kernel(graft.expressions.DoubleDotProduct, "da", "db"),
+        hof("da", "db", lit(0.0))(_ * _)))
+    cases.foreach { case (name, fast, ref) =>
+      val out = df.select(fast.as("fast"), ref.as("hof"))
+      assert(out.filter(!(col("fast") <=> col("hof"))).count() == 0,
+        s"$name diverged from its HOF fold")
+      val nulls = out.filter(col("hof").isNull).count()
+      assert(nulls > 0 && nulls < rows.length, s"$name: $nulls null rows — both domains must be hit")
+    }
+  }
+
   test("SimHash64 equals the explode+aggregate bit-majority form on arbitrary token sets") {
     import spark.implicits._
     val docs = Seq.fill(200)(randomText()).zipWithIndex

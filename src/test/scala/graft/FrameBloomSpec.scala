@@ -68,16 +68,16 @@ class FrameBloomSpec extends AnyFunSuite with SparkFixture {
       new java.io.File(miss.getParentFile, miss.getName + ".stats").toPath,
       new java.io.File(missCopyDir, miss.getName + ".stats").toPath)
     // NOTE: ghost data file deliberately NOT created
-    val blocked = new graft.sources.AvroFrameReader(ghost.getAbsolutePath, schemaJson,
-      AvroFrames.DefaultSchemaId, Array("id", "v"), Array(EqualTo("id", 7L)))
-    assert(blocked.bloomSkipped, "the gate must fire from the sidecar alone")
+    val blocked = new graft.sources.AvroFrameReader(Seq(ghost.getAbsolutePath), Seq(None),
+      schemaJson, AvroFrames.DefaultSchemaId, Array("id", "v"), Array(EqualTo("id", 7L)))
+    assert(blocked.bloomSkipped == 1L, "the gate must fire from the sidecar alone")
     assert(!blocked.next(), "a bloom-blocked reader emits nothing")
     blocked.close()
 
     // unblocked reader on the containing segment still finds the row
-    val open = new graft.sources.AvroFrameReader(hit.getAbsolutePath, schemaJson,
-      AvroFrames.DefaultSchemaId, Array("id", "v"), Array(EqualTo("id", 7L)))
-    assert(!open.bloomSkipped)
+    val open = new graft.sources.AvroFrameReader(Seq(hit.getAbsolutePath), Seq(None),
+      schemaJson, AvroFrames.DefaultSchemaId, Array("id", "v"), Array(EqualTo("id", 7L)))
+    assert(open.bloomSkipped == 0L)
     assert(open.next() && open.get().getLong(0) == 7L)
     open.close()
 
@@ -143,9 +143,9 @@ class FrameBloomSpec extends AnyFunSuite with SparkFixture {
     // reader, no ledger knowledge = conservative true)
     import org.apache.spark.sql.sources.EqualTo
     val seg = AvroFrames.listSegments(withB).head
-    val r = new graft.sources.AvroFrameReader(seg.getAbsolutePath, schemaJson,
-      AvroFrames.DefaultSchemaId, Array("id"), Array(EqualTo("id", -1L)))
-    assert(r.bloomSkipped, "conservative probe must still block a proven miss")
+    val r = new graft.sources.AvroFrameReader(Seq(seg.getAbsolutePath), Seq(None),
+      schemaJson, AvroFrames.DefaultSchemaId, Array("id"), Array(EqualTo("id", -1L)))
+    assert(r.bloomSkipped == 1L, "conservative probe must still block a proven miss")
     assert(AvroFrameStats.bloomProbeReads.get() > before4)
     r.close()
   }

@@ -151,29 +151,41 @@ class FrameScanSpec extends AnyFunSuite with SparkFixture {
     assert(plan.contains("ColumnarToRow"),
       s"plain frame scans must read columnar:\n$plan")
 
-    val rows = spark.read.format("graft.sources.AvroFrameDataSource")
-      .option("path", dir).option("avroSchema", schemaJson)
-      .option("columnar", "false").load()
-    assert(!rows.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
+    // the row path, read directly: the row reader over every segment
+    def rowPath(cols: Array[String], pushed: Array[org.apache.spark.sql.sources.Filter])
+        : Seq[org.apache.spark.sql.catalyst.InternalRow] = {
+      val r = new graft.sources.AvroFrameReader(
+        AvroFrames.listSegments(dir).map(_.getAbsolutePath).toSeq, Seq.empty,
+        schemaJson, AvroFrames.DefaultSchemaId, cols, pushed)
+      val out = Seq.newBuilder[org.apache.spark.sql.catalyst.InternalRow]
+      while (r.next()) out += r.get()
+      r.close()
+      out.result()
+    }
+    def str(r: org.apache.spark.sql.catalyst.InternalRow, i: Int): String =
+      if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+    val rows = rowPath(Array("id", "tag", "v"), Array.empty)
+      .map(r => (r.getLong(0), str(r, 1), r.getDouble(2))).sortBy(_._1)
 
     def canon(df: DataFrame): Seq[(Long, String, Double)] =
       df.collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) null else r.getString(1), r.getDouble(2))).sortBy(_._1).toSeq
-    assert(canon(cols) == canon(rows))
+    assert(canon(cols) == rows)
     assert(cols.count() == 1000)
 
     // pushed filter + projection + metadata columns through the
     // columnar reader
     val proj = cols.filter(col("v") >= 500.0)
       .select(col("id"), col("tag"), col("_segment"), col("_frame_offset"))
-    val projRows = rows.filter(col("v") >= 500.0)
-      .select(col("id"), col("tag"), col("_segment"), col("_frame_offset"))
+    val projRows = rowPath(Array("id", "tag", "_segment", "_frame_offset"),
+      Array(org.apache.spark.sql.sources.GreaterThanOrEqual("v", 500.0)))
+      .map(r => (r.getLong(0), str(r, 1), str(r, 2), r.getLong(3))).sortBy(_._1)
     assert(proj.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     def canon4(df: DataFrame): Seq[(Long, String, String, Long)] =
       df.collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) null else r.getString(1), r.getString(2), r.getLong(3)))
         .sortBy(_._1).toSeq
-    assert(canon4(proj) == canon4(projRows) && canon4(proj).nonEmpty)
+    assert(canon4(proj) == projRows && projRows.nonEmpty)
 
     // pushed aggregates and TopN stay row-shaped (summary/heap output)
     val agg = cols.agg(count(lit(1)), min("v"), max("v"))
@@ -191,6 +203,87 @@ class FrameScanSpec extends AnyFunSuite with SparkFixture {
     assert(after.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     assert(after.count() == 1000 - del.length)
     assert(canon(after).map(_._1) == (0L until 1000L).filterNot(del.contains))
+  }
+
+  /** The row and columnar readers walk a bucket chain identically: one
+    * split of three segments — a deletion vector on the first, a
+    * bloom-blocked middle, junk frames (wrong magic, unknown schema id,
+    * truncated body) in the last — yields the same rows and the same
+    * three task metrics through both factory entry points.
+    */
+  test("row and columnar chain readers agree on rows and task metrics") {
+    import graft.sources.{AvroFrameBucketPartition, AvroFrameReaderFactory, AvroFrameWrite, FrameDv}
+    import graft.streaming.AvroRecords
+    import org.apache.spark.sql.sources.EqualTo
+    val dir = Files.createTempDirectory("chain-parity").toFile
+    val avro = new org.apache.avro.Schema.Parser().parse(schemaJson)
+    def frame(id: Long, tag: String): Array[Byte] = {
+      val r = new org.apache.avro.generic.GenericData.Record(avro)
+      r.put("id", id); r.put("tag", tag); r.put("v", id * 0.5)
+      AvroFrames.frameRecord(AvroFrames.DefaultSchemaId, r)
+    }
+    def segment(name: String, frames: Seq[Array[Byte]]): String = {
+      val f = new java.io.File(dir, name)
+      AvroFrames.writeSegment(f, frames.iterator)
+      f.getAbsolutePath
+    }
+    // 1: ten rows, positions 2 and 5 deleted by a vector
+    val withDv = segment("segment-a.bin", (0L until 10L).map(frame(_, "x")))
+    val dv = new java.io.File(dir, "segment-a.bin.dv1")
+    FrameDv.write(dv, Array(2, 5))
+    // 2: every row tagged "y", and a sidecar whose tag bloom proves it
+    val blocked = segment("segment-b.bin", (20L until 30L).map(frame(_, "y")))
+    val bloom = org.apache.spark.util.sketch.BloomFilter.create(100, AvroFrameWrite.BloomFpp)
+    bloom.putString("y")
+    val tagStats = new AvroFrameWrite.FieldStats
+    tagStats.observe("y")
+    java.nio.file.Files.writeString(new java.io.File(blocked + ".stats").toPath,
+      AvroFrameWrite.statsJson(10L, Seq("tag" -> tagStats),
+        Map("tag" -> AvroFrameWrite.bloomToB64(bloom))))
+    // 3: five good rows around three junk frames
+    val junk = segment("segment-c.bin", Seq(frame(40L, "x"), frame(41L, "x"),
+      Array[Byte](1, 0, 0, 0, 7),
+      AvroRecords.frame(99, Array[Byte](2)),
+      AvroRecords.frame(AvroFrames.DefaultSchemaId, Array[Byte](0x7f.toByte)),
+      frame(42L, "x"), frame(43L, "x"), frame(44L, null)))
+
+    val cols = Array("id", "tag", "v", AvroFrames.SegmentMetaCol, AvroFrames.OffsetMetaCol)
+    val split = AvroFrameBucketPartition(Seq(withDv, blocked, junk), 0,
+      Seq(Some(dv.getAbsolutePath), None, None))
+    val factory = new AvroFrameReaderFactory(schemaJson, AvroFrames.DefaultSchemaId, cols,
+      Array(EqualTo("tag", "x")), columnar = true)
+    assert(factory.supportColumnarReads(split))
+    type Out = (Long, String, Double, String, Long)
+    def out(r: org.apache.spark.sql.catalyst.InternalRow): Out =
+      (r.getLong(0), if (r.isNullAt(1)) null else r.getUTF8String(1).toString,
+        r.getDouble(2), r.getUTF8String(3).toString, r.getLong(4))
+    def metrics(ms: Array[org.apache.spark.sql.connector.metric.CustomTaskMetric]) =
+      ms.map(m => m.name -> m.value).toMap
+
+    val rowReader = factory.createReader(split)
+    val rows = Seq.newBuilder[Out]
+    while (rowReader.next()) rows += out(rowReader.get())
+    val rowMetrics = metrics(rowReader.currentMetricsValues())
+    rowReader.close()
+
+    val colReader = factory.createColumnarReader(split)
+    val colRows = Seq.newBuilder[Out]
+    while (colReader.next()) {
+      val it = colReader.get().rowIterator()
+      while (it.hasNext) colRows += out(it.next())
+    }
+    val colMetrics = metrics(colReader.currentMetricsValues())
+    colReader.close()
+
+    val expected = (Seq(0L, 1L, 3L, 4L, 6L, 7L, 8L, 9L).map(i =>
+        (i, "x", i * 0.5, "segment-a.bin", i)) ++
+      Seq((40L, 0L), (41L, 1L), (42L, 5L), (43L, 6L)).map { case (i, off) =>
+        (i, "x", i * 0.5, "segment-c.bin", off) })
+    assert(rows.result() == expected)
+    assert(colRows.result() == expected)
+    assert(rowMetrics == Map("frames_emitted" -> 12L, "frames_malformed" -> 3L,
+      "segments_bloom_skipped" -> 1L), s"row chain: $rowMetrics")
+    assert(colMetrics == rowMetrics, s"columnar chain: $colMetrics")
   }
 
   /** Round 15: LIKE pushdown. StartsWith prunes segments via sidecar

@@ -219,7 +219,7 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
       (i, Some(s"u$i"), i.toDouble, Array[Byte]())))
     val file = new java.io.File(dir, "segment-0.bin").getAbsolutePath
     def countRows(filters: Array[org.apache.spark.sql.sources.Filter]): Long = {
-      val r = new AvroFrameReader(file, frameSchema, 7, Array("id"), filters)
+      val r = new AvroFrameReader(Seq(file), Seq(None), frameSchema, 7, Array("id"), filters)
       var n = 0L
       while (r.next()) n += 1
       r.close(); n
@@ -260,7 +260,7 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
       AvroRecords.frame(7, Array[Byte](0x7f.toByte)))    // truncated body
     writeFrames(dir, Nil, extraJunk = Seq(good(1L)) ++ junk ++ Seq(good(2L)))
     val file = new java.io.File(dir, "segment-0.bin").getAbsolutePath
-    val r = new AvroFrameReader(file, frameSchema, 7, Array("id"), Array.empty)
+    val r = new AvroFrameReader(Seq(file), Seq(None), frameSchema, 7, Array("id"), Array.empty)
     val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
     while (r.next()) ids += r.get().getLong(0)
     r.close()
@@ -741,7 +741,8 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
     // reader-level early stop, directly observable
     import graft.sources.AvroFrameReader
     val seg = graft.sources.AvroFrames.listSegments(dir).head.getAbsolutePath
-    val r = new AvroFrameReader(seg, frameSchema, 7, Array("id"), Array.empty, limit = 7)
+    val r = new AvroFrameReader(Seq(seg), Seq(None), frameSchema, 7, Array("id"), Array.empty,
+      limit = 7)
     var n = 0
     while (r.next()) n += 1
     r.close()
@@ -899,7 +900,7 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
       assert(rs.map(_._3).sorted.toSeq == (0L until rs.length).toSeq,
         s"offsets within $seg must be dense 0-based ordinals")
       val r = new graft.sources.AvroFrameReader(
-        new java.io.File(dir, seg).getAbsolutePath, frameSchema, 7,
+        Seq(new java.io.File(dir, seg).getAbsolutePath), Seq(None), frameSchema, 7,
         Array("id", "_frame_offset"), Array.empty)
       val direct = scala.collection.mutable.Map.empty[Long, Long]
       while (r.next()) direct(r.get().getLong(1)) = r.get().getLong(0)
