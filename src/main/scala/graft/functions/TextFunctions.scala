@@ -18,10 +18,14 @@ import org.apache.spark.sql.functions._
 object TextFunctions {
 
   /** Lowercased alphanumeric tokens; empty strings filtered out.
-    * DuckDB mirror: list_filter(string_split_regex(lower(x),'[^a-z0-9]+'), t -> t <> '')
+    * DuckDB mirror over a `text` column: [[tokensSql]].
     */
   def tokens(c: Column): Column =
     filter(split(lower(c), "[^a-z0-9]+"), t => t =!= "")
+
+  /** DuckDB mirror of `tokens(col("text"))`, for oracle SQL. */
+  val tokensSql: String =
+    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
 
   def distinctTokens(c: Column): Column = array_distinct(tokens(c))
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryGroup, Tables}
 import graft.Tables.GraftCheckpointOps
+import graft.functions.TextFunctions.tokensSql
 
 /** Remaining SURVEY §2.2 taxonomy rows not covered by the core
   * relational corpus: sketch aggregation (HLL approx-distinct), a
@@ -12,10 +13,6 @@ import graft.Tables.GraftCheckpointOps
   * frames, and custom Catalyst expressions registered for SQL use.
   */
 object Advanced extends QueryGroup {
-
-  /** DuckDB mirror of TextFunctions.tokens (q246). */
-  private val toksSql =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
 
   /** Dense per-type daily count series (q265/q266): a calendar gap day
     * is a ZERO-count observation, not a missing row — lag alignment
@@ -1224,8 +1221,8 @@ object Advanced extends QueryGroup {
             .as("spearman_rho"))
     }, Some(s"""
       WITH docs AS (
-        SELECT doc_id, len($toksSql)::BIGINT AS n_tokens,
-               len(list_distinct($toksSql))::BIGINT AS n_types
+        SELECT doc_id, len($tokensSql)::BIGINT AS n_tokens,
+               len(list_distinct($tokensSql))::BIGINT AS n_types
         FROM documents),
       m AS (SELECT doc_id, n_tokens, n_types::DOUBLE / n_tokens AS ttr
             FROM docs WHERE n_tokens > 0),

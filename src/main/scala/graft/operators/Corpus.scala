@@ -53,10 +53,6 @@ object Corpus extends QueryGroup {
   private val chunkStride = 24
   private val policyTerms = Seq("slow", "merge", "drop")
 
-  /** DuckDB mirror of `TextFunctions.tokens`. */
-  private val toksSql =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
-
   override protected val entries: Vector[(String, (SparkSession, String) => DataFrame, Option[String])] = Vector(
 
     ("q69_doc_chunks", (s, d) => {
@@ -81,7 +77,7 @@ object Corpus extends QueryGroup {
           array_join(col("c.chunk"), " ").as("chunk_text"))
         .orderBy("doc_id", "chunk_id")
     }, Some(s"""
-      WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
+      WITH toks AS (SELECT doc_id, $tokensSql AS t FROM documents),
       nz AS (SELECT doc_id, t, len(t) AS n FROM toks WHERE len(t) > 0),
       st AS (SELECT doc_id, t,
                     unnest(generate_series(0, (n - 1) // $chunkStride)) AS chunk_id
@@ -113,7 +109,7 @@ object Corpus extends QueryGroup {
           col("score"), col("rk").cast("long").as("rk"))
         .orderBy("doc_id", "rk")
     }, Some(s"""
-      WITH tk AS (SELECT doc_id, unnest($toksSql) AS term FROM documents),
+      WITH tk AS (SELECT doc_id, unnest($tokensSql) AS term FROM documents),
       tf AS (SELECT doc_id, term, count(*) AS tf FROM tk GROUP BY 1, 2),
       df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
       n AS (SELECT count(*) AS n_docs FROM documents),
@@ -138,9 +134,9 @@ object Corpus extends QueryGroup {
         .orderBy("doc_id")
     }, Some(s"""
       SELECT doc_id,
-             len(list_filter($toksSql,
+             len(list_filter($tokensSql,
                  t -> t IN (${policyTerms.map("'" + _ + "'").mkString(", ")})))::BIGINT AS policy_hits,
-             len(list_filter($toksSql,
+             len(list_filter($tokensSql,
                  t -> t IN (${policyTerms.map("'" + _ + "'").mkString(", ")}))) <= 2 AS keep,
              regexp_replace(text, '\\b(${policyTerms.mkString("|")})\\b', '<POLICY>', 'g') AS redacted
       FROM documents
@@ -160,7 +156,7 @@ object Corpus extends QueryGroup {
         .select("term", "df", "postings")
         .orderBy("term")
     }, Some(s"""
-      WITH pairs AS (SELECT doc_id, unnest(list_distinct($toksSql)) AS term FROM documents)
+      WITH pairs AS (SELECT doc_id, unnest(list_distinct($tokensSql)) AS term FROM documents)
       SELECT term, count(*) AS df,
              array_to_string((list_sort(list(doc_id)))[1:1000], ',') AS postings
       FROM pairs
@@ -229,7 +225,7 @@ object Corpus extends QueryGroup {
         .select("doc_id", "n_grams", "n_matched", "contaminated")
         .orderBy("doc_id")
     }, Some(s"""
-      WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
+      WITH toks AS (SELECT doc_id, $tokensSql AS t FROM documents),
       g AS (SELECT doc_id,
                    unnest(list_distinct([array_to_string(t[i : i + 2], ' ')
                                          for i in generate_series(1, len(t) - 2)])) AS g
@@ -283,7 +279,7 @@ object Corpus extends QueryGroup {
           (col("top2") * 25 <= col("n2")).as("keep"))
         .orderBy("doc_id")
     }, Some(s"""
-      WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
+      WITH toks AS (SELECT doc_id, $tokensSql AS t FROM documents),
       nz AS (SELECT doc_id, t FROM toks WHERE len(t) >= 3),
       g AS (SELECT doc_id, unnest(
              ['2|' || t[i] || ' ' || t[i + 1] for i in generate_series(1, len(t) - 1)] ||
@@ -314,7 +310,7 @@ object Corpus extends QueryGroup {
         .groupBy("bigram").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("bigram")).limit(50)
     }, Some(s"""
-      WITH toks AS (SELECT $toksSql AS t FROM documents),
+      WITH toks AS (SELECT $tokensSql AS t FROM documents),
       idx AS (SELECT t, unnest(generate_series(1, len(t) - 1)) AS i
               FROM toks WHERE len(t) >= 2),
       b AS (SELECT t[i] || ' ' || t[i + 1] AS bigram FROM idx)
@@ -370,7 +366,7 @@ object Corpus extends QueryGroup {
           col("dup_tokens").cast("double") / col("n_tokens").cast("double"))
         .orderBy("doc_id")
     }, Some(s"""
-      WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
+      WITH toks AS (SELECT doc_id, $tokensSql AS t FROM documents),
       base AS (SELECT doc_id, t, len(t) AS n FROM toks WHERE len(t) >= 8),
       idx AS (SELECT doc_id, t, n, unnest(generate_series(1, n - 7)) AS pos FROM base),
       gs AS (SELECT doc_id, n, pos, array_to_string(t[pos : pos + 7], ' ') AS g FROM idx),
@@ -424,7 +420,7 @@ object Corpus extends QueryGroup {
         SELECT doc_id, source, lang, text FROM documents
         QUALIFY row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) = 1
       ),
-      toks AS (SELECT doc_id, source, lang, $toksSql AS t FROM surv),
+      toks AS (SELECT doc_id, source, lang, $tokensSql AS t FROM surv),
       ok AS (SELECT * FROM toks
              WHERE len(t) >= 8 AND len(list_intersect(t, ['slow', 'merge', 'drop'])) = 0),
       st AS (SELECT doc_id, source, lang, t,
@@ -496,7 +492,7 @@ object Corpus extends QueryGroup {
           FROM toks WHERE len(t) >= $n)"""
       }.mkString(",\n      ")
       s"""
-      WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
+      WITH toks AS (SELECT doc_id, $tokensSql AS t FROM documents),
       $gramCtes,
       grams AS (SELECT * FROM g3 UNION ALL SELECT * FROM g5 UNION ALL SELECT * FROM g8),
       bench AS (SELECT DISTINCT n, g FROM grams WHERE doc_id % 100 = 0),
@@ -547,7 +543,7 @@ object Corpus extends QueryGroup {
     }, Some(s"""
       WITH st AS (
         SELECT source, term, count(*)::BIGINT AS cnt
-        FROM (SELECT source, unnest($toksSql) AS term FROM documents)
+        FROM (SELECT source, unnest($tokensSql) AS term FROM documents)
         GROUP BY source, term),
       vocab AS (
         SELECT term FROM (
@@ -590,7 +586,7 @@ object Corpus extends QueryGroup {
         .agg(min("rank").cast("long").as("vocab_size"))
         .orderBy("threshold_permille")
     }, Some(s"""
-      WITH tk AS (SELECT unnest($toksSql) AS term FROM documents),
+      WITH tk AS (SELECT unnest($tokensSql) AS term FROM documents),
       tf AS (SELECT term, count(*) AS tf FROM tk GROUP BY term),
       r AS (SELECT term, tf,
                    row_number() OVER (ORDER BY tf DESC, term) AS rank,
@@ -678,7 +674,7 @@ object Corpus extends QueryGroup {
           round(col("n_novel").cast("double") / col("n_shingles"), 6))
         .orderBy("doc_id")
     }, Some(s"""
-      WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
+      WITH toks AS (SELECT doc_id, $tokensSql AS t FROM documents),
       sh AS (
         SELECT doc_id,
                unnest(list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
@@ -734,7 +730,7 @@ object Corpus extends QueryGroup {
     }, Some(s"""
       WITH tf AS (
         SELECT doc_id, md5(text) AS dig, tok, count(*)::BIGINT AS c
-        FROM (SELECT doc_id, text, unnest($toksSql) AS tok FROM documents)
+        FROM (SELECT doc_id, text, unnest($tokensSql) AS tok FROM documents)
         GROUP BY 1, 2, 3),
       per AS (
         SELECT doc_id, dig,
@@ -796,8 +792,8 @@ object Corpus extends QueryGroup {
         .orderBy("pct")
     }, Some(s"""
       WITH docs AS (
-        SELECT doc_id, len($toksSql)::BIGINT AS nt,
-               len(list_distinct($toksSql))::BIGINT AS ty
+        SELECT doc_id, len($tokensSql)::BIGINT AS nt,
+               len(list_distinct($tokensSql))::BIGINT AS ty
         FROM documents),
       m AS (SELECT doc_id, nt, ty::DOUBLE / nt AS ttr FROM docs WHERE nt > 0),
       tot AS (SELECT count(*) AS n, sum(nt) AS tot_tokens FROM m),

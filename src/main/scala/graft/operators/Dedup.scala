@@ -195,18 +195,10 @@ object Dedup extends QueryGroup {
     * the q67 leakage-safe split: (doc_id, label) where label = min
     * doc_id of the connected component, for every doc that appears in
     * a near-dup pair. Runs on the shared convergence driver
-    * (Iterative.convergeOn, round 10/11): labels only DECREASE under
-    * the least() update, so an unchanged label multiset ⇔ no label
-    * moved ⇔ fixpoint. The witness is the (count, sum, xor) TRIPLE of
-    * the labels, not the bare sum — a bare Long sum could wrap 2⁶⁴ at
-    * extreme id ranges and alias a changed round as unchanged
-    * (ADVICE r10); for the triple to alias, one round's strictly
-    * decreasing labels would have to keep the count, wrap the sum by
-    * an exact multiple of 2⁶⁴, AND collide the xor — jointly
-    * impossible to hit by construction of any realistic id space. The
-    * judged
-    * cap is 3 — the oracle unrolls 3 CTE steps — and an early fixpoint
-    * exit cannot change the result (a fixpoint step is the identity).
+    * (Iterative.convergeWitnessed with the (count, sum, xor) label
+    * witness of Iterative.labelWitnessed). The judged cap is 3 — the
+    * oracle unrolls 3 CTE steps — and an early fixpoint exit cannot
+    * change the result (a fixpoint step is the identity).
     * IterativeSpec replays with a high cap to prove the fixture
     * converges within the judged 3. Lineage is checkpoint-truncated
     * per round (see q64's rationale).
@@ -230,23 +222,14 @@ object Dedup extends QueryGroup {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .repartition(col("src")).graftCheckpoint()
-    // checkpointed (via cpWitnessed below): round 1 reads `labels` on
+    // checkpointed (via labelWitnessed below): round 1 reads `labels` on
     // BOTH sides (nbrMin build and the least() update) — without it
     // the distinct runs twice
     val labels0 = edges.select(col("src").as("doc_id")).distinct()
       .withColumn("label", col("doc_id"))
     // witness observed inside each round's checkpoint job — one
     // barrier per round (round 13; see convergedComponents)
-    val witnessCols = Seq(
-      count(lit(1)).as("n"),
-      coalesce(sum("label"), lit(0L)).as("s"),
-      coalesce(expr("bit_xor(label)"), lit(0L)).as("x"))
-    def cpWitnessed(df: DataFrame): (DataFrame, (Long, Long, Long)) = {
-      val (cp, m) = Tables.checkpointedObserved(df, witnessCols)
-      (cp, (m("n").asInstanceOf[Long], m("s").asInstanceOf[Long],
-        m("x").asInstanceOf[Long]))
-    }
-    Iterative.convergeWitnessed(cpWitnessed(labels0), cap) { labels =>
+    Iterative.convergeWitnessed(Iterative.labelWitnessed(labels0), cap) { labels =>
       // keyed by src, not dst (round 18, the q242 flip): edges is
       // checkpointed hash-partitioned by src and labels by doc_id, so
       // this join plans with NO exchange on either side; the min is
@@ -255,7 +238,7 @@ object Dedup extends QueryGroup {
       // label(dst) — the identical per-round relation.
       val nbrMin = edges.join(labels, col("src") === col("doc_id"))
         .groupBy("dst").agg(min("label").as("nbr_label"))
-      cpWitnessed(labels.join(nbrMin, col("doc_id") === col("dst"))
+      Iterative.labelWitnessed(labels.join(nbrMin, col("doc_id") === col("dst"))
         .select(col("doc_id"), least(col("label"), col("nbr_label")).as("label")))
     }
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryGroup, Tables}
 import graft.Tables.GraftCheckpointOps
-import graft.functions.TextFunctions.{portableHash, tokens}
+import graft.functions.TextFunctions.{portableHash, tokens, tokensSql}
 
 /** Statistical-evaluation and data-valuation operators (round 12) —
   * the measurement layer that sits on top of the splits, mixtures and
@@ -50,10 +50,6 @@ import graft.functions.TextFunctions.{portableHash, tokens}
   *    fit runs on the ≤|sources|-row relation.
   */
 object Evaluation extends QueryGroup {
-
-  /** DuckDB mirror of `TextFunctions.tokens`. */
-  private val toksSql =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
 
   /** DuckDB mirror of `portableHash(c) % m` (first 15 md5 hex digits). */
   private def hashSql(expr: String, m: Int): String =
@@ -360,7 +356,7 @@ object Evaluation extends QueryGroup {
     }, Some(s"""
       WITH db AS (
         SELECT doc_id, lang, ${hashSql("tok", 64)} AS b, count(*)::BIGINT AS c
-        FROM (SELECT doc_id, lang, unnest($toksSql) AS tok FROM documents)
+        FROM (SELECT doc_id, lang, unnest($tokensSql) AS tok FROM documents)
         GROUP BY 1, 2, 3),
       raw AS (SELECT b, sum(c)::BIGINT AS cr FROM db GROUP BY b),
       tgt AS (SELECT b, sum(c)::BIGINT AS ct FROM db WHERE lang = 'en' GROUP BY b),
@@ -485,8 +481,8 @@ object Evaluation extends QueryGroup {
         .orderBy("source")
     }, Some(s"""
       WITH y AS (
-        SELECT source, len($toksSql)::BIGINT AS y
-        FROM documents WHERE len($toksSql) > 0),
+        SELECT source, len($tokensSql)::BIGINT AS y
+        FROM documents WHERE len($tokensSql) > 0),
       g AS (
         SELECT source, count(*)::BIGINT AS n, sum(y)::BIGINT AS sy,
                sum(y * y)::BIGINT AS syy,
@@ -617,7 +613,7 @@ object Evaluation extends QueryGroup {
     }, Some(s"""
       WITH vocab AS (
         SELECT tok, count(*)::BIGINT AS r
-        FROM (SELECT unnest($toksSql) AS tok FROM documents)
+        FROM (SELECT unnest($tokensSql) AS tok FROM documents)
         GROUP BY tok),
       fof AS (SELECT r, count(*)::BIGINT AS n_r FROM vocab GROUP BY r),
       tot AS (
@@ -1235,7 +1231,7 @@ object Evaluation extends QueryGroup {
     }, Some(s"""
       WITH st AS (
         SELECT source, tok, count(*)::BIGINT AS c
-        FROM (SELECT source, unnest($toksSql) AS tok FROM documents)
+        FROM (SELECT source, unnest($tokensSql) AS tok FROM documents)
         GROUP BY 1, 2),
       markers AS (
         SELECT tok FROM (SELECT tok, sum(c) AS tc FROM st GROUP BY tok)
@@ -2136,7 +2132,7 @@ object Evaluation extends QueryGroup {
     }, Some(s"""
       WITH st AS (
         SELECT source, tok, count(*)::BIGINT AS c
-        FROM (SELECT source, unnest($toksSql) AS tok FROM documents)
+        FROM (SELECT source, unnest($tokensSql) AS tok FROM documents)
         GROUP BY 1, 2),
       ranked AS (
         SELECT source, tok, rk FROM (
@@ -2300,7 +2296,7 @@ object Evaluation extends QueryGroup {
     }, Some(s"""
       WITH doc_tok AS (
         SELECT doc_id, doc_id % 10 AS b, lang, tok, count(*)::BIGINT AS cnt
-        FROM (SELECT doc_id, lang, unnest($toksSql) AS tok FROM documents)
+        FROM (SELECT doc_id, lang, unnest($tokensSql) AS tok FROM documents)
         GROUP BY 1, 2, 3, 4),
       kg AS (SELECT unnest([2, 4, 6, 8])::BIGINT AS k),
       tr AS (

@@ -136,12 +136,6 @@ object Graph extends QueryGroup {
     }
   }
 
-  /** q210's build: the round-0 survivor set and the peel step (one
-    * survivor semi-join pair + degree aggregate, k=3 cut, lineage
-    * truncated per round). Survivors only shrink, so the alive COUNT
-    * is a valid fixpoint witness for `Iterative.convergeBy` — the
-    * production form; the judged query needs the fixed 0..4 curve.
-    */
   /** Symmetric strong (weight ≥ 2) co-purchase edges — the shared
     * graph of q210 k-core and q242 converged components. DISTINCT
     * first: duplicate lineitems of one part in one order must not
@@ -172,8 +166,8 @@ object Graph extends QueryGroup {
   /** Min-label propagation to a WITNESSED fixpoint over the strong
     * co-purchase graph (round 11, VERDICT r10 item 3) — the judged
     * query that RUNS the production convergence loop, not a fixed-k
-    * unroll: `Iterative.convergeOn` with the wrap-proof
-    * (count, sum, xor) label witness, terminating when the label
+    * unroll: `Iterative.convergeWitnessed` with the wrap-proof
+    * (count, sum, xor) `Iterative.labelWitnessed`, terminating when the label
     * multiset freezes (⇔ fixpoint, labels only decrease under
     * least()). The oracle is round-count-INDEPENDENT — a DuckDB
     * recursive CTE computes min-reachable-label to ITS fixpoint — so
@@ -195,16 +189,7 @@ object Graph extends QueryGroup {
     // the wrap-proof composite witness (count, sum, xor) is computed as
     // an OBSERVED side output of each round's final checkpoint job —
     // one barrier per round, no separate witness aggregate (round 13)
-    val witnessCols = Seq(
-      count(lit(1)).as("n"),
-      coalesce(sum("label"), lit(0L)).as("s"),
-      coalesce(expr("bit_xor(label)"), lit(0L)).as("x"))
-    def cpWitnessed(df: DataFrame): (DataFrame, (Long, Long, Long)) = {
-      val (cp, m) = Tables.checkpointedObserved(df, witnessCols)
-      (cp, (m("n").asInstanceOf[Long], m("s").asInstanceOf[Long],
-        m("x").asInstanceOf[Long]))
-    }
-    val labels0 = cpWitnessed(sym.groupBy(col("x").as("node"))
+    val labels0 = Iterative.labelWitnessed(sym.groupBy(col("x").as("node"))
       .agg(least(min(col("y")), min(col("x"))).as("label"))) // x is the group key: min(x) = x
     Iterative.convergeWitnessed(labels0, cap) { labels =>
       // keyed by x, not y (round 18): sym is checkpointed
@@ -227,12 +212,18 @@ object Graph extends QueryGroup {
       // is not a node key (cannot happen on a symmetric graph, but
       // never drop a row).
       val hop = stepped.select(col("node").as("pnode"), col("label").as("plabel"))
-      cpWitnessed(stepped.join(hop, stepped("label") === hop("pnode"), "left")
+      Iterative.labelWitnessed(stepped.join(hop, stepped("label") === hop("pnode"), "left")
         .select(col("node"),
           least(col("label"), coalesce(col("plabel"), col("label"))).as("label")))
     }
   }
 
+  /** q210's build: the round-0 survivor set and the peel step (one
+    * survivor semi-join pair + degree aggregate, k=3 cut, lineage
+    * truncated per round). Survivors only shrink, so the alive COUNT
+    * is a valid fixpoint witness for `Iterative.convergeWitnessed` —
+    * the production form; the judged query needs the fixed 0..4 curve.
+    */
   private[graft] def kcoreParts(s: SparkSession, d: String): (DataFrame, Long, DataFrame => (DataFrame, Long)) = {
     val k = 3
     val sym = strongSym(s, d)

@@ -1,5 +1,10 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{coalesce, count, expr, lit, sum}
+
+import graft.Tables
+
 /** Shared driver for the Pregel-style iterative family (round 10,
   * VERDICT item 2): q64 min-label propagation, q108 PageRank, q167
   * BFS frontier expansion, q210 k-core peeling. Each iterates a step
@@ -49,18 +54,7 @@ object Iterative {
     (1 to k).foldLeft(init)((s, _) => step(s))
 
   /** Iterate until the scalar witness stops changing, or `cap` rounds. */
-  def convergeBy[S](init: S, cap: Int)(step: S => S)(measure: S => Long): Converged[S] =
-    convergeOn(init, cap)(step)(measure)
-
-  /** [[convergeBy]] generalized to any equality-comparable witness —
-    * for steps whose natural scalar witness can alias (e.g. a Long
-    * label-sum wrapping 2⁶⁴ at extreme id ranges, ADVICE r10): pass a
-    * composite like (count, sum, xor) so no single-aggregate collision
-    * can masquerade as a fixpoint. Witness contract unchanged:
-    * measure(next) == measure(cur) must imply the step is at a
-    * fixpoint.
-    */
-  def convergeOn[S, M](init: S, cap: Int)(step: S => S)(measure: S => M): Converged[S] = {
+  def convergeBy[S](init: S, cap: Int)(step: S => S)(measure: S => Long): Converged[S] = {
     var cur = init
     var m = measure(init)
     var r = 0
@@ -80,7 +74,7 @@ object Iterative {
     * observed side output of the state's own materialization
     * ([[graft.Tables.checkpointedObserved]]) — no separate witness job,
     * so each round costs exactly one cluster-wide barrier. Witness
-    * contract identical to [[convergeOn]]: equal witnesses across a
+    * contract identical to [[convergeBy]]: equal witnesses across a
     * step must imply the step is at a fixpoint.
     */
   def convergeWitnessed[S, M](init: (S, M), cap: Int)(step: S => (S, M)): Converged[S] = {
@@ -95,6 +89,26 @@ object Iterative {
       m = mn
     }
     Converged(cur, r, converged = false)
+  }
+
+  /** Checkpoints a relation with a BIGINT `label` column and observes
+    * the (count, sum, xor) label witness on the checkpoint's own job —
+    * the min-label propagation witness for [[convergeWitnessed]]
+    * (Dedup.labelPropagation, Graph.convergedComponents). Labels only
+    * decrease under least(), so an unchanged label multiset ⇔ fixpoint.
+    * The triple, not the bare sum: a Long sum can wrap 2⁶⁴ at extreme
+    * id ranges and alias a changed round as unchanged (ADVICE r10);
+    * for the triple to alias, one round's strictly decreasing labels
+    * would have to keep the count, wrap the sum by an exact multiple
+    * of 2⁶⁴, AND collide the xor.
+    */
+  def labelWitnessed(df: DataFrame): (DataFrame, (Long, Long, Long)) = {
+    val (cp, m) = Tables.checkpointedObserved(df, Seq(
+      count(lit(1)).as("n"),
+      coalesce(sum("label"), lit(0L)).as("s"),
+      coalesce(expr("bit_xor(label)"), lit(0L)).as("x")))
+    (cp, (m("n").asInstanceOf[Long], m("s").asInstanceOf[Long],
+      m("x").asInstanceOf[Long]))
   }
 
   /** Iterate until `delta(prev, next) == 0`, or `cap` rounds — the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryGroup, Tables}
 import graft.Tables.GraftCheckpointOps
+import graft.functions.TextFunctions.tokensSql
 
 /** Data-quality and feature-engineering operators (round 7) — the
   * validation/statistics layer a production lake runs BETWEEN ingest
@@ -34,10 +35,6 @@ import graft.Tables.GraftCheckpointOps
   *    (bin)-keyed aggregate, window totals over ≤10 rows.
   */
 object Quality extends QueryGroup {
-
-  /** DuckDB mirror of `TextFunctions.tokens` (q199/q208). */
-  private val toksSql =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
 
   // ---- shared ridge-probe machinery (q199 fit, q208 conformal) ----
 
@@ -114,10 +111,10 @@ object Quality extends QueryGroup {
                ln(1.0 + length(text)) AS x1,
                length(regexp_replace(lower(text), '[a-z0-9 ]', '', 'g'))::DOUBLE
                  / length(text) AS x2,
-               len(list_distinct($toksSql))::DOUBLE / len($toksSql) AS x3,
-               ln(1.0 + len($toksSql)) AS y
+               len(list_distinct($tokensSql))::DOUBLE / len($tokensSql) AS x3,
+               ln(1.0 + len($tokensSql)) AS y
         FROM documents
-        WHERE len($toksSql) > 0"""
+        WHERE len($tokensSql) > 0"""
 
   private def ridgeFitSql(src: String): String = s"""
       sums AS (

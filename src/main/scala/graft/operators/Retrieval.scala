@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryGroup, Tables}
-import graft.functions.TextFunctions.tokens
+import graft.functions.TextFunctions.{tokens, tokensSql}
 import graft.functions.VectorFunctions.{dot, l2Norm}
 import graft.Tables.GraftCheckpointOps
 
@@ -53,10 +53,6 @@ object Retrieval extends QueryGroup {
   private val fuseK = 100    // per-list candidate depth fed to RRF
   private val topK = 20
 
-  /** DuckDB mirror of `TextFunctions.tokens`. */
-  private val toksSql =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
-
   /** (doc_id, score): BM25 of every document against [[queryTerms]].
     * Single tokenize pass; the 1-row corpus-stats aggregate is
     * broadcast (a 1-row BroadcastNestedLoopJoin — the q70 pattern).
@@ -102,7 +98,7 @@ object Retrieval extends QueryGroup {
             / (tf_$t::DOUBLE + 1.2::DOUBLE * (0.25::DOUBLE + 0.75::DOUBLE * (dl::DOUBLE / (sum_dl::DOUBLE / n_docs::DOUBLE))))
           ELSE 0.0::DOUBLE END""")
       .mkString("\n        + ")
-    s"""tk AS (SELECT doc_id, unnest($toksSql) AS term FROM documents),
+    s"""tk AS (SELECT doc_id, unnest($tokensSql) AS term FROM documents),
     per_doc AS (
       SELECT doc_id, count(*) AS dl, $tfCases
       FROM tk GROUP BY doc_id),
@@ -229,7 +225,7 @@ object Retrieval extends QueryGroup {
         .agg(count(lit(1)).as("n_hits"))
         .orderBy("phrase", "doc_id")
     }, Some(s"""
-      WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
+      WITH toks AS (SELECT doc_id, $tokensSql AS t FROM documents),
       pos AS (SELECT doc_id, generate_subscripts(t, 1) AS pos, unnest(t) AS term
               FROM toks),
       ph(w1, w2) AS (VALUES ('table', 'hash'), ('customer', 'join'))

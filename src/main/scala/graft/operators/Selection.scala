@@ -29,10 +29,6 @@ object Selection extends QueryGroup {
 
   private val shardBudget = 8000L // estimated tokens per shard
 
-  /** DuckDB mirror of `TextFunctions.tokens` (q209). */
-  private val toksSql =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
-
   /** q90 target mixture weight per source (percent); the demo policy
     * derives it from the source number so every weight tier appears.
     */
@@ -349,7 +345,7 @@ object Selection extends QueryGroup {
         .orderBy("source")
     }, Some(s"""
       WITH per_source AS (
-        SELECT source, sum(len($toksSql))::BIGINT AS n_tokens
+        SELECT source, sum(len($tokensSql))::BIGINT AS n_tokens
         FROM documents GROUP BY source),
       tot AS (
         SELECT sum(n_tokens)::DOUBLE AS t_tokens,
@@ -408,7 +404,7 @@ object Selection extends QueryGroup {
         .orderBy("source")
     }, Some(s"""
       WITH per_source AS (
-        SELECT source, sum(len($toksSql))::BIGINT AS avail
+        SELECT source, sum(len($tokensSql))::BIGINT AS avail
         FROM documents GROUP BY source),
       b AS (SELECT (sum(avail) * 3) // 5 AS budget, count(*) AS n FROM per_source),
       r AS (SELECT source, avail,

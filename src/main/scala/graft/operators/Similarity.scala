@@ -2185,30 +2185,18 @@ object Similarity extends QueryGroup {
     """))
   )
 
-  /** Idempotent per-sfDir fixture for q359: a frame corpus table
-    * (vec_id, label, vec = packed floats) loaded from the embeddings
-    * parquet, and the persisted index built from its change feed —
-    * re-used across Verify/Bench runs via a row-count marker, exactly
-    * like [[graft.sources.SourceQueries.ensureCatalogFixture]].
+  /** Catalog fixture for q359: a frame corpus table (vec_id, label,
+    * vec = packed floats) loaded from the embeddings parquet, and the
+    * persisted index built from its change feed.
     */
-  private def ensureAnnIndexFixture(s: SparkSession, d: String): String = {
-    val key = d.replaceAll("[^A-Za-z0-9]", "_")
-    val cat = graft.sources.SourceQueries.ensureCatalogRegistered(s, d)
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft-frame-catalog-$key")
-    val n = Tables.embeddings(s, d).count()
-    val marker = new java.io.File(base, "_ANNIX_READY")
-    val fresh = marker.isFile &&
-      scala.util.Try(java.nio.file.Files.readString(marker.toPath).trim.toLong)
-        .toOption.contains(n)
-    if (!fresh) {
-      base.mkdirs()
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corpus")
+  private def ensureAnnIndexFixture(s: SparkSession, d: String): String =
+    graft.sources.FrameFixtures.inCatalog(s, d, "_ANNIX_READY",
+        Tables.embeddings(s, d).count()) { cat =>
       s.sql(s"DROP TABLE IF EXISTS $cat.corpus.vectors")
       AnnIndex.drop(s, cat, "corpus.annix")
       s.sql(s"""CREATE TABLE $cat.corpus.vectors (
         vec_id BIGINT NOT NULL, label BIGINT NOT NULL, vec BINARY NOT NULL)""")
-      val view = s"graft_annix_src_$key"
+      val view = s"graft_annix_src_${graft.sources.FrameFixtures.key(d)}"
       Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"),
           graft.functions.VectorFunctions.packFloats(col("embedding")).as("vec"))
@@ -2216,9 +2204,6 @@ object Similarity extends QueryGroup {
       s.sql(s"INSERT INTO $cat.corpus.vectors SELECT * FROM $view")
       AnnIndex.create(s, cat, "corpus.annix")
       AnnIndex.refresh(s, cat, "corpus.vectors", "corpus.annix")
-      java.nio.file.Files.writeString(marker.toPath, n.toString)
     }
-    cat
-  }
 
 }

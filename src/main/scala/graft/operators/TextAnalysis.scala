@@ -19,10 +19,6 @@ import graft.Tables.GraftCheckpointOps
   */
 object TextAnalysis extends QueryGroup {
 
-  /** DuckDB mirror of `TextFunctions.tokens`. */
-  private val toksSql =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
-
   /** Stopword lists for the n-gram language heuristic. Deliberately
     * tiny — the heuristic's mechanics (per-language vocabulary hit
     * counts + deterministic argmax) are the operator; production would
@@ -315,7 +311,7 @@ object TextAnalysis extends QueryGroup {
             (col("df_u") * col("df_v"))), 6).as("pmi"))
         .orderBy(col("pmi").desc, col("u"), col("v")).limit(topOut)
     }, Some(s"""
-      WITH dt AS (SELECT doc_id, unnest(list_distinct($toksSql)) AS term FROM documents),
+      WITH dt AS (SELECT doc_id, unnest(list_distinct($tokensSql)) AS term FROM documents),
       vocab AS (
         SELECT term, count(*) AS df FROM dt GROUP BY term
         ORDER BY df DESC, term LIMIT 50),
@@ -377,12 +373,12 @@ object TextAnalysis extends QueryGroup {
         .agg(count(lit(1)).as("n_bigrams"), round(avg("lp"), 6).as("lm_score"))
         .orderBy("doc_id")
     }, Some(s"""
-      WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents WHERE len($toksSql) >= 2),
+      WITH toks AS (SELECT doc_id, $tokensSql AS t FROM documents WHERE len($tokensSql) >= 2),
       bg AS (
         SELECT doc_id, t[i] AS u, t[i+1] AS w
         FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks)),
       uni AS (
-        SELECT unnest($toksSql) AS tok FROM documents),
+        SELECT unnest($tokensSql) AS tok FROM documents),
       c1 AS (SELECT tok, count(*) AS c1 FROM uni GROUP BY tok),
       tot AS (SELECT sum(c1)::DOUBLE AS t_tokens FROM c1),
       c2 AS (SELECT u, w, count(*) AS c2 FROM bg GROUP BY u, w)
@@ -420,7 +416,7 @@ object TextAnalysis extends QueryGroup {
     }, Some(s"""
       WITH c AS (
         SELECT doc_id,
-               len($toksSql)::BIGINT AS n_words,
+               len($tokensSql)::BIGINT AS n_words,
                greatest(1, len(regexp_extract_all(text, '[.!?]+')))::BIGINT AS n_sents,
                len(regexp_extract_all(lower(text), '[aeiou]+'))::BIGINT AS n_sylls
         FROM documents)
@@ -457,7 +453,7 @@ object TextAnalysis extends QueryGroup {
     }, Some(s"""
       WITH tf AS (
         SELECT doc_id, tok, count(*)::BIGINT AS c
-        FROM (SELECT doc_id, unnest($toksSql) AS tok FROM documents)
+        FROM (SELECT doc_id, unnest($tokensSql) AS tok FROM documents)
         GROUP BY 1, 2)
       SELECT doc_id, sum(c)::BIGINT AS n_tok, count(*)::BIGINT AS n_types,
              round(count(*)::DOUBLE / sum(c), 6) AS ttr,
@@ -510,7 +506,7 @@ object TextAnalysis extends QueryGroup {
     }, Some(s"""
       WITH tf AS (
         SELECT source, tok, count(*)::BIGINT AS a
-        FROM (SELECT source, unnest($toksSql) AS tok FROM documents)
+        FROM (SELECT source, unnest($tokensSql) AS tok FROM documents)
         GROUP BY 1, 2),
       tots AS (SELECT source, sum(a)::BIGINT AS tot_s FROM tf GROUP BY source),
       gtok AS (SELECT tok, sum(a)::BIGINT AS g FROM tf GROUP BY tok),
@@ -581,7 +577,7 @@ object TextAnalysis extends QueryGroup {
                         "ELSE regr_r2(ln(vocab), ln(cum_tok)) END"), 6).as("r2"))
     }, Some(s"""
       WITH toks AS (
-        SELECT doc_id, unnest($toksSql) AS tok FROM documents),
+        SELECT doc_id, unnest($tokensSql) AS tok FROM documents),
       mx AS (SELECT max(doc_id) AS m FROM toks),
       fs AS (SELECT tok, min(doc_id) AS first_doc FROM toks GROUP BY tok),
       nt AS (
@@ -630,7 +626,7 @@ object TextAnalysis extends QueryGroup {
     }, Some(s"""
       WITH tf AS (
         SELECT tok, count(*)::BIGINT AS c
-        FROM (SELECT unnest($toksSql) AS tok FROM documents) GROUP BY tok),
+        FROM (SELECT unnest($tokensSql) AS tok FROM documents) GROUP BY tok),
       top AS (SELECT tok, c FROM tf ORDER BY c DESC, tok LIMIT 200),
       r AS (SELECT c, row_number() OVER (ORDER BY c DESC, tok) AS rank FROM top)
       SELECT count(*)::BIGINT AS n_points,
@@ -687,7 +683,7 @@ object TextAnalysis extends QueryGroup {
         .orderBy(col("pmi").desc, col("w1"), col("w2")).limit(20)
         .select(col("w1"), col("w2"), col("cb"), round(col("pmi"), 6).as("pmi"))
     }, Some(s"""
-      WITH toks AS (SELECT $toksSql AS t FROM documents),
+      WITH toks AS (SELECT $tokensSql AS t FROM documents),
       g AS (SELECT unnest(
               ['1|' || x for x in t] ||
               ['2|' || t[i] || ' ' || t[i + 1] for i in generate_series(1, len(t) - 1)]) AS g
@@ -743,7 +739,7 @@ object TextAnalysis extends QueryGroup {
     }, Some(s"""
       WITH tf AS (
         SELECT source, tok, count(*)::BIGINT AS a
-        FROM (SELECT source, unnest($toksSql) AS tok FROM documents)
+        FROM (SELECT source, unnest($tokensSql) AS tok FROM documents)
         GROUP BY 1, 2),
       tots AS (SELECT source, sum(a)::BIGINT AS tot_s FROM tf GROUP BY source),
       gtok AS (SELECT tok, sum(a)::BIGINT AS g FROM tf GROUP BY tok),
@@ -785,7 +781,7 @@ object TextAnalysis extends QueryGroup {
     }, Some(s"""
       WITH tf AS (
         SELECT source, tok, count(*)::BIGINT AS c
-        FROM (SELECT source, unnest($toksSql) AS tok FROM documents)
+        FROM (SELECT source, unnest($tokensSql) AS tok FROM documents)
         GROUP BY 1, 2)
       SELECT source, count(*)::BIGINT AS v_obs,
              count(*) FILTER (c = 1)::BIGINT AS f1,
@@ -837,7 +833,7 @@ object TextAnalysis extends QueryGroup {
     }, Some(s"""
       WITH tf AS (
         SELECT tok, count(*)::BIGINT AS x
-        FROM (SELECT unnest($toksSql) AS tok FROM documents) GROUP BY tok),
+        FROM (SELECT unnest($tokensSql) AS tok FROM documents) GROUP BY tok),
       h1 AS (SELECT 'token_freq' AS dim, '*' AS source, x, count(*)::BIGINT AS m
              FROM tf GROUP BY x),
       h2 AS (SELECT 'doc_chars' AS dim, source, n_chars AS x, count(*)::BIGINT AS m
@@ -891,7 +887,7 @@ object TextAnalysis extends QueryGroup {
     }, Some(s"""
       WITH pd AS (
         SELECT tok, doc_id, count(*)::BIGINT AS c
-        FROM (SELECT doc_id, unnest($toksSql) AS tok FROM documents)
+        FROM (SELECT doc_id, unnest($tokensSql) AS tok FROM documents)
         GROUP BY tok, doc_id),
       tf AS (
         SELECT tok, sum(c)::BIGINT AS cf, count(*)::BIGINT AS df,
@@ -943,7 +939,7 @@ object TextAnalysis extends QueryGroup {
     }, Some(s"""
       WITH sv AS (
         SELECT DISTINCT source, tok
-        FROM (SELECT source, unnest($toksSql) AS tok FROM documents)),
+        FROM (SELECT source, unnest($tokensSql) AS tok FROM documents)),
       sz AS (SELECT source, count(*)::BIGINT AS vsize FROM sv GROUP BY source),
       inter AS (
         SELECT a.source AS source_a, b.source AS source_b, count(*)::BIGINT AS n_shared
@@ -1016,7 +1012,7 @@ object TextAnalysis extends QueryGroup {
     }, Some(s"""
       WITH doc_tok AS (
         SELECT doc_id, lang, tok, count(*)::BIGINT AS cnt
-        FROM (SELECT doc_id, lang, unnest($toksSql) AS tok FROM documents)
+        FROM (SELECT doc_id, lang, unnest($tokensSql) AS tok FROM documents)
         GROUP BY doc_id, lang, tok),
       class_cnt AS (
         SELECT lang AS cls, tok, sum(cnt)::BIGINT AS n_tc
@@ -1126,7 +1122,7 @@ object TextAnalysis extends QueryGroup {
         .orderBy("source")
     }, Some(s"""
       WITH toks AS (
-        SELECT doc_id, source, $toksSql AS t FROM documents),
+        SELECT doc_id, source, $tokensSql AS t FROM documents),
       f AS (SELECT * FROM toks WHERE len(t) >= 3),
       train AS (SELECT * FROM f WHERE doc_id % 7 <> 0),
       held_docs AS (SELECT * FROM f WHERE doc_id % 7 = 0),
@@ -1215,7 +1211,7 @@ object TextAnalysis extends QueryGroup {
       WITH vocab AS (
         SELECT tok, count(*)::BIGINT AS cnt,
                ('0x'||substring(md5(tok),1,15))::BIGINT % 16 AS bucket
-        FROM (SELECT unnest($toksSql) AS tok FROM documents)
+        FROM (SELECT unnest($tokensSql) AS tok FROM documents)
         GROUP BY tok),
       buckets AS (
         SELECT bucket, count(*)::BIGINT AS n_tokens_in_bucket, sum(cnt)::BIGINT AS mass

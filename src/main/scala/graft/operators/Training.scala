@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryGroup, Tables}
-import graft.functions.TextFunctions.{charNgrams, tokens}
+import graft.functions.TextFunctions.{charNgrams, tokens, tokensSql}
 import graft.Tables.GraftCheckpointOps
 
 /** Training-data assembly operators (round 6) — the steps between a
@@ -49,10 +49,6 @@ object Training extends QueryGroup {
   private val outDims = 8
   private val ctxLen = 2048
 
-  /** DuckDB mirror of `TextFunctions.tokens`. */
-  private val toksSql =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
-
   /** Fixed ±1.0 sign for projection cell (j, i): stable MurmurHash3 of
     * the cell name, evaluated once at plan/SQL-generation time so both
     * engines receive identical literals.
@@ -60,19 +56,22 @@ object Training extends QueryGroup {
   private def sign(j: Int, i: Int): Double =
     if ((scala.util.hashing.MurmurHash3.stringHash(s"rp_${j}_$i") & 1) == 0) 1.0 else -1.0
 
-  /** `rounds` BPE merge-learning rounds over a (word, cnt, pos, sym)
-    * symbol table — shared by q123 (merge-table output) and q164/q165
-    * (corpus-wide application). Each round: weighted adjacent-pair
-    * count, argmax merge (ties → lexicographic, pinned on both
-    * engines), greedy non-overlapping application via the
+  /** `rounds` BPE merge-learning rounds over a (word, cnt) vocabulary,
+    * split into a (word, cnt, pos, sym) symbol table — shared by q123
+    * (merge-table output) and [[bpeFinalSyms]]. Each round: weighted
+    * adjacent-pair count, argmax merge (ties → lexicographic, pinned on
+    * both engines), greedy non-overlapping application via the
     * islands+parity trick (see the q123 comment). Every round iterates
     * the VOCAB-sized symbol table, never the corpus; lineage is
     * checkpoint-truncated per round like q64. Returns (per-round
     * winning merges, final symbol table).
     */
-  private def bpeRounds(syms0: DataFrame, rounds: Int): (Vector[DataFrame], DataFrame) = {
+  private def bpeRounds(vocab: DataFrame, rounds: Int): (Vector[DataFrame], DataFrame) = {
     val wSeq = Window.partitionBy("word").orderBy("pos")
-    var syms = syms0.graftCheckpoint()
+    var syms = vocab
+      .select(col("word"), col("cnt"),
+              posexplode(split(col("word"), "")).as(Seq("pos", "sym")))
+      .graftCheckpoint()
     var merges = Vector.empty[DataFrame]
     for (r <- 1 to rounds) {
       val adj = syms.withColumn("nxt", lead("sym", 1).over(wSeq))
@@ -102,14 +101,28 @@ object Training extends QueryGroup {
     (merges, syms)
   }
 
-  /** Mechanically generated k-round DuckDB CTE chain mirroring
-    * [[bpeRounds]] — adj/best/m/g/i/a/s per round, starting from a
-    * symbol-table CTE named `s0`; round r's output table is `s{r}` and
-    * its winning merge is `best{r}`. Shared by the q123/q164/q165
-    * oracles so every round's argmax AND its application are verified
-    * on both engines, not just round 1.
+  /** Merge rounds of the BPE chain q164/q165/q182/q185 share. */
+  private val bpeK = 5
+
+  /** The BPE chain of q164/q165/q182/q185: the (word, cnt) vocabulary
+    * of a token stream with a `word` column, then [[bpeK]] merge rounds
+    * over it; returns the final symbol table. Every round runs on the
+    * vocabulary, never the corpus.
     */
-  private def bpeRoundCtesSql(rounds: Int): String = (1 to rounds).map { r =>
+  private def bpeFinalSyms(docToks: DataFrame): DataFrame =
+    bpeRounds(docToks.groupBy("word").agg(count(lit(1)).as("cnt")), bpeK)._2
+
+  /** Mechanically generated k-round DuckDB CTE chain mirroring
+    * [[bpeRounds]] — the `s0` symbol table split from a CTE named
+    * `vocab`, then adj/best/m/g/i/a/s per round; round r's output
+    * table is `s{r}` and its winning merge is `best{r}`. Shared by the
+    * BPE oracles so every round's argmax AND its application are
+    * verified on both engines, not just round 1.
+    */
+  private def bpeRoundCtesSql(rounds: Int): String = s"""s0 AS (
+        SELECT word, cnt, i AS pos, substring(word, i, 1) AS sym
+        FROM vocab, LATERAL (SELECT unnest(generate_series(1, length(word))) AS i) t),
+      """ + (1 to rounds).map { r =>
     val prev = s"s${r - 1}"
     s"""
       adj$r AS (
@@ -141,6 +154,15 @@ object Training extends QueryGroup {
         WHERE consumed IS NULL OR NOT consumed)"""
   }.mkString(",")
 
+  /** DuckDB mirror of [[bpeFinalSyms]] over the corpus tokens: the
+    * `vocab` CTE and the round chain, ending in table `s5`.
+    */
+  private val bpeFinalSql: String = s"""
+      WITH vocab AS (
+        SELECT tok AS word, count(*)::BIGINT AS cnt
+        FROM (SELECT unnest($tokensSql) AS tok FROM documents) GROUP BY tok),
+      ${bpeRoundCtesSql(bpeK)}"""
+
   override protected val entries: Vector[(String, (SparkSession, String) => DataFrame, Option[String])] = Vector(
 
     ("q113_bpe_pair_counts", (s, d) => {
@@ -151,7 +173,7 @@ object Training extends QueryGroup {
         .groupBy("pair").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("pair")).limit(pairTopK)
     }, Some(s"""
-      WITH tk AS (SELECT unnest($toksSql) AS tok FROM documents),
+      WITH tk AS (SELECT unnest($tokensSql) AS tok FROM documents),
       pairs AS (
         SELECT unnest(list_transform(generate_series(1, length(tok) - 1),
                       i -> substring(tok, i, 2))) AS pair
@@ -188,10 +210,7 @@ object Training extends QueryGroup {
         .select(explode(tokens(col("text"))).as("word"))
         .filter(length(col("word")) >= 2)
         .groupBy("word").agg(count(lit(1)).as("cnt"))
-      val syms0 = vocab
-        .select(col("word"), col("cnt"),
-                posexplode(split(col("word"), "")).as(Seq("pos", "sym")))
-      val (merges, _) = bpeRounds(syms0, rounds)
+      val (merges, _) = bpeRounds(vocab, rounds)
       merges.reduce(_ unionByName _).orderBy("round")
     }, Some {
       val rounds = 5
@@ -201,11 +220,8 @@ object Training extends QueryGroup {
       s"""
       WITH vocab AS (
         SELECT tok AS word, count(*)::BIGINT AS cnt
-        FROM (SELECT unnest($toksSql) AS tok FROM documents)
+        FROM (SELECT unnest($tokensSql) AS tok FROM documents)
         WHERE length(tok) >= 2 GROUP BY tok),
-      s0 AS (
-        SELECT word, cnt, i AS pos, substring(word, i, 1) AS sym
-        FROM vocab, LATERAL (SELECT unnest(generate_series(1, length(word))) AS i) t),
       ${bpeRoundCtesSql(rounds)}
       $unions ORDER BY round
     """
@@ -234,7 +250,6 @@ object Training extends QueryGroup {
     // here, ~50K for a production tokenizer), schema-sized, not
     // data-sized.
     ("q164_bpe_encode", (s, d) => {
-      val rounds = 5
       // docToks is read TWICE (vocab build + the encode join), and
       // without a barrier each consumer re-ran scan→tokenize→explode
       // (r18 profile: two ~14 s-task-time corpus tokenize stages per
@@ -244,11 +259,7 @@ object Training extends QueryGroup {
         .select(col("doc_id"),
                 posexplode(tokens(col("text"))).as(Seq("wpos", "word")))
         .graftCheckpoint()
-      val vocab = docToks.groupBy("word").agg(count(lit(1)).as("cnt"))
-      val syms0 = vocab
-        .select(col("word"), col("cnt"),
-                posexplode(split(col("word"), "")).as(Seq("pos", "sym")))
-      val (_, finalSyms) = bpeRounds(syms0, rounds)
+      val finalSyms = bpeFinalSyms(docToks)
       val symId = finalSyms.groupBy("sym").agg(sum("cnt").as("w"))
         .select(col("sym"), row_number().over(
           Window.orderBy(col("w").desc, col("sym"))).cast("long").as("token_id"))
@@ -267,20 +278,13 @@ object Training extends QueryGroup {
           Window.partitionBy("doc_id").orderBy("wpos", "pos")).cast("long"))
         .select(col("doc_id"), col("tok_pos"), col("token_id"), col("sym"))
         .orderBy("doc_id", "tok_pos")
-    }, Some(s"""
-      WITH vocab AS (
-        SELECT tok AS word, count(*)::BIGINT AS cnt
-        FROM (SELECT unnest($toksSql) AS tok FROM documents) GROUP BY tok),
-      s0 AS (
-        SELECT word, cnt, i AS pos, substring(word, i, 1) AS sym
-        FROM vocab, LATERAL (SELECT unnest(generate_series(1, length(word))) AS i) t),
-      ${bpeRoundCtesSql(5)},
+    }, Some(s"""$bpeFinalSql,
       sw AS (SELECT sym, sum(cnt)::BIGINT AS w FROM s5 GROUP BY sym),
       sid AS (SELECT sym, row_number() OVER (ORDER BY w DESC, sym) AS token_id FROM sw),
       ws AS (SELECT f.word, f.pos, i.token_id, f.sym FROM s5 f JOIN sid i USING (sym)),
       dt AS (
         SELECT doc_id, i AS wpos, toks[i] AS word
-        FROM (SELECT doc_id, $toksSql AS toks FROM documents) d,
+        FROM (SELECT doc_id, $tokensSql AS toks FROM documents) d,
              LATERAL (SELECT unnest(generate_series(1, len(toks))) AS i) t)
       SELECT doc_id,
              row_number() OVER (PARTITION BY doc_id ORDER BY wpos, pos) AS tok_pos,
@@ -297,18 +301,14 @@ object Training extends QueryGroup {
     // per-source running-window cut into fixed 512-id context windows
     // (same partitioned-by-shard shape as q115 — no global stream).
     ("q165_bpe_packing", (s, d) => {
-      val rounds = 5; val ctx = 512
+      val ctx = 512
       // token stream checkpointed once — vocab and the corpus-side
       // join both read it (q164 discipline, round 18)
       val docToks = Tables.fanOut(Tables.documents(s, d))
         .select(col("doc_id"), col("source"),
                 explode(tokens(col("text"))).as("word"))
         .graftCheckpoint()
-      val vocab = docToks.groupBy("word").agg(count(lit(1)).as("cnt"))
-      val syms0 = vocab
-        .select(col("word"), col("cnt"),
-                posexplode(split(col("word"), "")).as(Seq("pos", "sym")))
-      val (_, finalSyms) = bpeRounds(syms0, rounds)
+      val finalSyms = bpeFinalSyms(docToks)
       val wordLen = finalSyms.groupBy("word").agg(count(lit(1)).as("n_sym"))
       val w = Window.partitionBy("source").orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -323,17 +323,10 @@ object Training extends QueryGroup {
                 expr(s"(tok_end - n_tok) DIV $ctx").as("seq_first"),
                 expr(s"(tok_end - 1) DIV $ctx").as("seq_last"))
         .orderBy("doc_id")
-    }, Some(s"""
-      WITH vocab AS (
-        SELECT tok AS word, count(*)::BIGINT AS cnt
-        FROM (SELECT unnest($toksSql) AS tok FROM documents) GROUP BY tok),
-      s0 AS (
-        SELECT word, cnt, i AS pos, substring(word, i, 1) AS sym
-        FROM vocab, LATERAL (SELECT unnest(generate_series(1, length(word))) AS i) t),
-      ${bpeRoundCtesSql(5)},
+    }, Some(s"""$bpeFinalSql,
       wl AS (SELECT word, count(*)::BIGINT AS n_sym FROM s5 GROUP BY word),
       dt AS (
-        SELECT doc_id, source, unnest($toksSql) AS word FROM documents),
+        SELECT doc_id, source, unnest($tokensSql) AS word FROM documents),
       dl AS (
         SELECT doc_id, source, sum(n_sym)::BIGINT AS n_tok
         FROM dt JOIN wl USING (word) GROUP BY 1, 2),
@@ -361,18 +354,14 @@ object Training extends QueryGroup {
     // over the packed relation; all ratios are exact int/int double
     // divisions — hash-clean.
     ("q182_packing_audit", (s, d) => {
-      val rounds = 5; val ctx = 512
+      val ctx = 512
       // token stream checkpointed once — vocab and the corpus-side
       // join both read it (q164 discipline, round 18)
       val docToks = Tables.fanOut(Tables.documents(s, d))
         .select(col("doc_id"), col("source"),
                 explode(tokens(col("text"))).as("word"))
         .graftCheckpoint()
-      val vocab = docToks.groupBy("word").agg(count(lit(1)).as("cnt"))
-      val syms0 = vocab
-        .select(col("word"), col("cnt"),
-                posexplode(split(col("word"), "")).as(Seq("pos", "sym")))
-      val (_, finalSyms) = bpeRounds(syms0, rounds)
+      val finalSyms = bpeFinalSyms(docToks)
       val wordLen = finalSyms.groupBy("word").agg(count(lit(1)).as("n_sym"))
       val w = Window.partitionBy("source").orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -394,17 +383,10 @@ object Training extends QueryGroup {
         .withColumn("split_frac", round(
           col("split_docs").cast("double") / col("n_docs"), 6))
         .orderBy("source")
-    }, Some(s"""
-      WITH vocab AS (
-        SELECT tok AS word, count(*)::BIGINT AS cnt
-        FROM (SELECT unnest($toksSql) AS tok FROM documents) GROUP BY tok),
-      s0 AS (
-        SELECT word, cnt, i AS pos, substring(word, i, 1) AS sym
-        FROM vocab, LATERAL (SELECT unnest(generate_series(1, length(word))) AS i) t),
-      ${bpeRoundCtesSql(5)},
+    }, Some(s"""$bpeFinalSql,
       wl AS (SELECT word, count(*)::BIGINT AS n_sym FROM s5 GROUP BY word),
       dt AS (
-        SELECT doc_id, source, unnest($toksSql) AS word FROM documents),
+        SELECT doc_id, source, unnest($tokensSql) AS word FROM documents),
       dl AS (
         SELECT doc_id, source, sum(n_sym)::BIGINT AS n_tok
         FROM dt JOIN wl USING (word) GROUP BY 1, 2),
@@ -443,16 +425,11 @@ object Training extends QueryGroup {
     // aggregate produces the readout. Word/char totals are integers;
     // the two ratios divide once at the end (exact cross-engine).
     ("q185_bpe_fertility", (s, d) => {
-      val rounds = 5
       // token stream checkpointed once (q164 discipline, round 18)
       val docToks = Tables.fanOut(Tables.documents(s, d))
         .select(col("source"), explode(tokens(col("text"))).as("word"))
         .graftCheckpoint()
-      val vocab = docToks.groupBy("word").agg(count(lit(1)).as("cnt"))
-      val syms0 = vocab
-        .select(col("word"), col("cnt"),
-                posexplode(split(col("word"), "")).as(Seq("pos", "sym")))
-      val (_, finalSyms) = bpeRounds(syms0, rounds)
+      val finalSyms = bpeFinalSyms(docToks)
       val wordLen = finalSyms.groupBy("word").agg(count(lit(1)).as("n_sym"))
       // broadcast the vocab-bounded per-word length (q164 discipline)
       docToks.join(broadcast(wordLen), "word")
@@ -464,16 +441,9 @@ object Training extends QueryGroup {
           round(col("n_tokens").cast("double") / col("n_words"), 6).as("fertility"),
           round(col("n_chars").cast("double") / col("n_tokens"), 6).as("chars_per_token"))
         .orderBy("source")
-    }, Some(s"""
-      WITH vocab AS (
-        SELECT tok AS word, count(*)::BIGINT AS cnt
-        FROM (SELECT unnest($toksSql) AS tok FROM documents) GROUP BY tok),
-      s0 AS (
-        SELECT word, cnt, i AS pos, substring(word, i, 1) AS sym
-        FROM vocab, LATERAL (SELECT unnest(generate_series(1, length(word))) AS i) t),
-      ${bpeRoundCtesSql(5)},
+    }, Some(s"""$bpeFinalSql,
       wl AS (SELECT word, count(*)::BIGINT AS n_sym FROM s5 GROUP BY word),
-      dt AS (SELECT source, unnest($toksSql) AS word FROM documents),
+      dt AS (SELECT source, unnest($tokensSql) AS word FROM documents),
       a AS (
         SELECT source, count(*)::BIGINT AS n_words, sum(n_sym)::BIGINT AS n_tokens,
                sum(length(word))::BIGINT AS n_chars
@@ -523,7 +493,7 @@ object Training extends QueryGroup {
         .orderBy("doc_id")
     }, Some(s"""
       WITH t AS (
-        SELECT doc_id, source, len($toksSql)::BIGINT AS n_tok
+        SELECT doc_id, source, len($tokensSql)::BIGINT AS n_tok
         FROM documents),
       c AS (
         SELECT doc_id, source, n_tok,

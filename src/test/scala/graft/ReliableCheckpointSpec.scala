@@ -10,9 +10,9 @@ import graft.operators.{Graph, Iterative}
   * is localCheckpoint — executor-block storage, right for local[*] —
   * but on a long iterative job on a real cluster a lost executor takes
   * its blocks (and the job) with it, so setting
-  * `spark.graft.checkpointDir` / `SPARK_GRAFT_CHECKPOINT_DIR` swaps
-  * ALL sites to reliable `checkpoint()` into that directory. These
-  * tests smoke both modes through the same entry point.
+  * `spark.graft.checkpointDir` swaps ALL sites to reliable
+  * `checkpoint()` into that directory. These tests smoke both modes
+  * through the same entry point.
   */
 class ReliableCheckpointSpec extends AnyFunSuite with SparkFixture {
 

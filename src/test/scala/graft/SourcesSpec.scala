@@ -555,6 +555,36 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
     assert(df.count() > 0)
   }
 
+  test("fixture build-once step: builds on a missing, stale or unparseable marker, skips a matching one, stamps only after the build") {
+    import graft.sources.FrameFixtures.once
+    val dir = Files.createTempDirectory("fixture-once").toFile
+    val marker = new java.io.File(dir, "_READY")
+    def stamp: String = Files.readString(marker.toPath)
+    var builds = 0
+    // missing marker: builds, then stamps the row count
+    once(marker, 42L) { builds += 1 }
+    assert(builds == 1 && stamp == "42")
+    // matching marker: the build is skipped and the marker kept
+    once(marker, 42L) { builds += 1 }
+    assert(builds == 1 && stamp == "42")
+    // stale marker: rebuilds and re-stamps
+    once(marker, 43L) { builds += 1 }
+    assert(builds == 2 && stamp == "43")
+    // unparseable marker: rebuilds
+    Files.writeString(marker.toPath, "not-a-count")
+    once(marker, 43L) { builds += 1 }
+    assert(builds == 3 && stamp == "43")
+    // a build that throws propagates and leaves no marker — neither on
+    // a first build nor over a stale one
+    val first = new java.io.File(dir, "_FIRST")
+    val e1 = intercept[IllegalStateException](once(first, 7L)(throw new IllegalStateException("boom")))
+    assert(e1.getMessage == "boom" && !first.exists())
+    val e2 = intercept[IllegalStateException](once(marker, 44L)(throw new IllegalStateException("bust")))
+    assert(e2.getMessage == "bust" && !marker.exists())
+    once(marker, 44L) { builds += 1 }
+    assert(builds == 4 && stamp == "44")
+  }
+
   test("DSv2 frame source: scan reports post-pruning statistics; small tables auto-broadcast") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
