@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.{dot, dotD, dotFD, l2Norm, unpackFloats}
-import graft.sources.{FrameCatalog, FrameChanges, FrameMaintenance}
+import graft.sources.{FrameCatalog, FrameChanges, FrameJson, FrameMaintenance}
 
 /** Persisted, incrementally-maintained IVF index (round 17, VERDICT
   * r16 item 2). Until now every IVF/PQ query rebuilt its index in-plan
@@ -86,30 +86,6 @@ object AnnIndex {
         s"catalog '$catalog' is not a FrameCatalog: ${other.getClass.getName}")
     }
 
-  // ------------------------------------------------------------ marker io
-
-  private def readIntFields(f: File): Map[String, Long] = {
-    if (!f.isFile) return Map.empty
-    val p = new com.fasterxml.jackson.core.JsonFactory()
-      .createParser(java.nio.file.Files.readString(f.toPath))
-    import com.fasterxml.jackson.core.JsonToken._
-    val out = Map.newBuilder[String, Long]
-    p.nextToken()
-    while (p.nextToken() != END_OBJECT) {
-      val name = p.currentName()
-      p.nextToken()
-      if (p.currentToken() == VALUE_NUMBER_INT) out += name -> p.getLongValue
-    }
-    out.result()
-  }
-
-  private def writeJson(f: File, fields: (String, Long)*): Unit = {
-    val tmp = new File(f.getParentFile, f.getName + ".tmp")
-    java.nio.file.Files.writeString(tmp.toPath,
-      fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}"))
-    graft.sources.FrameCommitIo.impl.swap(tmp, f)
-  }
-
   /** The integer-quantized component: floor(x·10⁶ + 0.5) as BIGINT —
     * the quant6 lattice, exact in 64-bit for |x| ≤ ~9·10¹² / 10⁶.
     */
@@ -133,7 +109,7 @@ object AnnIndex {
     val (schemaJson, schemaId) = cat.wireSchemaOf(src)
 
     recoverIntent(spark, catalog, postingsDir, cellsDir)
-    val from = readIntFields(new File(postingsDir, MarkerFile))
+    val from = FrameJson.readLongs(new File(postingsDir, MarkerFile))
       .getOrElse("srcVersion", 0L).toInt
     val to = FrameMaintenance.totalVersions(srcDir)
     require(to >= from,
@@ -149,14 +125,14 @@ object AnnIndex {
     try {
       val changed = changes.count()
       if (changed == 0L) {
-        writeJson(new File(postingsDir, MarkerFile), "srcVersion" -> to.toLong)
+        FrameJson.writeLongs(new File(postingsDir, MarkerFile), "srcVersion" -> to.toLong)
         return RefreshResult(from, to, 0L)
       }
-      writeJson(new File(postingsDir, IntentFile),
+      FrameJson.writeLongs(new File(postingsDir, IntentFile),
         "from" -> from.toLong, "to" -> to.toLong,
         "cellsVersions" -> FrameMaintenance.totalVersions(cellsDir).toLong)
       applySlice(spark, catalog, index, changes)
-      writeJson(new File(postingsDir, MarkerFile), "srcVersion" -> to.toLong)
+      FrameJson.writeLongs(new File(postingsDir, MarkerFile), "srcVersion" -> to.toLong)
       new File(postingsDir, IntentFile).delete()
       RefreshResult(from, to, changed)
     } finally changes.unpersist()
@@ -170,12 +146,12 @@ object AnnIndex {
   private def recoverIntent(spark: SparkSession, catalog: String,
                             postingsDir: File, cellsDir: File): Unit = {
     val intentF = new File(postingsDir, IntentFile)
-    val intent = readIntFields(intentF)
+    val intent = FrameJson.readLongs(intentF)
     if (intent.isEmpty) { intentF.delete(); return }
     val applied = FrameMaintenance.totalVersions(cellsDir) >
       intent.getOrElse("cellsVersions", Long.MaxValue)
     if (applied)
-      writeJson(new File(postingsDir, MarkerFile), "srcVersion" -> intent("to"))
+      FrameJson.writeLongs(new File(postingsDir, MarkerFile), "srcVersion" -> intent("to"))
     // not applied: leave the watermark at `from`; the caller's normal
     // path re-reads the slice and re-applies it
     intentF.delete()

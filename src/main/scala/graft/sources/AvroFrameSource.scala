@@ -1020,6 +1020,58 @@ case class SegmentOffset(segments: Int) extends Offset {
   override def json(): String = segments.toString
 }
 
+/** The version-offset plumbing the row stream and the change-feed
+  * stream share: offsets are [[SegmentOffset]] version counts in the
+  * checkpoint's offset log; a positive per-trigger cap becomes the
+  * default `ReadMaxFiles` limit; under `Trigger.AvailableNow` the
+  * version count is snapshotted once at start and drained in
+  * admission-bounded batches (without [[SupportsTriggerAvailableNow]]
+  * MicroBatchExecution downgrades to Trigger.Once semantics and ignores
+  * the read limit); and every version reading passes the
+  * [[TornReadClamp]]. Each stream supplies its initial offset, its
+  * admission rule and its partitions.
+  */
+trait FrameVersionStream extends MicroBatchStream with SupportsTriggerAvailableNow {
+
+  protected def dir: java.io.File
+  protected def maxPerTrigger: Int
+
+  /** End offset of a batch from version `from` that may admit at most
+    * `max` units, with `total` versions available.
+    */
+  protected def admit(from: Int, total: Int, max: Int): Int
+
+  @volatile private var availableNowCap: Option[Int] = None
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowCap = Some(FrameMaintenance.totalVersions(dir))
+
+  override def deserializeOffset(json: String): Offset = SegmentOffset(json.trim.toInt)
+
+  override def getDefaultReadLimit: ReadLimit =
+    if (maxPerTrigger > 0) ReadLimit.maxFiles(maxPerTrigger) else ReadLimit.allAvailable()
+
+  override def latestOffset(): Offset =
+    throw new UnsupportedOperationException(
+      "latestOffset(Offset, ReadLimit) should be called instead (SupportsAdmissionControl)")
+
+  private lazy val clamp = new TornReadClamp(dir)
+
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    val from = start.asInstanceOf[SegmentOffset].segments
+    val total = clamp(from, availableNowCap.getOrElse(FrameMaintenance.totalVersions(dir)))
+    limit match {
+      case f: ReadMaxFiles => SegmentOffset(admit(from, total, f.maxFiles()))
+      case _               => SegmentOffset(total)
+    }
+  }
+
+  override def reportLatestOffset(): Offset =
+    SegmentOffset(FrameMaintenance.totalVersions(dir))
+
+  override def commit(end: Offset): Unit = () // offset log is the source of truth
+  override def stop(): Unit = ()
+}
+
 /** MicroBatchStream over a framed-Avro segment log — O1's transport as
   * a REAL pluggable streaming source with its own offset management,
   * the closest offline analog to `KafkaUtils.createDirectStream`
@@ -1047,54 +1099,23 @@ class AvroFrameMicroBatchStream(path: String, avroSchemaJson: String,
                                 schemaId: Int, requiredCols: Array[String],
                                 pushed: Array[Filter], maxSegmentsPerTrigger: Int,
                                 historyJson: String = null)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
+    extends FrameVersionStream {
 
-  private def dir = new java.io.File(path)
-
-  // Trigger.AvailableNow: snapshot the version count once at start,
-  // drain up to it in admission-bounded batches, then stop — without
-  // this interface MicroBatchExecution downgrades to Trigger.Once
-  // semantics and ignores the read limit
-  @volatile private var availableNowCap: Option[Int] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(FrameMaintenance.totalVersions(dir))
+  override protected def dir = new java.io.File(path)
+  override protected def maxPerTrigger: Int = maxSegmentsPerTrigger
 
   override def initialOffset(): Offset = SegmentOffset(0)
 
-  override def deserializeOffset(json: String): Offset =
-    SegmentOffset(json.trim.toInt)
-
-  override def getDefaultReadLimit: ReadLimit =
-    if (maxSegmentsPerTrigger > 0) ReadLimit.maxFiles(maxSegmentsPerTrigger)
-    else ReadLimit.allAvailable()
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) should be called instead (SupportsAdmissionControl)")
-
-  private val clamp = new TornReadClamp(dir)
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val from = start.asInstanceOf[SegmentOffset].segments
-    val total = clamp(from, availableNowCap.getOrElse(FrameMaintenance.totalVersions(dir)))
-    limit match {
-      case f: ReadMaxFiles =>
-        // admission bounds APPENDS (files), not versions: the end
-        // offset is the version of the k-th unconsumed append, plus
-        // any version-minting deletes sitting between it and the next
-        // append (they carry no data — draining them keeps the offset
-        // monotone past maintenance-only stretches of history)
-        val pending = FrameMaintenance.appendVersions(dir)
-          .filter { case (_, v) => v > from && v <= total }
-        if (pending.isEmpty) SegmentOffset(total)
-        else if (pending.length <= f.maxFiles()) SegmentOffset(total)
-        else SegmentOffset(pending(f.maxFiles())._2 - 1)
-      case _ => SegmentOffset(total)
-    }
+  // admission bounds APPENDS (files), not versions: the end offset is
+  // the version of the max-th unconsumed append, plus any
+  // version-minting deletes sitting between it and the next append
+  // (they carry no data — draining them keeps the offset monotone past
+  // maintenance-only stretches of history)
+  override protected def admit(from: Int, total: Int, max: Int): Int = {
+    val pending = FrameMaintenance.appendVersions(dir)
+      .filter { case (_, v) => v > from && v <= total }
+    if (pending.length <= max) total else pending(max)._2 - 1
   }
-
-  override def reportLatestOffset(): Offset =
-    SegmentOffset(FrameMaintenance.totalVersions(dir))
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[SegmentOffset].segments
@@ -1121,9 +1142,6 @@ class AvroFrameMicroBatchStream(path: String, avroSchemaJson: String,
   override def createReaderFactory(): PartitionReaderFactory =
     new AvroFrameReaderFactory(avroSchemaJson, schemaId, requiredCols, pushed,
       historyJson = historyJson)
-
-  override def commit(end: Offset): Unit = () // offset log is the source of truth
-  override def stop(): Unit = ()
 }
 
 class AvroFrameReaderFactory(avroSchemaJson: String, schemaId: Int,
@@ -1838,40 +1856,15 @@ object AvroFrames {
     val latest = new Schema.Parser().parse(avroSchemaJson)
     val base = Map(schemaId -> latest)
     if (historyJson == null || historyJson.isEmpty) return base
-    val p = new com.fasterxml.jackson.core.JsonFactory().createParser(historyJson)
-    import com.fasterxml.jackson.core.JsonToken._
-    val out = scala.collection.mutable.Map.empty[Int, Schema]
-    p.nextToken() // [
-    while (p.nextToken() != END_ARRAY) { // { per entry
-      var id = -1; var schema: String = null
-      while (p.nextToken() != END_OBJECT) {
-        p.currentName() match {
-          case "id"     => p.nextToken(); id = p.getIntValue
-          case "schema" => p.nextToken(); schema = p.getText
-          case _        => p.nextToken()
-        }
-      }
-      if (id >= 0 && schema != null) out(id) = new Schema.Parser().parse(schema)
-    }
-    out.toMap ++ base
+    FrameJson.historyOf(FrameJson.parse(historyJson))
+      .map { case (id, schema) => id -> new Schema.Parser().parse(schema) }.toMap ++ base
   }
 
   /** Serialize a schema history for the `avroSchemaHistory` option /
     * descriptor (inverse of [[schemaHistory]]).
     */
-  def historyJson(entries: Seq[(Int, String)]): String = {
-    val sw = new java.io.StringWriter()
-    val gen = new com.fasterxml.jackson.core.JsonFactory().createGenerator(sw)
-    gen.writeStartArray()
-    entries.foreach { case (id, schema) =>
-      gen.writeStartObject()
-      gen.writeNumberField("id", id)
-      gen.writeStringField("schema", schema)
-      gen.writeEndObject()
-    }
-    gen.writeEndArray(); gen.close()
-    sw.toString
-  }
+  def historyJson(entries: Seq[(Int, String)]): String =
+    FrameJson.render(FrameJson.historyNode(entries))
 
   /** Avro→Spark type mapping for the supported subset: primitives plus
     * 2-branch `[null, T]` unions (nullable T). Anything else fails fast

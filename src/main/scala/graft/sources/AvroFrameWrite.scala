@@ -2,6 +2,8 @@ package graft.sources
 
 import java.io.File
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.avro.Schema
 import org.apache.avro.generic.GenericData
 import org.apache.spark.sql.catalyst.InternalRow
@@ -63,28 +65,20 @@ object AvroFrameWrite {
     * that predate the field skip it (unknown-key tolerance).
     */
   def statsJson(frames: Long, fields: Seq[(String, FieldStats)],
-                blooms: Map[String, String] = Map.empty): String = {
-    val sw = new java.io.StringWriter()
-    val gen = new com.fasterxml.jackson.core.JsonFactory().createGenerator(sw)
-    gen.writeStartObject()
-    gen.writeNumberField("frames", frames)
-    gen.writeObjectFieldStart("fields")
+                blooms: Map[String, String] = Map.empty): String =
+    FrameJson.render(statsNode(frames, fields, blooms))
+
+  /** The sidecar document [[statsJson]] renders. */
+  def statsNode(frames: Long, fields: Seq[(String, FieldStats)],
+                blooms: Map[String, String]): ObjectNode = {
+    val doc = FrameJson.newObject().put("frames", frames)
+    val out = doc.putObject("fields")
     fields.foreach { case (name, st) =>
-      gen.writeObjectFieldStart(name)
-      gen.writeNumberField("nulls", st.nulls)
-      def writeVal(k: String, v: Any): Unit = v match {
-        case null                  => ()
-        case l: java.lang.Long     => gen.writeNumberField(k, l.longValue)
-        case d: java.lang.Double   => gen.writeNumberField(k, d.doubleValue)
-        case b: java.lang.Boolean  => gen.writeBooleanField(k, b.booleanValue)
-        case s                     => gen.writeStringField(k, s.toString)
-      }
-      writeVal("min", st.min); writeVal("max", st.max)
-      blooms.get(name).foreach(b64 => gen.writeStringField("bloom", b64))
-      gen.writeEndObject()
+      val n = FrameJson.statNode(st.nulls, st.min, st.max)
+      blooms.get(name).foreach(n.put("bloom", _))
+      out.set[JsonNode](name, n)
     }
-    gen.writeEndObject(); gen.writeEndObject(); gen.close()
-    sw.toString
+    doc
   }
 
   /** Serialize a Bloom filter to the sidecar's base64 form. */
@@ -534,49 +528,15 @@ object AvroFrameStats {
     * folds commit-message statsJson in without any file read). None on
     * malformed input.
     */
-  def parseStatsJson(json: String): Option[(Long, Map[String, (Long, Any, Any)], Map[String, String])] = {
+  def parseStatsJson(json: String): Option[(Long, Map[String, (Long, Any, Any)], Map[String, String])] =
     try {
-      val p = new com.fasterxml.jackson.core.JsonFactory().createParser(json)
-      var frames = 0L
-      val fields = scala.collection.mutable.Map.empty[String, (Long, Any, Any)]
-      val bloomB64 = scala.collection.mutable.Map.empty[String, String]
-      import com.fasterxml.jackson.core.JsonToken._
-      p.nextToken() // {
-      while (p.nextToken() != END_OBJECT) {
-        p.currentName() match {
-          case "frames" => p.nextToken(); frames = p.getLongValue
-          case "fields" =>
-            p.nextToken() // {
-            while (p.nextToken() != END_OBJECT) {
-              val name = p.currentName()
-              var nulls = 0L; var min: Any = null; var max: Any = null
-              p.nextToken() // {
-              while (p.nextToken() != END_OBJECT) {
-                val k = p.currentName()
-                val t = p.nextToken()
-                val v: Any = t match {
-                  case VALUE_NUMBER_INT   => Long.box(p.getLongValue)
-                  case VALUE_NUMBER_FLOAT => Double.box(p.getDoubleValue)
-                  case VALUE_TRUE         => Boolean.box(true)
-                  case VALUE_FALSE        => Boolean.box(false)
-                  case _                  => p.getText
-                }
-                k match {
-                  case "nulls" => nulls = v.asInstanceOf[java.lang.Long].longValue
-                  case "min"   => min = v
-                  case "max"   => max = v
-                  case "bloom" => bloomB64(name) = v.asInstanceOf[String]
-                  case _       => ()
-                }
-              }
-              fields(name) = (nulls, min, max)
-            }
-          case _ => p.nextToken()
-        }
-      }
-      Some((frames, fields.toMap, bloomB64.toMap))
+      val doc = FrameJson.requireObject(FrameJson.parse(json))
+      val fields = doc.path("fields")
+      Some((FrameJson.long(doc, "frames", 0L), FrameJson.statsOf(fields),
+        FrameJson.fields(fields).flatMap { case (name, f) =>
+          Option(f.get("bloom")).map(b => name -> FrameJson.statValue(b).asInstanceOf[String])
+        }.toMap))
     } catch { case scala.util.control.NonFatal(_) => None }
-  }
 
   /** Deserialize a sidecar's Bloom payloads. Unreadable filters are
     * dropped (⇒ that column just never bloom-prunes).

@@ -45,6 +45,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 class FrameCatalog extends TableCatalog with SupportsNamespaces with FunctionCatalog
     with org.apache.spark.sql.connector.catalog.ProcedureCatalog {
+  import FrameCatalog._
 
   private var catalogName: String = _
   private var base: File = _
@@ -60,8 +61,6 @@ class FrameCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
 
   override def name(): String = catalogName
   override def defaultNamespace(): Array[String] = Array("default")
-
-  private val TableDescriptor = "_table.json"
 
   /** Every namespace/table identifier segment must be a plain name
     * BEFORE it is used as a path component: drop/rename/namespace ops
@@ -164,7 +163,7 @@ class FrameCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     if (ident.namespace.length == 2 && ident.name == "changes") {
       val inner = Identifier.of(Array(ident.namespace()(0)), ident.namespace()(1))
       if (tableExists(inner)) {
-        val d = readDescriptor(new File(tableDir(inner), TableDescriptor))
+        val d = readDescriptor(tableDir(inner))
         val opts = new CaseInsensitiveStringMap((Map(
           "path" -> tableDir(inner).getAbsolutePath,
           "avroSchema" -> d.avroSchema,
@@ -212,7 +211,7 @@ class FrameCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
   private def loadTableAsOf(ident: Identifier, asOf: Map[String, String]): Table = {
     val dir = tableDir(ident)
     if (!isTable(dir)) throw new NoSuchTableException(ident)
-    val d = readDescriptor(new File(dir, TableDescriptor))
+    val d = readDescriptor(dir)
     val opts = new CaseInsensitiveStringMap((Map(
       "path" -> dir.getAbsolutePath,
       "avroSchema" -> d.avroSchema,
@@ -333,7 +332,7 @@ class FrameCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
         s"sortedBy column $c must be an orderable primitive, got ${f.dataType}")
       c
     }
-    writeDescriptor(new File(dir, TableDescriptor),
+    writeDescriptor(dir,
       Descriptor(avroSchema, schemaId, bucket, bloomCols, bloomItems,
         deleteMode = deleteMode, sortedBy = sortedBy, dvFoldThreshold = dvFold,
         timePart = timePart))
@@ -411,7 +410,7 @@ class FrameCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
           "desired shape and INSERT INTO it from this one (CTAS works), then RENAME")
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val dir = tableDir(ident)
-    var d = readDescriptor(new File(dir, TableDescriptor))
+    var d = readDescriptor(dir)
     // renames/drops/property changes apply in statement order; ALL
     // AddColumns of one statement batch into ONE registry entry (one
     // ALTER = one new schema id, however many columns it adds)
@@ -424,7 +423,7 @@ class FrameCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     }
     val adds = changes.collect { case a: TableChange.AddColumn => a }
     if (adds.nonEmpty) d = applyAdds(ident, d, adds)
-    writeDescriptor(new File(dir, TableDescriptor), d)
+    writeDescriptor(dir, d)
     loadTable(ident)
   }
 
@@ -650,7 +649,7 @@ class FrameCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val dstIdent = Identifier.of(Array(checkSegment(dstParts(0))), checkSegment(dstParts(1)))
     if (!namespaceExists(dstIdent.namespace)) throw new NoSuchNamespaceException(dstIdent.namespace)
     if (isTable(tableDir(dstIdent))) throw new TableAlreadyExistsException(dstIdent)
-    val d = readDescriptor(new File(srcDir, TableDescriptor))
+    val d = readDescriptor(srcDir)
 
     // snapshot file set: live listing + live vectors (current), or the
     // version/tag-addressed resolution (may span _history/)
@@ -689,12 +688,59 @@ class FrameCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
         FrameMaintenance.MaintEntry("dv", publishMs, Vector.empty, Vector.empty,
           dvNames.sorted, expired = false))
     }
-    writeDescriptor(new File(dstDir, TableDescriptor), d)
+    writeDescriptor(dstDir, d)
     FrameStatsLedger.rebuild(dstDir)
     (linked, copied)
   }
 
-  // ------------------------------------------------------------ descriptor io
+  /** Is this table bucketed? (descriptor probe for the maintenance
+    * procedures — compaction must not merge across buckets.)
+    */
+  private[sources] def bucketSpecOf(multipart: String): Option[(String, Int)] = {
+    val dir = resolveTableDir(multipart)
+    readDescriptor(dir).bucket
+  }
+
+  /** Hidden time-partition transform of a table: (source column, unit),
+    * None when unpartitioned — the `drop_partitions` retention guard.
+    */
+  private[sources] def timePartOf(multipart: String): Option[(String, String)] = {
+    val dir = resolveTableDir(multipart)
+    readDescriptor(dir).timePart
+  }
+
+  /** Wire contract of a table: (Avro writer schema JSON, schema id) —
+    * what the change-data-feed reader and the maintenance rewrites
+    * decode with ([[FrameChanges]], [[FrameMatView]]).
+    */
+  private[graft] def wireSchemaOf(multipart: String): (String, Int) = {
+    val dir = resolveTableDir(multipart)
+    val d = readDescriptor(dir)
+    (d.avroSchema, d.schemaId)
+  }
+
+  /** `avroSchemaHistory` option value for a table (None = single
+    * schema version) — what maintenance procedures and the matview
+    * refresher pass so multi-version logs decode completely.
+    */
+  private[graft] def historyJsonOf(multipart: String): Option[String] = {
+    val dir = resolveTableDir(multipart)
+    readDescriptor(dir).historyJson
+  }
+
+  private def deleteRecursively(f: File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
+    f.delete()
+  }
+}
+
+/** The `_table.json` descriptor of a catalog table — its one reader
+  * and writer, shared with the descriptor probes of the metadata
+  * tables and the maintenance procedures.
+  */
+object FrameCatalog {
+
+  val TableDescriptor = "_table.json"
 
   /** The `_table.json` contents: CURRENT wire schema + id, the full
     * schema-version history (id → schema, the table's private
@@ -717,137 +763,43 @@ class FrameCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       if (history.length <= 1) None else Some(AvroFrames.historyJson(history))
   }
 
-  private def writeDescriptor(f: File, d: Descriptor): Unit = {
-    val sw = new java.io.StringWriter()
-    val gen = new com.fasterxml.jackson.core.JsonFactory().createGenerator(sw)
-    gen.writeStartObject()
-    gen.writeStringField("avroSchema", d.avroSchema)
-    gen.writeNumberField("schemaId", d.schemaId)
-    d.bucket.foreach { case (k, n) =>
-      gen.writeStringField("bucketKey", k)
-      gen.writeNumberField("buckets", n)
-    }
-    d.bloomColumns.foreach(gen.writeStringField("bloomColumns", _))
-    d.bloomExpectedItems.foreach(gen.writeNumberField("bloomExpectedItems", _))
-    d.deleteMode.foreach(gen.writeStringField("deleteMode", _))
-    d.sortedBy.foreach(gen.writeStringField("sortedBy", _))
-    d.dvFoldThreshold.foreach(gen.writeNumberField("dvFoldThreshold", _))
-    d.timePart.foreach { case (c, u) =>
-      gen.writeStringField("partitionCol", c)
-      gen.writeStringField("partitionUnit", u)
-    }
-    if (d.history.length > 1) {
-      gen.writeArrayFieldStart("schemas")
-      d.history.foreach { case (id, schema) =>
-        gen.writeStartObject()
-        gen.writeNumberField("id", id)
-        gen.writeStringField("schema", schema)
-        gen.writeEndObject()
-      }
-      gen.writeEndArray()
-    }
-    gen.writeEndObject(); gen.close()
-    // atomic swap: ALTER must never leave a torn descriptor
-    val tmp = new File(f.getParentFile, f.getName + ".tmp")
-    java.nio.file.Files.writeString(tmp.toPath, sw.toString)
-    FrameCommitIo.impl.swap(tmp, f)
-  }
-
-  private def readDescriptor(f: File): Descriptor = {
-    val p = new com.fasterxml.jackson.core.JsonFactory()
-      .createParser(java.nio.file.Files.readString(f.toPath))
-    var schema: String = null
-    var id = AvroFrames.DefaultSchemaId
-    var bucketKey: String = null
-    var buckets = 0
-    var bloomCols: String = null
-    var bloomItems = -1L
-    var deleteMode: String = null
-    var sortedBy: String = null
-    var dvFold = Double.NaN
-    var partCol: String = null
-    var partUnit: String = null
-    val history = Vector.newBuilder[(Int, String)]
-    import com.fasterxml.jackson.core.JsonToken._
-    p.nextToken()
-    while (p.nextToken() != END_OBJECT) {
-      p.currentName() match {
-        case "avroSchema"         => p.nextToken(); schema = p.getText
-        case "schemaId"           => p.nextToken(); id = p.getIntValue
-        case "bucketKey"          => p.nextToken(); bucketKey = p.getText
-        case "buckets"            => p.nextToken(); buckets = p.getIntValue
-        case "bloomColumns"       => p.nextToken(); bloomCols = p.getText
-        case "bloomExpectedItems" => p.nextToken(); bloomItems = p.getLongValue
-        case "deleteMode"         => p.nextToken(); deleteMode = p.getText
-        case "sortedBy"           => p.nextToken(); sortedBy = p.getText
-        case "dvFoldThreshold"    => p.nextToken(); dvFold = p.getDoubleValue
-        case "partitionCol"       => p.nextToken(); partCol = p.getText
-        case "partitionUnit"      => p.nextToken(); partUnit = p.getText
-        case "schemas" =>
-          p.nextToken() // [
-          while (p.nextToken() != END_ARRAY) {
-            var hid = -1; var hschema: String = null
-            while (p.nextToken() != END_OBJECT) {
-              p.currentName() match {
-                case "id"     => p.nextToken(); hid = p.getIntValue
-                case "schema" => p.nextToken(); hschema = p.getText
-                case _        => p.nextToken()
-              }
-            }
-            if (hid >= 0 && hschema != null) history += ((hid, hschema))
-          }
-        case _                    => p.nextToken()
-      }
-    }
-    require(schema != null, s"corrupt table descriptor ${f.getAbsolutePath}")
-    val hist = history.result()
-    Descriptor(schema, id,
-      if (bucketKey != null && buckets > 0) Some((bucketKey, buckets)) else None,
-      Option(bloomCols), if (bloomItems > 0) Some(bloomItems) else None,
-      if (hist.nonEmpty) hist else Vector((id, schema)),
-      Option(deleteMode), Option(sortedBy),
-      if (dvFold.isNaN) None else Some(dvFold),
-      if (partCol != null && partUnit != null) Some((partCol, partUnit)) else None)
-  }
-
-  /** Is this table bucketed? (descriptor probe for the maintenance
-    * procedures — compaction must not merge across buckets.)
+  /** Swap in a table directory's descriptor: ALTER must never leave a
+    * torn one.
     */
-  private[sources] def bucketSpecOf(multipart: String): Option[(String, Int)] = {
-    val dir = resolveTableDir(multipart)
-    readDescriptor(new File(dir, TableDescriptor)).bucket
+  private[sources] def writeDescriptor(dir: File, d: Descriptor): Unit = {
+    val n = FrameJson.newObject().put("avroSchema", d.avroSchema).put("schemaId", d.schemaId)
+    d.bucket.foreach { case (k, b) => n.put("bucketKey", k).put("buckets", b) }
+    d.bloomColumns.foreach(n.put("bloomColumns", _))
+    d.bloomExpectedItems.foreach(n.put("bloomExpectedItems", _))
+    d.deleteMode.foreach(n.put("deleteMode", _))
+    d.sortedBy.foreach(n.put("sortedBy", _))
+    d.dvFoldThreshold.foreach(n.put("dvFoldThreshold", _))
+    d.timePart.foreach { case (c, u) => n.put("partitionCol", c).put("partitionUnit", u) }
+    if (d.history.length > 1)
+      n.set[com.fasterxml.jackson.databind.JsonNode]("schemas", FrameJson.historyNode(d.history))
+    FrameJson.write(new File(dir, TableDescriptor))(n)
   }
 
-  /** Hidden time-partition transform of a table: (source column, unit),
-    * None when unpartitioned — the `drop_partitions` retention guard.
+  /** A table directory's descriptor; fails when it is absent, not
+    * JSON, or names no schema.
     */
-  private[sources] def timePartOf(multipart: String): Option[(String, String)] = {
-    val dir = resolveTableDir(multipart)
-    readDescriptor(new File(dir, TableDescriptor)).timePart
-  }
-
-  /** Wire contract of a table: (Avro writer schema JSON, schema id) —
-    * what the change-data-feed reader and the maintenance rewrites
-    * decode with ([[FrameChanges]], [[FrameMatView]]).
-    */
-  private[graft] def wireSchemaOf(multipart: String): (String, Int) = {
-    val dir = resolveTableDir(multipart)
-    val d = readDescriptor(new File(dir, TableDescriptor))
-    (d.avroSchema, d.schemaId)
-  }
-
-  /** `avroSchemaHistory` option value for a table (None = single
-    * schema version) — what maintenance procedures and the matview
-    * refresher pass so multi-version logs decode completely.
-    */
-  private[graft] def historyJsonOf(multipart: String): Option[String] = {
-    val dir = resolveTableDir(multipart)
-    readDescriptor(new File(dir, TableDescriptor)).historyJson
-  }
-
-  private def deleteRecursively(f: File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
+  private[sources] def readDescriptor(dir: File): Descriptor = {
+    val f = new File(dir, TableDescriptor)
+    val n = FrameJson.read(f)
+    val schema = FrameJson.text(n, "avroSchema")
+    require(schema.isDefined, s"corrupt table descriptor ${f.getAbsolutePath}")
+    val id = FrameJson.int(n, "schemaId", AvroFrames.DefaultSchemaId)
+    val buckets = FrameJson.int(n, "buckets", 0)
+    val hist = FrameJson.historyOf(n.path("schemas"))
+    Descriptor(schema.get, id,
+      FrameJson.text(n, "bucketKey").filter(_ => buckets > 0).map((_, buckets)),
+      FrameJson.text(n, "bloomColumns"),
+      Some(FrameJson.long(n, "bloomExpectedItems", -1L)).filter(_ > 0),
+      if (hist.nonEmpty) hist else Vector((id, schema.get)),
+      FrameJson.text(n, "deleteMode"), FrameJson.text(n, "sortedBy"),
+      FrameJson.double(n, "dvFoldThreshold"),
+      for (c <- FrameJson.text(n, "partitionCol"); u <- FrameJson.text(n, "partitionUnit"))
+        yield (c, u))
   }
 }
 

@@ -225,41 +225,15 @@ class FrameChangesMicroBatchStream(path: String, avroSchemaJson: String,
                                    schemaId: Int, requiredCols: Array[String],
                                    startVersion: Int, historyJson: String = null,
                                    maxVersionsPerTrigger: Int = 0)
-    extends MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxFiles}
+    extends FrameVersionStream {
 
-  private def dir = new java.io.File(path)
-
-  @volatile private var availableNowCap: Option[Int] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(FrameMaintenance.totalVersions(dir))
+  override protected def dir = new java.io.File(path)
+  override protected def maxPerTrigger: Int = maxVersionsPerTrigger
 
   override def initialOffset(): Offset = SegmentOffset(startVersion)
-  override def deserializeOffset(json: String): Offset = SegmentOffset(json.trim.toInt)
 
-  override def getDefaultReadLimit: ReadLimit =
-    if (maxVersionsPerTrigger > 0) ReadLimit.maxFiles(maxVersionsPerTrigger)
-    else ReadLimit.allAvailable()
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) should be called instead (SupportsAdmissionControl)")
-
-  private val clamp = new TornReadClamp(dir)
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val from = start.asInstanceOf[SegmentOffset].segments
-    val total = clamp(from, availableNowCap.getOrElse(FrameMaintenance.totalVersions(dir)))
-    limit match {
-      case f: ReadMaxFiles => SegmentOffset(math.min(total, from + f.maxFiles()))
-      case _               => SegmentOffset(total)
-    }
-  }
-
-  override def reportLatestOffset(): Offset =
-    SegmentOffset(FrameMaintenance.totalVersions(dir))
+  override protected def admit(from: Int, total: Int, max: Int): Int =
+    math.min(total, from + max)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[SegmentOffset].segments
@@ -269,9 +243,6 @@ class FrameChangesMicroBatchStream(path: String, avroSchemaJson: String,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new FrameChangeReaderFactory(avroSchemaJson, schemaId, requiredCols, historyJson)
-
-  override def commit(end: Offset): Unit = () // offset log is the source of truth
-  override def stop(): Unit = ()
 }
 
 case class FrameChangePartition(file: String, replacement: Option[String],

@@ -2,6 +2,9 @@ package graft.sources
 
 import java.io.File
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, IsNotNull, IsNull, LessThan, LessThanOrEqual}
 
@@ -155,63 +158,27 @@ object FrameMaintenance {
   def readManifest(dir: File): Vector[MaintEntry] = {
     val f = new File(dir, ManifestFile)
     if (!f.isFile) return Vector.empty
-    val p = new com.fasterxml.jackson.core.JsonFactory()
-      .createParser(java.nio.file.Files.readString(f.toPath))
-    import com.fasterxml.jackson.core.JsonToken._
-    val out = Vector.newBuilder[MaintEntry]
-    p.nextToken() // {
-    while (p.nextToken() != END_OBJECT) {
-      p.currentName() match {
-        case "entries" =>
-          p.nextToken() // [
-          while (p.nextToken() != END_ARRAY) { // { per entry
-            var op = ""; var publishMs = 0L; var expired = false
-            val replaced = Vector.newBuilder[String]
-            val replacedMs = Vector.newBuilder[Long]
-            val replacements = Vector.newBuilder[String]
-            while (p.nextToken() != END_OBJECT) {
-              p.currentName() match {
-                case "op"        => p.nextToken(); op = p.getText
-                case "publishMs" => p.nextToken(); publishMs = p.getLongValue
-                case "expired"   => p.nextToken(); expired = p.getBooleanValue
-                case "replaced" =>
-                  p.nextToken(); while (p.nextToken() != END_ARRAY) replaced += p.getText
-                case "replacedMs" =>
-                  p.nextToken(); while (p.nextToken() != END_ARRAY) replacedMs += p.getLongValue
-                case "replacements" =>
-                  p.nextToken(); while (p.nextToken() != END_ARRAY) replacements += p.getText
-                case _ => p.nextToken()
-              }
-            }
-            out += MaintEntry(op, publishMs, replaced.result(), replacedMs.result(),
-              replacements.result(), expired)
-          }
-        case _ => p.nextToken()
-      }
+    FrameJson.requireObject(FrameJson.read(f)).path("entries").asScala.toVector.map { e =>
+      MaintEntry(FrameJson.text(e, "op").getOrElse(""), FrameJson.long(e, "publishMs", 0L),
+        FrameJson.texts(e.path("replaced")),
+        e.path("replacedMs").asScala.map(FrameJson.asLong).toVector,
+        FrameJson.texts(e.path("replacements")), FrameJson.bool(e, "expired", false))
     }
-    out.result()
   }
 
+  /** Swap in the manifest: a crash mid-write must never corrupt it. */
   private def writeManifest(dir: File, entries: Seq[MaintEntry]): Unit = {
-    val sw = new java.io.StringWriter()
-    val gen = new com.fasterxml.jackson.core.JsonFactory().createGenerator(sw)
-    gen.writeStartObject()
-    gen.writeArrayFieldStart("entries")
+    val doc = FrameJson.newObject()
+    val arr = doc.putArray("entries")
     entries.foreach { e =>
-      gen.writeStartObject()
-      gen.writeStringField("op", e.op)
-      gen.writeNumberField("publishMs", e.publishMs)
-      gen.writeArrayFieldStart("replaced"); e.replaced.foreach(gen.writeString); gen.writeEndArray()
-      gen.writeArrayFieldStart("replacedMs"); e.replacedMs.foreach(gen.writeNumber); gen.writeEndArray()
-      gen.writeArrayFieldStart("replacements"); e.replacements.foreach(gen.writeString); gen.writeEndArray()
-      gen.writeBooleanField("expired", e.expired)
-      gen.writeEndObject()
+      val n = arr.addObject().put("op", e.op).put("publishMs", e.publishMs)
+      n.set[JsonNode]("replaced", FrameJson.textArray(e.replaced))
+      val ms = n.putArray("replacedMs")
+      e.replacedMs.foreach(m => ms.add(m))
+      n.set[JsonNode]("replacements", FrameJson.textArray(e.replacements))
+      n.put("expired", e.expired)
     }
-    gen.writeEndArray(); gen.writeEndObject(); gen.close()
-    // atomic swap: a crash mid-write must never corrupt the manifest
-    val tmp = new File(dir, ManifestFile + ".tmp")
-    java.nio.file.Files.writeString(tmp.toPath, sw.toString)
-    FrameCommitIo.impl.swap(tmp, new File(dir, ManifestFile))
+    FrameJson.write(new File(dir, ManifestFile))(doc)
   }
 
   /** Write a fresh single-entry manifest for a CLONE (round 16): the
@@ -997,31 +964,13 @@ object FrameMaintenance {
   }
 
   /** Does the directory's table descriptor declare a bucket layout?
-    * (Minimal probe of `_table.json` — false when absent/unreadable:
+    * (The catalog's descriptor reader — false when absent/unreadable:
     * path-based logs without a descriptor cannot be bucketed, the
     * bucketed write path exists only behind the catalog.)
     */
-  private def descriptorBucketed(dir: File): Boolean = {
-    val f = new File(dir, "_table.json")
-    if (!f.isFile) return false
-    try {
-      val p = new com.fasterxml.jackson.core.JsonFactory()
-        .createParser(java.nio.file.Files.readString(f.toPath))
-      import com.fasterxml.jackson.core.JsonToken._
-      var bucketKey: String = null
-      var buckets = 0
-      p.nextToken()
-      while (p.nextToken() != END_OBJECT) {
-        p.currentName() match {
-          case "bucketKey" => p.nextToken(); bucketKey = p.getText
-          case "buckets"   => p.nextToken(); buckets = p.getIntValue
-          case "schemas"   => p.nextToken(); p.skipChildren() // array field: skip whole
-          case _           => p.nextToken()
-        }
-      }
-      bucketKey != null && buckets > 0
-    } catch { case scala.util.control.NonFatal(_) => false }
-  }
+  private def descriptorBucketed(dir: File): Boolean =
+    try FrameCatalog.readDescriptor(dir).bucket.isDefined
+    catch { case scala.util.control.NonFatal(_) => false }
 
   // ------------------------------------------------------------ delete
 
@@ -1069,6 +1018,37 @@ object FrameMaintenance {
     }
   }
 
+  /** A DELETE's starting state: the live listing and manifest it
+    * commits against, the generation it mints, and the live segments
+    * split by their stats into provably-none-match, provably-all-match,
+    * and straddling.
+    */
+  private case class DeletePlan(live: Array[File], manifest: Vector[MaintEntry], gen: Int,
+                                noneMatch: Array[File], allMatch: Array[File],
+                                straddle: Array[File])
+
+  /** The classification both DELETE paths share, from the stats ledger
+    * (one metadata read; sidecar fallback per unledgered segment).
+    */
+  private def classifyDelete(dir: File, filters: Array[Filter]): DeletePlan = {
+    require(filters.nonEmpty,
+      "DELETE with no condition: use TRUNCATE / INSERT OVERWRITE instead")
+    val live = AvroFrames.listSegments(dir.getAbsolutePath)
+    val manifest = readManifest(dir)
+    val stats = new FrameStatsView(dir)
+    val (noneMatch, rest) = live.partition { seg =>
+      stats.read(seg).exists { case (frames, fields) =>
+        frames == 0L || filters.exists(!AvroFrameStats.mayMatch(frames, fields, _))
+      }
+    }
+    val (allMatch, straddle) = rest.partition { seg =>
+      stats.read(seg).exists { case (frames, fields) =>
+        filters.forall(mustMatch(frames, fields, _))
+      }
+    }
+    DeletePlan(live, manifest, manifest.length + 1, noneMatch, allMatch, straddle)
+  }
+
   /** Row-level delete: rows matching ALL `filters` (a conjunction, the
     * `DELETE FROM … WHERE` condition) are removed. Three per-segment
     * paths, decided from the stats sidecar without opening the file:
@@ -1088,25 +1068,7 @@ object FrameMaintenance {
   private def deleteWhereOnce(spark: SparkSession, dir: File, avroSchemaJson: String,
                               schemaId: Int, filters: Array[Filter],
                               historyJson: String): DeleteResult = {
-    require(filters.nonEmpty,
-      "DELETE with no condition: use TRUNCATE / INSERT OVERWRITE instead")
-    val live = AvroFrames.listSegments(dir.getAbsolutePath)
-    val manifest = readManifest(dir)
-    val gen = manifest.length + 1
-
-    // classify from the stats ledger (one metadata read; sidecar
-    // fallback per unledgered segment)
-    val stats = new FrameStatsView(dir)
-    val (noneMatch, rest) = live.partition { seg =>
-      stats.read(seg).exists { case (frames, fields) =>
-        frames == 0L || filters.exists(!AvroFrameStats.mayMatch(frames, fields, _))
-      }
-    }
-    val (allMatch, rewrite) = rest.partition { seg =>
-      stats.read(seg).exists { case (frames, fields) =>
-        filters.forall(mustMatch(frames, fields, _))
-      }
-    }
+    val DeletePlan(live, manifest, gen, noneMatch, allMatch, rewrite) = classifyDelete(dir, filters)
     if (allMatch.isEmpty && rewrite.isEmpty)
       return DeleteResult(0, 0, noneMatch.length)
 
@@ -1201,23 +1163,7 @@ object FrameMaintenance {
   private def deleteWhereMoROnce(spark: SparkSession, dir: File, avroSchemaJson: String,
                                  schemaId: Int, filters: Array[Filter],
                                  historyJson: String): DeleteResult = {
-    require(filters.nonEmpty,
-      "DELETE with no condition: use TRUNCATE / INSERT OVERWRITE instead")
-    val live = AvroFrames.listSegments(dir.getAbsolutePath)
-    val manifest = readManifest(dir)
-    val gen = manifest.length + 1
-
-    val stats = new FrameStatsView(dir)
-    val (noneMatch, rest) = live.partition { seg =>
-      stats.read(seg).exists { case (frames, fields) =>
-        frames == 0L || filters.exists(!AvroFrameStats.mayMatch(frames, fields, _))
-      }
-    }
-    val (allMatch, straddle) = rest.partition { seg =>
-      stats.read(seg).exists { case (frames, fields) =>
-        filters.forall(mustMatch(frames, fields, _))
-      }
-    }
+    val DeletePlan(live, manifest, gen, noneMatch, allMatch, straddle) = classifyDelete(dir, filters)
     if (allMatch.isEmpty && straddle.isEmpty)
       return DeleteResult(0, 0, noneMatch.length)
 
@@ -1237,7 +1183,6 @@ object FrameMaintenance {
         .map { case (name, priorDv, tmpName) =>
           val readerSchema = new org.apache.avro.Schema.Parser().parse(avroSchemaJson)
           val fieldPos = {
-            import scala.jdk.CollectionConverters._
             readerSchema.getFields.asScala.map(f => f.name() -> f.pos()).toMap
           }
           val preds = filters.map(AvroFrames.compile(fieldPos, _))
@@ -1460,7 +1405,6 @@ object FrameMaintenance {
                              avroSchemaJson: String, schemaId: Int,
                              filters: Array[Filter],
                              historyJson: String, priorDvName: String = null): Option[String] = {
-    import scala.jdk.CollectionConverters._
     val readerSchema = new org.apache.avro.Schema.Parser().parse(avroSchemaJson)
     val fieldPos = readerSchema.getFields.asScala.map(f => f.name() -> f.pos()).toMap
     val preds = filters.map(AvroFrames.compile(fieldPos, _))
@@ -1542,7 +1486,6 @@ object FrameMaintenance {
     val cols = bloomCols.toVector
     spark.sparkContext.parallelize(names, names.length).foreach { name =>
       val readerSchema = new org.apache.avro.Schema.Parser().parse(avroSchemaJson)
-      import scala.jdk.CollectionConverters._
       val fields = readerSchema.getFields.asScala.toVector
       val stats = fields.map(_ => new AvroFrameWrite.FieldStats)
       val blooms: Vector[org.apache.spark.util.sketch.BloomFilter] =
@@ -1580,11 +1523,8 @@ object FrameMaintenance {
       val bloomB64 = fields.indices.collect {
         case i if blooms(i) != null => fields(i).name() -> AvroFrameWrite.bloomToB64(blooms(i))
       }.toMap
-      val json = AvroFrameWrite.statsJson(frames,
-        fields.map(_.name()).zip(stats), bloomB64)
-      val tmp = new File(dirPath, s".analyzing-$name.stats")
-      java.nio.file.Files.writeString(tmp.toPath, json)
-      FrameCommitIo.impl.swap(tmp, new File(dirPath, name + ".stats"))
+      FrameJson.write(new File(dirPath, name + ".stats"))(
+        AvroFrameWrite.statsNode(frames, fields.map(_.name()).zip(stats), bloomB64))
     }
     // the sidecars just changed under the ledger's feet — rebuild it
     // from them (also the RETROFIT path: `CALL analyze` on a pre-ledger
@@ -1598,8 +1538,9 @@ object FrameMaintenance {
   /** Remove ORPHANED temporaries (round 15): dot-prefixed task temps
     * and scratch directories left by crashed writers/maintainers —
     * `.inprogress-…` (task writes), `.compacting-…` / `.deleting-…`
-    * (maintenance rewrites), `.clustering-…` scratch dirs, `.…​.tmp`
-    * swap temps — older than the cutoff. Dot-prefixed names are
+    * (maintenance rewrites), `.clustering-…` scratch dirs, and the
+    * `.<name>.tmp` swap temps of metadata documents ([[FrameJson.write]])
+    * and deletion vectors — older than the cutoff. Dot-prefixed names are
     * invisible to every reader by construction, so this is pure
     * garbage collection: no version, no manifest entry, nothing a
     * scan, stream, or snapshot can observe. The age cutoff is the
@@ -1731,10 +1672,7 @@ object FrameMaintenance {
         val renamedBlooms = blooms.flatMap { case (n, b64) =>
           transform(n).map(_ -> b64)
         }
-        val tmp = new File(sf.getParentFile, "." + sf.getName + ".tmp")
-        java.nio.file.Files.writeString(tmp.toPath,
-          AvroFrameWrite.statsJson(frames, renamed, renamedBlooms))
-        FrameCommitIo.impl.swap(tmp, sf)
+        FrameJson.write(sf)(AvroFrameWrite.statsNode(frames, renamed, renamedBlooms))
       }
     }
     // the ledger mirrors live sidecars — re-key it with the same

@@ -64,38 +64,11 @@ object FrameMatView {
 
   case class RefreshResult(fromVersion: Int, toVersion: Int, deltaKeys: Long)
 
-  // ------------------------------------------------------------ marker io
-
-  /** Read integer fields of a flat one-object JSON marker; missing
-    * file → empty map.
-    */
-  private def readIntFields(f: File): Map[String, Long] = {
-    if (!f.isFile) return Map.empty
-    val p = new com.fasterxml.jackson.core.JsonFactory()
-      .createParser(java.nio.file.Files.readString(f.toPath))
-    import com.fasterxml.jackson.core.JsonToken._
-    val out = Map.newBuilder[String, Long]
-    p.nextToken()
-    while (p.nextToken() != END_OBJECT) {
-      val name = p.currentName()
-      p.nextToken()
-      if (p.currentToken() == VALUE_NUMBER_INT) out += name -> p.getLongValue
-    }
-    out.result()
-  }
-
-  private def writeJson(f: File, fields: (String, Long)*): Unit = {
-    val tmp = new File(f.getParentFile, f.getName + ".tmp")
-    java.nio.file.Files.writeString(tmp.toPath,
-      fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}"))
-    FrameCommitIo.impl.swap(tmp, f)
-  }
-
   private def readWatermark(dstDir: File): Int =
-    readIntFields(new File(dstDir, MarkerFile)).getOrElse("srcVersion", 0L).toInt
+    FrameJson.readLongs(new File(dstDir, MarkerFile)).getOrElse("srcVersion", 0L).toInt
 
   private def writeWatermark(dstDir: File, srcVersion: Int): Unit =
-    writeJson(new File(dstDir, MarkerFile), "srcVersion" -> srcVersion.toLong)
+    FrameJson.writeLongs(new File(dstDir, MarkerFile), "srcVersion" -> srcVersion.toLong)
 
   /** Crash recovery for the batch path: an intent left behind means a
     * prior refresh died inside the apply window. If the target's
@@ -106,7 +79,7 @@ object FrameMatView {
     */
   private def recoverIntent(dstDir: File): Unit = {
     val intent = new File(dstDir, IntentFile)
-    val fields = readIntFields(intent)
+    val fields = FrameJson.readLongs(intent)
     if (fields.isEmpty) { intent.delete(); return }
     val applied = FrameMaintenance.totalVersions(dstDir) > fields.getOrElse("dstVersions", Long.MaxValue)
     if (applied && readWatermark(dstDir) == fields.getOrElse("from", -1L).toInt)
@@ -192,7 +165,7 @@ object FrameMatView {
       // write-ahead intent, then MERGE, then watermark + intent retire:
       // whichever side of the MERGE a crash lands on, recoverIntent can
       // tell (the MERGE mints target versions) and does the right thing
-      writeJson(new File(dstDir, IntentFile),
+      FrameJson.writeLongs(new File(dstDir, IntentFile),
         "from" -> from.toLong, "to" -> to.toLong,
         "dstVersions" -> FrameMaintenance.totalVersions(dstDir).toLong)
       onBeforeMerge()
@@ -258,16 +231,16 @@ object FrameMatView {
   private def applyStreamBatch(changes: org.apache.spark.sql.DataFrame, batchId: Long,
                                catalog: String, dst: String, dstDir: File,
                                keyCol: String, valueCol: String): Unit = {
-    val appliedBatch = readIntFields(new File(dstDir, StreamMarkerFile))
+    val appliedBatch = FrameJson.readLongs(new File(dstDir, StreamMarkerFile))
       .getOrElse("batchId", -1L)
     if (batchId <= appliedBatch) return // re-delivered, already applied
 
     val intentF = new File(dstDir, StreamIntentFile)
-    val intent = readIntFields(intentF)
+    val intent = FrameJson.readLongs(intentF)
     if (intent.getOrElse("batchId", -1L) == batchId &&
         FrameMaintenance.totalVersions(dstDir) > intent.getOrElse("dstVersions", Long.MaxValue)) {
       // crashed AFTER the MERGE committed: finalize the ledger, skip
-      writeJson(new File(dstDir, StreamMarkerFile), "batchId" -> batchId)
+      FrameJson.writeLongs(new File(dstDir, StreamMarkerFile), "batchId" -> batchId)
       intentF.delete()
       return
     }
@@ -278,12 +251,12 @@ object FrameMatView {
     delta.createOrReplaceTempView(view)
     try {
       if (!delta.isEmpty) {
-        writeJson(intentF, "batchId" -> batchId,
+        FrameJson.writeLongs(intentF, "batchId" -> batchId,
           "dstVersions" -> FrameMaintenance.totalVersions(dstDir).toLong)
         mergeDelta(spark, catalog, dst, keyCol, view)
         onAfterMerge()
       }
-      writeJson(new File(dstDir, StreamMarkerFile), "batchId" -> batchId)
+      FrameJson.writeLongs(new File(dstDir, StreamMarkerFile), "batchId" -> batchId)
       intentF.delete()
     } finally spark.catalog.dropTempView(view)
     ()

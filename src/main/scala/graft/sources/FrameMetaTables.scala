@@ -35,33 +35,19 @@ import org.apache.spark.unsafe.types.UTF8String
 object FrameTags {
   val TagsFile = "_tags.json"
 
+  /** Tag name → version; empty when the file is absent or unreadable. */
   def read(dir: File): Map[String, Int] = {
     val f = new File(dir, TagsFile)
     if (!f.isFile) return Map.empty
     try {
-      val p = new com.fasterxml.jackson.core.JsonFactory()
-        .createParser(java.nio.file.Files.readString(f.toPath))
-      import com.fasterxml.jackson.core.JsonToken._
-      val out = Map.newBuilder[String, Int]
-      p.nextToken()
-      while (p.nextToken() != END_OBJECT) {
-        val name = p.currentName()
-        p.nextToken()
-        out += name -> p.getIntValue
-      }
-      out.result()
+      FrameJson.fields(FrameJson.read(f)).map { case (name, v) => name -> FrameJson.asInt(v) }.toMap
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
   }
 
   def write(dir: File, tags: Map[String, Int]): Unit = {
-    val sw = new java.io.StringWriter()
-    val gen = new com.fasterxml.jackson.core.JsonFactory().createGenerator(sw)
-    gen.writeStartObject()
-    tags.toSeq.sortBy(_._1).foreach { case (n, v) => gen.writeNumberField(n, v) }
-    gen.writeEndObject(); gen.close()
-    val tmp = new File(dir, "." + TagsFile + ".tmp")
-    java.nio.file.Files.writeString(tmp.toPath, sw.toString)
-    FrameCommitIo.impl.swap(tmp, new File(dir, TagsFile))
+    val n = FrameJson.newObject()
+    tags.toSeq.sortBy(_._1).foreach { case (name, v) => n.put(name, v) }
+    FrameJson.write(new File(dir, TagsFile))(n)
   }
 
   /** Resolve a `VERSION AS OF` argument: a bare integer is a version,
@@ -128,25 +114,9 @@ object FrameMetaTables {
   /** Bucket count declared by the table descriptor (0 = unbucketed /
     * no descriptor — path-based logs cannot be bucketed).
     */
-  private def descriptorBuckets(dir: File): Int = {
-    val f = new File(dir, "_table.json")
-    if (!f.isFile) return 0
-    try {
-      val p = new com.fasterxml.jackson.core.JsonFactory()
-        .createParser(java.nio.file.Files.readString(f.toPath))
-      import com.fasterxml.jackson.core.JsonToken._
-      var buckets = 0
-      p.nextToken()
-      while (p.nextToken() != END_OBJECT) {
-        p.currentName() match {
-          case "buckets" => p.nextToken(); buckets = p.getIntValue
-          case "schemas" => p.nextToken(); p.skipChildren()
-          case _         => p.nextToken()
-        }
-      }
-      buckets
-    } catch { case scala.util.control.NonFatal(_) => 0 }
-  }
+  private def descriptorBuckets(dir: File): Int =
+    try FrameCatalog.readDescriptor(dir).bucket.fold(0)(_._2)
+    catch { case scala.util.control.NonFatal(_) => 0 }
 
   private def segmentRow(f: File, location: String): InternalRow = {
     val stats = AvroFrameStats.readFull(f)

@@ -2,6 +2,9 @@ package graft.sources
 
 import java.io.File
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
+
 /** Table-level statistics + LIVE-SET ledger — the scalable-planning
   * metadata layer.
   *
@@ -203,8 +206,7 @@ object FrameStatsLedger {
   private def loadRoot(dir: File, key: (Long, Long)): RootDoc = {
     val hit = rootCache.get(dir.getAbsolutePath)
     if (hit != null && hit._1 == key) return hit._2
-    val doc = parseRoot(java.nio.file.Files.readString(
-      new File(dir, LedgerFile).toPath))
+    val doc = parseRoot(FrameJson.read(new File(dir, LedgerFile)))
     rootCache.put(dir.getAbsolutePath, (key, doc))
     doc
   }
@@ -223,7 +225,7 @@ object FrameStatsLedger {
     val f = new File(new File(dir, ShardDirName), shard + ".json")
     val entries =
       if (!f.isFile) Map.empty[String, Entry]
-      else parseEntriesDoc(java.nio.file.Files.readString(f.toPath))
+      else entriesOf(FrameJson.requireObject(FrameJson.read(f)).path("entries"))
     shardCache.put(ck, (rootKey, entries))
     entries
   }
@@ -261,191 +263,52 @@ object FrameStatsLedger {
 
   // ------------------------------------------------------------ parse
 
-  private def parseRoot(json: String): RootDoc = {
-    val p = new com.fasterxml.jackson.core.JsonFactory().createParser(json)
-    import com.fasterxml.jackson.core.JsonToken._
-    var v = 1
-    var live = false
-    var inline = Map.empty[String, Entry]
-    val shards = Vector.newBuilder[String]
-    p.nextToken() // {
-    while (p.nextToken() != END_OBJECT) {
-      p.currentName() match {
-        case "v"    => p.nextToken(); v = p.getIntValue
-        case "live" => p.nextToken(); live = p.getBooleanValue
-        case "shards" =>
-          p.nextToken() // [
-          while (p.nextToken() != END_ARRAY) shards += p.getText
-        case "entries" =>
-          p.nextToken() // {
-          val b = Map.newBuilder[String, Entry]
-          while (p.nextToken() != END_OBJECT) {
-            val seg = p.currentName()
-            parseEntry(p).foreach(e => b += seg -> e)
-          }
-          inline = b.result()
-        case _ => p.nextToken()
-      }
-    }
-    RootDoc(authoritative = v >= 2 && live, inline, shards.result(), v2 = v >= 2)
-  }
-
-  /** Parse a `{"entries":{…}}` document (shard file body). */
-  private def parseEntriesDoc(json: String): Map[String, Entry] = {
-    val p = new com.fasterxml.jackson.core.JsonFactory().createParser(json)
-    import com.fasterxml.jackson.core.JsonToken._
-    val b = Map.newBuilder[String, Entry]
-    p.nextToken() // {
-    while (p.nextToken() != END_OBJECT) {
-      p.currentName() match {
-        case "entries" =>
-          p.nextToken() // {
-          while (p.nextToken() != END_OBJECT) {
-            val seg = p.currentName()
-            parseEntry(p).foreach(e => b += seg -> e)
-          }
-        case _ => p.nextToken()
-      }
-    }
-    b.result()
+  private def parseRoot(doc: JsonNode): RootDoc = {
+    val n = FrameJson.requireObject(doc)
+    val v = FrameJson.int(n, "v", 1)
+    val live = FrameJson.bool(n, "live", false)
+    RootDoc(authoritative = v >= 2 && live, entriesOf(n.path("entries")),
+      FrameJson.texts(n.path("shards")), v2 = v >= 2)
   }
 
   private def parseDeltaLine(line: String): Option[DeltaLine] =
     try {
-      val p = new com.fasterxml.jackson.core.JsonFactory().createParser(line)
-      import com.fasterxml.jackson.core.JsonToken._
-      val add = Map.newBuilder[String, Entry]
-      val remove = Seq.newBuilder[String]
-      val dvSet = Map.newBuilder[String, (String, Long)]
-      val dvClear = Seq.newBuilder[String]
-      p.nextToken() // {
-      while (p.nextToken() != END_OBJECT) {
-        p.currentName() match {
-          case "add" =>
-            p.nextToken() // {
-            while (p.nextToken() != END_OBJECT) {
-              val seg = p.currentName()
-              parseEntry(p).foreach(e => add += seg -> e)
-            }
-          case "remove" =>
-            p.nextToken() // [
-            while (p.nextToken() != END_ARRAY) remove += p.getText
-          case "dvset" =>
-            p.nextToken() // {
-            while (p.nextToken() != END_OBJECT) {
-              val base = p.currentName()
-              var dv: String = null; var dvMs = 0L
-              p.nextToken() // {
-              while (p.nextToken() != END_OBJECT) {
-                p.currentName() match {
-                  case "dv"   => p.nextToken(); dv = p.getText
-                  case "dvMs" => p.nextToken(); dvMs = p.getLongValue
-                  case _      => p.nextToken()
-                }
-              }
-              if (dv != null) dvSet += base -> ((dv, dvMs))
-            }
-          case "dvclear" =>
-            p.nextToken() // [
-            while (p.nextToken() != END_ARRAY) dvClear += p.getText
-          case _ => p.nextToken()
-        }
-      }
-      Some(DeltaLine(add.result(), remove.result(), dvSet.result(), dvClear.result()))
+      val n = FrameJson.requireObject(FrameJson.parse(line))
+      val dvSet = FrameJson.fields(n.path("dvset")).flatMap { case (base, d) =>
+        FrameJson.text(d, "dv").map(dv => base -> ((dv, FrameJson.long(d, "dvMs", 0L))))
+      }.toMap
+      Some(DeltaLine(entriesOf(n.path("add")), FrameJson.texts(n.path("remove")),
+        dvSet, FrameJson.texts(n.path("dvclear"))))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Parse one segment's entry object (parser positioned at the field
-    * name; consumes through its END_OBJECT).
-    */
-  private def parseEntry(p: com.fasterxml.jackson.core.JsonParser): Option[Entry] = {
-    import com.fasterxml.jackson.core.JsonToken._
-    var frames = 0L
-    var publishMs = 0L
-    var dv: Option[String] = None
-    var dvMs = 0L
-    val fields = Map.newBuilder[String, (Long, Any, Any)]
-    val bloomFields = Set.newBuilder[String]
-    p.nextToken() // {
-    while (p.nextToken() != END_OBJECT) {
-      p.currentName() match {
-        case "frames"    => p.nextToken(); frames = p.getLongValue
-        case "publishMs" => p.nextToken(); publishMs = p.getLongValue
-        case "dv"        => p.nextToken(); dv = Some(p.getText)
-        case "dvMs"      => p.nextToken(); dvMs = p.getLongValue
-        case "fields" =>
-          p.nextToken() // {
-          while (p.nextToken() != END_OBJECT) {
-            val name = p.currentName()
-            var nulls = 0L; var min: Any = null; var max: Any = null
-            p.nextToken() // {
-            while (p.nextToken() != END_OBJECT) {
-              val k = p.currentName()
-              val t = p.nextToken()
-              val v: Any = t match {
-                case VALUE_NUMBER_INT   => Long.box(p.getLongValue)
-                case VALUE_NUMBER_FLOAT => Double.box(p.getDoubleValue)
-                case VALUE_TRUE         => Boolean.box(true)
-                case VALUE_FALSE        => Boolean.box(false)
-                case _                  => p.getText
-              }
-              k match {
-                case "nulls" => nulls = v.asInstanceOf[java.lang.Long].longValue
-                case "min"   => min = v
-                case "max"   => max = v
-                case "bloom" => if (v == Boolean.box(true)) bloomFields += name
-                case _       => ()
-              }
-            }
-            fields += name -> ((nulls, min, max))
-          }
-        case _ => p.nextToken()
-      }
-    }
-    Some(Entry(frames, fields.result(), bloomFields.result(), publishMs, dv, dvMs))
-  }
+  /** An `entries` object: segment name → entry. */
+  private def entriesOf(n: JsonNode): Map[String, Entry] =
+    FrameJson.fields(n).map { case (seg, e) =>
+      val fields = e.path("fields")
+      seg -> Entry(FrameJson.long(e, "frames", 0L), FrameJson.statsOf(fields),
+        FrameJson.fields(fields).collect { case (f, st) if st.path("bloom").booleanValue => f }.toSet,
+        FrameJson.long(e, "publishMs", 0L), FrameJson.text(e, "dv"), FrameJson.long(e, "dvMs", 0L))
+    }.toMap
 
   // ------------------------------------------------------------ write
 
   /** Serialize an entries map (shared by root/shard bodies and each
     * delta line's `add` field).
     */
-  private def writeEntries(gen: com.fasterxml.jackson.core.JsonGenerator,
-                           entries: Map[String, Entry]): Unit = {
+  private def entriesNode(entries: Map[String, Entry]): ObjectNode = {
+    val out = FrameJson.newObject()
     entries.toSeq.sortBy(_._1).foreach { case (seg, e) =>
-      gen.writeObjectFieldStart(seg)
-      gen.writeNumberField("frames", e.frames)
-      if (e.publishMs != 0L) gen.writeNumberField("publishMs", e.publishMs)
-      e.dv.foreach { d =>
-        gen.writeStringField("dv", d)
-        gen.writeNumberField("dvMs", e.dvMs)
-      }
-      gen.writeObjectFieldStart("fields")
+      val n = out.putObject(seg).put("frames", e.frames)
+      if (e.publishMs != 0L) n.put("publishMs", e.publishMs)
+      e.dv.foreach(d => n.put("dv", d).put("dvMs", e.dvMs))
+      val fields = n.putObject("fields")
       e.fields.toSeq.sortBy(_._1).foreach { case (name, (nulls, mn, mx)) =>
-        gen.writeObjectFieldStart(name)
-        gen.writeNumberField("nulls", nulls)
-        def writeVal(k: String, v: Any): Unit = v match {
-          case null                 => ()
-          case l: java.lang.Long    => gen.writeNumberField(k, l.longValue)
-          case d: java.lang.Double  => gen.writeNumberField(k, d.doubleValue)
-          case b: java.lang.Boolean => gen.writeBooleanField(k, b.booleanValue)
-          case s                    => gen.writeStringField(k, s.toString)
-        }
-        writeVal("min", mn); writeVal("max", mx)
-        if (e.bloomFields.contains(name)) gen.writeBooleanField("bloom", true)
-        gen.writeEndObject()
+        val st = FrameJson.statNode(nulls, mn, mx)
+        if (e.bloomFields.contains(name)) st.put("bloom", true)
+        fields.set[JsonNode](name, st)
       }
-      gen.writeEndObject() // fields
-      gen.writeEndObject() // segment
     }
-  }
-
-  private def writeDoc(target: File)(body: com.fasterxml.jackson.core.JsonGenerator => Unit): Unit = {
-    val sw = new java.io.StringWriter()
-    val gen = new com.fasterxml.jackson.core.JsonFactory().createGenerator(sw)
-    gen.writeStartObject(); body(gen); gen.writeEndObject(); gen.close()
-    val tmp = new File(target.getParentFile, "." + target.getName + ".tmp")
-    java.nio.file.Files.writeString(tmp.toPath, sw.toString)
-    FrameCommitIo.impl.swap(tmp, target)
+    out
   }
 
   /** Atomic write of the FULL ledger as a fresh base checkpoint:
@@ -464,11 +327,8 @@ object FrameStatsLedger {
     if (shardKeys.nonEmpty) {
       shardDir.mkdirs()
       shardKeys.foreach { k =>
-        writeDoc(new File(shardDir, k + ".json")) { gen =>
-          gen.writeObjectFieldStart("entries")
-          writeEntries(gen, byShard(k))
-          gen.writeEndObject()
-        }
+        FrameJson.write(new File(shardDir, k + ".json"))(
+          FrameJson.newObject().set[JsonNode]("entries", entriesNode(byShard(k))))
       }
     }
     // stale shard files from a previous checkpoint's partition set
@@ -479,16 +339,10 @@ object FrameStatsLedger {
     if (shardKeys.isEmpty) shardDir.delete() // no-op if non-empty/absent
     val root = new File(dir, LedgerFile)
     val prevMtime = if (root.isFile) root.lastModified() else 0L
-    writeDoc(root) { gen =>
-      gen.writeNumberField("v", 2)
-      gen.writeBooleanField("live", authoritative)
-      gen.writeArrayFieldStart("shards")
-      shardKeys.foreach(gen.writeString)
-      gen.writeEndArray()
-      gen.writeObjectFieldStart("entries")
-      writeEntries(gen, inline)
-      gen.writeEndObject()
-    }
+    val doc = FrameJson.newObject().put("v", 2).put("live", authoritative)
+    doc.set[JsonNode]("shards", FrameJson.textArray(shardKeys))
+    doc.set[JsonNode]("entries", entriesNode(inline))
+    FrameJson.write(root)(doc)
     if (root.lastModified() <= prevMtime) root.setLastModified(prevMtime + 1)
     new File(dir, DeltaFile).delete()
     purgeCaches(dir)
@@ -538,31 +392,16 @@ object FrameStatsLedger {
         authoritative = true)
       return
     }
-    val sw = new java.io.StringWriter()
-    val gen = new com.fasterxml.jackson.core.JsonFactory().createGenerator(sw)
-    gen.writeStartObject()
-    gen.writeObjectFieldStart("add")
-    writeEntries(gen, stampedAdd)
-    gen.writeEndObject()
-    gen.writeArrayFieldStart("remove")
-    remove.toSeq.sorted.foreach(gen.writeString)
-    gen.writeEndArray()
+    val line = FrameJson.newObject()
+    line.set[JsonNode]("add", entriesNode(stampedAdd))
+    line.set[JsonNode]("remove", FrameJson.textArray(remove.toSeq.sorted))
     if (stampedDv.nonEmpty) {
-      gen.writeObjectFieldStart("dvset")
+      val dvs = line.putObject("dvset")
       stampedDv.toSeq.sortBy(_._1).foreach { case (base, (dv, ms)) =>
-        gen.writeObjectFieldStart(base)
-        gen.writeStringField("dv", dv)
-        gen.writeNumberField("dvMs", ms)
-        gen.writeEndObject()
+        dvs.putObject(base).put("dv", dv).put("dvMs", ms)
       }
-      gen.writeEndObject()
     }
-    if (dvClear.nonEmpty) {
-      gen.writeArrayFieldStart("dvclear")
-      dvClear.toSeq.sorted.foreach(gen.writeString)
-      gen.writeEndArray()
-    }
-    gen.writeEndObject(); gen.close()
+    if (dvClear.nonEmpty) line.set[JsonNode]("dvclear", FrameJson.textArray(dvClear.toSeq.sorted))
     val delta = new File(dir, DeltaFile)
     // heal a torn tail (crash mid-append): if the file doesn't end in a
     // newline, terminate the torn line first so this fold's line stays
@@ -573,7 +412,7 @@ object FrameStatsLedger {
       finally raf.close()
     }
     val out = new java.io.FileOutputStream(delta, true)
-    try out.write(((if (needsNewline) "\n" else "") + sw.toString + "\n")
+    try out.write(((if (needsNewline) "\n" else "") + FrameJson.render(line) + "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     purgeCaches(dir)

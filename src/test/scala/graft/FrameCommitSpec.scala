@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{AvroFrames, FrameMaintenance}
+import graft.sources.{AvroFrames, FrameCommitIo, FrameMaintenance}
 
 /** Optimistic concurrency for maintenance commits (round 15, VERDICT
   * r14 item 3): classification and executor I/O run lock-free; the
@@ -171,5 +171,36 @@ class FrameCommitSpec extends AnyFunSuite with SparkFixture {
     assert(ids(cat) == before, "live data untouched")
     assert(FrameMaintenance.totalVersions(dir) == 2, "no version minted")
     fresh.delete()
+  }
+
+  test("a metadata swap that never happens leaves a temp remove_orphans sweeps") {
+    val (cat, _) = freshCatalog("swaptmp")
+    val dir = new java.io.File(build(cat, 1))
+    // crash between writing the new descriptor and swapping it in
+    FrameCommitIo.impl = new FrameCommitIo {
+      private val d = FrameCommitIo.Local
+      override def tryLock(l: java.io.File) = d.tryLock(l)
+      override def unlock(l: java.io.File) = d.unlock(l)
+      override def publish(t: java.io.File, f: java.io.File) = d.publish(t, f)
+      override def swap(t: java.io.File, f: java.io.File): Unit =
+        throw new java.io.IOException(s"crash before swapping ${f.getName}")
+      override def move(s: java.io.File, f: java.io.File, r: Boolean) = d.move(s, f, r)
+      override def link(s: java.io.File, f: java.io.File) = d.link(s, f)
+      override def renameDir(s: java.io.File, f: java.io.File) = d.renameDir(s, f)
+    }
+    try intercept[Exception] { spark.sql(s"ALTER TABLE $cat.corpus.t ADD COLUMNS (tag STRING)") }
+    finally FrameCommitIo.impl = FrameCommitIo.Local
+
+    val temps = dir.listFiles().filter(_.getName.endsWith(".tmp"))
+    assert(temps.nonEmpty, "the interrupted swap must leave its temp behind")
+    val old = System.currentTimeMillis() - 3600 * 1000L
+    temps.foreach(t => java.nio.file.Files.setLastModifiedTime(t.toPath,
+      java.nio.file.attribute.FileTime.fromMillis(old)))
+    spark.sql(s"CALL $cat.corpus.remove_orphans(table => 'corpus.t')").collect()
+    val left = dir.listFiles().map(_.getName).filter(_.endsWith(".tmp"))
+    assert(left.isEmpty, s"remove_orphans left swap temps behind: ${left.mkString(", ")}")
+    assert(spark.table(s"$cat.corpus.t").columns.toSeq == Seq("id", "v"),
+      "the descriptor keeps its pre-ALTER schema")
+    assert(ids(cat) == (0L until 10L))
   }
 }
