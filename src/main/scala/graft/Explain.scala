@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
   * more registered queries. `runMain graft.Explain q36_simhash_pairs
   * [sfDir]` — executes the query first so AQE finalizes the plan, then
   * dumps the tree (ReusedExchange / join strategy / codegen spans are
-  * only trustworthy on the final plan).
+  * only trustworthy on the final plan). Each query's `====` line names
+  * the Spark jobs its builder started (`build_jobs`) and the jobs its
+  * execution started (`run_jobs`).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -23,8 +25,13 @@ object Explain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // stage-level wall/CPU profile: the plan tells you the shape, this
-    // tells you where the time actually went.
+    // tells you where the time actually went. The same listener counts
+    // job starts, split into build and run at the moment the query's
+    // builder returns.
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
       override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
         val i = sc.stageInfo
         val wall = (i.completionTime.getOrElse(0L) - i.submissionTime.getOrElse(0L)) / 1000.0
@@ -36,17 +43,25 @@ object Explain {
         }
       }
     })
+    /** Jobs started since the last call (every posted event delivered). */
+    def jobsSince(): Int = {
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
+      jobs.getAndSet(0)
+    }
     // SPARK_GRAFT_PLAN_DIR: also write `explain("formatted")` per query
     // (the r17 optimization deliverable format) as <dir>/<query>_<tag>.txt,
     // tag from SPARK_GRAFT_PLAN_TAG (default "plan").
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val planTag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "plan")
     names.foreach { n =>
+      jobsSince()
       val df = SparkEntry.queries(n)(spark, sfDir)
+      val buildJobs = jobsSince()
       val t0 = System.nanoTime()
       try {
         df.collect()   // drive THIS execution so AQE finalizes in place
-        println(f"==== $n  (${(System.nanoTime() - t0) / 1e9}%.1f s) ====")
+        val secs = (System.nanoTime() - t0) / 1e9
+        println(f"==== $n  ($secs%.1f s) build_jobs=$buildJobs run_jobs=${jobsSince()} ====")
         println(df.queryExecution.executedPlan.toString)
       } finally {
         // Written AFTER collect() (ADVICE r17): the pre-execution dump

@@ -1,6 +1,14 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 
 /** Table access for the driver's parquet testdata.
   *
@@ -8,6 +16,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * tables live at `$sfDir/<name>.parquet` (see TESTDATA.md / FIXTURES.md).
   * Centralizing the reads keeps scan options consistent and gives one
   * place to attach schema hints or bucketing metadata later.
+  *
+  * Binding a table starts no Spark job: [[parquet]] reads one data
+  * file's footer on the driver and hands its schema to the reader, so
+  * `spark.read` skips its schema-inference job (a single-task job per
+  * read, a visible share of a short query). The footer is converted by the
+  * same `ParquetToSparkSchemaConverter` inference uses, built from the
+  * session conf, so `nanosAsLong`, the NTZ inference flag and the Spark
+  * row-metadata key give the schema `spark.read.parquet` would infer
+  * (TablesSpec pins equality). [[rowCount]] answers `count()` from the
+  * footers' row-group counts, again without a job.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -15,7 +33,50 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, path(sfDir, name))
+
+  /** `spark.read.parquet(path)` with the schema taken from the footer
+    * of the path's first data file instead of an inference job. A path
+    * of several files must share one schema (no schema merging).
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val first = dataFiles(conf, path).head
+    val footer = new Footer(first.getPath, readFooter(conf, first))
+    val schema = ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The row count of table `name`: the sum of the row-group counts in
+    * its data files' footers — `count()`'s answer, read on the driver.
+    */
+  def rowCount(spark: SparkSession, sfDir: String, name: String): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    dataFiles(conf, path(sfDir, name))
+      .map(f => readFooter(conf, f).getBlocks.asScala.map(_.getRowCount).sum).sum
+  }
+
+  private def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
+
+  /** The data files at `path` (the file itself, or a directory's files
+    * other than `_*` / `.*` markers and checksums), in name order.
+    */
+  private def dataFiles(conf: Configuration, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val files = if (!fs.exists(p)) Nil else fs.listStatus(p).toSeq.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.getName)
+    require(files.nonEmpty, s"no parquet data file at $path")
+    files
+  }
+
+  private def readFooter(conf: Configuration, f: FileStatus): ParquetMetadata = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+    try reader.getFooter finally reader.close()
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = apply(s, d, "nation")

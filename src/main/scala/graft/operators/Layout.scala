@@ -87,7 +87,7 @@ object Layout extends QueryGroup {
         bucketRank(unix_micros(col("ts")), r.getLong(0).toDouble, r.getLong(1).toDouble),
         bucketRank(col("user_id"), r.getLong(2).toDouble, r.getLong(3).toDouble),
         dir, 16)
-      s.read.parquet(dir)
+      Tables.parquet(s, dir)
         .filter(col("user_id").between(3, 9) &&
           col("ts") >= lit("2024-01-08").cast("timestamp") &&
           col("ts") < lit("2024-01-15").cast("timestamp"))

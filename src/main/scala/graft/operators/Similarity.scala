@@ -2191,7 +2191,7 @@ object Similarity extends QueryGroup {
     */
   private def ensureAnnIndexFixture(s: SparkSession, d: String): String =
     graft.sources.FrameFixtures.inCatalog(s, d, "_ANNIX_READY",
-        Tables.embeddings(s, d).count()) { cat =>
+        Tables.rowCount(s, d, "embeddings")) { cat =>
       s.sql(s"DROP TABLE IF EXISTS $cat.corpus.vectors")
       AnnIndex.drop(s, cat, "corpus.annix")
       s.sql(s"""CREATE TABLE $cat.corpus.vectors (

@@ -41,9 +41,12 @@ object FrameJson {
     * document is replaced; the dot prefix keeps a temp stranded by a
     * crash invisible to readers and within `remove_orphans`' sweep.
     */
-  def write(target: File)(node: JsonNode): Unit = {
+  def write(target: File)(node: JsonNode): Unit = writeText(target, render(node))
+
+  /** [[write]] for an already rendered document (a task's stats sidecar). */
+  def writeText(target: File, json: String): Unit = {
     val tmp = new File(target.getParentFile, "." + target.getName + ".tmp")
-    java.nio.file.Files.writeString(tmp.toPath, render(node))
+    java.nio.file.Files.writeString(tmp.toPath, json)
     FrameCommitIo.impl.swap(tmp, target)
   }
 

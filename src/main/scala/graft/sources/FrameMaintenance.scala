@@ -524,16 +524,16 @@ object FrameMaintenance {
   }
 
   /** Publish an executor-written temp as a visible segment — the one
-    * publish step of every commit path: optional sidecar first (readers
-    * tolerate a missing sidecar, but a visible segment must never
-    * precede its commit), rename, then restamp mtime to the publish
-    * instant (POSIX rename PRESERVES the temp's task-write mtime, and
-    * TIMESTAMP AS OF cuts on it).
+    * publish step of every commit path: optional sidecar first, swapped
+    * in through [[FrameJson.writeText]] so a crash never leaves a torn
+    * sidecar under a live name (readers tolerate a missing sidecar, but
+    * a visible segment must never precede its commit), rename, then
+    * restamp mtime to the publish instant (POSIX rename PRESERVES the
+    * temp's task-write mtime, and TIMESTAMP AS OF cuts on it).
     */
   private def publishSegment(dir: File, tmpName: String, finalName: String,
                              statsJson: Option[String], publishMs: Long): Unit = {
-    statsJson.foreach(j => java.nio.file.Files.writeString(
-      new File(dir, finalName + ".stats").toPath, j))
+    statsJson.foreach(FrameJson.writeText(new File(dir, finalName + ".stats"), _))
     val target = new File(dir, finalName)
     val ok = FrameCommitIo.impl.publish(new File(dir, tmpName), target)
     require(ok, s"publish rename failed: $tmpName -> $finalName")
@@ -1539,8 +1539,8 @@ object FrameMaintenance {
     * and scratch directories left by crashed writers/maintainers —
     * `.inprogress-…` (task writes), `.compacting-…` / `.deleting-…`
     * (maintenance rewrites), `.clustering-…` scratch dirs, and the
-    * `.<name>.tmp` swap temps of metadata documents ([[FrameJson.write]])
-    * and deletion vectors — older than the cutoff. Dot-prefixed names are
+    * `.<name>.tmp` swap temps of metadata documents, stats sidecars
+    * ([[FrameJson.write]]) and deletion vectors — older than the cutoff. Dot-prefixed names are
     * invisible to every reader by construction, so this is pure
     * garbage collection: no version, no manifest entry, nothing a
     * scan, stream, or snapshot can observe. The age cutoff is the

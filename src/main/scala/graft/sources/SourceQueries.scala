@@ -14,7 +14,9 @@ import graft.{QueryGroup, Tables}
   * frame-table queries (q325–q361). A fixture is built once per scale
   * factor under `java.io.tmpdir` and re-used across runs while its
   * marker file holds the row count of the table it was built from; a
-  * re-generated sf dir with a different count rebuilds it.
+  * re-generated sf dir with a different count rebuilds it. The count is
+  * the source table's footer row count ([[Tables.rowCount]]), so the
+  * marker check of a warm fixture starts no Spark job.
   */
 private[graft] object FrameFixtures {
 
@@ -141,7 +143,7 @@ object SourceQueries extends QueryGroup {
   def ensureFixture(s: SparkSession, d: String): String = {
     val dir = new File(System.getProperty("java.io.tmpdir"),
       "graft-avro-frames-v2-" + FrameFixtures.key(d))
-    FrameFixtures.once(new File(dir, "_SUCCESS"), Tables.events(s, d).count()) {
+    FrameFixtures.once(new File(dir, "_SUCCESS"), Tables.rowCount(s, d, "events")) {
       if (dir.exists()) dir.listFiles().foreach(_.delete()) else dir.mkdirs()
       byTime(8)(eventRows(s, d))
         .write.format("graft.sources.AvroFrameDataSource")
@@ -1246,7 +1248,7 @@ object SourceQueries extends QueryGroup {
     */
   private def eventsFixture(s: SparkSession, d: String, marker: String)(
       build: (String, Long) => Unit): String = {
-    val n = Tables.events(s, d).count()
+    val n = Tables.rowCount(s, d, "events")
     FrameFixtures.inCatalog(s, d, marker, n)(build(_, n))
   }
 

@@ -38,4 +38,11 @@ object GraftSqlBridge {
     val exp = spark.asInstanceOf[classic.SparkSession].experimental
     if (!exp.extraStrategies.contains(s)) exp.extraStrategies = exp.extraStrategies :+ s
   }
+
+  /** Block until every event posted to the `private[spark]` listener
+    * bus so far has been delivered, so a listener's counts cover every
+    * job already started.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

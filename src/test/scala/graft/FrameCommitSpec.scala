@@ -203,4 +203,41 @@ class FrameCommitSpec extends AnyFunSuite with SparkFixture {
       "the descriptor keeps its pre-ALTER schema")
     assert(ids(cat) == (0L until 10L))
   }
+
+  test("a sidecar swap that never happens publishes no segment and leaves a temp remove_orphans sweeps") {
+    val (cat, _) = freshCatalog("sidecartmp")
+    val dir = new java.io.File(build(cat, 1))
+    val before = dir.list().toSet
+    spark.range(100, 110).coalesce(1).selectExpr("id", "CAST(id AS DOUBLE) AS v")
+      .createOrReplaceTempView("sidecar_tmp_src")
+    // crash between writing a new segment's sidecar and swapping it in
+    FrameCommitIo.impl = new FrameCommitIo {
+      private val d = FrameCommitIo.Local
+      override def tryLock(l: java.io.File) = d.tryLock(l)
+      override def unlock(l: java.io.File) = d.unlock(l)
+      override def publish(t: java.io.File, f: java.io.File) = d.publish(t, f)
+      override def swap(t: java.io.File, f: java.io.File): Unit =
+        throw new java.io.IOException(s"crash before swapping ${f.getName}")
+      override def move(s: java.io.File, f: java.io.File, r: Boolean) = d.move(s, f, r)
+      override def link(s: java.io.File, f: java.io.File) = d.link(s, f)
+      override def renameDir(s: java.io.File, f: java.io.File) = d.renameDir(s, f)
+    }
+    try intercept[Exception] { spark.sql(s"INSERT INTO $cat.corpus.t SELECT * FROM sidecar_tmp_src") }
+    finally FrameCommitIo.impl = FrameCommitIo.Local
+
+    val added = dir.list().toSet -- before
+    assert(added.forall(_.startsWith(".")),
+      s"no segment or sidecar may become visible: ${added.mkString(", ")}")
+    val temps = dir.listFiles().filter(_.getName.endsWith(".stats.tmp"))
+    assert(temps.nonEmpty, "the interrupted sidecar swap must leave its temp behind")
+    assert(ids(cat) == (0L until 10L))
+    val old = System.currentTimeMillis() - 3600 * 1000L
+    dir.listFiles().filter(f => added(f.getName)).foreach(t => java.nio.file.Files.setLastModifiedTime(
+      t.toPath, java.nio.file.attribute.FileTime.fromMillis(old)))
+    spark.sql(s"CALL $cat.corpus.remove_orphans(table => 'corpus.t')").collect()
+    val left = dir.list().toSet -- before
+    assert(left.isEmpty, s"remove_orphans left temps behind: ${left.mkString(", ")}")
+    spark.sql(s"INSERT INTO $cat.corpus.t SELECT * FROM sidecar_tmp_src")
+    assert(ids(cat) == (0L until 10L) ++ (100L until 110L))
+  }
 }

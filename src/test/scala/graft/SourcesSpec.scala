@@ -585,6 +585,32 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
     assert(builds == 4 && stamp == "44")
   }
 
+  test("binding a table or building a warm frame-table query starts no Spark job") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsWhile(body: => Unit): Int = {
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
+      jobs.set(0)
+      body
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
+      jobs.get
+    }
+    val frameQueries = Seq("q326_stat_pruned_timeslice", "q327_agg_pushdown_stats",
+      "q328_filtered_agg_pushdown", "q329_limit_pushdown_sample", "q343_composite_pushdown",
+      "q349_topn_pushdown", "q355_like_prefix_pushdown")
+    frameQueries.foreach(SparkEntry.queries(_)(spark, sfDir)) // builds the fixtures once
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(jobsWhile(Tables.lineitem(spark, sfDir)) == 0, "Tables.lineitem")
+      frameQueries.foreach { n =>
+        assert(jobsWhile(SparkEntry.queries(n)(spark, sfDir)) == 0, n)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("DSv2 frame source: scan reports post-pruning statistics; small tables auto-broadcast") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._

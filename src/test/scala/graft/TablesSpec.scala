@@ -134,6 +134,49 @@ class TablesSpec extends AnyFunSuite with SparkFixture {
     assert(Seq(TimestampNTZType, TimestampType, LongType).contains(raw.toMap.apply("ts")))
   }
 
+  // --- footer binding: the schema and row count spark.read would find ---
+  for (table <- Tables.all) {
+    test(s"footer-bound schema equals the inferred one: $table") {
+      assert(Tables(spark, sfDir, table).schema ==
+        spark.read.parquet(s"$sfDir/$table.parquet").schema)
+    }
+  }
+
+  for (variant <- Seq("nanos_long", "ntz", "tz")) {
+    test(s"footer-bound schema equals the inferred one: Spark-written $variant events") {
+      val dir = writeEventsFixture(variant)
+      assert(Tables(spark, dir, "events").schema ==
+        spark.read.parquet(s"$dir/events.parquet").schema)
+    }
+  }
+
+  test("rowCount equals count() for a single file and a multi-part directory") {
+    assert(Tables.rowCount(spark, sfDir, "orders") == Tables.orders(spark, sfDir).count())
+    val dir = Files.createTempDirectory("graft-multipart").toFile
+    val path = new java.io.File(dir, "events.parquet")
+    Tables.events(spark, sfDir).repartition(3).write.parquet(path.getAbsolutePath)
+    val names = path.list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")) &&
+      names.count(_.endsWith(".parquet")) == 3, names.mkString(", "))
+    assert(Tables.rowCount(spark, dir.getAbsolutePath, "events") ==
+      spark.read.parquet(path.getAbsolutePath).count())
+    assert(Tables(spark, dir.getAbsolutePath, "events").count() ==
+      Tables.events(spark, sfDir).count())
+  }
+
+  test("binding a path with no data file fails with a clear message") {
+    val dir = Files.createTempDirectory("graft-nodata").toFile
+    val empty = new java.io.File(dir, "events.parquet")
+    empty.mkdirs()
+    Files.writeString(new java.io.File(empty, "_SUCCESS").toPath, "")
+    for (d <- Seq(dir.getAbsolutePath, s"${dir.getAbsolutePath}/missing")) {
+      val e = intercept[IllegalArgumentException](Tables.events(spark, d))
+      assert(e.getMessage.contains(s"no parquet data file at $d/events.parquet"), e.getMessage)
+      assert(intercept[IllegalArgumentException](Tables.rowCount(spark, d, "events"))
+        .getMessage.contains("no parquet data file"))
+    }
+  }
+
   test("events.props carries flat single-key JSON ({\"k\": int}) on current testdata") {
     val shapes = Tables.events(spark, sfDir)
       .select(get_json_object($"props", "$.k").cast("int").as("k"))
