@@ -22,7 +22,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Also pins the CURRENT footer schema of all ten driver tables
   * (TESTDATA.md records the same) so any future refresh fails loudly
-  * here instead of 45 queries deep.
+  * here instead of 45 queries deep, and that each footer-bound schema
+  * (`Tables.parquet`) equals the one `spark.read.parquet` infers.
   */
 class TablesSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
@@ -57,6 +58,7 @@ class TablesSpec extends AnyFunSuite with SparkFixture {
   for (variant <- Seq("nanos_long", "ntz", "tz")) {
     test(s"Tables.events normalizes ts from the $variant encoding to session-UTC TimestampType") {
       val dir = writeEventsFixture(variant)
+      assertInferredSchema(dir, "events")
       val out = Tables.events(spark, dir)
       assert(out.schema("ts").dataType === TimestampType,
         s"variant=$variant must surface ts as TimestampType")
@@ -113,6 +115,7 @@ class TablesSpec extends AnyFunSuite with SparkFixture {
 
   for ((table, expected) <- expectedSchemas.toSeq.sortBy(_._1)) {
     test(s"testdata footer schema: $table") {
+      assertInferredSchema(sfDir, table)
       val actual = Tables(spark, sfDir, table).schema
         .map(f => f.name -> f.dataType)
       assert(actual === expected,
@@ -126,6 +129,7 @@ class TablesSpec extends AnyFunSuite with SparkFixture {
     // refresh; currently TIMESTAMP_MICROS → NTZ. The normalization
     // contract is pinned by the per-encoding tests above; here we only
     // pin names + the non-ts types.
+    assertInferredSchema(sfDir, "events")
     val raw = Tables(spark, sfDir, "events").schema.map(f => f.name -> f.dataType)
     assert(raw.map(_._1) === Seq("event_id", "ts", "user_id", "event_type", "value", "props"))
     assert(raw.filter(_._1 != "ts") === Seq(
@@ -134,21 +138,9 @@ class TablesSpec extends AnyFunSuite with SparkFixture {
     assert(Seq(TimestampNTZType, TimestampType, LongType).contains(raw.toMap.apply("ts")))
   }
 
-  // --- footer binding: the schema and row count spark.read would find ---
-  for (table <- Tables.all) {
-    test(s"footer-bound schema equals the inferred one: $table") {
-      assert(Tables(spark, sfDir, table).schema ==
-        spark.read.parquet(s"$sfDir/$table.parquet").schema)
-    }
-  }
-
-  for (variant <- Seq("nanos_long", "ntz", "tz")) {
-    test(s"footer-bound schema equals the inferred one: Spark-written $variant events") {
-      val dir = writeEventsFixture(variant)
-      assert(Tables(spark, dir, "events").schema ==
-        spark.read.parquet(s"$dir/events.parquet").schema)
-    }
-  }
+  /** The footer-bound schema is the one `spark.read.parquet` infers. */
+  private def assertInferredSchema(dir: String, table: String): Unit =
+    assert(Tables(spark, dir, table).schema == spark.read.parquet(s"$dir/$table.parquet").schema)
 
   test("rowCount equals count() for a single file and a multi-part directory") {
     assert(Tables.rowCount(spark, sfDir, "orders") == Tables.orders(spark, sfDir).count())
