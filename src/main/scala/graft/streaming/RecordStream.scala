@@ -54,12 +54,18 @@ object RecordStream {
     * newest files first, and `maxFileAge` skips files older than the
     * given age relative to the newest ("latest"-style catch-up that
     * ignores the deep backlog).
+    *
+    * It binds the session's `file:` FileContexts to the fork-free
+    * [[graft.fs.LocalFs]] unless an operator chose a binding: the
+    * offset, commit and source logs and the state-store checkpoints of
+    * the query started on this source are opened through it.
     */
   def jsonDirSource(spark: SparkSession, dir: String,
                     schema: StructType = envelope,
                     maxFilesPerTrigger: Int = 0,
                     latestFirst: Boolean = false,
                     maxFileAge: Option[String] = None): DataFrame = {
+    graft.fs.LocalFs.install(spark)
     var r = spark.readStream.schema(schema)
     if (maxFilesPerTrigger > 0) r = r.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
     if (latestFirst) r = r.option("latestFirst", "true")
