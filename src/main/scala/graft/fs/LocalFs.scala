@@ -2,30 +2,28 @@ package graft.fs
 
 import java.io.{File, FileNotFoundException, IOException}
 import java.net.URI
-import java.nio.file.{FileSystemException, FileSystems, Files, InvalidPathException}
-import java.nio.file.attribute.{FileTime, GroupPrincipal, UserPrincipal}
+import java.nio.file.{FileSystems, Files, InvalidPathException}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSLinkResolver, FileStatus, FsConstants,
   FsServerDefaults, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.io.nativeio.NativeIO
 import org.apache.spark.sql.SparkSession
 
 /** A fork-free binding of the `file:` scheme for Hadoop's FileContext,
   * the API behind Structured Streaming's offset, commit and source logs
   * and the state store's checkpoint writes.
   *
-  * Without libhadoop, Hadoop's `RawLocalFileSystem` starts a shell
-  * command for chmod (`setPermission`, run by every create), for
-  * `readlink` (`getFileLinkStatus`, run by every rename) and for
-  * `ls -ld` (the owner, group and mode of a status). Each is a process
-  * start on the per-epoch path of a stream. [[NioRawLocalFileSystem]]
-  * answers the same calls from java.nio `unix:` attributes with the
-  * same results (LocalFsSpec compares them field by field), and
-  * [[NioLocalFs]] binds it the way Hadoop's `LocalFs` binds
-  * `RawLocalFileSystem`: same `.crc` sidecars, same rename semantics.
+  * Hadoop's `RawLocalFileSystem` starts a shell command for `readlink`
+  * (`getFileLinkStatus`, run by every rename; `FileUtil.readLink` forks
+  * with or without libhadoop) and, without libhadoop, for chmod
+  * (`setPermission`, run by every create). Each is a process start on
+  * the per-epoch path of a stream. [[NioRawLocalFileSystem]] answers
+  * the same calls from java.nio with the same results (LocalFsSpec
+  * compares them field by field), and [[NioLocalFs]] binds it the way
+  * Hadoop's `LocalFs` binds `RawLocalFileSystem`: same `.crc` sidecars,
+  * same rename semantics.
   */
 object LocalFs {
 
@@ -33,11 +31,9 @@ object LocalFs {
   val HadoopLocalFs = "org.apache.hadoop.fs.local.LocalFs"
 
   /** The nio paths are taken where the platform has a `unix` attribute
-    * view and Hadoop has no native library (with one, Hadoop's own
-    * calls start no process).
+    * view; elsewhere Hadoop's own methods are the only ones that run.
     */
-  private[graft] val nio: Boolean =
-    FileSystems.getDefault.supportedFileAttributeViews.contains("unix") && !NativeIO.isAvailable
+  private[graft] val nio: Boolean = FileSystems.getDefault.supportedFileAttributeViews.contains("unix")
 
   /** Bind `file:` FileContexts of this session to [[NioLocalFs]], while
     * the key still holds Hadoop's default as `core-default.xml` sets
@@ -53,39 +49,13 @@ object LocalFs {
   }
 }
 
-/** `RawLocalFileSystem` whose status, link status and permission
-  * change read and write java.nio `unix:` attributes instead of running
-  * `ls`, `readlink` and `chmod`. Results mirror Hadoop's non-native
-  * code: a status follows symlinks, its mode keeps the sticky bit and
-  * drops setuid/setgid, and a path that cannot be stat'ed does not
-  * exist.
+/** `RawLocalFileSystem` whose link status and permission change go
+  * through java.nio (`readSymbolicLink`, the `unix:mode` attribute)
+  * instead of running `readlink` and `chmod`. Results mirror Hadoop's
+  * non-native code. A status is Hadoop's own, which loads mode, owner
+  * and group only when they are read.
   */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
-  private var blockSize = 0L
-
-  override def initialize(uri: URI, conf: Configuration): Unit = {
-    super.initialize(uri, conf)
-    blockSize = getDefaultBlockSize(new Path(uri))
-  }
-
-  override def getFileStatus(p: Path): FileStatus =
-    if (!LocalFs.nio) super.getFileStatus(p)
-    else {
-      val f = pathToFile(p)
-      val a = try Files.readAttributes(f.toPath,
-          "unix:size,isDirectory,lastModifiedTime,lastAccessTime,mode,owner,group")
-        catch {
-          case _: FileSystemException | _: InvalidPathException =>
-            throw new FileNotFoundException(s"File $p does not exist")
-        }
-      def millis(k: String) = a.get(k).asInstanceOf[FileTime].toMillis
-      new FileStatus(a.get("size").asInstanceOf[Long], a.get("isDirectory").asInstanceOf[Boolean], 1,
-        blockSize, millis("lastModifiedTime"), millis("lastAccessTime"),
-        new FsPermission((a.get("mode").asInstanceOf[Int] & 0x3ff).toShort), // rwx bits + sticky (01777)
-        a.get("owner").asInstanceOf[UserPrincipal].getName,
-        a.get("group").asInstanceOf[GroupPrincipal].getName,
-        new Path(f.getPath).makeQualified(getUri, getWorkingDirectory))
-    }
 
   override def getFileLinkStatus(p: Path): FileStatus =
     if (!LocalFs.nio) super.getFileLinkStatus(p)

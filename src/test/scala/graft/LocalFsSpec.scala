@@ -241,7 +241,7 @@ class LocalFsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("a RocksDB stream into a frame table starts no Hadoop shell process once the binding is installed") {
-    assume(LocalFs.nio, "the platform has no unix attribute view, or Hadoop has its native library")
+    assume(LocalFs.nio, "the platform has no unix attribute view")
     // RocksDB's SST upload copies through the JVM's cached FileSystem,
     // which a FileContext binding does not reach: its chmods are not
     // counted (`fs.file.impl` is left to the operator)
