@@ -13,8 +13,20 @@ first and is left out of the summary; --warmup-seed 0 skips it.
 
 For every end-to-end metric of BENCHMARK.json it prints each run's
 value, both medians, the base's quartiles and IQR, the number of pairs
-the change won and the change/base ratio of the medians. It refuses to
-summarise if any run is `correct: false`. It only invokes perfbench;
+the change won and the change/base ratio of the medians, then two
+verdicts:
+
+    gain: holds | not met   the change won at least 9/10 of the pairs
+                            and its median is better than the base's by
+                            more than the base IQR
+    bound: within | exceeded | unresolved
+                            the change's median is worse than the
+                            base's by at most the metric's bound; or
+                            unresolved, when the base IQR is wider than
+                            the bound and not every change run beats
+                            every base run
+
+It refuses to summarise if any run is `correct: false`. It only invokes perfbench;
 it never edits it. Every run's result line is kept in
 <scratch>/<workload>-results.jsonl.
 """
@@ -72,6 +84,31 @@ def quartiles(xs):
     return q1, q3
 
 
+def verdicts(base, head, lower: bool, bound: float):
+    """The gain and bound verdict lines for one metric's runs."""
+    mb, mh = statistics.median(base), statistics.median(head)
+    q1, q3 = quartiles(base) if len(base) > 1 else (mb, mb)
+    iqr = q3 - q1
+    better = (lambda h, b: h < b) if lower else (lambda h, b: h > b)
+    wins = sum(better(h, b) for b, h in zip(base, head))
+    gap = (mb - mh) if lower else (mh - mb)  # > 0: the change is better
+    gain = wins * 10 >= 9 * len(base) and gap > iqr
+    gain_line = (f"gain: {'holds' if gain else 'not met'} (won {wins}/{len(base)}, "
+                 f"need 9/10; median gap {gap:.4g} {'>' if gap > iqr else '<='} base IQR {iqr:.4g})")
+    worse = -gap / mb if mb else float("nan")  # relative worsening of the median
+    spread = iqr / mb if mb else float("nan")
+    if all(better(h, b) for h in head for b in base):
+        bound_line = f"bound: within (every change run beats every base run; bound {bound:.0%})"
+    elif spread > bound:
+        bound_line = (f"bound: unresolved (base IQR is {spread:.1%} of its median, wider than the "
+                      f"{bound:.0%} bound; change median {'worse' if worse > 0 else 'better'} "
+                      f"by {abs(worse):.1%})")
+    else:
+        bound_line = (f"bound: {'within' if worse <= bound else 'exceeded'} (change median "
+                      f"{'worse' if worse > 0 else 'better'} by {abs(worse):.1%}; bound {bound:.0%})")
+    return gain_line, bound_line
+
+
 def summarise(metrics, runs) -> None:
     bad = [r for r in runs if not r["result"].get("correct")]
     if bad:
@@ -96,6 +133,8 @@ def summarise(metrics, runs) -> None:
         print(f"  median base {mb:.4g} (quartiles {q1:.4g}-{q3:.4g}, IQR {q3 - q1:.4g}), "
               f"change {mh:.4g}; ratio {ratio:.3f}; change won {wins}/{len(seeds)}; "
               f"|median gap| {abs(mh - mb):.4g} {'>' if abs(mh - mb) > q3 - q1 else '<='} IQR")
+        for line in verdicts(base, head, lower, m["bound"]):
+            print("  " + line)
 
 
 def main() -> int:

@@ -59,6 +59,8 @@ object CooldownDedup {
     */
   case class Frontier(lastKeptUs: Long, timerMs: Long)
 
+  private val frontierEncoder = Encoders.product[Frontier]
+
   /** Replay the recurrence over in-order events given a prior
     * frontier; returns (kept events, new frontier).
     */
@@ -87,7 +89,7 @@ object CooldownDedup {
     @transient private var frontier: ValueState[Frontier] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      frontier = getHandle.getValueState("frontier", Encoders.product[Frontier], TTLConfig.NONE)
+      frontier = getHandle.getValueState("frontier", frontierEncoder, TTLConfig.NONE)
 
     override def handleInputRows(key: (Long, String), rows: Iterator[KeyedEvent],
                                  tv: TimerValues): Iterator[Kept] = {
@@ -110,10 +112,11 @@ object CooldownDedup {
 
   /** Streaming sliding-cooldown dedup. Call on a dataset that already
     * has `withWatermark("ts", ...)`: the watermark fires the timers that
-    * bound state. Requires the RocksDB state store provider (state-v2
-    * runtime).
+    * bound state. Sets the RocksDB state store on its session
+    * ([[RocksDbState.configure]]).
     */
   def kept(events: Dataset[KeyedEvent], cooldownMs: Long): Dataset[Kept] = {
+    RocksDbState.configure(events.sparkSession)
     implicit val keptEnc: org.apache.spark.sql.Encoder[Kept] = Encoders.product[Kept]
     events
       .groupByKey(e => (e.user_id, e.event_type))(

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.time.Instant
 
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, StatefulProcessorHandle, TimerValues, ValueState}
 
 /** The cleanup timer a key ACTUALLY registered, kept in a `ValueState`
@@ -24,6 +25,11 @@ case class TimerBook(timerMs: Long)
   * stale no-op timer per (key, batch).
   */
 private[streaming] object EventTimers {
+
+  /** Built once per JVM: `Encoders.product` runs Scala reflection, and
+    * every task of every batch calls its processor's `init`.
+    */
+  val timerBookEncoder: Encoder[TimerBook] = Encoders.product[TimerBook]
 
   /** Epoch MICROseconds — the events tables carry microsecond
     * timestamps (`java.sql.Timestamp.getTime` would truncate to millis).

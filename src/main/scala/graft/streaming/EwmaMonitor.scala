@@ -5,7 +5,7 @@ import java.time.Instant
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming._
 
-import EventTimers.{expire, inEventOrder, rearm, stored, us}
+import EventTimers.{expire, inEventOrder, rearm, stored, timerBookEncoder, us}
 
 /** Streaming EWMA control chart — the online twin of the batch q292
   * (`operators/Evaluation.scala`): per metric key, maintain the
@@ -42,6 +42,8 @@ object EwmaMonitor {
   // private case class and silently falls back to interpreted serialization.
   case class Gauge(s: Double, v: Double, n: Long)
 
+  private val gaugeEncoder = Encoders.product[Gauge]
+
   /** The shared fold step: returns the stamped row and the next gauge.
     * First event of a key sets the level (s₀ = x₀, resid 0, no alarm);
     * after that: resid against the PRIOR level, alarm against the
@@ -69,8 +71,8 @@ object EwmaMonitor {
     @transient private var book: ValueState[TimerBook] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      gauge = getHandle.getValueState("gauge", Encoders.product[Gauge], TTLConfig.NONE)
-      book = getHandle.getValueState("book", Encoders.product[TimerBook], TTLConfig.NONE)
+      gauge = getHandle.getValueState("gauge", gaugeEncoder, TTLConfig.NONE)
+      book = getHandle.getValueState("book", timerBookEncoder, TTLConfig.NONE)
     }
 
     override def handleInputRows(key: String, rows: Iterator[MetricEvent],
@@ -98,12 +100,13 @@ object EwmaMonitor {
   }
 
   /** Stamp each metric event with its key's EWMA level, residual, and
-    * alarm flag. Call on a watermarked dataset; requires the RocksDB
-    * state store provider (state-v2 runtime).
+    * alarm flag. Call on a watermarked dataset; sets the RocksDB state
+    * store on its session ([[RocksDbState.configure]]).
     */
   def scored(events: Dataset[MetricEvent], alpha: Double = 0.3, beta: Double = 0.9,
              l2: Double = 9.0, warmup: Long = 5L,
              idleMs: Long = 24L * 3600L * 1000L): Dataset[Scored] = {
+    RocksDbState.configure(events.sparkSession)
     implicit val enc: org.apache.spark.sql.Encoder[Scored] = Encoders.product[Scored]
     events
       .groupByKey(_.event_type)(Encoders.STRING)

@@ -30,8 +30,8 @@ import org.apache.spark.sql.types.StructType
   *                      WindowTopK (exact sliding top-k per user);
   *                      `distinct` runs SlidingDistinct (per-user type
   *                      breadth). Each fixes its own value schema
-  *                      (documented below); both need the RocksDB
-  *                      state store, which start() configures.
+  *                      (documented below); each entry point sets
+  *                      the RocksDB state store (RocksDbState).
   *   --k                topk's k (default 3)
   *   --window-ms        topk/distinct sliding window in ms (default 1h)
   *   --idle-ms          ewma's state-idle TTL in ms — how long a silent
@@ -139,19 +139,16 @@ object Pipeline {
           org.apache.spark.sql.functions.col(schema.fieldNames.head).isNull).as("unparsed"))
     val staged = c.processor match {
       case "topk" =>
-        requireRocksDb(spark)
         WindowTopK.admitted(
           decoded.withWatermark("ts", c.watermark)
             .as[WindowTopK.ValuedEvent](org.apache.spark.sql.Encoders.product),
           c.k, c.windowMs).toDF()
       case "distinct" =>
-        requireRocksDb(spark)
         SlidingDistinct.stamped(
           decoded.withWatermark("ts", c.watermark)
             .as[CooldownDedup.KeyedEvent](org.apache.spark.sql.Encoders.product),
           c.windowMs).toDF()
       case "ewma" =>
-        requireRocksDb(spark)
         EwmaMonitor.scored(
           decoded.withWatermark("ts", c.watermark)
             .as[EwmaMonitor.MetricEvent](org.apache.spark.sql.Encoders.product),
@@ -160,15 +157,6 @@ object Pipeline {
     }
     RecordStream.startSink(staged, c.sink, c.name, c.checkpoint, c.batchPeriodMs,
       outputPath = c.outPath)
-  }
-
-  /** transformWithState needs the state-v2 RocksDB provider; set it for
-    * the session unless the caller already did.
-    */
-  private def requireRocksDb(spark: SparkSession): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    if (!spark.conf.getOption(key).contains(rocks)) spark.conf.set(key, rocks)
   }
 
   def main(args: Array[String]): Unit = {

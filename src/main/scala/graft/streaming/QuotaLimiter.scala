@@ -39,13 +39,15 @@ object QuotaLimiter {
     */
   case class WindowBudget(windowStartUs: Long, count: Long, timerMs: Long)
 
+  private val windowBudgetEncoder = Encoders.product[WindowBudget]
+
   class QuotaProcessor(maxPerWindow: Int, windowMs: Long)
       extends StatefulProcessor[(Long, String), CooldownDedup.KeyedEvent, Admitted] {
     private val windowUs = windowMs * 1000L
     @transient private var budget: ValueState[WindowBudget] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      budget = getHandle.getValueState("budget", Encoders.product[WindowBudget], TTLConfig.NONE)
+      budget = getHandle.getValueState("budget", windowBudgetEncoder, TTLConfig.NONE)
 
     private def windowStart(eventUs: Long): Long = eventUs - eventUs % windowUs
 
@@ -85,11 +87,12 @@ object QuotaLimiter {
   }
 
   /** Admit ≤ `maxPerWindow` events per key per tumbling `windowMs`
-    * event-time window. Call on a watermarked dataset; requires the
-    * RocksDB state store provider (state-v2 runtime).
+    * event-time window. Call on a watermarked dataset; sets the
+    * RocksDB state store on its session ([[RocksDbState.configure]]).
     */
   def admitted(events: Dataset[CooldownDedup.KeyedEvent], maxPerWindow: Int,
                windowMs: Long): Dataset[Admitted] = {
+    RocksDbState.configure(events.sparkSession)
     implicit val enc: org.apache.spark.sql.Encoder[Admitted] = Encoders.product[Admitted]
     events
       .groupByKey(e => (e.user_id, e.event_type))(

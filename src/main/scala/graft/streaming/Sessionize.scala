@@ -16,9 +16,10 @@ import EventTimers.{expire, stored, us}
   *  - session expiry is an explicit registered EVENT-TIME TIMER with a
   *    `handleExpiredTimer` callback, at a value derived from the state
   *    (last event + gap), so no timer bookkeeping is stored;
-  *  - the runtime requires the RocksDB state store provider, which is
-  *    also the provider you'd run at scale (changelog checkpointing,
-  *    bounded memory via off-heap blocks).
+  *  - the runtime requires the RocksDB state store provider, which
+  *    [[sessions]] sets, with changelog checkpointing
+  *    ([[RocksDbState]]); it is also the provider you'd run at scale
+  *    (bounded memory via off-heap blocks).
   *
   * All arithmetic is in epoch MICROseconds (`Instant`, not
   * `java.sql.Timestamp.getTime` which truncates to millis — the events
@@ -38,6 +39,8 @@ object Sessionize {
   case class SessionState(startUs: Long, lastUs: Long, n: Long, sum: Double)
   case class Session(user_id: Long, session_start: Instant,
                      session_end: Instant, n_events: Long, sum_value: Double)
+
+  private val sessionStateEncoder = Encoders.product[SessionState]
 
   private def instant(u: Long): Instant = Instant.ofEpochSecond(u / 1000000L, (u % 1000000L) * 1000L)
 
@@ -79,7 +82,7 @@ object Sessionize {
     @transient private var open: ValueState[SessionState] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      open = getHandle.getValueState("open", Encoders.product[SessionState], TTLConfig.NONE)
+      open = getHandle.getValueState("open", sessionStateEncoder, TTLConfig.NONE)
 
     private def expiryMs(s: SessionState): Long = (s.lastUs + gapUs) / 1000L
 
@@ -114,11 +117,12 @@ object Sessionize {
 
   /** Streaming sessionize. Call on a dataset that already has
     * `withWatermark("ts", ...)`; a user's session closes and emits when
-    * its timer fires (watermark passes last event + gap). Requires
-    * `spark.sql.streaming.stateStore.providerClass` =
-    * RocksDBStateStoreProvider (transformWithState's state-v2 backend).
+    * its timer fires (watermark passes last event + gap). Sets the
+    * RocksDB state store, transformWithState's state-v2 backend, on
+    * its session ([[RocksDbState.configure]]).
     */
   def sessions(events: Dataset[Event], gapMs: Long): Dataset[Session] = {
+    RocksDbState.configure(events.sparkSession)
     implicit val sessionEnc: org.apache.spark.sql.Encoder[Session] = Encoders.product[Session]
     events
       .groupByKey(_.user_id)(Encoders.scalaLong)

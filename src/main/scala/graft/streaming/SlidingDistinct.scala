@@ -5,7 +5,7 @@ import java.time.Instant
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming._
 
-import EventTimers.{expire, inEventOrder, rearm, stored, us}
+import EventTimers.{expire, inEventOrder, rearm, stored, timerBookEncoder, us}
 
 /** Per-key sliding-window DISTINCT tracking on `MapState` — the keyed-
   * collection sibling of WindowTopK's ListState (round 10, VERDICT
@@ -43,7 +43,7 @@ object SlidingDistinct {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       seen = getHandle.getMapState("seen", Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
-      book = getHandle.getValueState("book", Encoders.product[TimerBook], TTLConfig.NONE)
+      book = getHandle.getValueState("book", timerBookEncoder, TTLConfig.NONE)
     }
 
     override def handleInputRows(key: Long, rows: Iterator[CooldownDedup.KeyedEvent],
@@ -77,10 +77,11 @@ object SlidingDistinct {
   }
 
   /** Stamp each event with its user's live distinct-type breadth over
-    * the sliding `windowMs`. Call on a watermarked dataset; requires
-    * the RocksDB state store provider (state-v2 runtime).
+    * the sliding `windowMs`. Call on a watermarked dataset; sets the
+    * RocksDB state store on its session ([[RocksDbState.configure]]).
     */
   def stamped(events: Dataset[CooldownDedup.KeyedEvent], windowMs: Long): Dataset[Stamped] = {
+    RocksDbState.configure(events.sparkSession)
     implicit val enc: org.apache.spark.sql.Encoder[Stamped] = Encoders.product[Stamped]
     events
       .groupByKey(_.user_id)(Encoders.scalaLong)

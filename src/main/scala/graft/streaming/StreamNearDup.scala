@@ -55,6 +55,8 @@ object StreamNearDup {
   /** First presenter of a band — the state value. */
   case class BandOwner(ord: Long, doc_id: Long)
 
+  private val bandOwnerEncoder = Encoders.product[BandOwner]
+
   /** Exploded (band, doc) observations for a (possibly streaming)
     * document relation, via the batch signature plan.
     */
@@ -77,7 +79,7 @@ object StreamNearDup {
     @transient private var owner: ValueState[BandOwner] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      owner = getHandle.getValueState("owner", Encoders.product[BandOwner], TTLConfig.NONE)
+      owner = getHandle.getValueState("owner", bandOwnerEncoder, TTLConfig.NONE)
 
     override def handleInputRows(key: (Int, Long), rows: Iterator[BandObs],
                                  tv: TimerValues): Iterator[Verdict] = {
@@ -99,9 +101,11 @@ object StreamNearDup {
   /** The cross-batch verdict stream: one row per (doc, band) with the
     * band-level collision flag. Kept docs are those whose batch's
     * verdicts are all collided = false — reduce per batch ([[start]])
-    * or in a test harness.
+    * or in a test harness. Sets the RocksDB state store on the docs'
+    * session ([[RocksDbState.configure]]).
     */
   def verdicts(docs: Dataset[Doc]): Dataset[Verdict] = {
+    RocksDbState.configure(docs.sparkSession)
     implicit val enc: org.apache.spark.sql.Encoder[Verdict] = Encoders.product[Verdict]
     bandObs(docs)
       .groupByKey(o => (o.band_id, o.band_hash))(

@@ -5,7 +5,7 @@ import java.time.Instant
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming._
 
-import EventTimers.{expire, inEventOrder, rearm, stored, us}
+import EventTimers.{expire, inEventOrder, rearm, stored, timerBookEncoder, us}
 
 /** Per-key sliding-window streaming TOP-K — the collection-state
   * (`ListState`) sibling of the Sessionize / CooldownDedup /
@@ -62,6 +62,8 @@ object WindowTopK {
   case class Admitted(user_id: Long, event_id: Long, ts: Instant,
                       value: Double, rank_at_admission: Int, topk_size: Int)
 
+  private val topEntryEncoder = Encoders.product[TopEntry]
+
   class TopKProcessor(k: Int, windowMs: Long, exact: Boolean)
       extends StatefulProcessor[Long, ValuedEvent, Admitted] {
     private val windowUs = windowMs * 1000L
@@ -69,8 +71,8 @@ object WindowTopK {
     @transient private var book: ValueState[TimerBook] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      top = getHandle.getListState("top", Encoders.product[TopEntry], TTLConfig.NONE)
-      book = getHandle.getValueState("book", Encoders.product[TimerBook], TTLConfig.NONE)
+      top = getHandle.getListState("top", topEntryEncoder, TTLConfig.NONE)
+      book = getHandle.getValueState("book", timerBookEncoder, TTLConfig.NONE)
     }
 
     override def handleInputRows(key: Long, rows: Iterator[ValuedEvent],
@@ -122,11 +124,12 @@ object WindowTopK {
   /** Admit events ranking in the live sliding top-`k` per user —
     * exact (full in-window retention) by default, `exact = false` for
     * the O(k)-state admission-buffer approximation (semantics above).
-    * Call on a watermarked dataset; requires the RocksDB state store
-    * provider (state-v2 runtime).
+    * Call on a watermarked dataset; sets the RocksDB state store on
+    * its session ([[RocksDbState.configure]]).
     */
   def admitted(events: Dataset[ValuedEvent], k: Int, windowMs: Long,
                exact: Boolean = true): Dataset[Admitted] = {
+    RocksDbState.configure(events.sparkSession)
     implicit val enc: org.apache.spark.sql.Encoder[Admitted] = Encoders.product[Admitted]
     events
       .groupByKey(_.user_id)(Encoders.scalaLong)

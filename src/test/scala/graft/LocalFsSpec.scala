@@ -244,7 +244,10 @@ class LocalFsSpec extends AnyFunSuite with SparkFixture {
     assume(LocalFs.nio, "the platform has no unix attribute view")
     // RocksDB's SST upload copies through the JVM's cached FileSystem,
     // which a FileContext binding does not reach: its chmods are not
-    // counted (`fs.file.impl` is left to the operator)
+    // counted (`fs.file.impl` is left to the operator). Under changelog
+    // checkpointing the upload still runs once per partition, for the
+    // snapshot the first commit forces after transformWithState creates
+    // its column families
     def counted(forks: Seq[(String, Seq[String])]) =
       forks.filterNot(_._2.exists(_.endsWith("RocksDBFileManager.saveImmutableFilesToDfs")))
     val hadoop = counted(shellStarts(topKStream(Some(LocalFs.HadoopLocalFs))))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.streaming.RocksDbState
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites — one JVM-wide session
@@ -13,16 +14,17 @@ trait SparkFixture { self: AnyFunSuite =>
 
   /** Run `body` with the RocksDB state store provider — the state-v2
     * backend `transformWithState` requires — then restore the session's
-    * previous provider.
+    * previous provider and changelog-checkpointing setting, which the
+    * processors' entry points set (`RocksDbState.configure`).
     */
   def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val keys = Seq(RocksDbState.ProviderKey, RocksDbState.ChangelogKey)
+    val prev = keys.map(spark.conf.getOption)
+    spark.conf.set(RocksDbState.ProviderKey, RocksDbState.Provider)
     try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
+    finally keys.zip(prev).foreach {
+      case (key, Some(p)) => spark.conf.set(key, p)
+      case (key, None) => spark.conf.unset(key)
     }
   }
 }

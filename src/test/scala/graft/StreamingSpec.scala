@@ -117,6 +117,125 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("every stateful entry point sets RocksDB with changelog checkpointing, and keeps an explicit value") {
+    import org.apache.spark.sql.SparkSession
+    import graft.streaming._
+    import RocksDbState.{ChangelogKey, Provider, ProviderKey}
+    val entryPoints: Seq[(String, SparkSession => Unit)] = Seq(
+      "WindowTopK.admitted" -> { s => implicit val ctx = s.sqlContext; import s.implicits._
+        WindowTopK.admitted(MemoryStream[WindowTopK.ValuedEvent].toDS().withWatermark("ts", "0 seconds"), 3, 1000L) },
+      "SlidingDistinct.stamped" -> { s => implicit val ctx = s.sqlContext; import s.implicits._
+        SlidingDistinct.stamped(MemoryStream[CooldownDedup.KeyedEvent].toDS().withWatermark("ts", "0 seconds"), 1000L) },
+      "EwmaMonitor.scored" -> { s => implicit val ctx = s.sqlContext; import s.implicits._
+        EwmaMonitor.scored(MemoryStream[EwmaMonitor.MetricEvent].toDS().withWatermark("ts", "0 seconds")) },
+      "Sessionize.sessions" -> { s => implicit val ctx = s.sqlContext; import s.implicits._
+        Sessionize.sessions(MemoryStream[Sessionize.Event].toDS().withWatermark("ts", "0 seconds"), 1000L) },
+      "CooldownDedup.kept" -> { s => implicit val ctx = s.sqlContext; import s.implicits._
+        CooldownDedup.kept(MemoryStream[CooldownDedup.KeyedEvent].toDS().withWatermark("ts", "0 seconds"), 1000L) },
+      "QuotaLimiter.admitted" -> { s => implicit val ctx = s.sqlContext; import s.implicits._
+        QuotaLimiter.admitted(MemoryStream[CooldownDedup.KeyedEvent].toDS().withWatermark("ts", "0 seconds"), 3, 1000L) },
+      "StreamNearDup.verdicts" -> { s => implicit val ctx = s.sqlContext; import s.implicits._
+        StreamNearDup.verdicts(MemoryStream[StreamNearDup.Doc].toDS()) })
+    for ((name, call) <- entryPoints; explicit <- Seq(None, Some("false"))) {
+      val s = spark.newSession()
+      assert(!s.conf.getOption(ProviderKey).contains(Provider) && s.conf.getOption(ChangelogKey).isEmpty)
+      explicit.foreach(s.conf.set(ChangelogKey, _))
+      call(s)
+      assert(s.conf.get(ProviderKey) == Provider, name)
+      assert(s.conf.getOption(ChangelogKey) == Some(explicit.getOrElse("true")), name)
+    }
+  }
+
+  // WindowTopK (k 2, 1 h window) over JSON event files, one file per
+  // batch when `perBatch`; every user's events advance by file, so none
+  // is late under the 0 s watermark and no cleanup timer fires
+  private def topKAdmitted(src: String, perBatch: Boolean): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    import graft.streaming.WindowTopK
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("user_id", "long").add("event_id", "long").add("ts", "timestamp").add("value", "double")
+    val files = spark.readStream.schema(schema)
+    val events = (if (perBatch) files.option("maxFilesPerTrigger", 1) else files).json(src)
+      .withWatermark("ts", "0 seconds").as[WindowTopK.ValuedEvent]
+    WindowTopK.admitted(events, 2, 3600L * 1000L).toDF()
+  }
+
+  private def writeTopKFiles(src: String, files: Range): Unit = files.foreach { f =>
+    val at = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(f * 60L)
+    val file = Files.write(java.nio.file.Paths.get(src, s"part-$f.json"), (1 to 5).map { u =>
+      s"""{"user_id":$u,"event_id":${f * 10 + u},"ts":"$at","value":${(f * 7 + u * 3) % 11}.5}"""
+    }.mkString("\n").getBytes)
+    // the file source takes files in modification-time order
+    Files.setLastModifiedTime(file, java.nio.file.attribute.FileTime.from(at))
+  }
+
+  /** State versions of partition 0 that hold a file with `suffix`. */
+  private def stateVersions(ck: String, suffix: String): Set[Long] =
+    new java.io.File(ck, "state/0/0").list().toSet.filter(_.endsWith(suffix))
+      .map(_.stripSuffix(suffix)).filter(_.forall(_.isDigit)).map(_.toLong)
+
+  private def committedVersions(ck: String): Set[Long] =
+    new java.io.File(ck, "commits").list().toSet.filter(_.forall(_.isDigit)).map(_.toLong + 1)
+
+  test("a 3-batch WindowTopK stream writes a state changelog per batch and a snapshot only at its first") {
+    import org.apache.spark.sql.streaming.Trigger
+    withRocksDb {
+      val src = tmp("cl-src"); val ck = tmp("cl-ck")
+      writeTopKFiles(src, 0 until 3)
+      val q = topKAdmitted(src, perBatch = true).writeStream.format("noop")
+        .option("checkpointLocation", ck).trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+      val versions = committedVersions(ck)
+      val parts = new java.io.File(ck, "state/0").listFiles().filter(_.getName.forall(_.isDigit))
+      assert(parts.length == spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      for (p <- parts) {
+        val names = p.list().toSet
+        assert(versions.forall(v => names(s"$v.changelog")), s"${p.getName}: $names, versions $versions")
+        // the one snapshot is the first commit's, which Spark forces
+        // when transformWithState creates its column families
+        assert(names.filter(_.endsWith(".zip")).subsetOf(Set("1.zip")), s"${p.getName}: $names")
+      }
+    }
+  }
+
+  test("a WindowTopK checkpoint resumes exactly once from snapshot to changelog state checkpointing, and back") {
+    import graft.streaming.RocksDbState.ChangelogKey
+    def rows(out: String) = spark.read.parquet(out).collect().map(_.toString).sorted.toSeq
+    def timers(ck: String) =
+      spark.read.format("statestore").option("readRegisteredTimers", "true").load(ck).collect()
+        .map(r => (r.getStruct(0).getLong(0), r.getAs[Long]("expiration_timestamp_ms"))).sorted.toSeq
+    // None: the entry point's default (changelog checkpointing on)
+    def run(changelog: Option[String], src: String, ck: String, out: String, perBatch: Boolean): Unit = {
+      changelog.fold(spark.conf.unset(ChangelogKey))(spark.conf.set(ChangelogKey, _))
+      val q = RecordStream.startSink(topKAdmitted(src, perBatch), "parquet", "topk_modes", ck, 100L,
+        outputPath = Some(out))
+      q.processAllAvailable(); q.stop()
+    }
+    withRocksDb {
+      val refSrc = tmp("modes-ref-src"); val refCk = tmp("modes-ref-ck"); val refOut = tmp("modes-ref-out")
+      writeTopKFiles(refSrc, 0 until 4)
+      run(None, refSrc, refCk, refOut, perBatch = false)
+      assert(rows(refOut).nonEmpty && timers(refCk).length == 5)
+      for ((first, second) <- Seq(Some("false") -> None, None -> Some("false"))) {
+        val src = tmp("modes-src"); val ck = tmp("modes-ck"); val out = tmp("modes-out")
+        writeTopKFiles(src, 0 until 2)
+        run(first, src, ck, out, perBatch = true)
+        val before = committedVersions(ck)
+        writeTopKFiles(src, 2 until 4)
+        run(second, src, ck, out, perBatch = true)
+        val after = committedVersions(ck) -- before
+        // each run checkpointed its state in its own mode
+        for ((mode, versions) <- Seq(first -> before, second -> after)) {
+          val written = stateVersions(ck, if (mode.isEmpty) ".changelog" else ".zip")
+          assert(versions.nonEmpty && versions.subsetOf(written), s"$mode: $versions not in $written")
+        }
+        assert(rows(out) == rows(refOut), s"exactly-once violated ($first then $second)")
+        assert(timers(ck) == timers(refCk), s"registered timers differ ($first then $second)")
+      }
+    }
+  }
+
   test("Pipeline CLI surface: parse -> start -> restart resumes exactly-once (O7 parity)") {
     import graft.streaming.Pipeline
     val src = tmp("cli-src"); val ck = tmp("cli-ck"); val out = tmp("cli-out")
