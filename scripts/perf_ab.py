@@ -84,31 +84,6 @@ def quartiles(xs):
     return q1, q3
 
 
-def verdicts(base, head, lower: bool, bound: float):
-    """The gain and bound verdict lines for one metric's runs."""
-    mb, mh = statistics.median(base), statistics.median(head)
-    q1, q3 = quartiles(base) if len(base) > 1 else (mb, mb)
-    iqr = q3 - q1
-    better = (lambda h, b: h < b) if lower else (lambda h, b: h > b)
-    wins = sum(better(h, b) for b, h in zip(base, head))
-    gap = (mb - mh) if lower else (mh - mb)  # > 0: the change is better
-    gain = wins * 10 >= 9 * len(base) and gap > iqr
-    gain_line = (f"gain: {'holds' if gain else 'not met'} (won {wins}/{len(base)}, "
-                 f"need 9/10; median gap {gap:.4g} {'>' if gap > iqr else '<='} base IQR {iqr:.4g})")
-    worse = -gap / mb if mb else float("nan")  # relative worsening of the median
-    spread = iqr / mb if mb else float("nan")
-    if all(better(h, b) for h in head for b in base):
-        bound_line = f"bound: within (every change run beats every base run; bound {bound:.0%})"
-    elif spread > bound:
-        bound_line = (f"bound: unresolved (base IQR is {spread:.1%} of its median, wider than the "
-                      f"{bound:.0%} bound; change median {'worse' if worse > 0 else 'better'} "
-                      f"by {abs(worse):.1%})")
-    else:
-        bound_line = (f"bound: {'within' if worse <= bound else 'exceeded'} (change median "
-                      f"{'worse' if worse > 0 else 'better'} by {abs(worse):.1%}; bound {bound:.0%})")
-    return gain_line, bound_line
-
-
 def summarise(metrics, runs) -> None:
     bad = [r for r in runs if not r["result"].get("correct")]
     if bad:
@@ -133,8 +108,19 @@ def summarise(metrics, runs) -> None:
         print(f"  median base {mb:.4g} (quartiles {q1:.4g}-{q3:.4g}, IQR {q3 - q1:.4g}), "
               f"change {mh:.4g}; ratio {ratio:.3f}; change won {wins}/{len(seeds)}; "
               f"|median gap| {abs(mh - mb):.4g} {'>' if abs(mh - mb) > q3 - q1 else '<='} IQR")
-        for line in verdicts(base, head, lower, m["bound"]):
-            print("  " + line)
+        iqr, bound = q3 - q1, m["bound"]
+        gap = (mb - mh) if lower else (mh - mb)  # > 0: the change is better
+        gain = wins * 10 >= 9 * len(seeds) and gap > iqr
+        print(f"  gain: {'holds' if gain else 'not met'} (needs 9/10 pairs won and a median gap "
+              f"in the change's favour larger than the base IQR)")
+        worse = -gap / mb if mb else float("nan")  # the change median's relative worsening
+        dominates = all((h < b) if lower else (h > b) for h in head for b in base)
+        if not dominates and mb and iqr / mb > bound:
+            verdict = f"unresolved (the base IQR is {iqr / mb:.1%} of its median)"
+        else:
+            verdict = "within" if dominates or worse <= bound else "exceeded"
+        print(f"  bound: {verdict} (change median {'worse' if worse > 0 else 'better'} by "
+              f"{abs(worse):.1%}; bound {bound:.0%})")
 
 
 def main() -> int:
