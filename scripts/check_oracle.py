@@ -2,12 +2,18 @@
 """Local stand-in for the driver's DuckDB-oracle correctness gate.
 
 Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir>
+       python3 scripts/check_oracle.py --same-sql <baseOutDir> <verifyOutDir>
 
 Reads each <verifyOutDir>/<name>/ parquet (written by graft.Verify) and
 compares against the DuckDB result of oracle_sql.json[name] executed over
 views named after the tables in <sfDir>. Comparison: sort columns by
 name, sort rows, exact value equality (doubles compared bit-exact after
 the queries' own rounding). Dev tooling only — not part of the library.
+
+--same-sql compares the oracle_sql.json of two Verify dumps instead: it
+prints each name whose oracle SQL differs or exists on one side only,
+and exits non-zero if there is one (a change that only moves oracle
+text around must leave every rendered string byte-identical).
 """
 import sys, json, glob, os
 import duckdb
@@ -17,13 +23,29 @@ import duckdb
 # unless proven against a green CORRECTNESS row.
 DTYPE_ALLOWLIST = set()
 
+def load_oracles(out_dir):
+    with open(os.path.join(out_dir, "oracle_sql.json")) as f:
+        return json.load(f)
+
+def same_sql(base_dir, out_dir):
+    base, new = load_oracles(base_dir), load_oracles(out_dir)
+    diff = 0
+    for name in sorted(base.keys() | new.keys()):
+        if name not in new:
+            print(f"MISSING {name}: only in {base_dir}"); diff += 1
+        elif name not in base:
+            print(f"MISSING {name}: only in {out_dir}"); diff += 1
+        elif base[name] != new[name]:
+            print(f"DIFFERS {name}"); diff += 1
+    print(f"\n{len(base.keys() | new.keys())} names, {diff} differ")
+    return 1 if diff else 0
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in ["region","nation","customer","supplier","part","orders",
               "lineitem","events","documents","embeddings"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    with open(os.path.join(out_dir, "oracle_sql.json")) as f:
-        oracles = json.load(f)
+    oracles = load_oracles(out_dir)
     names = sorted(d for d in os.listdir(out_dir)
                    if os.path.isdir(os.path.join(out_dir, d)))
     n_pass = n_fail = n_noracle = 0
@@ -72,4 +94,6 @@ def main(sf_dir, out_dir):
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
+    if sys.argv[1] == "--same-sql":
+        sys.exit(same_sql(sys.argv[2], sys.argv[3]))
     sys.exit(main(sys.argv[1], sys.argv[2]))

@@ -103,7 +103,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(classOf[GraftFunctions.type].getName, name), b))
     }
     e.injectOptimizerRule(_ => graft.plans.RewriteSetIntersectionSize)
-    e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.IntervalJoinStrategy)
+    e.injectPlannerStrategy(_ => graft.plans.KeyedJoinStrategy)
   }
 }

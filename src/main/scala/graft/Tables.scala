@@ -252,14 +252,12 @@ object Tables {
 trait QueryGroup {
   /** (name, spark query, oracle DuckDB SQL) — oracle None ⇒ the driver's
     * weaker rows-only check (reserved for non-SQL-expressible ops).
-    * Groups either populate this or override the maps directly.
     */
-  protected def entries: Vector[(String, (SparkSession, String) => DataFrame, Option[String])] =
-    Vector.empty
+  protected def entries: Vector[(String, (SparkSession, String) => DataFrame, Option[String])]
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  final def queries: Map[String, (SparkSession, String) => DataFrame] =
     entries.map(e => e._1 -> e._2).toMap
 
-  def oracleSql: Map[String, String] =
+  final def oracleSql: Map[String, String] =
     entries.collect { case (n, _, Some(sql)) => n -> sql.trim }.toMap
 }

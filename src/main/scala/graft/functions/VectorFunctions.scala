@@ -91,13 +91,6 @@ object VectorFunctions {
         org.apache.spark.sql.GraftSqlBridge.expression(a),
         org.apache.spark.sql.GraftSqlBridge.expression(b)))
 
-  /** HOF reference implementation of the dot product (kept for spec
-    * cross-checks of the codegen'd expression).
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-              lit(0.0), (acc, v) => acc + v)
-
   def l2Norm(a: Column): Column = sqrt(normSq(a))
 
   /** Cosine similarity; callers should pre-compute norms when ranking

@@ -19,28 +19,20 @@ import graft.Tables
   *  - [[fixedK]]: exactly k rounds. The DuckDB oracles unroll k CTE
   *    steps, so judged queries whose OUTPUT depends on the round count
   *    (q210's per-round curve, q108's two-iteration ranks) run this.
-  *  - [[convergeBy]]: terminate when a cheap scalar fixpoint witness
+  *  - [[convergeWitnessed]]: terminate when a cheap fixpoint witness
   *    stops moving, or at the cap. This is the form a 100 TB run uses
   *    (a fixed k that converges at sf0.1 won't at 100×); judged
   *    queries whose output is round-count-independent once converged
   *    (q64 labels, q167 distances) run it directly with cap = the
   *    oracle's k — an early fixpoint exit cannot change the result
-  *    because a fixpoint step is the identity.
+  *    because a fixpoint step is the identity. The witness rides the
+  *    step's own checkpoint job as observed metrics
+  *    ([[graft.Tables.checkpointedObserved]]), one cluster barrier per
+  *    round. q64/q167/q210/q242 all run it.
   *  - [[converge]]: the general pairwise-delta form for steps with no
   *    monotone scalar witness (q108's rank vector) — exact but costs a
   *    prev↔next comparison per round; used by IterativeSpec to prove
   *    each fixed-k judged output IS the fixpoint on the fixture.
-  *  - [[convergeWitnessed]]: the fused production form (round 13) —
-  *    the witness rides the step's own checkpoint job as observed
-  *    metrics ([[graft.Tables.checkpointedObserved]]), one cluster
-  *    barrier per round. q64/q167/q210/q242 all run it.
-  *
-  * Witness contract for [[convergeBy]]: measure(next) == measure(cur)
-  * must imply step is at a fixpoint. Monotone measures over
-  * monotonically shrinking/decreasing state qualify: BFS visited-set
-  * count (grows until frontier empties), k-core survivor count
-  * (shrinks until stable), label-sum under min-propagation (strictly
-  * decreases until stable).
   */
 object Iterative {
 
@@ -53,29 +45,18 @@ object Iterative {
   def fixedK[S](init: S, k: Int)(step: S => S): S =
     (1 to k).foldLeft(init)((s, _) => step(s))
 
-  /** Iterate until the scalar witness stops changing, or `cap` rounds. */
-  def convergeBy[S](init: S, cap: Int)(step: S => S)(measure: S => Long): Converged[S] = {
-    var cur = init
-    var m = measure(init)
-    var r = 0
-    while (r < cap) {
-      val next = step(cur)
-      r += 1
-      val mn = measure(next)
-      cur = next
-      if (mn == m) return Converged(cur, r, converged = true)
-      m = mn
-    }
-    Converged(cur, r, converged = false)
-  }
-
   /** One-job-per-round convergence (round 13, VERDICT r12 item 4):
     * the step returns (state, witness) with the witness computed as an
     * observed side output of the state's own materialization
     * ([[graft.Tables.checkpointedObserved]]) — no separate witness job,
-    * so each round costs exactly one cluster-wide barrier. Witness
-    * contract identical to [[convergeBy]]: equal witnesses across a
-    * step must imply the step is at a fixpoint.
+    * so each round costs exactly one cluster-wide barrier.
+    *
+    * Witness contract: equal witnesses across a step must imply the
+    * step is at a fixpoint. Monotone measures over monotonically
+    * shrinking/decreasing state qualify: BFS visited-set count (grows
+    * until the frontier empties), k-core survivor count (shrinks until
+    * stable), the label witness under min-propagation
+    * ([[labelWitnessed]]).
     */
   def convergeWitnessed[S, M](init: (S, M), cap: Int)(step: S => (S, M)): Converged[S] = {
     var cur = init._1

@@ -1,15 +1,13 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, BroadcastMode, ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, BroadcastMode, Distribution, Partitioning, UnspecifiedDistribution}
+import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** Whole-operator as-of join: for every left row, the single right row
   * with the greatest `rightTs <= leftTs` within the same key — the
@@ -24,12 +22,13 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * materializes ALL its candidate right rows before aggregation; the
   * relational alternative (q60's union+window) funnels BOTH relations
   * through one union, a per-key sort, and a window carry. [[AsOfJoinExec]]
-  * instead declares `ClusteredDistribution` on the key and a
-  * `(key, ts)` required ordering for each child — EnsureRequirements
-  * co-partitions and sorts exactly as it would for a sort-merge join —
-  * and then streams both sorted partitions through a single-pass merge
-  * with O(1) state (the last in-horizon right row per key). No pair
-  * blow-up, no union materialization, no window buffer; output
+  * instead is a [[KeyedMergeExec]]: it declares `ClusteredDistribution`
+  * on the key and a `(key, ts)` required ordering for each child —
+  * EnsureRequirements co-partitions and sorts exactly as it would for
+  * a sort-merge join — and then streams both sorted partitions through
+  * a single-pass merge with O(1) state (the last in-horizon right row
+  * per key). No pair blow-up, no union materialization, no window
+  * buffer; output
   * preserves the left side's partitioning AND `(key, ts)` ordering, so
   * a downstream per-key window or as-of join over the result adds
   * neither exchange nor sort. At 100 TB both shuffles are the same
@@ -56,21 +55,6 @@ case class AsOfJoinNode(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoinNode]] as [[AsOfJoinExec]] (co-partitioned merge) or
-  * [[BroadcastAsOfJoinExec]] (dimension-broadcast probe). Injected by
-  * [[graft.GraftExtensions]] (`injectPlannerStrategy`) and, for
-  * sessions not built with the extension, lazily via
-  * `experimental.extraStrategies` in [[AsOf.leftAsOf]].
-  */
-object AsOfJoinStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case AsOfJoinNode(l, r, lk, rk, lt, rt, bcast, ls, rs) =>
-      if (bcast) BroadcastAsOfJoinExec(lk, rk, lt, rt, planLater(l), planLater(r)) :: Nil
-      else AsOfJoinExec(lk, rk, lt, rt, planLater(l), planLater(r), ls, rs) :: Nil
-    case _ => Nil
-  }
-}
-
 /** Co-partitioned merge as-of join. `leftSalt`/`rightSalt` (set by
   * [[AsOf.leftAsOfSalted]]) widen the clustering AND the merge
   * grouping to (key, salt): AQE's OptimizeSkewedJoin only rewrites
@@ -85,41 +69,20 @@ case class AsOfJoinExec(
     leftTs: Attribute, rightTs: Attribute,
     left: SparkPlan, right: SparkPlan,
     leftSalt: Option[Attribute] = None,
-    rightSalt: Option[Attribute] = None) extends SparkPlan with BinaryExecNode {
+    rightSalt: Option[Attribute] = None) extends KeyedMergeExec {
 
   override def output: Seq[Attribute] =
     left.output ++ right.output.map(_.withNullability(true))
-
-  // co-partition on the key (plus salt when present), sort (key, salt,
-  // ts) — the same requirements a sort-merge join would declare, so
-  // EnsureRequirements/AQE place the exchanges and reuse compatible ones
-  override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(Seq(leftKey) ++ leftSalt) ::
-      ClusteredDistribution(Seq(rightKey) ++ rightSalt) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq((Seq(leftKey) ++ leftSalt :+ leftTs).map(SortOrder(_, Ascending)),
-        (Seq(rightKey) ++ rightSalt :+ rightTs).map(SortOrder(_, Ascending)))
-  override def outputPartitioning: Partitioning = left.outputPartitioning
-  override def outputOrdering: Seq[SortOrder] =
-    (Seq(leftKey) ++ leftSalt :+ leftTs).map(SortOrder(_, Ascending))
+  override protected def rightMergeTs: Attribute = rightTs
 
   override lazy val metrics = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
     "numMatched" -> SQLMetrics.createMetric(sparkContext, "number of matched rows"))
 
   protected override def doExecute(): RDD[InternalRow] = {
-    val lkOrd = left.output.indexWhere(_.exprId == leftKey.exprId)
-    val ltOrd = left.output.indexWhere(_.exprId == leftTs.exprId)
-    val rkOrd = right.output.indexWhere(_.exprId == rightKey.exprId)
-    val rtOrd = right.output.indexWhere(_.exprId == rightTs.exprId)
-    require(lkOrd >= 0 && ltOrd >= 0 && rkOrd >= 0 && rtOrd >= 0,
-      s"as-of key/ts attributes not found in child output: $leftKey/$leftTs/$rightKey/$rightTs")
-    // salt ordinals, -1 when unsalted: the merge groups on (key, salt)
-    // with salt fixed at 0 so the unsalted path costs nothing extra
-    val lsOrd = leftSalt.map(a => left.output.indexWhere(_.exprId == a.exprId)).getOrElse(-1)
-    val rsOrd = rightSalt.map(a => right.output.indexWhere(_.exprId == a.exprId)).getOrElse(-1)
-    require(leftSalt.isEmpty || lsOrd >= 0, s"left salt $leftSalt not found in child output")
-    require(rightSalt.isEmpty || rsOrd >= 0, s"right salt $rightSalt not found in child output")
+    val lkOrd = ordinal(left, leftKey); val ltOrd = ordinal(left, leftTs)
+    val rkOrd = ordinal(right, rightKey); val rtOrd = ordinal(right, rightTs)
+    val lsOrd = saltOrdinal(left, leftSalt); val rsOrd = saltOrdinal(right, rightSalt)
     val outAttrs = output
     val rightArity = right.output.length
     val rowsMetric = longMetric("numOutputRows")
@@ -307,10 +270,10 @@ object AsOf {
       broadcastRight = false)
 
   /** [[leftAsOf]] forcing the broadcast-right physical plan: the right
-    * side is collected, sorted into an [[AsOfIndex]] on the driver and
-    * broadcast; the left side needs no exchange and no sort. Use when
-    * the right side fits in executor memory (the `broadcast()` hint
-    * contract); identical semantics to [[leftAsOf]].
+    * side is collected, sorted into an `AsOfIndexMode` index on the
+    * driver and broadcast; the left side needs no exchange and no sort.
+    * Use when the right side fits in executor memory (the `broadcast()`
+    * hint contract); identical semantics to [[leftAsOf]].
     */
   def leftAsOfBroadcast(left: DataFrame, right: DataFrame,
                         leftKeyCol: String, rightKeyCol: String,
@@ -318,72 +281,37 @@ object AsOf {
     build(left, right, leftKeyCol, rightKeyCol, leftTsCol, rightTsCol,
       broadcastRight = true)
 
-  /** [[leftAsOf]] with SALTED key distribution — the skew hardening for
-    * the merge plan. AQE's OptimizeSkewedJoin only rewrites SMJ/SHJ, so
-    * a hot key (one user producing half the ticks) would serialize a
-    * single task under [[leftAsOf]]. Here the left side gets a
-    * deterministic salt in [0, saltBuckets) (hash of the whole row) and
-    * the right side is replicated once per salt, so the exec clusters
-    * on (key, salt): the hot key's probes spread over `saltBuckets`
-    * tasks, each still seeing the key's FULL right history — results
-    * are exactly [[leftAsOf]]'s (AsOfSpec proves equality plus the
-    * bounded per-task input on a 100:1 skewed fixture). Cost: the
-    * right side shuffles ×saltBuckets — size it like a salted
-    * SMJ (small right side or small salt count); if the right side
-    * fits in memory outright, prefer [[leftAsOfBroadcast]], which has
+  /** [[leftAsOf]] with SALTED key distribution ([[KeyedMerge.salted]])
+    * — the skew hardening for the merge plan. AQE's OptimizeSkewedJoin
+    * only rewrites SMJ/SHJ, so a hot key (one user producing half the
+    * ticks) would serialize a single task under [[leftAsOf]]. Salted,
+    * the exec clusters on (key, salt): the hot key's probes spread over
+    * `saltBuckets` tasks, each still seeing the key's FULL right
+    * history — results are exactly [[leftAsOf]]'s (AsOfSpec proves
+    * equality plus the bounded per-task input on a 100:1 skewed
+    * fixture). Cost: the right side shuffles ×saltBuckets — size it
+    * like a salted SMJ (small right side or small salt count); if the
+    * right side fits in memory outright, prefer [[leftAsOfBroadcast]], which has
     * no skew exposure at all (no shuffle, per-row O(log) probes).
     */
   def leftAsOfSalted(left: DataFrame, right: DataFrame,
                      leftKeyCol: String, rightKeyCol: String,
                      leftTsCol: String, rightTsCol: String,
-                     saltBuckets: Int): DataFrame = {
-    require(saltBuckets >= 2 && saltBuckets <= 4096,
-      s"saltBuckets must be in [2, 4096], got $saltBuckets")
-    import org.apache.spark.sql.functions.{array, explode, lit, pmod, xxhash64}
-    val saltL = "__graft_asof_salt_l"
-    val saltR = "__graft_asof_salt_r"
-    val l2 = left.withColumn(saltL,
-      pmod(xxhash64(left.columns.map(col).toIndexedSeq: _*), lit(saltBuckets.toLong)))
-    val r2 = right.withColumn(saltR,
-      explode(array((0 until saltBuckets).map(s => lit(s.toLong)): _*)))
-    build(l2, r2, leftKeyCol, rightKeyCol, leftTsCol, rightTsCol,
-      broadcastRight = false, salt = Some((saltL, saltR)))
-      .drop(saltL, saltR)
-  }
+                     saltBuckets: Int): DataFrame =
+    KeyedMerge.salted(left, right, saltBuckets, "__graft_asof_salt") { (l, r, salt) =>
+      build(l, r, leftKeyCol, rightKeyCol, leftTsCol, rightTsCol,
+        broadcastRight = false, salt = salt)
+    }
 
   private def build(left: DataFrame, right: DataFrame,
                     leftKeyCol: String, rightKeyCol: String,
                     leftTsCol: String, rightTsCol: String,
                     broadcastRight: Boolean,
-                    salt: Option[(String, String)] = None): DataFrame = {
-    val spark = left.sparkSession
-    GraftSqlBridge.ensureStrategy(spark, AsOfJoinStrategy)
-    val dup = left.columns.toSet.intersect(right.columns.toSet)
-    require(dup.isEmpty, s"as-of join sides share column names $dup — rename before joining")
-    // fresh-alias projections give every referenced attribute a unique
-    // exprId, so self-joins (both sides carved from one scan) survive
-    // the analyzer's relation dedup without ambiguity
-    val l2 = left.select(left.columns.toIndexedSeq.map(c => col(c).as(c)): _*)
-    val r2 = right.select(right.columns.toIndexedSeq.map(c => col(c).as(c)): _*)
-    val lPlan = GraftSqlBridge.analyzed(l2)
-    val rPlan = GraftSqlBridge.analyzed(r2)
-    def attr(plan: LogicalPlan, name: String, side: String): Attribute =
-      plan.output.find(_.name == name).getOrElse(
-        throw new IllegalArgumentException(s"$side side has no column `$name`"))
-    val lk = attr(lPlan, leftKeyCol, "left"); val rk = attr(rPlan, rightKeyCol, "right")
-    val lt = attr(lPlan, leftTsCol, "left"); val rt = attr(rPlan, rightTsCol, "right")
-    def checkType(a: Attribute, what: String): Unit = a.dataType match {
-      case LongType | TimestampType => ()
-      case other => throw new IllegalArgumentException(
-        s"as-of $what `${a.name}` must be bigint or timestamp, got $other")
+                    salt: Option[(String, String)] = None): DataFrame =
+    KeyedMerge.join("as-of join", left, right,
+        Seq(leftKeyCol -> "key", leftTsCol -> "ts"),
+        Seq(rightKeyCol -> "key", rightTsCol -> "ts"), salt) { s =>
+      AsOfJoinNode(s.left, s.right, s.l(0), s.r(0), s.l(1), s.r(1),
+        broadcastRight, s.leftSalt, s.rightSalt)
     }
-    checkType(lk, "key"); checkType(rk, "key"); checkType(lt, "ts"); checkType(rt, "ts")
-    val (ls, rs) = salt match {
-      case Some((slCol, srCol)) =>
-        (Some(attr(lPlan, slCol, "left")), Some(attr(rPlan, srCol, "right")))
-      case None => (None, None)
-    }
-    GraftSqlBridge.ofRows(spark,
-      AsOfJoinNode(lPlan, rPlan, lk, rk, lt, rt, broadcastRight, ls, rs))
-  }
 }

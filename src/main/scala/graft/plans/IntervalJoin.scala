@@ -1,15 +1,12 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, JoinedRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** Whole-operator point-in-interval join: every (left point, right
   * interval) pair with the same key where `start <= ts <= end` — the
@@ -22,8 +19,8 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * sort-merge/hash join on the key with the range as a POST-JOIN
   * residual — every (point, interval) pair of a key materializes
   * before the residual drops it, O(|points_k| · |intervals_k|) per
-  * key. [[IntervalJoinExec]] declares the same ClusteredDistribution
-  * a sort-merge join would (EnsureRequirements/AQE place, reuse, and
+  * key. [[IntervalJoinExec]] is a [[KeyedMergeExec]]: it declares the
+  * same ClusteredDistribution a sort-merge join would (EnsureRequirements/AQE place, reuse, and
   * skew-split the exchanges) plus (key, ts) / (key, start) ordering,
   * and then streams both sorted partitions through an interval sweep:
   * intervals enter an active min-heap (keyed by end) when their start
@@ -50,15 +47,6 @@ case class IntervalJoinNode(
     copy(left = newLeft, right = newRight)
 }
 
-object IntervalJoinStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case IntervalJoinNode(l, r, lk, rk, lt, rs, re, outer, lsalt, rsalt) =>
-      IntervalJoinExec(lk, rk, lt, rs, re, planLater(l), planLater(r), outer,
-        lsalt, rsalt) :: Nil
-    case _ => Nil
-  }
-}
-
 /** Interval sweep exec. Skew notes (the two ways one partition can run
   * hot, and the mitigations):
   *  - NULL-key points under LEFT OUTER survive unmatched (SQL LEFT
@@ -79,38 +67,23 @@ case class IntervalJoinExec(
     left: SparkPlan, right: SparkPlan,
     leftOuter: Boolean = false,
     leftSalt: Option[Attribute] = None,
-    rightSalt: Option[Attribute] = None) extends SparkPlan with BinaryExecNode {
+    rightSalt: Option[Attribute] = None) extends KeyedMergeExec {
 
   override def output: Seq[Attribute] =
     if (leftOuter) left.output ++ right.output.map(_.withNullability(true))
     else left.output ++ right.output
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(Seq(leftKey) ++ leftSalt) ::
-      ClusteredDistribution(Seq(rightKey) ++ rightSalt) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq((Seq(leftKey) ++ leftSalt :+ leftTs).map(SortOrder(_, Ascending)),
-        (Seq(rightKey) ++ rightSalt :+ rightStart).map(SortOrder(_, Ascending)))
-  override def outputPartitioning: Partitioning = left.outputPartitioning
-  override def outputOrdering: Seq[SortOrder] =
-    (Seq(leftKey) ++ leftSalt :+ leftTs).map(SortOrder(_, Ascending))
+  override protected def rightMergeTs: Attribute = rightStart
 
   override lazy val metrics = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
     "numAdmitted" -> SQLMetrics.createMetric(sparkContext, "intervals admitted to the sweep"))
 
   protected override def doExecute(): RDD[InternalRow] = {
-    def ord(side: SparkPlan, a: Attribute): Int = {
-      val i = side.output.indexWhere(_.exprId == a.exprId)
-      require(i >= 0, s"interval-join attribute $a not found in child output")
-      i
-    }
-    val lkOrd = ord(left, leftKey); val ltOrd = ord(left, leftTs)
-    val rkOrd = ord(right, rightKey)
-    val rsOrd = ord(right, rightStart); val reOrd = ord(right, rightEnd)
-    // salt ordinals, -1 when unsalted (groups then key on (key, 0))
-    val lSaltOrd = leftSalt.map(a => ord(left, a)).getOrElse(-1)
-    val rSaltOrd = rightSalt.map(a => ord(right, a)).getOrElse(-1)
+    val lkOrd = ordinal(left, leftKey); val ltOrd = ordinal(left, leftTs)
+    val rkOrd = ordinal(right, rightKey)
+    val rsOrd = ordinal(right, rightStart); val reOrd = ordinal(right, rightEnd)
+    val lSaltOrd = saltOrdinal(left, leftSalt)
+    val rSaltOrd = saltOrdinal(right, rightSalt)
     val outAttrs = output
     val rowsMetric = longMetric("numOutputRows")
     val admittedMetric = longMetric("numAdmitted")
@@ -213,11 +186,10 @@ object IntervalJoin {
     build(left, right, leftKeyCol, rightKeyCol, leftTsCol,
       rightStartCol, rightEndCol, leftOuter = true)
 
-  /** [[innerInterval]] with SALTED key distribution — skew hardening
-    * for the sweep (see [[IntervalJoinExec]]'s scaladoc): the point
-    * side gets a deterministic whole-row-hash salt in
-    * [0, saltBuckets), the interval side is replicated once per salt,
-    * and the exec clusters on (key, salt) — the hot key's points
+  /** [[innerInterval]] with SALTED key distribution
+    * ([[KeyedMerge.salted]]) — skew hardening for the sweep (see
+    * [[IntervalJoinExec]]'s scaladoc): the exec clusters on
+    * (key, salt) — the hot key's points
     * spread over saltBuckets tasks, each sweeping the key's FULL
     * interval set. Exactly [[innerInterval]]'s rows; the interval side
     * shuffles ×saltBuckets, so size the salt like a salted SMJ.
@@ -225,53 +197,21 @@ object IntervalJoin {
   def innerIntervalSalted(left: DataFrame, right: DataFrame,
                           leftKeyCol: String, rightKeyCol: String,
                           leftTsCol: String, rightStartCol: String,
-                          rightEndCol: String, saltBuckets: Int): DataFrame = {
-    require(saltBuckets >= 2 && saltBuckets <= 4096,
-      s"saltBuckets must be in [2, 4096], got $saltBuckets")
-    import org.apache.spark.sql.functions.{array, explode, lit, pmod, xxhash64}
-    val saltL = "__graft_iv_salt_l"
-    val saltR = "__graft_iv_salt_r"
-    val l2 = left.withColumn(saltL,
-      pmod(xxhash64(left.columns.map(col).toIndexedSeq: _*), lit(saltBuckets.toLong)))
-    val r2 = right.withColumn(saltR,
-      explode(array((0 until saltBuckets).map(s => lit(s.toLong)): _*)))
-    build(l2, r2, leftKeyCol, rightKeyCol, leftTsCol, rightStartCol, rightEndCol,
-      leftOuter = false, salt = Some((saltL, saltR)))
-      .drop(saltL, saltR)
-  }
+                          rightEndCol: String, saltBuckets: Int): DataFrame =
+    KeyedMerge.salted(left, right, saltBuckets, "__graft_iv_salt") { (l, r, salt) =>
+      build(l, r, leftKeyCol, rightKeyCol, leftTsCol, rightStartCol, rightEndCol,
+        leftOuter = false, salt = salt)
+    }
 
   private def build(left: DataFrame, right: DataFrame,
                     leftKeyCol: String, rightKeyCol: String,
                     leftTsCol: String, rightStartCol: String,
                     rightEndCol: String, leftOuter: Boolean,
-                    salt: Option[(String, String)] = None): DataFrame = {
-    val spark = left.sparkSession
-    GraftSqlBridge.ensureStrategy(spark, IntervalJoinStrategy)
-    val dup = left.columns.toSet.intersect(right.columns.toSet)
-    require(dup.isEmpty, s"interval-join sides share column names $dup — rename before joining")
-    val l2 = left.select(left.columns.toIndexedSeq.map(c => col(c).as(c)): _*)
-    val r2 = right.select(right.columns.toIndexedSeq.map(c => col(c).as(c)): _*)
-    val lPlan = GraftSqlBridge.analyzed(l2)
-    val rPlan = GraftSqlBridge.analyzed(r2)
-    def attr(plan: LogicalPlan, name: String, side: String): Attribute =
-      plan.output.find(_.name == name).getOrElse(
-        throw new IllegalArgumentException(s"$side side has no column `$name`"))
-    val lk = attr(lPlan, leftKeyCol, "left"); val rk = attr(rPlan, rightKeyCol, "right")
-    val lt = attr(lPlan, leftTsCol, "left")
-    val rs = attr(rPlan, rightStartCol, "right"); val re = attr(rPlan, rightEndCol, "right")
-    Seq(lk -> "key", rk -> "key", lt -> "ts", rs -> "bound", re -> "bound").foreach {
-      case (a, what) => a.dataType match {
-        case LongType | TimestampType => ()
-        case other => throw new IllegalArgumentException(
-          s"interval-join $what `${a.name}` must be bigint or timestamp, got $other")
-      }
+                    salt: Option[(String, String)] = None): DataFrame =
+    KeyedMerge.join("interval join", left, right,
+        Seq(leftKeyCol -> "key", leftTsCol -> "ts"),
+        Seq(rightKeyCol -> "key", rightStartCol -> "bound", rightEndCol -> "bound"), salt) { s =>
+      IntervalJoinNode(s.left, s.right, s.l(0), s.r(0), s.l(1), s.r(1), s.r(2),
+        leftOuter, s.leftSalt, s.rightSalt)
     }
-    val (lsalt, rsalt) = salt match {
-      case Some((slCol, srCol)) =>
-        (Some(attr(lPlan, slCol, "left")), Some(attr(rPlan, srCol, "right")))
-      case None => (None, None)
-    }
-    GraftSqlBridge.ofRows(spark,
-      IntervalJoinNode(lPlan, rPlan, lk, rk, lt, rs, re, leftOuter, lsalt, rsalt))
-  }
 }

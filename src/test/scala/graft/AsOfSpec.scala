@@ -144,10 +144,16 @@ class AsOfSpec extends AnyFunSuite with SparkFixture {
     intercept[IllegalArgumentException] {
       AsOf.leftAsOf(l, r, "k", "k", "ts", "ts")
     }
+    intercept[IllegalArgumentException] {
+      AsOf.leftAsOfBroadcast(l, r, "k", "k", "ts", "ts")
+    }
     val rOk = mk(Seq((1L, 1L, "y")), "rk", "rts", "rtag")
     intercept[IllegalArgumentException] {
       AsOf.leftAsOf(l.withColumn("kd", col("k").cast("double")), rOk,
         "kd", "rk", "ts", "rts")
+    }
+    for (buckets <- Seq(1, 4097)) intercept[IllegalArgumentException] {
+      AsOf.leftAsOfSalted(l, rOk, "k", "rk", "ts", "rts", buckets)
     }
   }
 

@@ -97,9 +97,17 @@ class IntervalJoinSpec extends AnyFunSuite with SparkFixture {
         p.withColumn("p_ts", col("p_ts").cast("string")), i,
         "p_key", "i_key", "p_ts", "i_start", "i_end")
     }
+    for (buckets <- Seq(1, 4097)) intercept[IllegalArgumentException] {
+      graft.plans.IntervalJoin.innerIntervalSalted(p, i,
+        "p_key", "i_key", "p_ts", "i_start", "i_end", buckets)
+    }
     intercept[IllegalArgumentException] { // shared column names
       graft.plans.IntervalJoin.innerInterval(p, i.withColumnRenamed("iid", "pid"),
         "p_key", "i_key", "p_ts", "i_start", "pid")
+    }
+    intercept[IllegalArgumentException] {
+      graft.plans.IntervalJoin.leftInterval(p, i.withColumnRenamed("iid", "pid"),
+        "p_key", "i_key", "p_ts", "i_start", "i_end")
     }
   }
 

@@ -11,7 +11,7 @@ import graft.operators.{Dedup, Graph, Iterative}
   * DuckDB oracles unroll exactly k steps — but the production claim is
   * "loop until converged, capped". These tests prove, ON THE SAME STEP
   * BODIES the judged queries execute (no fork — q64/q167 already run
-  * `Iterative.convergeBy` with cap = the oracle's k; q108/q210 expose
+  * `Iterative.convergeWitnessed` with cap = the oracle's k; q108/q210 expose
   * their step via pagerankParts/kcoreParts), that the convergence loop
   * with a generous cap terminates at a genuine fixpoint and reproduces
   * the fixed-k judged result on the fixture.
@@ -25,9 +25,11 @@ class IterativeSpec extends AnyFunSuite with SparkFixture {
     // pure-Int state keeps this a unit test of the loop mechanics
     val halve: Int => Int = x => x / 2
     assert(Iterative.fixedK(64, 3)(halve) == 8)
-    val c = Iterative.convergeBy(64, 100)(halve)(_.toLong)
+    // the witness is the state itself
+    val halveW: Int => (Int, Long) = x => (halve(x), halve(x).toLong)
+    val c = Iterative.convergeWitnessed((64, 64L), 100)(halveW)
     assert(c.state == 0 && c.converged && c.rounds == 8) // 64→...→1→0 (7 rounds), +1 witness round
-    val capped = Iterative.convergeBy(64, 2)(halve)(_.toLong)
+    val capped = Iterative.convergeWitnessed((64, 64L), 2)(halveW)
     assert(capped.state == 16 && !capped.converged && capped.rounds == 2)
     val d = Iterative.converge(64, 100)(halve)((a, b) => math.abs(a - b).toLong)
     assert(d.state == 0 && d.converged)
