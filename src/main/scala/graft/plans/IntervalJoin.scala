@@ -20,13 +20,14 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
   * residual — every (point, interval) pair of a key materializes
   * before the residual drops it, O(|points_k| · |intervals_k|) per
   * key. [[IntervalJoinExec]] is a [[KeyedMergeExec]]: it declares the
-  * same ClusteredDistribution a sort-merge join would (EnsureRequirements/AQE place, reuse, and
-  * skew-split the exchanges) plus (key, ts) / (key, start) ordering,
-  * and then streams both sorted partitions through an interval sweep:
-  * intervals enter an active min-heap (keyed by end) when their start
-  * passes, leave when their end expires, and each point emits exactly
-  * its matches — O(evictions + output) per point, active-set state
-  * only (the max concurrent overlap, not the relation).
+  * same ClusteredDistribution a sort-merge join would
+  * (EnsureRequirements/AQE place, reuse, and skew-split the exchanges)
+  * plus (key, ts) / (key, start) ordering, and then streams both
+  * sorted partitions through an interval sweep: intervals enter an
+  * active min-heap (keyed by end) when their start passes, leave when
+  * their end expires, and each point emits exactly its matches —
+  * O(evictions + output) per point, active-set state only (the max
+  * concurrent overlap, not the relation).
   *
   * Inner-join semantics; a NULL key/ts/bound never matches (exactly
   * what SQL's `BETWEEN` residual gives). Output preserves the left
@@ -189,9 +190,8 @@ object IntervalJoin {
   /** [[innerInterval]] with SALTED key distribution
     * ([[KeyedMerge.salted]]) — skew hardening for the sweep (see
     * [[IntervalJoinExec]]'s scaladoc): the exec clusters on
-    * (key, salt) — the hot key's points
-    * spread over saltBuckets tasks, each sweeping the key's FULL
-    * interval set. Exactly [[innerInterval]]'s rows; the interval side
+    * (key, salt) — the hot key's points spread over saltBuckets tasks,
+    * each sweeping the key's FULL interval set. Exactly [[innerInterval]]'s rows; the interval side
     * shuffles ×saltBuckets, so size the salt like a salted SMJ.
     */
   def innerIntervalSalted(left: DataFrame, right: DataFrame,
