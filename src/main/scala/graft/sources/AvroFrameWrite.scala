@@ -38,25 +38,54 @@ import org.apache.spark.sql.types._
   */
 object AvroFrameWrite {
 
-  /** Per-field stats gathered at write: nulls + min/max for orderable
-    * primitives (binary fields carry nulls only).
+  /** Per-field stats: nulls + min/max for orderable primitives. It
+    * owns the mapping from Avro values to the stats domain — text
+    * (`Utf8` or `String`) observes as `String`, and binary counts as a
+    * null (binary fields carry nulls only).
     */
   final class FieldStats {
     var nulls: Long = 0L
     var min: Any = null // Long | Double | String | Boolean
     var max: Any = null
-    def observe(v: Any): Unit =
-      if (v == null) nulls += 1
+
+    /** Stats seeded from (nulls, min, max) summaries — one per merged
+      * sidecar, or one to re-key a single field.
+      */
+    def this(summaries: Iterable[(Long, Any, Any)]) = {
+      this()
+      summaries.foreach { case (n, mn, mx) => nulls += n; Seq(mn, mx).filter(_ != null).foreach(observe) }
+    }
+
+    /** Observe one Avro value; returns it in the stats domain (null for
+      * binary, integers widened to long, floats to double) — the value
+      * [[putBloom]] takes.
+      */
+    def observe(v: Any): Any = {
+      val c = v match {
+        case s: CharSequence        => s.toString
+        case _: java.nio.ByteBuffer => null
+        case i: java.lang.Integer   => i.longValue: java.lang.Long
+        case f: java.lang.Float     => f.doubleValue: java.lang.Double
+        case o                      => o
+      }
+      if (c == null) nulls += 1
       else {
-        val c = v match {
-          case i: java.lang.Integer => i.longValue: java.lang.Long
-          case f: java.lang.Float   => f.doubleValue: java.lang.Double
-          case o                    => o
-        }
         if (min == null || AvroFrameStats.compare(c, min) < 0) min = c
         if (max == null || AvroFrameStats.compare(c, max) > 0) max = c
       }
+      c
+    }
   }
+
+  /** Add a stats-domain value to a field's Bloom filter, if it has one:
+    * longs and strings are indexed; other types and nulls are not.
+    */
+  def putBloom(b: org.apache.spark.util.sketch.BloomFilter, v: Any): Unit =
+    if (b != null) v match {
+      case x: java.lang.Long => b.putLong(x.longValue)
+      case s: String         => b.putString(s)
+      case _                 => ()
+    }
 
   /** JSON for a segment's stats sidecar. `blooms` (round 14) carries
     * optional per-field serialized Bloom filters (base64) — the
@@ -407,24 +436,15 @@ class AvroFrameDataWriter(path: String, avroSchemaJson: String, schemaId: Int,
     val finalName = f"segment-$queryId-p$partitionId%05d$token.bin"
     val stats: Array[AvroFrameWrite.FieldStats] =
       fieldNames.map(_ => new AvroFrameWrite.FieldStats)
-    // bloom builders: position -> filter, fixed-size per the table spec
-    val blooms: Array[org.apache.spark.util.sketch.BloomFilter] = {
-      val out = new Array[org.apache.spark.util.sketch.BloomFilter](fieldNames.length)
-      bloom.foreach(spec => spec.cols.foreach { c =>
-        out(fieldNames.indexOf(c)) = org.apache.spark.util.sketch.BloomFilter
-          .create(spec.expectedItems, AvroFrameWrite.BloomFpp)
-      })
-      out
-    }
+    // bloom builders: position -> filter (null = none), fixed-size per the table spec
+    val blooms: Array[org.apache.spark.util.sketch.BloomFilter] = fieldNames.map(c =>
+      bloom.filter(_.cols.contains(c)).map(spec => org.apache.spark.util.sketch.BloomFilter
+        .create(spec.expectedItems, AvroFrameWrite.BloomFpp)).orNull)
     var frames = 0L
     val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
       new java.io.FileOutputStream(new File(path, tmpName)), 1 << 16))
-    def statsJson: String = {
-      val bloomB64 = fieldNames.indices.collect {
-        case i if blooms(i) != null => fieldNames(i) -> AvroFrameWrite.bloomToB64(blooms(i))
-      }.toMap
-      AvroFrameWrite.statsJson(frames, fieldNames.zip(stats).toSeq, bloomB64)
-    }
+    def statsJson: String = AvroFrameWrite.statsJson(frames, fieldNames.zip(stats).toSeq,
+      fieldNames.zip(blooms).collect { case (c, b) if b != null => c -> AvroFrameWrite.bloomToB64(b) }.toMap)
   }
 
   private val sinks = scala.collection.mutable.LinkedHashMap.empty[Long, Sink]
@@ -455,13 +475,7 @@ class AvroFrameDataWriter(path: String, avroSchemaJson: String, schemaId: Int,
         case BinaryType  => java.nio.ByteBuffer.wrap(row.getBinary(i))
         case other => throw new IllegalStateException(s"unwritable type $other")
       }
-      sink.stats(i).observe(if (v.isInstanceOf[java.nio.ByteBuffer]) null else v)
-      if (sink.blooms(i) != null && v != null) v match {
-        case x: java.lang.Long    => sink.blooms(i).putLong(x.longValue)
-        case x: java.lang.Integer => sink.blooms(i).putLong(x.longValue) // stats-domain widening
-        case s: String            => sink.blooms(i).putString(s)
-        case _                    => ()
-      }
+      AvroFrameWrite.putBloom(sink.blooms(i), sink.stats(i).observe(v))
       rec.put(i, v)
       i += 1
     }

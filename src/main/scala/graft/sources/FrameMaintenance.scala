@@ -39,6 +39,23 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOr
   * one; COMPACTION mints none — it must be invisible at every
   * addressable version.
   *
+  * Every maintenance commit — compaction, clustered rewrite, both
+  * DELETE paths, the whole-segment deletes (truncate, partition
+  * retention, group retirement), the delta row-level commit and
+  * rollback — goes through ONE locked publish step ([[publishStep]]).
+  * Classification and executor I/O run lock-free; then, under the
+  * table mutex with the manifest-length CAS ([[publishLocked]]), the
+  * op's own file moves run at one publish instant, built from three
+  * shared moves: [[retireWithVectors]] (a segment and its live vector
+  * to `_history/`, vector first), [[land]] (rename + mtime restamp) and
+  * [[publishSegment]] (sidecar, then [[land]]). The step appends the
+  * op's entries to the manifest and folds the stats ledger ONCE, after
+  * the manifest — one operation, one ledger delta line. A lost race
+  * drops the op's temps and re-classifies. Outside the step:
+  * [[publishAppends]] (plain appends fold the ledger, never touch the
+  * manifest), [[expire]] (edits manifest entries in place) and
+  * [[analyze]] (rebuilds the ledger).
+  *
   * Scale notes: compaction/delete I/O runs on executors; the driver
   * touches only names, sidecars, and the manifest (O(segments)
   * metadata, never data). Like most path-based catalogs without a
@@ -76,30 +93,58 @@ object FrameMaintenance {
     */
   private[graft] var beforePublishHook: File => Unit = _ => ()
 
-  /** Optimistic-concurrency commit (round 15, VERDICT r14 item 3):
-    * maintenance operations classify and do executor I/O lock-free,
-    * then publish under a filesystem mutex (`createNewFile` is atomic)
-    * with CAS-style validation — the manifest length IS the version of
-    * the commit sequence, and a publish whose classification read
-    * length L only commits if the manifest is still at L. Two
-    * compactors, or an appender's group rewrite racing a compactor,
-    * therefore cannot interleave retires: the loser throws
+  /** Optimistic-concurrency validation (round 15, VERDICT r14 item 3):
+    * under the filesystem mutex (`createNewFile` is atomic), the
+    * manifest length IS the version of the commit sequence, and a
+    * publish whose classification read length L only runs `body` — on
+    * the manifest as read under the lock — if the manifest is still at
+    * L. Two compactors, or an appender's group rewrite racing a
+    * compactor, therefore cannot interleave retires: the loser throws
     * [[CommitConflict]], re-classifies against the winner's state, and
-    * retries. Plain appends (DSv2 writes) never touch the manifest and
-    * need no lock — distinct segment names are conflict-free by
-    * construction.
+    * retries. Only [[publishStep]] and [[expire]] (which edits entries
+    * in place) call it. Plain appends (DSv2 writes) never touch the
+    * manifest and need no CAS — distinct segment names are
+    * conflict-free by construction.
     */
-  private def publishLocked[T](dir: File, expectedLen: Int)(body: => T): T = {
+  private def publishLocked[T](dir: File, expectedLen: Int)(body: Vector[MaintEntry] => T): T = {
     beforePublishHook(dir)
     withDirLock(dir) {
-      val nowLen = readManifest(dir).length
-      if (nowLen != expectedLen)
+      val manifest = readManifest(dir)
+      if (manifest.length != expectedLen)
         throw new CommitConflict(
-          s"manifest advanced $expectedLen -> $nowLen during ${dir.getName} " +
+          s"manifest advanced $expectedLen -> ${manifest.length} during ${dir.getName} " +
             "maintenance — re-classify and retry")
-      body
+      body(manifest)
     }
   }
+
+  /** What one maintenance commit records: the manifest entries its
+    * file moves made, and the ledger delta of its ONE fold.
+    */
+  private case class Published(entries: Vector[MaintEntry],
+                               add: Map[String, FrameStatsLedger.Entry] = Map.empty,
+                               remove: Iterable[String] = Nil,
+                               dvSet: Map[String, (String, Long)] = Map.empty,
+                               dvClear: Iterable[String] = Nil)
+
+  /** The one locked publish step of every maintenance commit. Under
+    * [[publishLocked]] (mutex + manifest-length CAS) it picks the
+    * publish instant from `live` and the manifest, runs the op's own
+    * file `moves` at that instant, appends the [[MaintEntry]]s they
+    * return to the manifest, then folds the ledger ONCE — after the
+    * manifest, so for ledgered readers the fold is the commit point of
+    * the whole operation. A lost race runs `onConflict` (the op drops
+    * its temps or scratch) and rethrows for [[withConflictRetry]].
+    */
+  private def publishStep(dir: File, expectedLen: Int, live: => Array[File],
+                          onConflict: => Unit = ())(moves: Long => Published): Published =
+    try publishLocked(dir, expectedLen) { manifest =>
+      val publishMs = publishInstant(live, manifest)
+      val p = moves(publishMs)
+      writeManifest(dir, manifest ++ p.entries)
+      FrameStatsLedger.fold(dir, p.add, p.remove, p.dvSet, p.dvClear)
+      p
+    } catch { case c: CommitConflict => onConflict; throw c }
 
   /** The table's filesystem mutex WITHOUT the manifest CAS — for
     * metadata folds that are not racing a classification (ledger
@@ -523,22 +568,49 @@ object FrameMaintenance {
     publishMs
   }
 
+  /** Retire whole live segments, each with its live deletion vector
+    * listed (and retired) BEFORE its base, so change replay drops the
+    * vector state first: (name, original publish instant) in retire
+    * order. One directory listing finds every vector.
+    */
+  private def retireWithVectors(dir: File, segments: Iterable[String]): Vector[(String, Long)] = {
+    val dvs = AvroFrames.liveDvMap(dir.getAbsolutePath)
+    segments.toVector.flatMap(n => dvs.get(n).map(_.getName).toVector :+ n)
+      .map(n => n -> retire(dir, n))
+  }
+
+  /** A maintenance entry from its retired (name, publish instant) pairs. */
+  private def entry(op: String, publishMs: Long, retired: Seq[(String, Long)],
+                    replacements: Seq[String]): MaintEntry =
+    MaintEntry(op, publishMs, retired.map(_._1).toVector, retired.map(_._2).toVector,
+      replacements.toVector, expired = false)
+
+  /** Stamp a published file's mtime with the publish instant (POSIX
+    * rename PRESERVES the temp's task-write mtime, and TIMESTAMP AS OF
+    * cuts on it).
+    */
+  private def restamp(f: File, publishMs: Long): Unit =
+    java.nio.file.Files.setLastModifiedTime(f.toPath,
+      java.nio.file.attribute.FileTime.fromMillis(publishMs))
+
+  /** Rename a finished temp to its visible name, then [[restamp]] it. */
+  private def land(tmp: File, target: File, publishMs: Long, what: String): Unit = {
+    val ok = FrameCommitIo.impl.publish(tmp, target)
+    require(ok, s"$what rename failed: ${tmp.getName} -> ${target.getName}")
+    restamp(target, publishMs)
+  }
+
   /** Publish an executor-written temp as a visible segment — the one
-    * publish step of every commit path: optional sidecar first, swapped
-    * in through [[FrameJson.writeText]] so a crash never leaves a torn
-    * sidecar under a live name (readers tolerate a missing sidecar, but
-    * a visible segment must never precede its commit), rename, then
-    * restamp mtime to the publish instant (POSIX rename PRESERVES the
-    * temp's task-write mtime, and TIMESTAMP AS OF cuts on it).
+    * segment publish of every commit path: optional sidecar first,
+    * swapped in through [[FrameJson.writeText]] so a crash never leaves
+    * a torn sidecar under a live name (readers tolerate a missing
+    * sidecar, but a visible segment must never precede its commit),
+    * then [[land]].
     */
   private def publishSegment(dir: File, tmpName: String, finalName: String,
                              statsJson: Option[String], publishMs: Long): Unit = {
     statsJson.foreach(FrameJson.writeText(new File(dir, finalName + ".stats"), _))
-    val target = new File(dir, finalName)
-    val ok = FrameCommitIo.impl.publish(new File(dir, tmpName), target)
-    require(ok, s"publish rename failed: $tmpName -> $finalName")
-    java.nio.file.Files.setLastModifiedTime(target.toPath,
-      java.nio.file.attribute.FileTime.fromMillis(publishMs))
+    land(new File(dir, tmpName), new File(dir, finalName), publishMs, "publish")
   }
 
   /** Ledger entries for freshly published appends, from the very
@@ -548,7 +620,7 @@ object FrameMaintenance {
   private def appendEntries(parts: Seq[(String, String, String)],
                             publishMs: Long): Map[String, FrameStatsLedger.Entry] =
     parts.map { case (_, finalName, statsJson) =>
-      finalName -> FrameStatsLedger.entryFromJsonOrBare(statsJson).copy(publishMs = publishMs)
+      finalName -> FrameStatsLedger.entryOf(Some(statsJson), publishMs)
     }.toMap
 
   /** The DSv2 job-commit publish (batch insert, streaming epoch, group
@@ -678,30 +750,21 @@ object FrameMaintenance {
       }
       .collect()
 
-    // driver publish under the commit lock: retire inputs (vectors
-    // WITH their segments, so snapshot substitution only applies when
-    // the snapshot's vector state matches what was folded), swap in
-    // replacements, manifest last; a lost race deletes the temps and
-    // re-runs classification
-    try publishLocked(dir, manifest.length) {
-      val publishMs = publishInstant(live, manifest)
-      val entries = results.map { case (members, tmpName, finalName, merged) =>
-        val names = members.flatMap { case (n, dvName) => dvName.toVector :+ n }
-        val replacedMs = names.map(n => retire(dir, n))
-        publishSegment(dir, tmpName, finalName, merged, publishMs)
-        MaintEntry("compact", publishMs, names, replacedMs, Vector(finalName), expired = false)
-      }
-      writeManifest(dir, manifest ++ entries)
-      FrameStatsLedger.fold(dir,
+    // publish: per bin, retire the inputs (vectors WITH their segments,
+    // so snapshot substitution only applies when the snapshot's vector
+    // state matches what was folded), then land the replacement; a lost
+    // race deletes the temps and re-runs classification
+    publishStep(dir, manifest.length, live,
+        onConflict = results.foreach(r => new File(dirPath, r._2).delete())) { publishMs =>
+      Published(results.toVector.map { case (members, tmpName, finalName, merged) =>
+          val retired = retireWithVectors(dir, members.map(_._1))
+          publishSegment(dir, tmpName, finalName, merged, publishMs)
+          entry("compact", publishMs, retired, Vector(finalName))
+        },
         add = results.map { case (_, _, finalName, merged) =>
-          finalName -> merged.map(FrameStatsLedger.entryFromJsonOrBare)
-            .getOrElse(FrameStatsLedger.Entry(-1L, Map.empty, Set.empty))
-            .copy(publishMs = publishMs)
+          finalName -> FrameStatsLedger.entryOf(merged, publishMs)
         }.toMap,
         remove = results.flatMap(_._1.map(_._1)).toSeq)
-    } catch { case c: CommitConflict =>
-      results.foreach { case (_, tmpName, _, _) => new File(dirPath, tmpName).delete() }
-      throw c
     }
     CompactResult(work.length, work.map(_.length).sum)
   }
@@ -746,16 +809,8 @@ object FrameMaintenance {
     val fieldNames = read.head._2.keySet
     if (read.exists(_._2.keySet != fieldNames)) return None
     val frames = read.map(_._1).sum
-    val stats = fieldNames.toSeq.sorted.map { c =>
-      val st = new AvroFrameWrite.FieldStats
-      read.foreach { case (_, fields, _) =>
-        val (nulls, mn, mx) = fields(c)
-        st.nulls += nulls
-        if (mn != null) st.observe(mn)
-        if (mx != null) st.observe(mx)
-      }
-      c -> st
-    }
+    val stats = fieldNames.toSeq.sorted.map(c =>
+      c -> new AvroFrameWrite.FieldStats(read.map(_._2(c))))
     val mergedBlooms: Map[String, String] = fieldNames.toSeq.sorted.flatMap { c =>
       val b64s = read.map(_._3.get(c))
       if (b64s.exists(_.isEmpty)) None
@@ -924,43 +979,28 @@ object FrameMaintenance {
     // compaction's per-bin one.
     val newSegs = AvroFrames.listSegments(scratch.getAbsolutePath)
     val lastName = live.last.getName
-    try publishLocked(dir, manifest.length) {
-      val publishMs = publishInstant(live, manifest)
-      // folded deletion vectors retire with their segments (and gate
-      // snapshot substitution on matching vector state, like compaction)
-      val names = live.toVector.flatMap(f =>
-        FrameDv.liveDvOf(dir, f.getName).toVector :+ f.getName)
+    def dropScratch(): Unit = {
+      Option(scratch.listFiles()).getOrElse(Array.empty).foreach(_.delete())
+      scratch.delete()
+    }
+    val published = publishStep(dir, manifest.length, live, onConflict = dropScratch()) { publishMs =>
       val newNames = newSegs.toVector.zipWithIndex.map { case (f, i) =>
         val newName = f"$lastName.z$gen-$i%05d"
         val stats = new File(scratch, f.getName + ".stats")
         if (stats.isFile)
           FrameCommitIo.impl.move(stats, new File(dir, newName + ".stats"))
-        val ok = FrameCommitIo.impl.publish(f, new File(dir, newName))
-        require(ok, s"z-order publish rename failed: ${f.getName} -> $newName")
-        java.nio.file.Files.setLastModifiedTime(new File(dir, newName).toPath,
-          java.nio.file.attribute.FileTime.fromMillis(publishMs))
+        land(f, new File(dir, newName), publishMs, "z-order publish")
         newName
       }
-      val replacedMs = names.map(n => retire(dir, n))
-      Option(scratch.listFiles()).getOrElse(Array.empty).foreach(_.delete())
-      scratch.delete()
-      writeManifest(dir, manifest :+
-        MaintEntry("compact", publishMs, names, replacedMs, newNames, expired = false))
-      FrameStatsLedger.fold(dir,
-        add = newNames.map { n =>
-          n -> (AvroFrameStats.readFull(new File(dir, n)) match {
-            case Some((frames, fields, blooms)) =>
-              FrameStatsLedger.Entry(frames, fields, blooms.keySet, publishMs)
-            case None => FrameStatsLedger.Entry(-1L, Map.empty, Set.empty, publishMs)
-          })
-        }.toMap,
-        remove = names)
-      ClusterResult(newNames.length, names.length)
-    } catch { case c: CommitConflict =>
-      Option(scratch.listFiles()).getOrElse(Array.empty).foreach(_.delete())
-      scratch.delete()
-      throw c
+      // folded deletion vectors retire with their segments (and gate
+      // snapshot substitution on matching vector state, like compaction)
+      val retired = retireWithVectors(dir, live.map(_.getName))
+      dropScratch()
+      Published(Vector(entry("compact", publishMs, retired, newNames)),
+        add = newNames.map(n => n -> FrameStatsLedger.entryOf(new File(dir, n), publishMs)).toMap,
+        remove = retired.map(_._1))
     }
+    ClusterResult(newSegs.length, published.entries.head.replaced.length)
   }
 
   /** Does the directory's table descriptor declare a bucket layout?
@@ -1080,54 +1120,32 @@ object FrameMaintenance {
     val rewriteTasks = rewrite.toVector.map(f =>
       (f.getName, s".deleting-g$gen-${f.getName}", f.getName + s".d$gen",
         FrameDv.liveDvOf(dir, f.getName)))
-    val rewritten: Array[(String, Option[String], Option[(String, String, String)])] =
+    val rewritten: Array[(String, Option[(String, String, String)])] =
       if (rewriteTasks.isEmpty) Array.empty
       else spark.sparkContext.parallelize(rewriteTasks, rewriteTasks.length)
         .map { case (name, tmpName, finalName, priorDv) =>
           val kept = rewriteSegment(dirPath, name, tmpName, avroSchemaJson, schemaId,
             filters, historyJson, priorDv.orNull)
-          kept match {
-            case Some(statsJson) => (name, priorDv, Some((tmpName, finalName, statsJson)))
-            case None => // every row deleted: no replacement segment
-              new File(dirPath, tmpName).delete()
-              (name, priorDv, None)
-          }
+          if (kept.isEmpty) new File(dirPath, tmpName).delete() // every row deleted
+          (name, kept.map(statsJson => (tmpName, finalName, statsJson)))
         }
         .collect()
+    val parts = rewritten.flatMap(_._2).toSeq
 
-    try publishLocked(dir, manifest.length) {
-      val publishMs = publishInstant(live, manifest)
-      val replaced = Vector.newBuilder[String]
-      val replacedMs = Vector.newBuilder[Long]
-      val replacements = Vector.newBuilder[String]
-      allMatch.foreach { seg =>
-        FrameDv.liveDvOf(dir, seg.getName).foreach { d =>
-          replaced += d; replacedMs += retire(dir, d)
+    // publish: all-match segments retire, then each straddler retires
+    // (with its prior vector) and its rewrite lands in its place
+    publishStep(dir, manifest.length, live,
+        onConflict = parts.foreach(p => new File(dirPath, p._1).delete())) { publishMs =>
+      val retired = retireWithVectors(dir, allMatch.map(_.getName)) ++
+        rewritten.toVector.flatMap { case (name, part) =>
+          val r = retireWithVectors(dir, Seq(name))
+          part.foreach { case (tmpName, finalName, statsJson) =>
+            publishSegment(dir, tmpName, finalName, Some(statsJson), publishMs)
+          }
+          r
         }
-        replaced += seg.getName
-        replacedMs += retire(dir, seg.getName)
-      }
-      rewritten.foreach { case (name, priorDv, result) =>
-        priorDv.foreach { d => replaced += d; replacedMs += retire(dir, d) }
-        replaced += name
-        replacedMs += retire(dir, name)
-        result.foreach { case (tmpName, finalName, statsJson) =>
-          publishSegment(dir, tmpName, finalName, Some(statsJson), publishMs)
-          replacements += finalName
-        }
-      }
-      val replacedV = replaced.result()
-      writeManifest(dir, manifest :+
-        MaintEntry("delete", publishMs, replacedV, replacedMs.result(),
-          replacements.result(), expired = false))
-      FrameStatsLedger.fold(dir,
-        add = appendEntries(rewritten.flatMap(_._3).toSeq, publishMs),
-        remove = replacedV)
-    } catch { case c: CommitConflict =>
-      rewritten.foreach { case (_, _, r) =>
-        r.foreach { case (tmpName, _, _) => new File(dirPath, tmpName).delete() }
-      }
-      throw c
+      Published(Vector(entry("delete", publishMs, retired, parts.map(_._2))),
+        add = appendEntries(parts, publishMs), remove = retired.map(_._1))
     }
     DeleteResult(allMatch.length, rewritten.length, noneMatch.length)
   }
@@ -1215,56 +1233,42 @@ object FrameMaintenance {
     if (allMatch.isEmpty && minted.isEmpty)
       return DeleteResult(0, 0, noneMatch.length + straddle.length)
 
-    try publishLocked(dir, manifest.length) {
-    val publishMs = publishInstant(live, manifest)
-    val entries = Vector.newBuilder[MaintEntry]
-    if (allMatch.nonEmpty) {
-      // metadata-only retire, vectors included — ONE classic delete
-      // entry (whole-segment grain, same as copy-on-write's fast path)
-      val replaced = Vector.newBuilder[String]
-      val replacedMs = Vector.newBuilder[Long]
-      allMatch.foreach { seg =>
-        FrameDv.liveDvOf(dir, seg.getName).foreach { d =>
-          replaced += d; replacedMs += retire(dir, d)
-        }
-        replaced += seg.getName
-        replacedMs += retire(dir, seg.getName)
-      }
-      val replacedV = replaced.result()
-      entries += MaintEntry("delete", publishMs, replacedV, replacedMs.result(),
-        Vector.empty, expired = false)
-      FrameStatsLedger.fold(dir, remove = replacedV)
-    }
-    if (minted.nonEmpty) {
-      val replaced = Vector.newBuilder[String]
-      val replacedMs = Vector.newBuilder[Long]
-      val replacements = Vector.newBuilder[String]
-      minted.foreach { case (name, priorDv, tmpName, _) =>
+    // publish, ONE ledger fold for both halves: all-match segments
+    // retire metadata-only WITH their vectors as a classic delete entry
+    // (whole-segment grain, same as copy-on-write's fast path); each
+    // straddler's vector lands (the executor already wrote it: a
+    // rename) and retires its predecessor as one dv entry. The ledger
+    // carries each live segment's active vector (round 17: ledger-
+    // derived planning must see the delete) — prior vectors are
+    // superseded by the overwrite, never left dangling
+    publishStep(dir, manifest.length, live,
+        onConflict = minted.foreach(m => new File(dir, m._3).delete())) { publishMs =>
+      val retired = retireWithVectors(dir, allMatch.map(_.getName))
+      val landed = minted.toVector.map { case (name, priorDv, tmpName, _) =>
         val dvName = FrameDv.nameFor(name, gen)
-        // the executor already wrote the vector: publish is a rename
-        val ok = FrameCommitIo.impl.publish(new File(dir, tmpName), new File(dir, dvName))
-        require(ok, s"deletion vector publish rename failed: $tmpName -> $dvName")
-        java.nio.file.Files.setLastModifiedTime(new File(dir, dvName).toPath,
-          java.nio.file.attribute.FileTime.fromMillis(publishMs))
-        priorDv.foreach { d => replaced += d; replacedMs += retire(dir, d) }
-        replacements += dvName
+        land(new File(dir, tmpName), new File(dir, dvName), publishMs, "deletion vector publish")
+        (name, dvName, priorDv.map(d => d -> retire(dir, d)))
       }
-      entries += MaintEntry("dv", publishMs, replaced.result(), replacedMs.result(),
-        replacements.result(), expired = false)
-      // the ledger carries each live segment's active vector (round 17:
-      // ledger-derived planning must see the delete) — prior vectors
-      // are superseded by the overwrite, never left dangling
-      FrameStatsLedger.fold(dir, dvSet = minted.map { case (name, _, _, _) =>
-        name -> ((FrameDv.nameFor(name, gen), publishMs)) }.toMap)
-    }
-    writeManifest(dir, manifest ++ entries.result())
-    } catch { case c: CommitConflict =>
-      minted.foreach { case (_, _, tmpName, _) => new File(dir, tmpName).delete() }
-      throw c
+      val dv = vectorsLanded(publishMs, landed)
+      dv.copy(entries = (if (retired.isEmpty) Vector.empty
+        else Vector(entry("delete", publishMs, retired, Vector.empty))) ++ dv.entries,
+        remove = retired.map(_._1))
     }
     DeleteResult(allMatch.length, minted.length,
       noneMatch.length + (straddle.length - minted.length))
   }
+
+  /** The commit of landed deletion vectors, each as (base, vector,
+    * the prior vector it retired with that one's publish instant): ONE
+    * `dv` entry (none if nothing landed) and each base's new ledger
+    * vector.
+    */
+  private def vectorsLanded(publishMs: Long,
+                            landed: Seq[(String, String, Option[(String, Long)])]): Published =
+    Published(
+      if (landed.isEmpty) Vector.empty
+      else Vector(entry("dv", publishMs, landed.flatMap(_._3), landed.map(_._2))),
+      dvSet = landed.map { case (base, dv, _) => base -> ((dv, publishMs)) }.toMap)
 
   /** Default auto-fold trigger: a segment whose cumulative deletion
     * vector covers at least this fraction of its rows is folded into
@@ -1306,23 +1310,8 @@ object FrameMaintenance {
     * in one delete operation — still time-travelable until expiry,
     * unlike the write path's physical TRUNCATE.
     */
-  def deleteAll(dir: File): DeleteResult = withConflictRetry("truncate")(() => {
-    val live = AvroFrames.listSegments(dir.getAbsolutePath)
-    if (live.isEmpty) return DeleteResult(0, 0, 0)
-    val manifest = readManifest(dir)
-    publishLocked(dir, manifest.length) {
-    val publishMs = publishInstant(live, manifest)
-    // each segment's live deletion vector retires WITH it (listed
-    // before its base so the change replay drops the dv state first)
-    val names = live.toVector.flatMap(f =>
-      FrameDv.liveDvOf(dir, f.getName).toVector :+ f.getName)
-    val times = names.map(n => retire(dir, n))
-    writeManifest(dir, manifest :+
-      MaintEntry("delete", publishMs, names, times, Vector.empty, expired = false))
-    FrameStatsLedger.fold(dir, remove = names)
-    }
-    DeleteResult(live.length, 0, 0)
-  })
+  def deleteAll(dir: File): DeleteResult =
+    DeleteResult(deleteSegments(dir, "truncate")(_.map(_.getName).toSeq).length, 0, 0)
 
   case class DropPartitionsResult(partitions: Int, segments: Int)
 
@@ -1339,55 +1328,47 @@ object FrameMaintenance {
     * deletes (the standard whole-segment-delete replay contract).
     * Tokenless (pre-transform / foreign) segments are never touched.
     */
-  def dropPartitions(dir: File, olderThan: Long): DropPartitionsResult =
-    withConflictRetry("drop_partitions")(() => {
-      val live = AvroFrames.listSegments(dir.getAbsolutePath)
-      val victims = live.filter(f =>
-        FrameTimePart.valueOf(f.getName).exists(_ < olderThan))
-      if (victims.isEmpty) return DropPartitionsResult(0, 0)
-      val manifest = readManifest(dir)
-      publishLocked(dir, manifest.length) {
-        val publishMs = publishInstant(live, manifest)
-        // each victim's live deletion vector retires WITH it (listed
-        // before its base so change replay drops the vector state first)
-        val names = victims.toVector.flatMap(f =>
-          FrameDv.liveDvOf(dir, f.getName).toVector :+ f.getName)
-        val times = names.map(n => retire(dir, n))
-        writeManifest(dir, manifest :+
-          MaintEntry("delete", publishMs, names, times, Vector.empty, expired = false))
-        FrameStatsLedger.fold(dir, remove = names)
-      }
-      DropPartitionsResult(
-        victims.flatMap(f => FrameTimePart.valueOf(f.getName)).distinct.length,
-        victims.length)
-    })
+  def dropPartitions(dir: File, olderThan: Long): DropPartitionsResult = {
+    val victims = deleteSegments(dir, "drop_partitions")(_.map(_.getName)
+      .filter(n => FrameTimePart.valueOf(n).exists(_ < olderThan)).toSeq)
+    DropPartitionsResult(victims.flatMap(FrameTimePart.valueOf).distinct.length, victims.length)
+  }
 
   /** Retire a specific set of live segments as ONE delete operation
     * (one version) — the group-replacement half of a row-level
     * UPDATE/MERGE/DELETE rewrite: the affected groups retire here, the
-    * rewritten rows publish as ordinary appends right after.
+    * rewritten rows publish as ordinary appends right after. Each
+    * group's live deletion vector retires with it — the replacement
+    * rows were read through the vector, so the vector must not outlive
+    * the segment it applied to.
     */
   def retireSegments(dir: File, names: Seq[String]): Unit =
-    withConflictRetry("retire-groups")(() => {
-    if (names.isEmpty) return
-    val live = AvroFrames.listSegments(dir.getAbsolutePath).map(_.getName).toSet
-    val missing = names.filterNot(live.contains)
-    require(missing.isEmpty,
-      s"cannot retire non-live segments ${missing.mkString(", ")} — the replaced " +
-        "group set must come from the operation's own scan")
-    val manifest = readManifest(dir)
-    publishLocked(dir, manifest.length) {
-    val publishMs = publishInstant(AvroFrames.listSegments(dir.getAbsolutePath), manifest)
-    // retire each group's live deletion vector with it — the group
-    // rewrite's replacement rows were read through the vector, so the
-    // vector must not outlive the segment it applied to
-    val withDvs = names.toVector.flatMap(n =>
-      FrameDv.liveDvOf(dir, n).toVector :+ n)
-    val times = withDvs.map(n => retire(dir, n))
-    writeManifest(dir, manifest :+
-      MaintEntry("delete", publishMs, withDvs, times, Vector.empty, expired = false))
-    FrameStatsLedger.fold(dir, remove = withDvs)
+    if (names.nonEmpty) deleteSegments(dir, "retire-groups") { live =>
+      val liveNames = live.map(_.getName).toSet
+      val missing = names.filterNot(liveNames.contains)
+      require(missing.isEmpty,
+        s"cannot retire non-live segments ${missing.mkString(", ")} — the replaced " +
+          "group set must come from the operation's own scan")
+      names
     }
+
+  /** The whole-segment delete behind TRUNCATE, partition retention and
+    * group retirement: `pick` chooses segment names from the live
+    * listing, and they retire (each with its live vector) as ONE
+    * metadata-only `delete` entry — one version. Returns the names
+    * picked; picking none commits nothing.
+    */
+  private def deleteSegments(dir: File, what: String)(pick: Array[File] => Seq[String]): Seq[String] =
+    withConflictRetry(what)(() => {
+      val live = AvroFrames.listSegments(dir.getAbsolutePath)
+      val victims = pick(live)
+      if (victims.nonEmpty)
+        publishStep(dir, readManifest(dir).length, live) { publishMs =>
+          val retired = retireWithVectors(dir, victims)
+          Published(Vector(entry("delete", publishMs, retired, Vector.empty)),
+            remove = retired.map(_._1))
+        }
+      victims
     })
 
   /** Executor body of the rewrite path: stream the segment's frames,
@@ -1436,12 +1417,7 @@ object FrameMaintenance {
               kept += 1
               var i = 0
               while (i < fields.length) {
-                stats(i).observe(rec.get(i) match {
-                  case null                      => null
-                  case s: CharSequence           => s.toString
-                  case _: java.nio.ByteBuffer    => null // binary: nulls-only, like the write path
-                  case other                     => other
-                })
+                stats(i).observe(rec.get(i))
                 i += 1
               }
             }
@@ -1502,19 +1478,7 @@ object FrameMaintenance {
           frames += 1
           var i = 0
           while (i < fields.length) {
-            val v = rec.get(i) match {
-              case null                   => null
-              case s: CharSequence        => s.toString
-              case _: java.nio.ByteBuffer => null // binary: nulls-only, like the write path
-              case other                  => other
-            }
-            stats(i).observe(v)
-            if (blooms(i) != null && v != null) v match {
-              case x: java.lang.Long    => blooms(i).putLong(x.longValue)
-              case x: java.lang.Integer => blooms(i).putLong(x.longValue)
-              case s: String            => blooms(i).putString(s)
-              case _                    => ()
-            }
+            AvroFrameWrite.putBloom(blooms(i), stats(i).observe(rec.get(i)))
             i += 1
           }
           rec = dec.nextRecord()
@@ -1587,35 +1551,23 @@ object FrameMaintenance {
                                           inserts: Seq[(String, String, String)]): Unit = {
     val realDeletes = deletes.filter(_._2.nonEmpty)
     if (realDeletes.isEmpty && inserts.isEmpty) return
-    try publishLocked(dir, expectedLen) {
-      val manifest = readManifest(dir)
-      val gen = manifest.length + 1
-      val live = AvroFrames.listSegments(dir.getAbsolutePath)
-      val publishMs = publishInstant(live, manifest)
-      val entries = Vector.newBuilder[MaintEntry]
-      if (realDeletes.nonEmpty) {
-        val replaced = Vector.newBuilder[String]
-        val replacedMs = Vector.newBuilder[Long]
-        val replacements = Vector.newBuilder[String]
-        realDeletes.toSeq.sortBy(_._1).foreach { case (seg, delta) =>
-          require(new File(dir, seg).isFile,
-            s"delta delete targets non-live segment $seg — was the table " +
-              "maintained during the operation?")
-          val prior = FrameDv.liveDvOf(dir, seg)
-          val priorPos = prior.map(d => FrameDv.read(new File(dir, d)))
-            .getOrElse(Array.empty[Int])
-          // the scan already skips prior-vector positions, so the delta
-          // is disjoint from them by construction; union defensively
-          val merged = (priorPos ++ delta).distinct.sorted
-          val dvName = FrameDv.nameFor(seg, gen)
-          FrameDv.write(new File(dir, dvName), merged)
-          java.nio.file.Files.setLastModifiedTime(new File(dir, dvName).toPath,
-            java.nio.file.attribute.FileTime.fromMillis(publishMs))
-          prior.foreach { d => replaced += d; replacedMs += retire(dir, d) }
-          replacements += dvName
-        }
-        entries += MaintEntry("dv", publishMs, replaced.result(), replacedMs.result(),
-          replacements.result(), expired = false)
+    try publishStep(dir, expectedLen, AvroFrames.listSegments(dir.getAbsolutePath),
+        onConflict = inserts.foreach(i => new File(dir, i._1).delete())) { publishMs =>
+      val gen = expectedLen + 1 // the CAS held: the manifest is at expectedLen
+      val landed = realDeletes.toSeq.sortBy(_._1).map { case (seg, delta) =>
+        require(new File(dir, seg).isFile,
+          s"delta delete targets non-live segment $seg — was the table " +
+            "maintained during the operation?")
+        val prior = FrameDv.liveDvOf(dir, seg)
+        val priorPos = prior.map(d => FrameDv.read(new File(dir, d)))
+          .getOrElse(Array.empty[Int])
+        // the scan already skips prior-vector positions, so the delta
+        // is disjoint from them by construction; union defensively
+        val merged = (priorPos ++ delta).distinct.sorted
+        val dvName = FrameDv.nameFor(seg, gen)
+        FrameDv.write(new File(dir, dvName), merged)
+        restamp(new File(dir, dvName), publishMs)
+        (seg, dvName, prior.map(d => d -> retire(dir, d)))
       }
       // inserts publish as ordinary appends (each mints a version via
       // its publish mtime; at an equal millisecond appends order before
@@ -1624,14 +1576,9 @@ object FrameMaintenance {
       inserts.foreach { case (tmp, fin, stats) =>
         publishSegment(dir, tmp, fin, Some(stats), publishMs)
       }
-      writeManifest(dir, manifest ++ entries.result())
-      FrameStatsLedger.fold(dir,
-        add = appendEntries(inserts, publishMs),
-        dvSet = realDeletes.keys.map(seg =>
-          seg -> ((FrameDv.nameFor(seg, gen), publishMs))).toMap)
+      vectorsLanded(publishMs, landed).copy(add = appendEntries(inserts, publishMs))
     } catch {
       case c: CommitConflict =>
-        inserts.foreach { case (tmp, _, _) => new File(dir, tmp).delete() }
         throw new IllegalStateException(
           "row-level operation lost a race with concurrent maintenance — its " +
             "collected row positions may be stale; re-run the statement", c)
@@ -1660,14 +1607,8 @@ object FrameMaintenance {
     (statsFiles(dir) ++ statsFiles(historyDir(dir))).foreach { sf =>
       val seg = new File(sf.getParentFile, sf.getName.stripSuffix(".stats"))
       AvroFrameStats.readFull(seg).foreach { case (frames, fields, blooms) =>
-        val renamed = fields.toSeq.flatMap { case (n, (nulls, mn, mx)) =>
-          transform(n).map { nn =>
-            val st = new AvroFrameWrite.FieldStats
-            st.nulls = nulls
-            if (mn != null) st.observe(mn)
-            if (mx != null) st.observe(mx)
-            nn -> st
-          }
+        val renamed = fields.toSeq.flatMap { case (n, summary) =>
+          transform(n).map(_ -> new AvroFrameWrite.FieldStats(Seq(summary)))
         }.sortBy(_._1)
         val renamedBlooms = blooms.flatMap { case (n, b64) =>
           transform(n).map(_ -> b64)
@@ -1720,8 +1661,7 @@ object FrameMaintenance {
     val toRestore = target.filter(f => !new File(dir, f.getName).isFile)
     if (toRetire.isEmpty && toRestore.isEmpty) return RollbackResult(0, 0)
 
-    publishLocked(dir, manifest.length) {
-      val publishMs = publishInstant(liveSegs, manifest)
+    publishStep(dir, manifest.length, liveSegs) { publishMs =>
       // restore FIRST (restored names are disjoint from live names by
       // definition, so a reader listing mid-publish sees at worst some
       // rows twice — never an emptier table than either state)
@@ -1732,10 +1672,7 @@ object FrameMaintenance {
           FrameCommitIo.impl.move(stats,
             new File(dir, hf.getName + ".stats"), replace = true)
       }
-      val replacedMs = toRetire.map(n => retire(dir, n))
-      writeManifest(dir, manifest :+
-        MaintEntry("rollback", publishMs, toRetire, replacedMs,
-          toRestore.map(_.getName), expired = false))
+      val retired = toRetire.map(n => n -> retire(dir, n))
       // ledger: restored data segments re-enter as adds; restored
       // vectors re-attach to their (live) bases; a retired vector whose
       // base stays live with no restored replacement clears its entry
@@ -1746,15 +1683,10 @@ object FrameMaintenance {
       }.toMap
       val clearedDvBases = toRetire.filter(FrameDv.isDvName).map(FrameDv.baseOf)
         .filterNot(retiredSet.contains).filterNot(restoredDvs.contains).distinct
-      FrameStatsLedger.fold(dir,
+      Published(Vector(entry("rollback", publishMs, retired, toRestore.map(_.getName))),
         add = toRestore.filterNot(f => FrameDv.isDvName(f.getName)).map { f =>
           val restored = new File(dir, f.getName)
-          restored.getName -> (AvroFrameStats.readFull(restored) match {
-            case Some((fr, fl, bl)) =>
-              FrameStatsLedger.Entry(fr, fl, bl.keySet, restored.lastModified())
-            case None => FrameStatsLedger.Entry(-1L, Map.empty, Set.empty,
-              restored.lastModified())
-          })
+          restored.getName -> FrameStatsLedger.entryOf(restored, restored.lastModified())
         }.toMap,
         remove = toRetire,
         dvSet = restoredDvs,
@@ -1775,10 +1707,10 @@ object FrameMaintenance {
   def expire(dir: File, olderThanMs: Long): Int = withConflictRetry("expire")(() => {
     val manifest0 = readManifest(dir)
     if (manifest0.isEmpty) return 0
-    publishLocked(dir, manifest0.length) {
-    // re-read under the lock: expiry mutates entries in place, so it
-    // must see the committed state (length validated = no interleave)
-    val manifest = readManifest(dir)
+    publishLocked(dir, manifest0.length) { manifest =>
+    // expiry rewrites entries in place, so it edits the manifest as
+    // read under the lock (length validated = no interleave) and stays
+    // outside the publish step: no entry appended, no ledger fold
     var dropped = 0
     val updated = manifest.map { e =>
       if (!e.expired && e.publishMs <= olderThanMs) {

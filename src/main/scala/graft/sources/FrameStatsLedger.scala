@@ -117,12 +117,42 @@ object FrameStatsLedger {
       Entry(frames, fields, blooms.keySet)
     }
 
+  /** A stats-less entry: listed in the live set, never stat-pruned. */
+  private val Bare = Entry(-1L, Map.empty, Set.empty)
+
   /** Like [[entryFromJson]] but total: an unparseable sidecar yields a
     * stats-less entry — with the ledger authoritative for the live
     * set, EVERY published segment must land in it, stats or not.
     */
-  def entryFromJsonOrBare(json: String): Entry =
-    entryFromJson(json).getOrElse(Entry(-1L, Map.empty, Set.empty))
+  def entryFromJsonOrBare(json: String): Entry = entryFromJson(json).getOrElse(Bare)
+
+  /** The entry of a segment published at `publishMs` with sidecar JSON
+    * `statsJson` — stats-less when there is none or it is unparseable.
+    */
+  private[sources] def entryOf(statsJson: Option[String], publishMs: Long): Entry =
+    statsJson.fold(Bare)(entryFromJsonOrBare).copy(publishMs = publishMs)
+
+  /** The entry of a segment on disk, from its stats sidecar —
+    * stats-less without a readable one.
+    */
+  private[sources] def entryOf(segment: File, publishMs: Long): Entry =
+    AvroFrameStats.readFull(segment)
+      .fold(Bare) { case (frames, fields, blooms) => Entry(frames, fields, blooms.keySet) }
+      .copy(publishMs = publishMs)
+
+  /** Every live segment on disk except `skip`, as an entry: sidecar
+    * stats, publish mtime and live deletion vector — one directory
+    * retrofit, shared by the bootstrap fold and [[rebuild]].
+    */
+  private def onDisk(dir: File, skip: String => Boolean = _ => false): Map[String, Entry] = {
+    val dvs = AvroFrames.liveDvMap(dir.getAbsolutePath)
+    AvroFrames.listSegments(dir.getAbsolutePath).iterator.filterNot(f => skip(f.getName))
+      .map { seg =>
+        val d = dvs.get(seg.getName)
+        seg.getName -> entryOf(seg, seg.lastModified())
+          .copy(dv = d.map(_.getName), dvMs = d.fold(0L)(_.lastModified()))
+      }.toMap
+  }
 
   /** Shard key of a segment name: its hidden-time-partition token
     * (`T<pv>`), or "" for the root-inline group.
@@ -375,19 +405,7 @@ object FrameStatsLedger {
     }
     if (!new File(dir, LedgerFile).isFile) {
       // bootstrap: retrofit everything already on disk, then the fold
-      val dvs = AvroFrames.liveDvMap(dir.getAbsolutePath)
-      val fromDisk = AvroFrames.listSegments(dir.getAbsolutePath).iterator
-        .filterNot(f => stampedAdd.contains(f.getName))
-        .map { f =>
-          val base = AvroFrameStats.readFull(f) match {
-            case Some((fr, fl, bl)) => Entry(fr, fl, bl.keySet, f.lastModified())
-            case None               => Entry(-1L, Map.empty, Set.empty, f.lastModified())
-          }
-          val d = dvs.get(f.getName)
-          f.getName -> base.copy(dv = d.map(_.getName),
-            dvMs = d.fold(0L)(_.lastModified()))
-        }.toMap
-      write(dir, applyLine(fromDisk ++ stampedAdd,
+      write(dir, applyLine(onDisk(dir, stampedAdd.contains) ++ stampedAdd,
         DeltaLine(Map.empty, remove.toSeq, stampedDv, dvClear.toSeq)),
         authoritative = true)
       return
@@ -447,16 +465,7 @@ object FrameStatsLedger {
     * plan is O(loaded shards) again. Returns entries written.
     */
   def rebuild(dir: File): Int = {
-    val dvs = AvroFrames.liveDvMap(dir.getAbsolutePath)
-    val entries = AvroFrames.listSegments(dir.getAbsolutePath).map { seg =>
-      val base = AvroFrameStats.readFull(seg) match {
-        case Some((frames, fields, blooms)) =>
-          Entry(frames, fields, blooms.keySet, seg.lastModified())
-        case None => Entry(-1L, Map.empty, Set.empty, seg.lastModified())
-      }
-      val d = dvs.get(seg.getName)
-      seg.getName -> base.copy(dv = d.map(_.getName), dvMs = d.fold(0L)(_.lastModified()))
-    }.toMap
+    val entries = onDisk(dir)
     write(dir, entries, authoritative = true)
     entries.size
   }

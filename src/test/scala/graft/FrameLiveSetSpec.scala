@@ -75,6 +75,20 @@ class FrameLiveSetSpec extends AnyFunSuite with SparkFixture {
     val dvNow = AvroFrames.ledgerLiveSet(dir.toString).get.flatMap(_._2.dv).toSet
     assert(dvNow == AvroFrames.liveDvMap(dir.toString).values.map(_.getName).toSet,
       "ledger vector set must track the live vector set through supersession")
+    // a delete hitting an all-match segment (750-999) AND a straddler
+    // (500-749) is one version, so it lands as ONE ledger delta line
+    val deltaLog = new File(dir, FrameStatsLedger.DeltaFile)
+    def deltaLines(): Long = {
+      val st = Files.lines(deltaLog.toPath)
+      try st.count() finally st.close()
+    }
+    val linesBefore = deltaLines()
+    FrameMaintenance.deleteWhereMoR(spark, dir, schemaJson, AvroFrames.DefaultSchemaId,
+      Array(org.apache.spark.sql.sources.GreaterThanOrEqual("id", 600L)), null,
+      foldThreshold = 2.0)
+    assert(deltaLines() - linesBefore == 1L,
+      "a merge-on-read DELETE must commit as exactly one ledger fold")
+    assert(readBack(dir.toString).count() == 598L)
   }
 
   test("TIMESTAMP AS OF cuts on recorded publish instants — no per-file stat calls") {
