@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-import graft.expressions.{AudioMetaExpr, FloatDotProduct, FloatDoubleDotProduct, ImageMetaExpr, IntersectionSize, JaroWinkler, LongDotProduct, MinHashScheme, MinHashSignature, NfcNormalize, PackFloats, SimHash64, TokenHashArray, UnpackFloats}
+import graft.expressions.{AudioMetaExpr, ImageMetaExpr, IntersectionSize, JaroWinkler, MinHashScheme, MinHashSignature, NfcNormalize, PackFloats, SimHash64, TokenHashArray, UnpackFloats, ZipFold}
 
 /** SQL-surface registration for graft's custom Catalyst expressions,
   * so `spark.sql("SELECT float_dot(a, b) ...")` works alongside the
@@ -13,43 +13,47 @@ import graft.expressions.{AudioMetaExpr, FloatDotProduct, FloatDoubleDotProduct,
   */
 object GraftFunctions {
 
-  private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "float_dot" -> (exprs => FloatDotProduct(exprs(0), exprs(1))),
-    "float_double_dot" -> (exprs =>
-      FloatDoubleDotProduct({ checkArity("float_double_dot", exprs, 2 to 2); exprs(0) }, exprs(1))),
-    "long_dot" -> (exprs =>
-      LongDotProduct({ checkArity("long_dot", exprs, 2 to 2); exprs(0) }, exprs(1))),
-    "minhash_signature" -> (exprs => MinHashSignature(exprs(0), MinHashScheme.numHashes)),
-    // token_hashes(text[, mod]) — mod defaults to 0 (raw 60-bit hashes).
-    // The mod arg accepts any FOLDABLE integral expression (so -1,
-    // 2+2, or a short literal all work, not just bare Int/Long
-    // literals), evaluated once at analysis time.
-    "token_hashes" -> (exprs => TokenHashArray(exprs(0), exprs.lift(1) match {
-      case None => 0L
-      case Some(e) => foldToLong(e, "token_hashes", "mod")
-    })),
-    "simhash64" -> (exprs => SimHash64(exprs(0), 60)),
-    "nfc_normalize" -> (exprs => NfcNormalize({ checkArity("nfc_normalize", exprs, 1 to 1); exprs(0) })),
-    "intersection_size" -> (exprs => IntersectionSize(exprs(0), exprs(1))),
-    "pack_floats" -> (exprs => PackFloats({ checkArity("pack_floats", exprs, 1 to 1); exprs(0) })),
-    "unpack_floats" -> (exprs => UnpackFloats({ checkArity("unpack_floats", exprs, 1 to 1); exprs(0) })),
-    "jaro_winkler" -> (exprs => JaroWinkler({ checkArity("jaro_winkler", exprs, 2 to 2); exprs(0) }, exprs(1))),
-    "image_meta" -> (exprs => ImageMetaExpr({ checkArity("image_meta", exprs, 1 to 1); exprs(0) })),
-    "audio_meta" -> (exprs => AudioMetaExpr({ checkArity("audio_meta", exprs, 1 to 1); exprs(0) })),
-    // SQL surface over Spark's internal bloom expressions (the names
-    // Catalyst itself uses, which FunctionRegistry does not expose;
-    // the analyzer wraps a bare AggregateFunction from a builder).
-    // bloom arg of might_contain must be a constant or scalar
-    // subquery: `might_contain((SELECT bloom_filter_agg(...) FROM t), x)`.
-    "bloom_filter_agg" -> (exprs => checkArity("bloom_filter_agg", exprs, 1 to 3) match {
-      case Seq(c)       => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c)
-      case Seq(c, n)    => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, n)
-      case Seq(c, n, b) => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, n, b)
-    }),
-    "might_contain" -> (exprs => {
-      val Seq(bloom, v) = checkArity("might_contain", exprs, 2 to 2)
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(bloom, v)
-    }))
+  private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] =
+    Seq("float_dot", "float_double_dot", "long_dot").map(k => binary(k)(ZipFold(k, _, _))) ++ Seq(
+      unary("minhash_signature")(MinHashSignature(_, MinHashScheme.numHashes)),
+      // token_hashes(text[, mod]) — mod defaults to 0 (raw 60-bit hashes).
+      // The mod arg accepts any FOLDABLE integral expression (so -1,
+      // 2+2, or a short literal all work, not just bare Int/Long
+      // literals), evaluated once at analysis time.
+      "token_hashes" -> (exprs => checkArity("token_hashes", exprs, 1 to 2) match {
+        case Seq(text)      => TokenHashArray(text, 0L)
+        case Seq(text, mod) => TokenHashArray(text, foldToLong(mod, "token_hashes", "mod"))
+      }),
+      unary("simhash64")(SimHash64(_, 60)),
+      unary("nfc_normalize")(NfcNormalize(_)),
+      binary("intersection_size")(IntersectionSize(_, _)),
+      unary("pack_floats")(PackFloats(_)),
+      unary("unpack_floats")(UnpackFloats(_)),
+      binary("jaro_winkler")(JaroWinkler(_, _)),
+      unary("image_meta")(ImageMetaExpr(_)),
+      unary("audio_meta")(AudioMetaExpr(_)),
+      // SQL surface over Spark's internal bloom expressions (the names
+      // Catalyst itself uses, which FunctionRegistry does not expose;
+      // the analyzer wraps a bare AggregateFunction from a builder).
+      // bloom arg of might_contain must be a constant or scalar
+      // subquery: `might_contain((SELECT bloom_filter_agg(...) FROM t), x)`.
+      "bloom_filter_agg" -> (exprs => checkArity("bloom_filter_agg", exprs, 1 to 3) match {
+        case Seq(c)       => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c)
+        case Seq(c, n)    => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, n)
+        case Seq(c, n, b) => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, n, b)
+      }),
+      "might_contain" -> (exprs => {
+        val Seq(bloom, v) = checkArity("might_contain", exprs, 2 to 2)
+        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(bloom, v)
+      }))
+
+  /** Builders of fixed arity 1 and 2, checked by [[checkArity]]. */
+  private def unary(fn: String)(build: Expression => Expression): (String, Seq[Expression] => Expression) =
+    fn -> { exprs => val Seq(a) = checkArity(fn, exprs, 1 to 1); build(a) }
+
+  private def binary(fn: String)(build: (Expression, Expression) => Expression)
+      : (String, Seq[Expression] => Expression) =
+    fn -> { exprs => val Seq(a, b) = checkArity(fn, exprs, 2 to 2); build(a, b) }
 
   /** Clean arity failure (AnalysisException naming the function) for
     * builders — not an IndexOutOfBounds crash, and no silently-dropped

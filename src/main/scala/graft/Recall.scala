@@ -185,7 +185,7 @@ object Recall {
     * HURTS (round 11, VERDICT r10 item 2): 100k clustered vectors in
     * 100 cells, 100 queries, top-10. Times the factored pruned rungs
     * (LSH buckets, IVF probes, int8 scan) against the exact q41 plan
-    * (codegen'd FloatDotProduct brute force) on the identical task,
+    * (codegen'd `float_dot` brute force) on the identical task,
     * min-of-2 runs (first run swallows codegen), and scores each
     * rung's recall against the exact output. Committed into
     * RECALL.json's `timings` section; RecallSpec enforces the floors

@@ -1,8 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -17,17 +16,13 @@ import graft.multimodal.AudioHeaders
   * span, touches only header bytes of a potentially huge payload, and
   * `WHERE audio_meta(p) IS NOT NULL` prunes like any predicate.
   */
-case class AudioMetaExpr(child: Expression) extends UnaryExpression {
+case class AudioMetaExpr(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = AudioMetaExpr.schema
   override def nullable: Boolean = true
   override def prettyName: String = "audio_meta"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${t.simpleString(10)}")
-  }
+  override def inputTypes = Seq(BinaryType)
 
   override def nullSafeEval(bytes: Any): Any =
     AudioMetaExpr.metaRow(bytes.asInstanceOf[Array[Byte]])

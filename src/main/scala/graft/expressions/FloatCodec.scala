@@ -1,7 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, FloatType}
@@ -22,17 +21,13 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, FloatType}
   * non-null by contract) — failing loudly beats encoding a silent
   * placeholder.
   */
-case class PackFloats(child: Expression) extends UnaryExpression {
+case class PackFloats(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = BinaryType
 
   override def prettyName: String = "pack_floats"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${other.simpleString(10)}")
-  }
+  override def inputTypes = Seq(ArrayType(FloatType))
 
   override def nullSafeEval(a: Any): Any = {
     val arr = a.asInstanceOf[ArrayData]
@@ -83,17 +78,13 @@ case class PackFloats(child: Expression) extends UnaryExpression {
   * complete a 4-byte element are refused — a truncated vector is
   * corruption, not data.
   */
-case class UnpackFloats(child: Expression) extends UnaryExpression {
+case class UnpackFloats(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
 
   override def prettyName: String = "unpack_floats"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.simpleString(10)}")
-  }
+  override def inputTypes = Seq(BinaryType)
 
   override def nullSafeEval(a: Any): Any = {
     val b = a.asInstanceOf[Array[Byte]]

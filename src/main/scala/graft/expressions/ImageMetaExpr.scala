@@ -1,8 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -19,17 +18,13 @@ import graft.multimodal.ImageHeaders
   * null-ness is an ordinary Catalyst fact — so `WHERE image_meta(p) IS
   * NOT NULL` or a width filter prunes like any other predicate.
   */
-case class ImageMetaExpr(child: Expression) extends UnaryExpression {
+case class ImageMetaExpr(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = ImageMetaExpr.schema
   override def nullable: Boolean = true
   override def prettyName: String = "image_meta"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${t.simpleString(10)}")
-  }
+  override def inputTypes = Seq(BinaryType)
 
   override def nullSafeEval(bytes: Any): Any =
     ImageMetaExpr.metaRow(bytes.asInstanceOf[Array[Byte]])

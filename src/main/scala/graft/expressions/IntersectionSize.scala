@@ -1,7 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
@@ -19,20 +19,22 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * would otherwise silently read a null as 0.
   */
 case class IntersectionSize(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with ExpectsInputTypes with CodegenFallback {
 
   override def dataType: DataType = IntegerType
 
   override def prettyName: String = "intersection_size"
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, false), ArrayType(LongType, false)) => TypeCheckResult.TypeCheckSuccess
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckFailure(
+  override def inputTypes = Seq.fill(2)(ArrayType(LongType))
+
+  // domain rule on top of the type check: elements must be non-null
+  override def checkInputDataTypes(): TypeCheckResult = super.checkInputDataTypes() match {
+    case TypeCheckResult.TypeCheckSuccess
+        if children.exists(_.dataType.asInstanceOf[ArrayType].containsNull) =>
+      TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires non-null array elements (got a nullable-element array)")
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<bigint>, got ${l.simpleString(10)}, ${r.simpleString(10)}")
-    }
+    case result => result
+  }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = toSorted(a.asInstanceOf[ArrayData])

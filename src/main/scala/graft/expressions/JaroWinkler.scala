@@ -1,9 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
+import org.apache.spark.sql.internal.types.StringTypeWithCollation
+import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Jaro–Winkler string similarity as a native codegen'd expression —
@@ -32,17 +32,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * code point, the least surprising general-SQL contract.
   */
 case class JaroWinkler(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "jaro_winkler"
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (_: StringType, _: StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two strings, got ${l.simpleString(10)}, ${r.simpleString(10)}")
-    }
+  // any string type, whatever its collation
+  override def inputTypes =
+    Seq.fill(2)(StringTypeWithCollation(supportsTrimCollation = true))
 
   override def nullSafeEval(a: Any, b: Any): Any =
     JaroWinkler.similarity(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])

@@ -1,7 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -37,7 +36,7 @@ object MinHashScheme {
   * `list_min(list_transform(...))` mirror — signatures stay bit-exact.
   */
 case class MinHashSignature(child: Expression, numHashes: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
   import MinHashScheme.{base1, base2, prime}
 
@@ -47,11 +46,7 @@ case class MinHashSignature(child: Expression, numHashes: Int)
 
   override def prettyName: String = "minhash_signature"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint> of token hashes, got ${other.simpleString(10)}")
-  }
+  override def inputTypes = Seq(ArrayType(LongType)) // token hashes
 
   override def nullSafeEval(input: Any): Any = {
     val h = input.asInstanceOf[ArrayData]

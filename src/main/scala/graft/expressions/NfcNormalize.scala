@@ -1,8 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.internal.types.StringTypeWithCollation
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -20,16 +20,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * `UTF8String` untouched, no String materialization at all.
   */
 case class NfcNormalize(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "nfc_normalize"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${t.simpleString(10)}")
-  }
+  // any string type, whatever its collation
+  override def inputTypes = Seq(StringTypeWithCollation(supportsTrimCollation = true))
 
   override def nullSafeEval(s: Any): Any =
     NfcNormalize.normalize(s.asInstanceOf[UTF8String])

@@ -1,7 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -21,7 +20,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * for a tokenless doc; callers filter those the same way).
   */
 case class SimHash64(child: Expression, bits: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
   require(bits > 0 && bits <= 60, s"bits must be in (0, 60], got $bits")
 
@@ -31,11 +30,7 @@ case class SimHash64(child: Expression, bits: Int)
 
   override def prettyName: String = "simhash64"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint> of token hashes, got ${other.simpleString(10)}")
-  }
+  override def inputTypes = Seq(ArrayType(LongType)) // token hashes
 
   override def nullSafeEval(input: Any): Any = {
     val h = input.asInstanceOf[ArrayData]

@@ -1,8 +1,7 @@
 package graft.expressions
 
 import java.security.MessageDigest
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -31,17 +30,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * per-row call does the whole array's work.
   */
 case class TokenHashArray(child: Expression, mod: Long)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def prettyName: String = "token_hashes"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString(10)}")
-  }
+  // default collation only: a collated string is rejected
+  override def inputTypes = Seq(StringType)
 
   private val splitter = java.util.regex.Pattern.compile("[^a-z0-9]+")
 

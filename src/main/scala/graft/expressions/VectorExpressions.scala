@@ -1,7 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
@@ -61,39 +60,37 @@ object ZipDomain {
   }
 }
 
-/** Codegen'd dot product over two `array<float>` columns.
-  *
-  * The higher-order-function formulation
-  * (`aggregate(zip_with(a,b,*),0.0,+)`) evaluates an interpreted
-  * lambda per element — ~64 boxed calls per pair, which dominated the
-  * pairwise-similarity benchmarks. This expression compiles to a tight
+/** Codegen'd fold over two numeric arrays, Σ aᵢ·bᵢ or Σ (aᵢ−bᵢ)²,
+  * for one row of [[ZipFold.table]]. It replaces the HOF
+  * `aggregate(zip_with(a, b, f), zero, +)`, which evaluates an
+  * interpreted lambda per element (~64 boxed calls per pair, which
+  * dominated the pairwise-similarity benchmarks), with a tight
   * primitive loop inside whole-stage codegen.
   *
   * Numeric contract (DuckDB-oracle parity): each float is widened to
-  * double BEFORE the multiply, and accumulation is strictly sequential
-  * left-to-right — the identical IEEE sequence as the HOF version and
-  * as DuckDB's `list_sum(list_transform(v::DOUBLE[], ...))`, so results
-  * are bit-for-bit unchanged.
+  * double BEFORE the multiply or the subtraction (d = x−y, then d·d),
+  * and the sum is accumulated strictly left to right — the IEEE
+  * sequence of the HOF fold and of DuckDB's
+  * `list_sum(list_transform(v::DOUBLE[], ...))`, so every result (LSH
+  * plane bits, k-means assignments, cosines) is bit-identical. Integer
+  * elements fold exactly in 64 bits and throw on overflow, as the
+  * ANSI-mode HOF does.
   *
-  * Input types are enforced at analysis time: this expression is also
-  * registered on the SQL surface (GraftFunctions), where reading
-  * array<double> data through `getFloat` would otherwise return
-  * silent garbage.
+  * Input types are enforced at analysis time: the kernels are also
+  * SQL-registered (GraftFunctions), where reading array<double> data
+  * through `getFloat` would otherwise return silent garbage.
   */
-case class FloatDotProduct(left: Expression, right: Expression)
-    extends ZipKernel {
+case class ZipFold(op: ZipFold.Op, left: Expression, right: Expression)
+    extends ZipKernel with ExpectsInputTypes {
 
-  override def dataType: DataType = DoubleType
+  override def dataType: DataType = if (op.exact) LongType else DoubleType
 
-  override def prettyName: String = "float_dot"
+  override def prettyName: String = op.name
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<float>, array<float>), got (${l.simpleString(10)}, ${r.simpleString(10)})")
-    }
+  override def inputTypes = Seq(ArrayType(op.leftType), ArrayType(op.rightType))
+
+  // plans print `name(left, right)`, without the table row
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right)
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -101,315 +98,70 @@ case class FloatDotProduct(left: Expression, right: Expression)
     val n = foldLength(x, y)
     if (n < 0) return null
     var s = 0.0
+    var l = 0L
     var i = 0
     while (i < n) {
-      s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
+      if (op.exact) l = Math.addExact(l, Math.multiplyExact(x.getLong(i), y.getLong(i)))
+      else {
+        val u = ZipFold.widen(x, i, op.leftType)
+        val v = ZipFold.widen(y, i, op.rightType)
+        s += (if (op.sqDist) { val d = u - v; d * d } else u * v)
+      }
       i += 1
     }
-    s
+    if (op.exact) l else s
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => foldCode(ctx, ev, a, b) { n =>
       val s = ctx.freshName("s")
       val i = ctx.freshName("i")
+      def read(arr: String, t: DataType): String = t match {
+        case FloatType  => s"((double) $arr.getFloat($i))"
+        case DoubleType => s"$arr.getDouble($i)"
+        case _          => s"$arr.getLong($i)"
+      }
+      val (x, y) = (read(a, op.leftType), read(b, op.rightType))
+      val step =
+        if (op.exact) s"$s = Math.addExact($s, Math.multiplyExact($x, $y));"
+        else if (op.sqDist) {
+          val d = ctx.freshName("d")
+          s"double $d = $x - $y;\n$s += $d * $d;"
+        } else s"$s += $x * $y;"
       s"""
-         |double $s = 0.0;
+         |${if (op.exact) "long" else "double"} $s = ${if (op.exact) "0L" else "0.0"};
          |for (int $i = 0; $i < $n; $i++) {
-         |  $s += ((double) $a.getFloat($i)) * ((double) $b.getFloat($i));
+         |  $step
          |}
          |${ev.value} = $s;
        """.stripMargin
     })
 
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): FloatDotProduct =
+      newLeft: Expression, newRight: Expression): ZipFold =
     copy(left = newLeft, right = newRight)
 }
 
-/** Codegen'd dot product of an `array<float>` against an
-  * `array<double>` — the LSH plane-projection shape (round 11): the
-  * vector is float data, the hyperplane a double literal. Numeric
-  * contract identical to [[FloatDotProduct]]: widen the float, multiply
-  * in double, accumulate strictly left-to-right — the bit-identical
-  * IEEE sequence of the HOF `aggregate(zip_with(v, p, cast*), 0, +)`
-  * it replaces, so every plane SIGN BIT (and with it the judged LSH
-  * band layout and its DuckDB oracles) is unchanged; only the
-  * interpreter overhead goes (one boxed lambda call per element → a
-  * primitive loop inside whole-stage codegen).
-  */
-case class FloatDoubleDotProduct(left: Expression, right: Expression)
-    extends ZipKernel {
-
-  override def dataType: DataType = DoubleType
-
-  override def prettyName: String = "float_double_dot"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<float>, array<double>), got (${l.simpleString(10)}, ${r.simpleString(10)})")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = foldLength(x, y)
-    if (n < 0) return null
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      s += x.getFloat(i).toDouble * y.getDouble(i)
-      i += 1
-    }
-    s
+object ZipFold {
+  /** One kernel: its SQL name, its op (dot product or squared
+    * distance) and the element type of each side.
+    */
+  final case class Op(name: String, sqDist: Boolean, leftType: DataType, rightType: DataType) {
+    /** Long elements fold exactly in a long; float and double in a double. */
+    val exact: Boolean = leftType == LongType
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => foldCode(ctx, ev, a, b) { n =>
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += ((double) $a.getFloat($i)) * $b.getDouble($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+  val table: Map[String, Op] = Seq(
+    Op("float_dot", sqDist = false, FloatType, FloatType),
+    Op("float_double_dot", sqDist = false, FloatType, DoubleType),
+    Op("long_dot", sqDist = false, LongType, LongType),
+    Op("double_dot", sqDist = false, DoubleType, DoubleType),
+    Op("float_sqdist", sqDist = true, FloatType, FloatType),
+    Op("double_sqdist", sqDist = true, DoubleType, DoubleType)).map(o => o.name -> o).toMap
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): FloatDoubleDotProduct =
-    copy(left = newLeft, right = newRight)
-}
+  def apply(name: String, left: Expression, right: Expression): ZipFold =
+    ZipFold(table(name), left, right)
 
-/** Codegen'd integer dot product over two `array<bigint>` columns —
-  * the int8-quantized similarity scan (q63) shape (round 11). Exact
-  * 64-bit integer arithmetic, order-free, so unlike the float dots
-  * there is no sequencing contract to preserve: any evaluation order
-  * is bit-identical. Replaces the interpreted
-  * `aggregate(zip_with(a,b,*),0L,+)` lambda pair that dominated the
-  * quantized scan at corpus size.
-  *
-  * Domain contract: callers feed small-magnitude quantized values
-  * (|x| <= 127 in q63), so Σ x·y cannot approach 2⁶³; outside that
-  * bound this loop wraps silently where the ANSI-mode HOF would throw.
-  */
-case class LongDotProduct(left: Expression, right: Expression)
-    extends ZipKernel {
-
-  override def dataType: DataType = LongType
-
-  override def prettyName: String = "long_dot"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<bigint>, array<bigint>), got (${l.simpleString(10)}, ${r.simpleString(10)})")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = foldLength(x, y)
-    if (n < 0) return null
-    var s = 0L
-    var i = 0
-    while (i < n) {
-      s += x.getLong(i) * y.getLong(i)
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => foldCode(ctx, ev, a, b) { n =>
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getLong($i) * $b.getLong($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LongDotProduct =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Codegen'd squared L2 distance over two `array<double>` columns —
-  * the PQ/k-means assignment shape (round 17): both sides are already
-  * double (sub-vector slices vs. a quantized codebook). Numeric
-  * contract identical to the HOF
-  * `aggregate(zip_with(a,b,(x,y)=>(x-y)*(x-y)),0.0,+)` it replaces:
-  * per element d = x−y, then d·d, accumulated strictly left-to-right —
-  * the bit-identical IEEE sequence, so every judged distance (and its
-  * DuckDB oracle) is unchanged; only the per-element boxed lambda
-  * overhead goes.
-  */
-case class DoubleSqDist(left: Expression, right: Expression)
-    extends ZipKernel {
-
-  override def dataType: DataType = DoubleType
-
-  override def prettyName: String = "double_sqdist"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<double>, array<double>), got (${l.simpleString(10)}, ${r.simpleString(10)})")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = foldLength(x, y)
-    if (n < 0) return null
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      val d = x.getDouble(i) - y.getDouble(i)
-      s += d * d
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => foldCode(ctx, ev, a, b) { n =>
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      val dv = ctx.freshName("d")
-      s"""
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $dv = $a.getDouble($i) - $b.getDouble($i);
-         |  $s += $dv * $dv;
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DoubleSqDist =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Codegen'd squared L2 distance over two `array<float>` columns —
-  * the k-means assignment shape (round 18): raw float embeddings
-  * against float centroid rows. Numeric contract identical to the HOF
-  * `aggregate(zip_with(a,b,(x,y)=>(cast(x as double)-cast(y as double))
-  * *(...)),0.0,+)` it replaces: widen each float to double, d = x−y,
-  * then d·d, accumulated strictly left-to-right — the bit-identical
-  * IEEE sequence, so every judged distance (and its DuckDB oracle) is
-  * unchanged; only the per-element boxed lambda overhead goes.
-  */
-case class FloatSqDist(left: Expression, right: Expression)
-    extends ZipKernel {
-
-  override def dataType: DataType = DoubleType
-
-  override def prettyName: String = "float_sqdist"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<float>, array<float>), got (${l.simpleString(10)}, ${r.simpleString(10)})")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = foldLength(x, y)
-    if (n < 0) return null
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble
-      s += d * d
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => foldCode(ctx, ev, a, b) { n =>
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      val dv = ctx.freshName("d")
-      s"""
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $dv = ((double) $a.getFloat($i)) - ((double) $b.getFloat($i));
-         |  $s += $dv * $dv;
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): FloatSqDist =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Codegen'd dot product over two `array<double>` columns — the
-  * double-vector sibling of [[FloatDotProduct]] (round 17), same
-  * strictly-sequential accumulation contract.
-  */
-case class DoubleDotProduct(left: Expression, right: Expression)
-    extends ZipKernel {
-
-  override def dataType: DataType = DoubleType
-
-  override def prettyName: String = "double_dot"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<double>, array<double>), got (${l.simpleString(10)}, ${r.simpleString(10)})")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = foldLength(x, y)
-    if (n < 0) return null
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      s += x.getDouble(i) * y.getDouble(i)
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => foldCode(ctx, ev, a, b) { n =>
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DoubleDotProduct =
-    copy(left = newLeft, right = newRight)
+  private def widen(d: ArrayData, i: Int, t: DataType): Double =
+    if (t == FloatType) d.getFloat(i).toDouble else d.getDouble(i)
 }

@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.functions._
+import graft.expressions.ZipFold
 
 /** Vector math over `array<float>` embedding columns as pure Column
   * expressions (higher-order functions — codegen'd, no UDF).
@@ -14,14 +16,14 @@ import org.apache.spark.sql.functions._
   */
 object VectorFunctions {
 
-  /** Σ aᵢ·bᵢ — codegen'd tight loop (see FloatDotProduct); bit-identical
+  /** The codegen'd [[ZipFold]] kernel named `name` over two array columns. */
+  private def kernel(name: String, a: Column, b: Column): Column =
+    column(ZipFold(name, expression(a), expression(b)))
+
+  /** Σ aᵢ·bᵢ — codegen'd tight loop (`float_dot`); bit-identical
     * to the sequential HOF fold it replaced.
     */
-  def dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(
-      graft.expressions.FloatDotProduct(
-        org.apache.spark.sql.GraftSqlBridge.expression(a),
-        org.apache.spark.sql.GraftSqlBridge.expression(b)))
+  def dot(a: Column, b: Column): Column = kernel("float_dot", a, b)
 
   /** Σ aᵢ² — dot(a, a). */
   def normSq(a: Column): Column = dot(a, a)
@@ -31,65 +33,41 @@ object VectorFunctions {
     * scalar, so a vector travels as one binary cell).
     */
   def packFloats(a: Column): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(
-      graft.expressions.PackFloats(
-        org.apache.spark.sql.GraftSqlBridge.expression(a)))
+    column(graft.expressions.PackFloats(expression(a)))
 
   /** Packed bytes → `array<float>` (inverse of [[packFloats]]). */
   def unpackFloats(a: Column): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(
-      graft.expressions.UnpackFloats(
-        org.apache.spark.sql.GraftSqlBridge.expression(a)))
+    column(graft.expressions.UnpackFloats(expression(a)))
 
   /** Σ aᵢ·bᵢ over `array<bigint>` — codegen'd tight loop
-    * (LongDotProduct). Exact integer arithmetic: order-free, so no
-    * sequencing contract is needed for oracle parity.
+    * (`long_dot`). Exact integer arithmetic that throws on overflow:
+    * order-free, so no sequencing contract is needed for oracle parity.
     */
-  def longDot(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(
-      graft.expressions.LongDotProduct(
-        org.apache.spark.sql.GraftSqlBridge.expression(a),
-        org.apache.spark.sql.GraftSqlBridge.expression(b)))
+  def longDot(a: Column, b: Column): Column = kernel("long_dot", a, b)
 
   /** Σ aᵢ·bᵢ of an `array<float>` against an `array<double>` —
-    * codegen'd tight loop (FloatDoubleDotProduct); bit-identical to
+    * codegen'd tight loop (`float_double_dot`); bit-identical to
     * the sequential HOF fold it replaces. The IVF/kNN coarse-probe
     * shape: float vectors scored against double centroid vectors.
     */
-  def dotFD(f: Column, dd: Column): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(
-      graft.expressions.FloatDoubleDotProduct(
-        org.apache.spark.sql.GraftSqlBridge.expression(f),
-        org.apache.spark.sql.GraftSqlBridge.expression(dd)))
+  def dotFD(f: Column, dd: Column): Column = kernel("float_double_dot", f, dd)
 
   /** Σ (aᵢ−bᵢ)² over two `array<double>` columns — codegen'd tight
-    * loop (DoubleSqDist); per element d = x−y then d·d, accumulated
+    * loop (`double_sqdist`); per element d = x−y then d·d, accumulated
     * left-to-right: the bit-identical IEEE sequence of the HOF
     * `aggregate(zip_with(a,b,(x,y)=>(x-y)*(x-y)),0.0,+)` it replaces.
     */
-  def sqDistD(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(
-      graft.expressions.DoubleSqDist(
-        org.apache.spark.sql.GraftSqlBridge.expression(a),
-        org.apache.spark.sql.GraftSqlBridge.expression(b)))
+  def sqDistD(a: Column, b: Column): Column = kernel("double_sqdist", a, b)
 
   /** Σ (aᵢ−bᵢ)² over two `array<float>` columns — codegen'd tight loop
-    * (FloatSqDist); each float widened to double before subtraction,
+    * (`float_sqdist`); each float widened to double before subtraction,
     * bit-identical to the sequential HOF fold it replaces. The k-means
     * assignment shape: raw embeddings against float centroid rows.
     */
-  def sqDistF(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(
-      graft.expressions.FloatSqDist(
-        org.apache.spark.sql.GraftSqlBridge.expression(a),
-        org.apache.spark.sql.GraftSqlBridge.expression(b)))
+  def sqDistF(a: Column, b: Column): Column = kernel("float_sqdist", a, b)
 
-  /** Σ aᵢ·bᵢ over two `array<double>` columns — codegen'd (DoubleDotProduct). */
-  def dotD(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(
-      graft.expressions.DoubleDotProduct(
-        org.apache.spark.sql.GraftSqlBridge.expression(a),
-        org.apache.spark.sql.GraftSqlBridge.expression(b)))
+  /** Σ aᵢ·bᵢ over two `array<double>` columns — codegen'd (`double_dot`). */
+  def dotD(a: Column, b: Column): Column = kernel("double_dot", a, b)
 
   def l2Norm(a: Column): Column = sqrt(normSq(a))
 
@@ -101,19 +79,13 @@ object VectorFunctions {
 
   /** Sign-bit of a vector against a fixed hyperplane (random-projection
     * LSH). The plane rides as an array literal column. Projection runs
-    * through the codegen'd FloatDoubleDotProduct (round 11) — the
+    * through the codegen'd `float_double_dot` (round 11) — the
     * bit-identical IEEE sequence of the HOF fold it replaced, so every
     * judged band layout and oracle is unchanged; banding a large corpus
     * is no longer interpreter-bound.
     */
-  def planeBit(v: Column, plane: Seq[Double]): Column = {
-    val p = array(plane.map(lit): _*)
-    val proj = org.apache.spark.sql.GraftSqlBridge.column(
-      graft.expressions.FloatDoubleDotProduct(
-        org.apache.spark.sql.GraftSqlBridge.expression(v),
-        org.apache.spark.sql.GraftSqlBridge.expression(p)))
-    when(proj >= 0, 1).otherwise(0)
-  }
+  def planeBit(v: Column, plane: Seq[Double]): Column =
+    when(dotFD(v, array(plane.map(lit): _*)) >= 0, 1).otherwise(0)
 
   /** Pack `bitsPerBand` plane-bits into an int bucket id per band. */
   def bandBucket(v: Column, planes: Seq[Seq[Double]]): Column =

@@ -10,9 +10,8 @@ import org.apache.spark.sql.functions.floor
   * any IEEE-754 double on both engines. Every judged query that
   * quantizes a derived double before a comparison, argmax, or output
   * hash must use THIS form on both the Spark side and the DuckDB
-  * oracle so a halfway-decimal value cannot flip across engines
-  * (convention documented at Similarity.scala quant6; hoisted here in
-  * round 10 so non-Similarity groups share one definition).
+  * oracle so a halfway-decimal value cannot flip across engines; the
+  * two forms below must stay in lockstep.
   */
 object Quant {
   def quant6(c: Column): Column = floor(c * 1000000.0 + 0.5) / 1000000.0

@@ -557,7 +557,7 @@ object Relational extends QueryGroup {
         .select(col("vec_id"), col("label"),
                 size(col("embedding")).cast("long").as("dim"),
                 round(element_at(col("embedding"), 1).cast("double"), 4).as("first_val"),
-                // codegen'd FloatDotProduct self-dot (round 18, guide
+                // codegen'd `float_dot` self-dot (round 18, guide
                 // §4): bit-identical accumulation to the HOF fold it
                 // replaces, evaluated once per corpus row
                 round(sqrt(graft.functions.VectorFunctions.normSq(col("embedding"))), 4)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.{QueryGroup, Tables}
 import graft.functions.VectorFunctions._
 import graft.Tables.GraftCheckpointOps
+import Quant.{quant6, quant6Sql}
 
 /** Similarity search over the embeddings table.
   *
@@ -70,16 +71,6 @@ object Similarity extends QueryGroup {
     Tables.fanOut(Tables.embeddings(s, d))
       .select(col("vec_id"), col("label"), col("embedding"),
               l2Norm(col("embedding")).as("nrm"))
-
-  /** 6dp quantization via floor(x*1e6 + 0.5)/1e6 — NOT round(x, 6):
-    * round's halfway-decimal behavior differs between Spark (binary
-    * expansion) and DuckDB (scaled multiply), while floor is
-    * identically defined for any double on both. The Spark and SQL
-    * forms below must stay in lockstep (q44 and q62 both hash against
-    * oracles built from [[quant6Sql]]).
-    */
-  private def quant6(c: Column): Column = Quant.quant6(c)
-  private def quant6Sql(e: String): String = s"floor($e * 1000000.0 + 0.5) / 1000000.0"
 
   // ------------------------------------------------------------------
   // Factored ANN-ladder operator surface (round 10, VERDICT item 1).
@@ -772,7 +763,7 @@ object Similarity extends QueryGroup {
       val init = svd.filter(col("vec_id") < seeds)
         .select(col("m"), col("vec_id").as("cid"), col("sd").as("cv"))
       // codegen'd squared distance (round 17) — bit-identical IEEE
-      // sequence of the HOF fold it replaces (see DoubleSqDist)
+      // sequence of the HOF fold it replaces (see ZipFold)
       def sqd(a: Column, b: Column): Column = sqDistD(a, b)
       def assign(to: DataFrame): DataFrame = svd.join(broadcast(to), Seq("m"))
         .groupBy("vec_id", "m")
@@ -1546,7 +1537,7 @@ object Similarity extends QueryGroup {
       val q = e.filter(col("vec_id") < numQueries)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
       def prefixCos(m: Int): Column = {
-        // codegen'd FloatDotProduct over the prefix slices (round 18,
+        // codegen'd `float_dot` over the prefix slices (round 18,
         // guide §4): widen-then-multiply, left-to-right accumulation —
         // bit-identical to the interpreted HOF folds it replaces,
         // which ran 12× per candidate pair (4 prefixes × dp + 2 norms)
@@ -1697,7 +1688,7 @@ object Similarity extends QueryGroup {
         .agg(transform(array_sort(collect_list(struct(col("q"), col("c")))),
                        t => t.getField("c")).as("crow"))
         .graftCheckpoint()
-      // codegen'd DoubleDotProduct (round 18, guide §4) — same
+      // codegen'd `double_dot` (round 18, guide §4) — same
       // left-to-right accumulation as the HOF fold it replaces
       def fold2(a: Column, b: Column): Column = dotD(a, b)
       def matvec(v: DataFrame): DataFrame = covRows.crossJoin(broadcast(v))

@@ -3,7 +3,7 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge to the `private[sql]` Column ↔ Expression converters, so
-  * graft's custom Catalyst expressions (e.g. FloatDotProduct) can be
+  * graft's custom Catalyst expressions (e.g. ZipFold) can be
   * exposed as ordinary `Column`s. Standard extension-package pattern:
   * Spark 4 routes Column construction through
   * `classic.ExpressionUtils` (columnNodeSupport.scala) and no longer

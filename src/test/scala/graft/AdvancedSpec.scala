@@ -102,6 +102,41 @@ class AdvancedSpec extends AnyFunSuite with SparkFixture {
     assert(row.getAs[Int]("isz") == 2)
   }
 
+  test("every SQL builder rejects a wrong-typed argument and a wrong argument count at analysis") {
+    GraftFunctions.register(spark)
+    // name -> (valid arguments at the minimum arity, maximum arity,
+    //          (position, a wrong-typed argument, its SQL type))
+    val calls = Map(
+      "float_dot" -> (Seq("array(1.0f)", "array(2.0f)"), 2, (0, "array(1.0d)", "ARRAY<DOUBLE>")),
+      "float_double_dot" -> (Seq("array(1.0f)", "array(2.0d)"), 2, (1, "array(2.0f)", "ARRAY<FLOAT>")),
+      "long_dot" -> (Seq("array(1L)", "array(2L)"), 2, (0, "array(1)", "ARRAY<INT>")),
+      "minhash_signature" -> (Seq("array(1L, 2L, 3L)"), 1, (0, "array(1, 2, 3)", "ARRAY<INT>")),
+      "token_hashes" -> (Seq("'a b'"), 2, (0, "1L", "BIGINT")),
+      "simhash64" -> (Seq("array(1L)"), 1, (0, "1L", "BIGINT")),
+      "nfc_normalize" -> (Seq("'a'"), 1, (0, "1", "INT")),
+      "intersection_size" -> (Seq("array(1L)", "array(2L)"), 2, (1, "array('x')", "ARRAY<STRING>")),
+      "pack_floats" -> (Seq("array(1.0f)"), 1, (0, "array(1.0d)", "ARRAY<DOUBLE>")),
+      "unpack_floats" -> (Seq("X'00000000'"), 1, (0, "'x'", "STRING")),
+      "jaro_winkler" -> (Seq("'a'", "'b'"), 2, (1, "1", "INT")),
+      "image_meta" -> (Seq("X'00'"), 1, (0, "'x'", "STRING")),
+      "audio_meta" -> (Seq("X'00'"), 1, (0, "1", "INT")),
+      "bloom_filter_agg" -> (Seq("1L"), 3, (0, "1.0d", "DOUBLE")),
+      "might_contain" -> (Seq("X'00'", "1L"), 2, (1, "'x'", "STRING")))
+    assert(calls.keySet == GraftFunctions.builders.map(_._1).toSet)
+    def analyze(fn: String, args: Seq[String]) =
+      intercept[org.apache.spark.sql.AnalysisException](spark.sql(s"SELECT $fn(${args.mkString(", ")})"))
+    calls.foreach { case (fn, (args, maxArity, (pos, wrong, wrongType))) =>
+      val typed = analyze(fn, args.updated(pos, wrong))
+      assert(typed.getMessage.contains(fn) && typed.getMessage.contains(s""""$wrongType""""),
+        s"$fn: ${typed.getMessage}")
+      for (n <- Seq(args.length - 1, maxArity + 1)) {
+        val arity = analyze(fn, Seq.fill(n)(args.last))
+        assert(arity.getCondition.startsWith("WRONG_NUM_ARGS") && arity.getMessage.contains(fn),
+          s"$fn with $n arguments: ${arity.getMessage}")
+      }
+    }
+  }
+
   test("token_hashes mod accepts any foldable integral expression and rejects others cleanly") {
     GraftFunctions.register(spark)
     // negative literal parses as UnaryMinus(Literal) — foldable, must work

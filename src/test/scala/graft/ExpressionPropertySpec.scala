@@ -55,7 +55,7 @@ class ExpressionPropertySpec extends AnyFunSuite with SparkFixture {
       Seq.fill(64)(rnd.nextGaussian()))) :+ ((Seq.empty[Float], Seq.empty[Double]))
     val diff = rows.toDF("v", "p").select(
         org.apache.spark.sql.GraftSqlBridge.column(
-          graft.expressions.FloatDoubleDotProduct(
+          graft.expressions.ZipFold("float_double_dot",
             org.apache.spark.sql.GraftSqlBridge.expression(col("v")),
             org.apache.spark.sql.GraftSqlBridge.expression(col("p")))).as("fast"),
         aggregate(zip_with(col("v"), col("p"), (x, y) => x.cast("double") * y),
@@ -85,23 +85,32 @@ class ExpressionPropertySpec extends AnyFunSuite with SparkFixture {
   }
 
   test("LongDotProduct equals the HOF integer fold on the int8 domain, including empty") {
-    // Domain contract: inputs are int8-quantized (|x| <= 127), so no
-    // 64-bit overflow is reachable (the codegen loop would wrap
-    // silently where the ANSI HOF throws — the bound is what makes
-    // them equivalent).
+    // On the int8 domain (|x| <= 127) no 64-bit overflow is reachable;
+    // past it the kernel throws, as the ANSI-mode HOF does.
     import spark.implicits._
+    import org.apache.spark.sql.Column
     import graft.functions.VectorFunctions.longDot
     val rows = Seq.fill(300)((
       Seq.fill(64)((rnd.nextInt(255) - 127).toLong),
       Seq.fill(64)((rnd.nextInt(255) - 127).toLong))) :+
       ((Seq.empty[Long], Seq.empty[Long]))
+    def hof(a: Column, b: Column): Column =
+      aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, t) => acc + t)
     val diff = rows.toDF("a", "b").select(
         longDot(col("a"), col("b")).as("fast"),
-        aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
-                  lit(0L), (acc, t) => acc + t).as("hof"))
+        hof(col("a"), col("b")).as("hof"))
       .filter(col("fast") =!= col("hof"))
       .count()
     assert(diff == 0, s"$diff random long vectors diverged from the HOF integer fold")
+    // the overflow row Long.MaxValue * 2, once as local data (the
+    // optimizer folds it through eval) and once off a range (codegen)
+    val overflow = Seq(Seq((Seq(Long.MaxValue), Seq(2L))).toDF("a", "b"),
+      spark.range(1).select(array(col("id") + Long.MaxValue).as("a"), array(lit(2L)).as("b")))
+    for (df <- overflow; fold <- Seq[(Column, Column) => Column](longDot, hof)) {
+      val e = intercept[Exception](df.select(fold(col("a"), col("b"))).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), s"expected an overflow, got $e")
+    }
   }
 
   test("vector kernels are null exactly where their HOF folds are: ragged lengths, null elements") {
@@ -111,30 +120,34 @@ class ExpressionPropertySpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-    import org.apache.spark.sql.catalyst.expressions.Expression
     def vec[T](draw: => T): Seq[Option[T]] =
       Seq.fill(Seq(0, 3, 3, 3, 4)(rnd.nextInt(5)))(if (rnd.nextInt(8) == 0) None else Some(draw))
+    // plus full 64-dim null-free rows, where the folds must agree bit for bit
+    def full[T](draw: => T): Seq[Option[T]] = Seq.fill(64)(Some(draw))
     val rows = Seq.fill(400)((vec(rnd.nextGaussian().toFloat), vec(rnd.nextGaussian().toFloat),
       vec(rnd.nextGaussian()), vec(rnd.nextGaussian()),
-      vec((rnd.nextInt(255) - 127).toLong), vec((rnd.nextInt(255) - 127).toLong)))
+      vec((rnd.nextInt(255) - 127).toLong), vec((rnd.nextInt(255) - 127).toLong))) ++
+      Seq.fill(100)((full(rnd.nextGaussian().toFloat), full(rnd.nextGaussian().toFloat),
+        full(rnd.nextGaussian()), full(rnd.nextGaussian()),
+        full((rnd.nextInt(255) - 127).toLong), full((rnd.nextInt(255) - 127).toLong)))
     val df = rows.toDF("fa", "fb", "da", "db", "la", "lb")
-    def kernel(k: (Expression, Expression) => Expression, a: String, b: String): Column =
-      column(k(expression(col(a)), expression(col(b))))
+    def kernel(name: String, a: String, b: String): Column =
+      column(graft.expressions.ZipFold(name, expression(col(a)), expression(col(b))))
     def hof(a: String, b: String, zero: Column)(f: (Column, Column) => Column): Column =
       aggregate(zip_with(col(a), col(b), f), zero, (acc, t) => acc + t)
     def d(c: Column): Column = c.cast("double")
     val cases: Seq[(String, Column, Column)] = Seq(
-      ("float_dot", kernel(graft.expressions.FloatDotProduct, "fa", "fb"),
+      ("float_dot", kernel("float_dot", "fa", "fb"),
         hof("fa", "fb", lit(0.0))((x, y) => d(x) * d(y))),
-      ("float_double_dot", kernel(graft.expressions.FloatDoubleDotProduct, "fa", "db"),
+      ("float_double_dot", kernel("float_double_dot", "fa", "db"),
         hof("fa", "db", lit(0.0))((x, y) => d(x) * y)),
-      ("long_dot", kernel(graft.expressions.LongDotProduct, "la", "lb"),
+      ("long_dot", kernel("long_dot", "la", "lb"),
         hof("la", "lb", lit(0L))(_ * _)),
-      ("double_sqdist", kernel(graft.expressions.DoubleSqDist, "da", "db"),
+      ("double_sqdist", kernel("double_sqdist", "da", "db"),
         hof("da", "db", lit(0.0))((x, y) => (x - y) * (x - y))),
-      ("float_sqdist", kernel(graft.expressions.FloatSqDist, "fa", "fb"),
+      ("float_sqdist", kernel("float_sqdist", "fa", "fb"),
         hof("fa", "fb", lit(0.0))((x, y) => (d(x) - d(y)) * (d(x) - d(y)))),
-      ("double_dot", kernel(graft.expressions.DoubleDotProduct, "da", "db"),
+      ("double_dot", kernel("double_dot", "da", "db"),
         hof("da", "db", lit(0.0))(_ * _)))
     cases.foreach { case (name, fast, ref) =>
       val out = df.select(fast.as("fast"), ref.as("hof"))
