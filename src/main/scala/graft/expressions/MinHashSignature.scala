@@ -46,7 +46,7 @@ case class MinHashSignature(child: Expression, numHashes: Int)
 
   override def prettyName: String = "minhash_signature"
 
-  override def inputTypes = Seq(ArrayType(LongType)) // token hashes
+  override def inputTypes = Seq(ArrayType(LongType))
 
   override def nullSafeEval(input: Any): Any = {
     val h = input.asInstanceOf[ArrayData]

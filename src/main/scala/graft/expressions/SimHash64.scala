@@ -30,7 +30,7 @@ case class SimHash64(child: Expression, bits: Int)
 
   override def prettyName: String = "simhash64"
 
-  override def inputTypes = Seq(ArrayType(LongType)) // token hashes
+  override def inputTypes = Seq(ArrayType(LongType))
 
   override def nullSafeEval(input: Any): Any = {
     val h = input.asInstanceOf[ArrayData]

@@ -122,6 +122,7 @@ case class ZipFold(op: ZipFold.Op, left: Expression, right: Expression)
         case _          => s"$arr.getLong($i)"
       }
       val (x, y) = (read(a, op.leftType), read(b, op.rightType))
+      val (acc, zero) = if (op.exact) ("long", "0L") else ("double", "0.0")
       val step =
         if (op.exact) s"$s = Math.addExact($s, Math.multiplyExact($x, $y));"
         else if (op.sqDist) {
@@ -129,7 +130,7 @@ case class ZipFold(op: ZipFold.Op, left: Expression, right: Expression)
           s"double $d = $x - $y;\n$s += $d * $d;"
         } else s"$s += $x * $y;"
       s"""
-         |${if (op.exact) "long" else "double"} $s = ${if (op.exact) "0L" else "0.0"};
+         |$acc $s = $zero;
          |for (int $i = 0; $i < $n; $i++) {
          |  $step
          |}
