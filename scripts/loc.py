@@ -1,12 +1,15 @@
 #!/usr/bin/env python3
 """Count non-blank, non-comment lines of the main Scala sources.
 
-Usage: python3 scripts/loc.py [root]    (root defaults to src/main/scala)
+Usage: python3 scripts/loc.py              (the whole of src/main/scala)
+       python3 scripts/loc.py PATH [PATH ...]
 
-Prints the total, then one line per package directory (relative to the
-root), largest first. A line counts unless it is blank, a `//` line
-comment, or lies inside a `/* ... */` block comment (code after the
-closing `*/` on the same line counts).
+With no argument it prints the total, then one line per package
+directory (relative to src/main/scala), largest first. With arguments,
+each a `.scala` file or a directory, it prints one `<count> <path>` line
+per argument (a directory counts every `.scala` file under it). A line counts unless it is blank, a `//` line comment, or lies
+inside a `/* ... */` block comment (code after the closing `*/` on the
+same line counts).
 """
 import collections
 import os
@@ -34,14 +37,23 @@ def count_file(path):
     return n
 
 
+def scala_files(root):
+    """`root` itself if it is a file, else every `.scala` file under it."""
+    if os.path.isfile(root):
+        return [root]
+    return [os.path.join(d, name) for d, _, files in os.walk(root)
+            for name in files if name.endswith(".scala")]
+
+
 def main():
-    root = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "..", "src", "main", "scala")
+    if len(sys.argv) > 1:
+        for path in sys.argv[1:]:
+            print(f"{sum(map(count_file, scala_files(path)))} {path}")
+        return
+    root = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "src", "main", "scala")
     per = collections.Counter()
-    for d, _, files in os.walk(root):
-        for name in files:
-            if name.endswith(".scala"):
-                per[os.path.relpath(d, root)] += count_file(os.path.join(d, name))
+    for path in scala_files(root):
+        per[os.path.relpath(os.path.dirname(path), root)] += count_file(path)
     print(f"total {sum(per.values())}")
     for pkg, n in sorted(per.items(), key=lambda kv: (-kv[1], kv[0])):
         print(f"{pkg} {n}")

@@ -17,7 +17,7 @@ import org.apache.spark.sql.connector.expressions.{SortDirection, SortOrder => V
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN, SupportsReportStatistics, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -132,7 +132,7 @@ class AvroFrameTable(schema: StructType, options: CaseInsensitiveStringMap)
 
   /** Row-level DELETE (`DELETE FROM cat.ns.t WHERE …`) — the DSv2
     * delete rung. Accepted when every conjunct is a filter the engine
-    * evaluates exactly ([[AvroFrames.supported]], plus the bare
+    * evaluates exactly ([[FrameFilter.supported]], plus the bare
     * `DELETE FROM t` always-true case) and the relation is the CURRENT
     * table (a time-travel snapshot is immutable by definition).
     * Execution is [[FrameMaintenance.deleteWhere]]: metadata-only for
@@ -144,7 +144,7 @@ class AvroFrameTable(schema: StructType, options: CaseInsensitiveStringMap)
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     !isSnapshot && filters.forall {
       case org.apache.spark.sql.sources.AlwaysTrue() => true
-      case f => AvroFrames.supported(schema, f)
+      case f => FrameFilter.supported(schema, f)
     }
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
@@ -306,10 +306,10 @@ class AvroFrameScanBuilder(fullSchema: StructType, options: CaseInsensitiveStrin
       // their unmatched rows — so the condition prunes SEGMENTS only,
       // never rows. Everything is returned as not-pushed: Spark keeps
       // row-filtering responsibility wherever it needs it.
-      pruneOnly = filters.filter(AvroFrames.supported(fullSchema, _))
+      pruneOnly = filters.filter(FrameFilter.supported(fullSchema, _))
       return filters
     }
-    val (sup, unsup) = filters.partition(AvroFrames.supported(fullSchema, _))
+    val (sup, unsup) = filters.partition(FrameFilter.supported(fullSchema, _))
     pushed = sup
     unsup // Spark evaluates these post-scan; the pushed ones it trusts to us
   }
@@ -483,7 +483,7 @@ class AvroFrameScan(path: String, avroSchemaJson: String, schemaId: Int,
       else Some((pv: Long) => {
         val (lo, hi) = tp.boundsUs(pv)
         val synthetic = Map(tp.col -> ((0L, Long.box(lo): Any, Long.box(hi): Any)))
-        fs.forall(AvroFrameStats.mayMatch(1L, synthetic, _))
+        fs.forall(FrameFilter.mayMatch(1L, synthetic, _))
       })
     }
 
@@ -702,8 +702,8 @@ class AvroFrameScan(path: String, avroSchemaJson: String, schemaId: Int,
           read.foreach { case (_, fields) =>
             val (n, lo, hi) = fields(f.name)
             nulls += n
-            if (lo != null && (mn == null || AvroFrameStats.compare(lo, mn) < 0)) mn = lo
-            if (hi != null && (mx == null || AvroFrameStats.compare(hi, mx) > 0)) mx = hi
+            if (lo != null && (mn == null || FrameFilter.compare(lo, mn) < 0)) mn = lo
+            if (hi != null && (mx == null || FrameFilter.compare(hi, mx) > 0)) mx = hi
           }
           val (minV, maxV) =
             (AvroFrameStats.toCatalyst(mn, f.dataType), AvroFrameStats.toCatalyst(mx, f.dataType))
@@ -1430,7 +1430,7 @@ private[sources] final class FrameProjection(
       .getOrElse(spark(c).dataType))
   }
   private val preds: Array[GenericRecord => Boolean] =
-    pushed.map(AvroFrames.compile(fieldPos, _))
+    pushed.map(FrameFilter.compile(fieldPos, _))
 
   def matches(rec: GenericRecord): Boolean = preds.forall(_(rec))
 }
@@ -1624,7 +1624,7 @@ class AvroFrameAggReader(files: Seq[String], avroSchemaJson: String,
   }
 
   private def merge(i: Int, v: Any, sign: Int): Unit =
-    if (extremes(i) == null || AvroFrameStats.compare(v, extremes(i)) * sign > 0)
+    if (extremes(i) == null || FrameFilter.compare(v, extremes(i)) * sign > 0)
       extremes(i) = v
 
   private def normalize(v: Any): Any = v match {
@@ -1714,9 +1714,9 @@ class AvroFrameAggReader(files: Seq[String], avroSchemaJson: String,
     if (walk == null) Array.empty else walk.metrics
 }
 
-/** Shared helpers: Avro→Spark schema mapping, value conversion, the
-  * supported-filter predicate compiler, and the segment writer used by
-  * tests/fixtures to produce the on-disk format.
+/** Shared helpers: Avro→Spark schema mapping, value conversion, and
+  * the segment writer used by tests/fixtures to produce the on-disk
+  * format.
   */
 object AvroFrames {
 
@@ -1957,145 +1957,6 @@ object AvroFrames {
     case b: java.nio.ByteBuffer =>
       val arr = new Array[Byte](b.remaining()); b.duplicate().get(arr); arr
     case other => other // Int/Long/Float/Double/Boolean box straight through
-  }
-
-  /** Which catalyst source Filters the reader evaluates exactly:
-    * comparisons, null tests, and IN on top-level fields of orderable
-    * primitive type, plus AND/OR/NOT compositions of those (round 14 —
-    * evaluated with SQL three-valued logic, so `NOT x = 1` still drops
-    * a NULL x exactly like Spark's own post-scan Filter would), plus
-    * the string-match shapes `LIKE 'p%'` / `'%s'` / `'%m%'`
-    * (round 15 — StartsWith additionally prunes segments whose sidecar
-    * min/max truncations exclude the prefix). Everything else stays
-    * post-scan.
-    */
-  def supported(schema: StructType, f: Filter): Boolean = {
-    def ok(col: String): Boolean = schema.fieldNames.contains(col) &&
-      (schema(col).dataType match {
-        case _: StringType | _: IntegerType | _: LongType | _: FloatType |
-             _: DoubleType | _: BooleanType => true
-        case _ => false
-      })
-    f match {
-      case EqualTo(c, v)            => ok(c) && v != null
-      case GreaterThan(c, _)        => ok(c)
-      case GreaterThanOrEqual(c, _) => ok(c)
-      case LessThan(c, _)           => ok(c)
-      case LessThanOrEqual(c, _)    => ok(c)
-      case IsNotNull(c)             => ok(c)
-      case IsNull(c)                => ok(c)
-      case In(c, vs)                => ok(c) && vs.forall(_ != null)
-      case org.apache.spark.sql.sources.StringStartsWith(c, v) =>
-        v != null && schema.fieldNames.contains(c) && schema(c).dataType == StringType
-      case org.apache.spark.sql.sources.StringEndsWith(c, v) =>
-        v != null && schema.fieldNames.contains(c) && schema(c).dataType == StringType
-      case org.apache.spark.sql.sources.StringContains(c, v) =>
-        v != null && schema.fieldNames.contains(c) && schema(c).dataType == StringType
-      case org.apache.spark.sql.sources.And(l, r) => supported(schema, l) && supported(schema, r)
-      case org.apache.spark.sql.sources.Or(l, r)  => supported(schema, l) && supported(schema, r)
-      case org.apache.spark.sql.sources.Not(g)    => supported(schema, g)
-      case _ => false
-    }
-  }
-
-  // SQL three-valued logic domain for compiled predicates
-  private val TriTrue: Byte = 1
-  private val TriFalse: Byte = 0
-  private val TriUnknown: Byte = -1
-
-  /** Compile a pushed Filter to a predicate over the decoded record.
-    * Evaluation is SQL THREE-VALUED: a NULL operand makes a comparison
-    * UNKNOWN (not false), NOT flips only definite values, AND/OR
-    * propagate UNKNOWN — and the row is kept iff the whole tree is
-    * definitively TRUE, exactly what Spark's own post-scan Filter
-    * computes, so accepting these filters is sound.
-    */
-  def compile(fieldPos: Map[String, Int], f: Filter): GenericRecord => Boolean = {
-    val tri = compileTri(fieldPos, f)
-    r => tri(r) == TriTrue
-  }
-
-  private def compileTri(fieldPos: Map[String, Int], f: Filter): GenericRecord => Byte = {
-    def cmp(col: String, v: Any)(sign: Int => Boolean): GenericRecord => Byte = {
-      val pos = fieldPos(col)
-      r => {
-        val x = r.get(pos)
-        if (x == null) TriUnknown
-        else if (sign(compareValues(x, v))) TriTrue else TriFalse
-      }
-    }
-    f match {
-      case EqualTo(c, v)            => cmp(c, v)(_ == 0)
-      case GreaterThan(c, v)        => cmp(c, v)(_ > 0)
-      case GreaterThanOrEqual(c, v) => cmp(c, v)(_ >= 0)
-      case LessThan(c, v)           => cmp(c, v)(_ < 0)
-      case LessThanOrEqual(c, v)    => cmp(c, v)(_ <= 0)
-      case IsNotNull(c) =>
-        val p = fieldPos(c); r => if (r.get(p) != null) TriTrue else TriFalse
-      case IsNull(c) =>
-        val p = fieldPos(c); r => if (r.get(p) == null) TriTrue else TriFalse
-      case In(c, vs) =>
-        val p = fieldPos(c)
-        val set = vs.filter(_ != null)
-        r => {
-          val x = r.get(p)
-          if (x == null) TriUnknown
-          else if (set.exists(v => compareValues(x, v) == 0)) TriTrue else TriFalse
-        }
-      case org.apache.spark.sql.sources.StringStartsWith(c, v) =>
-        val p = fieldPos(c)
-        r => { val x = r.get(p)
-          if (x == null) TriUnknown
-          else if (x.toString.startsWith(v)) TriTrue else TriFalse }
-      case org.apache.spark.sql.sources.StringEndsWith(c, v) =>
-        val p = fieldPos(c)
-        r => { val x = r.get(p)
-          if (x == null) TriUnknown
-          else if (x.toString.endsWith(v)) TriTrue else TriFalse }
-      case org.apache.spark.sql.sources.StringContains(c, v) =>
-        val p = fieldPos(c)
-        r => { val x = r.get(p)
-          if (x == null) TriUnknown
-          else if (x.toString.contains(v)) TriTrue else TriFalse }
-      case org.apache.spark.sql.sources.And(l, rr) =>
-        val a = compileTri(fieldPos, l); val b = compileTri(fieldPos, rr)
-        r => {
-          val x = a(r)
-          if (x == TriFalse) TriFalse
-          else { val y = b(r)
-            if (y == TriFalse) TriFalse
-            else if (x == TriUnknown || y == TriUnknown) TriUnknown else TriTrue }
-        }
-      case org.apache.spark.sql.sources.Or(l, rr) =>
-        val a = compileTri(fieldPos, l); val b = compileTri(fieldPos, rr)
-        r => {
-          val x = a(r)
-          if (x == TriTrue) TriTrue
-          else { val y = b(r)
-            if (y == TriTrue) TriTrue
-            else if (x == TriUnknown || y == TriUnknown) TriUnknown else TriFalse }
-        }
-      case org.apache.spark.sql.sources.Not(g) =>
-        val a = compileTri(fieldPos, g)
-        r => a(r) match {
-          case TriTrue  => TriFalse
-          case TriFalse => TriTrue
-          case _        => TriUnknown
-        }
-      case other => throw new IllegalStateException(s"unpushable filter $other")
-    }
-  }
-
-  private def compareValues(x: Any, v: Any): Int = (x, v) match {
-    case (a: CharSequence, b: String) => a.toString.compareTo(b)
-    case (a: java.lang.Boolean, b: java.lang.Boolean) => a.compareTo(b)
-    case (a: Number, b: Number) =>
-      // Avro numerics decode at writer-schema width; the filter literal
-      // carries the read-schema type — compare as double (exact for
-      // the long/int ranges the frame source's filters target)
-      java.lang.Double.compare(a.doubleValue(), b.doubleValue())
-    case (a, b) => throw new IllegalStateException(
-      s"uncomparable filter operands: ${a.getClass} vs ${b.getClass}")
   }
 
   /** Best-effort V2 Predicate → V1 Filter for runtime (DPP-style)

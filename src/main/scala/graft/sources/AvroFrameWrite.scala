@@ -8,7 +8,7 @@ import org.apache.avro.Schema
 import org.apache.avro.generic.GenericData
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 
 /** DSv2 WRITE path for the framed-Avro segment log (round 13) — the
@@ -70,8 +70,8 @@ object AvroFrameWrite {
       }
       if (c == null) nulls += 1
       else {
-        if (min == null || AvroFrameStats.compare(c, min) < 0) min = c
-        if (max == null || AvroFrameStats.compare(c, max) > 0) max = c
+        if (min == null || FrameFilter.compare(c, min) < 0) min = c
+        if (max == null || FrameFilter.compare(c, max) > 0) max = c
       }
       c
     }
@@ -186,7 +186,7 @@ class AvroFrameWriteBuilder(info: LogicalWriteInfo,
     val schema = AvroFrames.sparkSchema(
       new Schema.Parser().parse(Option(o.avroSchema).getOrElse(
         throw new IllegalArgumentException("option `avroSchema` is required to write"))))
-    val unsupported = real.filterNot(AvroFrames.supported(schema, _))
+    val unsupported = real.filterNot(FrameFilter.supported(schema, _))
     require(unsupported.isEmpty,
       s"REPLACE WHERE condition not supported by the frame source: " +
         s"${unsupported.mkString(", ")} (comparisons/null tests on top-level " +
@@ -562,34 +562,6 @@ object AvroFrameStats {
       catch { case scala.util.control.NonFatal(_) => None }
     }
 
-  /** Can any row satisfy `f`, judged by the segment's Bloom filters
-    * alone? Conservative-true; only equality shapes consult a filter
-    * (EqualTo / IN, recursively through AND/OR — NOT never prunes).
-    * The value domain matches the write side exactly: ints widened to
-    * long, strings as-is; other types are never bloom-indexed.
-    */
-  def bloomMayMatch(blooms: Map[String, org.apache.spark.util.sketch.BloomFilter],
-                    f: Filter): Boolean = {
-    def contains(c: String, v: Any): Boolean = blooms.get(c) match {
-      case None => true
-      case Some(b) => v match {
-        case x: java.lang.Long    => b.mightContainLong(x.longValue)
-        case x: java.lang.Integer => b.mightContainLong(x.longValue)
-        case s: String            => b.mightContainString(s)
-        case _                    => true
-      }
-    }
-    f match {
-      case EqualTo(c, v) => v != null && contains(c, v)
-      case In(c, vs)     => vs.exists(v => v != null && contains(c, v))
-      case org.apache.spark.sql.sources.And(l, r) =>
-        bloomMayMatch(blooms, l) && bloomMayMatch(blooms, r)
-      case org.apache.spark.sql.sources.Or(l, r) =>
-        bloomMayMatch(blooms, l) || bloomMayMatch(blooms, r)
-      case _ => true
-    }
-  }
-
   /** Executor-side bloom gate (round 16): judged from the segment's
     * OWN sidecar, can any row satisfy the pushed filters' equality
     * shapes? Readers call this BEFORE opening the data file, so a
@@ -603,12 +575,12 @@ object AvroFrameStats {
     * blocked.
     */
   def bloomBlocked(file: String, pushed: Array[Filter]): Boolean =
-    pushed.nonEmpty && pushed.exists(bloomRelevant) && {
+    pushed.exists(FrameFilter.bloomColumns(_).nonEmpty) && {
       bloomProbeReads.incrementAndGet()
       readFull(new File(file)) match {
         case Some((_, _, b64)) if b64.nonEmpty =>
           val bf = blooms(b64)
-          !pushed.forall(bloomMayMatch(bf, _))
+          !pushed.forall(FrameFilter.bloomMayMatch(bf, _))
         case _ => false
       }
     }
@@ -619,30 +591,6 @@ object AvroFrameStats {
     * no relevant bloom payload exists) must not move this at all.
     */
   private[graft] val bloomProbeReads = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Could `f` possibly consult a Bloom filter? (Gates the bloom
-    * decode — sidecars without equality-shaped filters never pay it.)
-    */
-  def bloomRelevant(f: Filter): Boolean = f match {
-    case EqualTo(_, _) | In(_, _) => true
-    case org.apache.spark.sql.sources.And(l, r) => bloomRelevant(l) || bloomRelevant(r)
-    case org.apache.spark.sql.sources.Or(l, r)  => bloomRelevant(l) || bloomRelevant(r)
-    case _ => false
-  }
-
-  /** Columns whose Bloom filter `f` could consult (the equality-shaped
-    * leaves [[bloomMayMatch]] probes). Drives the split-level probe
-    * hint: a segment whose ledger entry records no bloom payload on
-    * any of these columns can never be gate-blocked, so its task
-    * skips the sidecar probe entirely.
-    */
-  def bloomColumns(f: Filter): Set[String] = f match {
-    case EqualTo(c, _) => Set(c)
-    case In(c, _)      => Set(c)
-    case org.apache.spark.sql.sources.And(l, r) => bloomColumns(l) ++ bloomColumns(r)
-    case org.apache.spark.sql.sources.Or(l, r)  => bloomColumns(l) ++ bloomColumns(r)
-    case _ => Set.empty
-  }
 
   /** Stats-domain value → Catalyst internal value at the column's
     * Spark type (narrowing the write path's Int→Long / Float→Double
@@ -656,93 +604,21 @@ object AvroFrameStats {
     case (x: java.lang.Long, LongType)       => x
     case (x: java.lang.Double, FloatType)    => Float.box(x.floatValue)
     case (x: java.lang.Double, DoubleType)   => x
+    case (s: String, FloatType | DoubleType) => toCatalyst(java.lang.Double.valueOf(s), t) // NaN, ±Infinity
     case (s: String, StringType)             => org.apache.spark.unsafe.types.UTF8String.fromString(s)
     case (b: java.lang.Boolean, BooleanType) => b
     case (x, tt) => throw new IllegalStateException(
       s"stats value ${x.getClass} does not fit column type $tt")
   }
 
-  /** Exact comparison on the stats domain: longs compared as longs
-    * (never through double — a lossy compare could WRONGLY prune near
-    * 2^53), mixed numeric as double, strings/booleans natively.
-    */
-  def compare(a: Any, b: Any): Int = (a, b) match {
-    case (x: java.lang.Long, y: java.lang.Long)       => java.lang.Long.compare(x, y)
-    case (x: java.lang.Long, y: java.lang.Integer)    => java.lang.Long.compare(x, y.longValue)
-    case (x: java.lang.Integer, y: java.lang.Long)    => java.lang.Long.compare(x.longValue, y)
-    case (x: java.lang.Integer, y: java.lang.Integer) => java.lang.Integer.compare(x, y)
-    case (x: Number, y: Number) => java.lang.Double.compare(x.doubleValue, y.doubleValue)
-    case (x: java.lang.Boolean, y: java.lang.Boolean) => x.compareTo(y)
-    case (x, y) => String.valueOf(x).compareTo(String.valueOf(y))
-  }
-
-  /** Can any frame in a segment with these stats satisfy the filter?
-    * Conservative: unknown field / missing bound ⇒ true.
-    */
-  def mayMatch(frames: Long, fields: Map[String, (Long, Any, Any)], f: Filter): Boolean = {
-    def bounds(c: String): Option[(Long, Any, Any)] = fields.get(c)
-    f match {
-      case EqualTo(c, v) => bounds(c).forall { case (_, mn, mx) =>
-        mn == null || mx == null || (compare(v, mn) >= 0 && compare(v, mx) <= 0) }
-      case GreaterThan(c, v) => bounds(c).forall { case (_, _, mx) =>
-        mx == null || compare(mx, v) > 0 }
-      case GreaterThanOrEqual(c, v) => bounds(c).forall { case (_, _, mx) =>
-        mx == null || compare(mx, v) >= 0 }
-      case LessThan(c, v) => bounds(c).forall { case (_, mn, _) =>
-        mn == null || compare(mn, v) < 0 }
-      case LessThanOrEqual(c, v) => bounds(c).forall { case (_, mn, _) =>
-        mn == null || compare(mn, v) <= 0 }
-      case IsNotNull(c) => bounds(c).forall { case (nulls, _, _) => nulls < frames }
-      case IsNull(c)    => bounds(c).forall { case (nulls, _, _) => nulls > 0 }
-      // IN arrives pushed or via runtime (DPP-style) filtering: the
-      // segment survives iff ANY set member can fall inside [min,max]
-      case In(c, vs) => bounds(c).forall { case (_, mn, mx) =>
-        mn == null || mx == null ||
-          vs.exists(v => v != null && compare(v, mn) >= 0 && compare(v, mx) <= 0) }
-      // prefix pruning (round 15): a string whose prefix-length
-      // truncation falls outside [min.take(p), max.take(p)] cannot
-      // exist in the segment — the parquet StartsWith stats rule
-      case org.apache.spark.sql.sources.StringStartsWith(c, v) =>
-        bounds(c).forall { case (_, mn, mx) =>
-          mn == null || mx == null || !mn.isInstanceOf[String] || !mx.isInstanceOf[String] || {
-            val p = v.length
-            mn.asInstanceOf[String].take(p) <= v &&
-              v <= mx.asInstanceOf[String].take(p)
-          }
-        }
-      // boolean compositions (round 14): AND prunes if either side
-      // proves impossible, OR only if both do; NOT is unbounded here
-      case org.apache.spark.sql.sources.And(l, r) =>
-        mayMatch(frames, fields, l) && mayMatch(frames, fields, r)
-      case org.apache.spark.sql.sources.Or(l, r) =>
-        mayMatch(frames, fields, l) || mayMatch(frames, fields, r)
-      case _ => true
-    }
-  }
-
-  /** Segments surviving stat-pruning under ALL pushed filters: min/max
-    * bounds first, then — for equality-shaped filters on segments that
-    * carry Bloom payloads — the Bloom filters (round 14). Both rungs
+  /** Segments surviving stat-pruning under ALL pushed filters, judged
+    * from each segment's own sidecar: min/max bounds first, then — for
+    * equality-shaped filters — its Bloom filters (round 14). Both rungs
     * strictly conservative; a point lookup on a high-cardinality
     * column whose min/max spans everything prunes on the blooms alone.
     */
   def prune(segments: Array[File], pushed: Array[Filter]): Array[File] =
-    if (pushed.isEmpty) segments
-    else {
-      val wantBloom = pushed.exists(bloomRelevant)
-      segments.filter { seg =>
-        readFull(seg) match {
-          case None => true // no sidecar: never prune
-          case Some((frames, fields, bloomB64)) =>
-            pushed.forall(mayMatch(frames, fields, _)) && {
-              !wantBloom || bloomB64.isEmpty || {
-                val bf = blooms(bloomB64)
-                pushed.forall(bloomMayMatch(bf, _))
-              }
-            }
-        }
-      }
-    }
+    new FrameStatsView(null, Some(Map.empty)).prune(segments, pushed) // no ledger: sidecars only
 }
 
 /** Group-based row-level operation over the segment log — the DSv2

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, IsNotNull, IsNull, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.Filter
 
 /** Table maintenance for framed-Avro segment logs — the lifecycle
   * operations every log-structured format needs once a streaming
@@ -1016,48 +1016,6 @@ object FrameMaintenance {
 
   case class DeleteResult(metadataDeleted: Int, rewritten: Int, untouched: Int)
 
-  /** Can the sidecar PROVE every row of the segment matches `f`? The
-    * dual of [[AvroFrameStats.mayMatch]]: comparisons require zero
-    * nulls (a NULL field never matches, so a null row must survive a
-    * comparison delete). Conservative-false — an unprovable segment
-    * just falls back to the rewrite path.
-    */
-  def mustMatch(frames: Long, fields: Map[String, (Long, Any, Any)], f: Filter): Boolean = {
-    import AvroFrameStats.compare
-    def b(c: String): Option[(Long, Any, Any)] = fields.get(c)
-    f match {
-      case EqualTo(c, v) => b(c).exists { case (nulls, mn, mx) =>
-        nulls == 0 && mn != null && mx != null && compare(mn, v) == 0 && compare(mx, v) == 0 }
-      case GreaterThan(c, v) => b(c).exists { case (nulls, mn, _) =>
-        nulls == 0 && mn != null && compare(mn, v) > 0 }
-      case GreaterThanOrEqual(c, v) => b(c).exists { case (nulls, mn, _) =>
-        nulls == 0 && mn != null && compare(mn, v) >= 0 }
-      case LessThan(c, v) => b(c).exists { case (nulls, _, mx) =>
-        nulls == 0 && mx != null && compare(mx, v) < 0 }
-      case LessThanOrEqual(c, v) => b(c).exists { case (nulls, _, mx) =>
-        nulls == 0 && mx != null && compare(mx, v) <= 0 }
-      case IsNotNull(c) => b(c).exists { case (nulls, _, _) => nulls == 0 }
-      case IsNull(c)    => b(c).exists { case (nulls, _, _) => nulls == frames }
-      case org.apache.spark.sql.sources.In(c, vs) => b(c).exists { case (nulls, mn, mx) =>
-        nulls == 0 && mn != null && mx != null && compare(mn, mx) == 0 &&
-          vs.exists(v => v != null && compare(mn, v) == 0) }
-      // prefix purge fast path (round 15): every row provably matches
-      // LIKE 'v%' iff zero nulls and BOTH bounds carry the prefix
-      case org.apache.spark.sql.sources.StringStartsWith(c, v) =>
-        b(c).exists { case (nulls, mn, mx) =>
-          nulls == 0 && mn.isInstanceOf[String] && mx.isInstanceOf[String] &&
-            mn.asInstanceOf[String].startsWith(v) && mx.asInstanceOf[String].startsWith(v) }
-      // boolean compositions (round 14): AND needs both halves proven,
-      // OR either half; NOT stays conservative-false (proving "every
-      // row fails g" exactly needs more than min/max under 3VL)
-      case org.apache.spark.sql.sources.And(l, r) =>
-        mustMatch(frames, fields, l) && mustMatch(frames, fields, r)
-      case org.apache.spark.sql.sources.Or(l, r) =>
-        mustMatch(frames, fields, l) || mustMatch(frames, fields, r)
-      case _            => false
-    }
-  }
-
   /** A DELETE's starting state: the live listing and manifest it
     * commits against, the generation it mints, and the live segments
     * split by their stats into provably-none-match, provably-all-match,
@@ -1078,12 +1036,12 @@ object FrameMaintenance {
     val stats = new FrameStatsView(dir)
     val (noneMatch, rest) = live.partition { seg =>
       stats.read(seg).exists { case (frames, fields) =>
-        frames == 0L || filters.exists(!AvroFrameStats.mayMatch(frames, fields, _))
+        frames == 0L || filters.exists(!FrameFilter.mayMatch(frames, fields, _))
       }
     }
     val (allMatch, straddle) = rest.partition { seg =>
       stats.read(seg).exists { case (frames, fields) =>
-        filters.forall(mustMatch(frames, fields, _))
+        filters.forall(FrameFilter.mustMatch(frames, fields, _))
       }
     }
     DeletePlan(live, manifest, manifest.length + 1, noneMatch, allMatch, straddle)
@@ -1203,7 +1161,7 @@ object FrameMaintenance {
           val fieldPos = {
             readerSchema.getFields.asScala.map(f => f.name() -> f.pos()).toMap
           }
-          val preds = filters.map(AvroFrames.compile(fieldPos, _))
+          val preds = filters.map(FrameFilter.compile(fieldPos, _))
           val prior = priorDv.map(d => FrameDv.read(new File(dirPath, d))).getOrElse(Array.empty[Int])
           val priorSet = prior.toSet
           val hit = Array.newBuilder[Int]
@@ -1388,7 +1346,7 @@ object FrameMaintenance {
                              historyJson: String, priorDvName: String = null): Option[String] = {
     val readerSchema = new org.apache.avro.Schema.Parser().parse(avroSchemaJson)
     val fieldPos = readerSchema.getFields.asScala.map(f => f.name() -> f.pos()).toMap
-    val preds = filters.map(AvroFrames.compile(fieldPos, _))
+    val preds = filters.map(FrameFilter.compile(fieldPos, _))
     val fields = readerSchema.getFields.asScala.toVector
     val stats = fields.map(_ => new AvroFrameWrite.FieldStats)
     val priorDv = Option(priorDvName)

@@ -93,7 +93,7 @@ object FrameTimePart {
   /** Conservative partition pruning: a segment whose name carries a
     * partition value survives iff the pushed filters allow SOME
     * timestamp inside the partition's [lo, hi] range — evaluated by
-    * the exact same [[AvroFrameStats.mayMatch]] rule as sidecar
+    * the exact same [[FrameFilter.mayMatch]] rule as sidecar
     * min/max (synthetic single-field stats, zero file opens). Unnamed
     * segments always survive.
     */
@@ -106,7 +106,7 @@ object FrameTimePart {
         case Some(pv) =>
           val (lo, hi) = part.boundsUs(pv)
           val synthetic = Map(part.col -> ((0L, Long.box(lo): Any, Long.box(hi): Any)))
-          pushed.forall(AvroFrameStats.mayMatch(1L, synthetic, _))
+          pushed.forall(FrameFilter.mayMatch(1L, synthetic, _))
       }
     }
   }

@@ -517,15 +517,12 @@ final class FrameStatsView(dir: File,
     * only skips an optimization; row output is identical either way.
     */
   def probeBloom(segment: File, pushed: Array[org.apache.spark.sql.sources.Filter]): Boolean = {
-    if (!pushed.exists(AvroFrameStats.bloomRelevant)) return false
+    val cols = pushed.iterator.flatMap(FrameFilter.bloomColumns).toSet
+    if (cols.isEmpty) return false
     if (driverVerified.contains(segment.getName)) return false
     ledger.get(segment.getName) match {
-      case Some(e) if e.hasStats =>
-        e.bloomFields.nonEmpty && {
-          val cols = pushed.iterator.flatMap(AvroFrameStats.bloomColumns).toSet
-          e.bloomFields.exists(cols)
-        }
-      case _ => true
+      case Some(e) if e.hasStats => e.bloomFields.exists(cols)
+      case _                     => true
     }
   }
 
@@ -547,52 +544,40 @@ final class FrameStatsView(dir: File,
     ledger.get(segment.getName).exists(_.hasStats) ||
       new File(segment.getParentFile, segment.getName + ".stats").isFile
 
-  /** Segments surviving stat-pruning under ALL pushed filters —
-    * min/max bounds from the ledger (zero file opens), then Bloom
-    * residual pruning for survivors that carry payloads, each costing
-    * one sidecar open, capped at [[FrameStatsView.MaxDriverBloomOpens]]
-    * (beyond the cap the residual check is skipped — conservative; the
-    * pushed filters still apply executor-side). Strictly the same
-    * conservative semantics as the pre-ledger [[AvroFrameStats.prune]].
+  /** Segments surviving stat-pruning under ALL pushed filters. One
+    * check per segment: min/max bounds (ledger entry, zero file opens;
+    * else its sidecar), then Bloom residual pruning if the filters
+    * probe a Bloom and the segment carries payloads. A ledgered
+    * segment's payloads cost one extra sidecar open, capped at
+    * [[FrameStatsView.MaxDriverBloomOpens]] per plan (beyond the cap
+    * the residual check is skipped — conservative; the pushed filters
+    * still apply executor-side).
     */
   def prune(segments: Array[File], pushed: Array[org.apache.spark.sql.sources.Filter]): Array[File] =
     if (pushed.isEmpty) segments
     else {
-      val wantBloom = pushed.exists(AvroFrameStats.bloomRelevant)
+      val wantBloom = pushed.exists(FrameFilter.bloomColumns(_).nonEmpty)
       var bloomOpens = 0
       segments.filter { seg =>
-        ledger.get(seg.getName).filter(_.hasStats) match {
-          case Some(e) =>
-            pushed.forall(AvroFrameStats.mayMatch(e.frames, e.fields, _)) && {
-              !wantBloom || e.bloomFields.isEmpty ||
-                bloomOpens >= FrameStatsView.MaxDriverBloomOpens || {
-                  bloomOpens += 1
-                  AvroFrameStats.readFull(seg) match {
-                    case Some((_, _, b64)) if b64.nonEmpty =>
-                      val bf = AvroFrameStats.blooms(b64)
-                      val ok = pushed.forall(AvroFrameStats.bloomMayMatch(bf, _))
-                      // driver evaluated THESE filters against THESE
-                      // blooms: the executor gate need not repeat it
-                      if (ok) driverVerified += seg.getName
-                      ok
-                    case _ => true
-                  }
-                }
+        val ledgered = ledger.get(seg.getName).filter(_.hasStats)
+        lazy val sidecar = AvroFrameStats.readFull(seg)
+        val stats = ledgered.map(e => (e.frames, e.fields)).orElse(sidecar.map(s => (s._1, s._2)))
+        stats.forall { case (frames, fields) =>
+          pushed.forall(FrameFilter.mayMatch(frames, fields, _)) && (!wantBloom || {
+            val b64 = ledgered match {
+              case None => sidecar.get._3
+              case Some(e) if e.bloomFields.isEmpty || bloomOpens >= FrameStatsView.MaxDriverBloomOpens =>
+                Map.empty[String, String]
+              case Some(_) => bloomOpens += 1; sidecar.fold(Map.empty[String, String])(_._3)
             }
-          case None =>
-            // not in the ledger (or stats-less): the per-sidecar path
-            AvroFrameStats.readFull(seg) match {
-              case None => true
-              case Some((frames, fields, bloomB64)) =>
-                pushed.forall(AvroFrameStats.mayMatch(frames, fields, _)) && {
-                  !wantBloom || bloomB64.isEmpty || {
-                    val bf = AvroFrameStats.blooms(bloomB64)
-                    val ok = pushed.forall(AvroFrameStats.bloomMayMatch(bf, _))
-                    if (ok) driverVerified += seg.getName
-                    ok
-                  }
-                }
+            b64.isEmpty || {
+              val ok = pushed.forall(FrameFilter.bloomMayMatch(AvroFrameStats.blooms(b64), _))
+              // driver evaluated THESE filters against THESE blooms:
+              // the executor gate need not repeat it
+              if (ok) driverVerified += seg.getName
+              ok
             }
+          })
         }
       }
     }

@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 
@@ -18,6 +20,32 @@ class ExpressionPropertySpec extends AnyFunSuite with SparkFixture {
 
   private def randomText(): String =
     Seq.fill(rnd.nextInt(30))(fragments(rnd.nextInt(fragments.length))).mkString(" ")
+
+  /** Runs `check` on `in` with the kernel column `fast` beside its
+    * reference `ref` as `hof`, twice: as the optimizer leaves it
+    * (ConvertToLocalRelation folds a projection over local data through
+    * `eval`), then with that rule excluded and `fast` computed in a
+    * projection of its own, which the executed plan must run inside
+    * whole-stage codegen — so `doGenCode` meets the reference too. The
+    * reference is computed after, off a checkpoint: a higher-order
+    * function is not code-generated and keeps its projection out of the
+    * stage.
+    */
+  private def onEvalAndCodegen(in: DataFrame, fast: Column, ref: Column)(check: DataFrame => Unit): Unit = {
+    check(in.select(fast.as("fast"), ref.as("hof")))
+    val key = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    try {
+      val kernel = in.select(fast.as("fast") +: in.columns.toSeq.map(col): _*)
+      val plan = kernel.queryExecution.executedPlan
+      val generated = plan.collect { case w: WholeStageCodegenExec => w.child }
+        .flatMap(_.flatMap(_.expressions))
+      assert(generated.exists(_.exists(_.isInstanceOf[graft.expressions.ZipFold])),
+        s"vector kernel outside whole-stage codegen:\n$plan")
+      check(kernel.localCheckpoint().select(col("fast"), ref.as("hof")))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 
   test("TokenHashArray matches the HOF tokenize+portableHash pipeline on arbitrary text") {
     import spark.implicits._
@@ -53,16 +81,16 @@ class ExpressionPropertySpec extends AnyFunSuite with SparkFixture {
     val rows = Seq.fill(300)((
       Seq.fill(64)(rnd.nextGaussian().toFloat),
       Seq.fill(64)(rnd.nextGaussian()))) :+ ((Seq.empty[Float], Seq.empty[Double]))
-    val diff = rows.toDF("v", "p").select(
+    onEvalAndCodegen(rows.toDF("v", "p"),
         org.apache.spark.sql.GraftSqlBridge.column(
           graft.expressions.ZipFold("float_double_dot",
             org.apache.spark.sql.GraftSqlBridge.expression(col("v")),
-            org.apache.spark.sql.GraftSqlBridge.expression(col("p")))).as("fast"),
+            org.apache.spark.sql.GraftSqlBridge.expression(col("p")))),
         aggregate(zip_with(col("v"), col("p"), (x, y) => x.cast("double") * y),
-                  lit(0.0), (acc, t) => acc + t).as("hof"))
-      .filter(col("fast") =!= col("hof")) // exact bit equality, no tolerance
-      .count()
-    assert(diff == 0, s"$diff random (float, double) vectors diverged from the HOF fold")
+                  lit(0.0), (acc, t) => acc + t)) { out =>
+      val diff = out.filter(col("fast") =!= col("hof")).count() // exact bit equality, no tolerance
+      assert(diff == 0, s"$diff random (float, double) vectors diverged from the HOF fold")
+    }
   }
 
   test("FloatSqDist is bit-identical to the sequential HOF sq-dist fold it replaced") {
@@ -74,21 +102,20 @@ class ExpressionPropertySpec extends AnyFunSuite with SparkFixture {
     val rows = Seq.fill(300)((
       Seq.fill(64)(rnd.nextGaussian().toFloat),
       Seq.fill(64)(rnd.nextGaussian().toFloat))) :+ ((Seq.empty[Float], Seq.empty[Float]))
-    val diff = rows.toDF("a", "b").select(
-        sqDistF(col("a"), col("b")).as("fast"),
+    onEvalAndCodegen(rows.toDF("a", "b"),
+        sqDistF(col("a"), col("b")),
         aggregate(zip_with(col("a"), col("b"),
             (x, y) => (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
-          lit(0.0), (acc, t) => acc + t).as("hof"))
-      .filter(col("fast") =!= col("hof")) // exact bit equality, no tolerance
-      .count()
-    assert(diff == 0, s"$diff random float vector pairs diverged from the HOF sq-dist fold")
+          lit(0.0), (acc, t) => acc + t)) { out =>
+      val diff = out.filter(col("fast") =!= col("hof")).count() // exact bit equality, no tolerance
+      assert(diff == 0, s"$diff random float vector pairs diverged from the HOF sq-dist fold")
+    }
   }
 
   test("LongDotProduct equals the HOF integer fold on the int8 domain, including empty") {
     // On the int8 domain (|x| <= 127) no 64-bit overflow is reachable;
     // past it the kernel throws, as the ANSI-mode HOF does.
     import spark.implicits._
-    import org.apache.spark.sql.Column
     import graft.functions.VectorFunctions.longDot
     val rows = Seq.fill(300)((
       Seq.fill(64)((rnd.nextInt(255) - 127).toLong),
@@ -96,12 +123,10 @@ class ExpressionPropertySpec extends AnyFunSuite with SparkFixture {
       ((Seq.empty[Long], Seq.empty[Long]))
     def hof(a: Column, b: Column): Column =
       aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, t) => acc + t)
-    val diff = rows.toDF("a", "b").select(
-        longDot(col("a"), col("b")).as("fast"),
-        hof(col("a"), col("b")).as("hof"))
-      .filter(col("fast") =!= col("hof"))
-      .count()
-    assert(diff == 0, s"$diff random long vectors diverged from the HOF integer fold")
+    onEvalAndCodegen(rows.toDF("a", "b"), longDot(col("a"), col("b")), hof(col("a"), col("b"))) { out =>
+      val diff = out.filter(col("fast") =!= col("hof")).count()
+      assert(diff == 0, s"$diff random long vectors diverged from the HOF integer fold")
+    }
     // the overflow row Long.MaxValue * 2, once as local data (the
     // optimizer folds it through eval) and once off a range (codegen)
     val overflow = Seq(Seq((Seq(Long.MaxValue), Seq(2L))).toDF("a", "b"),
@@ -118,7 +143,6 @@ class ExpressionPropertySpec extends AnyFunSuite with SparkFixture {
     // is NULL (zip_with null-pads, a null term nulls the fold); every
     // kernel must agree row for row, eval and codegen alike
     import spark.implicits._
-    import org.apache.spark.sql.Column
     import org.apache.spark.sql.GraftSqlBridge.{column, expression}
     def vec[T](draw: => T): Seq[Option[T]] =
       Seq.fill(Seq(0, 3, 3, 3, 4)(rnd.nextInt(5)))(if (rnd.nextInt(8) == 0) None else Some(draw))
@@ -150,11 +174,12 @@ class ExpressionPropertySpec extends AnyFunSuite with SparkFixture {
       ("double_dot", kernel("double_dot", "da", "db"),
         hof("da", "db", lit(0.0))(_ * _)))
     cases.foreach { case (name, fast, ref) =>
-      val out = df.select(fast.as("fast"), ref.as("hof"))
-      assert(out.filter(!(col("fast") <=> col("hof"))).count() == 0,
-        s"$name diverged from its HOF fold")
-      val nulls = out.filter(col("hof").isNull).count()
-      assert(nulls > 0 && nulls < rows.length, s"$name: $nulls null rows — both domains must be hit")
+      onEvalAndCodegen(df, fast, ref) { out =>
+        assert(out.filter(!(col("fast") <=> col("hof"))).count() == 0,
+          s"$name diverged from its HOF fold")
+        val nulls = out.filter(col("hof").isNull).count()
+        assert(nulls > 0 && nulls < rows.length, s"$name: $nulls null rows — both domains must be hit")
+      }
     }
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{AvroFrames, AvroFrameStats}
+import graft.sources.{AvroFrames, AvroFrameStats, FrameFilter}
 
 /** Write-time Bloom filter sidecars ([[graft.sources.AvroFrameWrite]] /
   * [[AvroFrameStats.prune]]): point-lookup segment pruning on
@@ -55,7 +55,7 @@ class FrameBloomSpec extends AnyFunSuite with SparkFixture {
     // find a segment that CONTAINS id=7 and one whose bloom excludes it
     def holds(seg: java.io.File): Boolean = {
       val b64 = AvroFrameStats.readFull(seg).get._3
-      AvroFrameStats.bloomMayMatch(AvroFrameStats.blooms(b64), EqualTo("id", 7L))
+      FrameFilter.bloomMayMatch(AvroFrameStats.blooms(b64), EqualTo("id", 7L))
     }
     val hit = segs.find(holds).get
     val miss = segs.find(!holds(_)).get
