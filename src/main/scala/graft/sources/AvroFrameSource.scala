@@ -576,8 +576,10 @@ class AvroFrameScan(path: String, avroSchemaJson: String, schemaId: Int,
     if (aggs.isDefined) Array.empty
     else required.fieldNames.map(Expressions.column)
 
+  // the same gate as pushed filters: stats describe only orderable
+  // columns (a binary column's sidecar counts every value as a null)
   override def filter(predicates: Array[VPredicate]): Unit =
-    runtime = runtime ++ predicates.flatMap(AvroFrames.v2ToV1)
+    runtime = runtime ++ predicates.flatMap(AvroFrames.v2ToV1).filter(FrameFilter.supported(required, _))
 
   private def pruneFilters: Array[Filter] = pushed ++ runtime ++ pruneOnly
 

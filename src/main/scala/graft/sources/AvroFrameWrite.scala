@@ -90,7 +90,7 @@ object AvroFrameWrite {
   /** JSON for a segment's stats sidecar. `blooms` (round 14) carries
     * optional per-field serialized Bloom filters (base64) — the
     * point-lookup pruning index for high-cardinality columns whose
-    * min/max spans everything (see [[AvroFrameStats.prune]]). Readers
+    * min/max spans everything (see [[FrameStatsView.prune]]). Readers
     * that predate the field skip it (unknown-key tolerance).
     */
   def statsJson(frames: Long, fields: Seq[(String, FieldStats)],
@@ -610,15 +610,6 @@ object AvroFrameStats {
     case (x, tt) => throw new IllegalStateException(
       s"stats value ${x.getClass} does not fit column type $tt")
   }
-
-  /** Segments surviving stat-pruning under ALL pushed filters, judged
-    * from each segment's own sidecar: min/max bounds first, then — for
-    * equality-shaped filters — its Bloom filters (round 14). Both rungs
-    * strictly conservative; a point lookup on a high-cardinality
-    * column whose min/max spans everything prunes on the blooms alone.
-    */
-  def prune(segments: Array[File], pushed: Array[Filter]): Array[File] =
-    new FrameStatsView(null, Some(Map.empty)).prune(segments, pushed) // no ledger: sidecars only
 }
 
 /** Group-based row-level operation over the segment log — the DSv2

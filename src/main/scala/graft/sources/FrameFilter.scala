@@ -91,7 +91,8 @@ object FrameFilter {
 
   /** The leaf table: a supported leaf's truth set over a column whose
     * non-null values lie in [mn, mx] (null bounds: unknown) with
-    * `nulls` of `frames` null.
+    * `nulls` of `frames` null. Only a [[supported]] leaf may reach it:
+    * a binary column's stats count every value as a null.
     */
   private def leaf(f: Filter, frames: Long, nulls: Long, mn: Any, mx: Any): Int = {
     val some = nulls < frames

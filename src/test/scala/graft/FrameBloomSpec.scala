@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{AvroFrames, AvroFrameStats, FrameFilter}
 
 /** Write-time Bloom filter sidecars ([[graft.sources.AvroFrameWrite]] /
-  * [[AvroFrameStats.prune]]): point-lookup segment pruning on
+  * [[graft.sources.FrameStatsView.prune]]): point-lookup segment pruning on
   * high-cardinality columns whose min/max spans every segment — the
   * parquet-bloom / Iceberg-bloom pattern on the engine's own format.
   */

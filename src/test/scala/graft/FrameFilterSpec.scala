@@ -88,6 +88,30 @@ class FrameFilterSpec extends AnyFunSuite with SparkFixture {
     assert(canon(agg) == canon(memory(rows).selectExpr("min(s)", "max(s)")))
   }
 
+  test("a runtime IN on a binary column keeps every segment") {
+    import org.apache.spark.sql.connector.expressions.Expressions
+    import org.apache.spark.sql.connector.expressions.filter.{Predicate => VPredicate}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    // the sidecar counts every binary value as a null: its stats cannot
+    // describe the column, so a DPP-style filter on it must prune nothing
+    val bin = StructType(Seq(StructField("id", LongType), StructField("b", BinaryType)))
+    val dir = Files.createTempDirectory("frame-filter-binary").toString
+    val avro = graft.sources.AvroFrames.avroSchemaFor(bin, "t")
+    Seq(1L, 2L).foreach { i => // one segment per append
+      spark.createDataFrame(Seq(Row(i, Array[Byte](i.toByte))).asJava, bin).coalesce(1)
+        .write.format("graft.sources.AvroFrameDataSource")
+        .option("path", dir).option("avroSchema", avro).option("schemaId", "7").mode("append").save()
+    }
+    val scan = new graft.sources.AvroFrameScanBuilder(bin, new CaseInsensitiveStringMap(
+      java.util.Map.of("path", dir, "avroSchema", avro, "schemaId", "7")))
+      .build().asInstanceOf[graft.sources.AvroFrameScan]
+    assert(scan.filterAttributes().map(_.describe()).contains("b"))
+    assert(scan.planInputPartitions().length == 2)
+    scan.filter(Array(new VPredicate("IN",
+      Array(Expressions.column("b"), Expressions.literal(Array[Byte](1))))))
+    assert(scan.planInputPartitions().length == 2, "a binary runtime filter must not prune")
+  }
+
   // ---------------------------------------------------------------- property
 
   private val ids = Seq(Big, Big - 1, Big - 2, -Big, -Big + 1, -Big + 2, 0L, 1L, -1L)

@@ -136,7 +136,7 @@ class FrameLedgerSpec extends AnyFunSuite with SparkFixture {
     val filters: Array[org.apache.spark.sql.sources.Filter] = Array(
       org.apache.spark.sql.sources.GreaterThanOrEqual("id", 16L),
       org.apache.spark.sql.sources.LessThan("id", 48L))
-    val sidecarKept = AvroFrameStats.prune(segs, filters).map(_.getName).toSeq
+    val sidecarKept = new FrameStatsView(dir).prune(segs, filters).map(_.getName).toSeq
     FrameStatsLedger.rebuild(dir)
     val ledgerKept = new FrameStatsView(dir).prune(segs, filters).map(_.getName).toSeq
     assert(ledgerKept == sidecarKept, "ledger and sidecar pruning must agree")
